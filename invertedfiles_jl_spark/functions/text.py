@@ -321,7 +321,10 @@ def scrub_pii(df: DataFrame, doc_col: str = "doc_id",
     ``preserve_schema=True`` instead returns the FULL input schema with
     ``content_col`` replaced in place by the redacted text plus the
     ``n_*`` count columns appended — still one map-only select (no join),
-    for write-back pipelines that must keep metadata columns.
+    for write-back pipelines that must keep metadata columns.  An input
+    that already carries all three ``n_*`` columns (a prior scrub) has
+    them replaced; one that carries only some of them raises
+    ``ValueError``, since they cannot be scrub output.
     """
     count_cols = [F.size(F.regexp_extract_all(
         F.col(content_col), F.lit(pat), F.lit(0))).cast("long")
@@ -330,9 +333,15 @@ def scrub_pii(df: DataFrame, doc_col: str = "doc_id",
     for name, pat in PII_PATTERNS.items():
         red = F.regexp_replace(red, pat, f"<{name.upper()}>")
     if preserve_schema:
-        # drop pre-existing n_* count columns (e.g. re-scrubbing an earlier
-        # scrub output) so the appended counts never collide
+        # drop a prior scrub's n_* count columns so the appended counts
+        # never collide (a partial set is not a prior scrub's: refuse it)
         count_names = {f"n_{name}" for name in PII_PATTERNS}
+        present = count_names & set(df.columns)
+        if present and present != count_names:
+            raise ValueError(
+                "scrub_pii(preserve_schema=True): input carries "
+                f"{sorted(present)} but not {sorted(count_names - present)}"
+                " — only a complete prior-scrub count set is replaced")
         keep = [red.alias(c) if c == content_col else F.col(c)
                 for c in df.columns if c not in count_names]
         return df.select(*keep, *count_cols)

@@ -47,10 +47,15 @@ Grammar notes (kept deliberately small and regular):
 
 Plan shape: :func:`~invertedfiles_jl_spark.operators.search._boolean_scored`
 (broadcast probes + one partial+final agg + per-clause candidate joins)
-plus, only for queries that carry phrases, ``positional ⋈
-broadcast(phrase slots)`` keyed on a composite (query, phrase) id and one
-(query, doc) count compared against the per-query phrase count (Q rows,
-broadcast).  A query whose phrase never occurs — or contains an OOV term —
+plus one gate per clause family the batch carries.  Phrases:
+``positional ⋈ broadcast(phrase slots)`` keyed on a composite (query,
+phrase) id and one (query, doc) count compared against the per-query
+phrase count (Q rows, broadcast).  Required wildcards: the same
+count-vs-needed join over ``_distinct_term_matches``.  Qualifiers: one
+linear pass — candidates ⋈ broadcast(per-query qualifier array) ⋈ meta
+on doc_id, filtered by a ``forall`` over the array.  No gate reads the
+candidates a second time, so the scoring subtree appears once in the
+plan.  A query whose phrase never occurs — or contains an OOV term —
 matches nothing, the conjunctive empty-Q contract.
 """
 
@@ -63,14 +68,13 @@ from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import InvertedIndex
-from invertedfiles_jl_spark.operators.search import _boolean_scored, topk
+from invertedfiles_jl_spark.operators.search import (
+    _boolean_scored,
+    _distinct_term_matches,
+    topk,
+)
 
 MAX_PHRASES = 128
-
-# At most one outstanding per-batch candidate cache (see query_string_topk):
-# the next gated batch unpersists the previous batch's candidates, so a
-# long-lived serving session holds O(1) cached batches, not O(#batches).
-_PERSISTED_CANDIDATES: list = []
 
 # quoted phrase with an optional [+|-] sign directly before the opening
 # quote ('-"..."' is a phrase EXCLUSION, Lucene QueryParser semantics)
@@ -183,9 +187,10 @@ def parse_query_string_py(s: str) -> dict:
     }
 
 
-def _qual_sat(mval):
+def _qual_sat(mval, v):
     """Qualifier satisfaction predicate over the doc's field value
-    ``mval`` (string) and the qualifier's ``value`` column.
+    ``mval`` and the qualifier's value ``v`` (both string columns; plain
+    column expressions, so it also runs inside a higher-order lambda).
 
     GitHub-style numeric forms on top of plain equality:
     ``field:>N  field:>=N  field:<N  field:<=N  field:LO..HI`` —
@@ -193,19 +198,17 @@ def _qual_sat(mval):
     malformed bound is simply unsatisfied, never an error).  Everything
     else is string equality.  NULL anywhere (unknown field, absent doc
     row) collapses to unsatisfied — Lucene's unknown-field behavior."""
-    v = F.col("value")
     ge, le = v.startswith(">="), v.startswith("<=")
     gt, lt = v.startswith(">") & ~ge, v.startswith("<") & ~le
     rng = v.rlike(r"^[0-9.]+\.\.[0-9.]+$")
     mnum = mval.try_cast("double")
-    n2 = F.expr("try_cast(substring(value, 3) as double)")
-    n1 = F.expr("try_cast(substring(value, 2) as double)")
-    lo = F.expr(r"try_cast(split(value, '\\.\\.')[0] as double)")
-    hi = F.expr(r"try_cast(split(value, '\\.\\.')[1] as double)")
-    sat = (F.when(ge, mnum >= n2)
-           .when(le, mnum <= n2)
-           .when(gt, mnum > n1)
-           .when(lt, mnum < n1)
+    n = F.regexp_extract(v, r"^[<>]=?(.*)$", 1).try_cast("double")
+    bounds = F.split(v, r"\.\.")
+    lo, hi = bounds[0].try_cast("double"), bounds[1].try_cast("double")
+    sat = (F.when(ge, mnum >= n)
+           .when(le, mnum <= n)
+           .when(gt, mnum > n)
+           .when(lt, mnum < n)
            .when(rng, (mnum >= lo) & (mnum <= hi))
            .otherwise(mval == v))
     return F.coalesce(sat, F.lit(False))
@@ -235,7 +238,8 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
     e.g. ``lang:py``, ``-source:vendored``, ``stars:>100``,
     ``stars:50..200`` — see :func:`_qual_sat` for the numeric forms) are
     conjunctive filters over
-    the ``meta`` relation (doc_id + the ``qualifier_fields`` columns):
+    the ``meta`` relation (doc_id + the ``qualifier_fields`` columns, one
+    row per doc_id):
     every positive qualifier must hold and no negated one may; a
     qualifier on an unknown field is unsatisfiable (the query matches
     nothing, Lucene's unknown-field behavior).  Qualifiers never score —
@@ -246,11 +250,7 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
     ``default_operator``: ``"or"`` (Lucene's default — bare terms are
     optional should clauses) or ``"and"`` (every bare term required, the
     Elasticsearch ``default_operator: AND`` setting)."""
-    from invertedfiles_jl_spark.operators.search import (
-        _distinct_term_matches,
-    )
-
-    assert default_operator in ("or", "and"), default_operator
+    _check_operator(default_operator)
     cfg = cfg or index.cfg
     parsed = parse_query_strings(queries, content_col)
     flags = _clause_flags(parsed)
@@ -258,30 +258,6 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
                                   _fold_clauses(parsed, default_operator),
                                   flags, default_operator)
     scored = _boolean_scored(index, folded)
-    if req is not None or flags["n_quals"] or flags["n_ph"]:
-        # Gates join candidate-derived relations back onto the candidates,
-        # so the scoring subtree (postings scan + broadcast join + agg)
-        # appears on BOTH sides of those joins and Catalyst re-executes it
-        # per gate (measured: 4 postings scans, 0 reused exchanges in the
-        # mixed-shape 100-query batch; 5.6 s → 3.7 s with the candidates
-        # persisted).  Bounded lifecycle: the module keeps at most ONE
-        # outstanding candidate cache — persisting a new batch unpersists
-        # the previous one (disk-resident blocks are NOT LRU-evicted, so
-        # a long-lived serving session would otherwise accumulate them on
-        # spark.local.dir unboundedly).  Pure term queries are a single
-        # linear plan — no reuse to win, so no cache churn.
-        lvl = scored.storageLevel  # reads the CacheManager by plan equality
-        if not (lvl.useMemory or lvl.useDisk):
-            # not cached yet → evict the previous batch's cache and persist
-            # this one.  A REPEATED identical batch (same queries, same
-            # index) skips this branch entirely: its plan matches the live
-            # cache entry, so evicting-and-rebuilding would only throw away
-            # reusable work.
-            prev = _PERSISTED_CANDIDATES.pop() if _PERSISTED_CANDIDATES else None
-            if prev is not None:
-                prev.unpersist(blocking=False)
-            scored = scored.persist()
-            _PERSISTED_CANDIDATES.append(scored)
     if req is not None:
         n_req, req_terms = req
         gh = _distinct_term_matches(
@@ -307,6 +283,12 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
         scored = _phrase_filter(scored, parsed, positional, cfg, flags)
     return topk(scored.select("query_id", "doc_id", "score"),
                 k, "score", ascending=False, rank_round=rank_round)
+
+
+def _check_operator(default_operator: str) -> None:
+    if default_operator not in ("or", "and"):
+        raise ValueError(
+            f"default_operator must be 'or' or 'and', got {default_operator!r}")
 
 
 def _fold_clauses(parsed: DataFrame, default_operator: str) -> DataFrame:
@@ -458,41 +440,32 @@ def _required_wildcard_filter(cand: DataFrame, n_req: DataFrame,
 def _qualifier_filter(cand: DataFrame, parsed: DataFrame, meta: DataFrame,
                       qualifier_fields: tuple[str, ...]) -> DataFrame:
     """Filter candidate rows (unique per (query_id, doc_id), any extra
-    columns preserved) by the conjunctive qualifier gates."""
+    columns preserved) by the conjunctive qualifier gates: one linear
+    pass — the per-query qualifier array (broadcast) and the doc's
+    metadata attach to each candidate, and every positive qualifier must
+    hold while no negated one may.  ``meta`` carries one row per
+    ``doc_id`` (a repeated doc_id would repeat its candidate rows)."""
     quals = parsed.select(
         "query_id",
-        F.explode(F.arrays_zip(
+        F.arrays_zip(
             F.col("qual_signs").alias("sign"),
             F.col("qual_fields").alias("field"),
-            F.col("qual_values").alias("value"))).alias("q"),
-    ).select("query_id", "q.sign", "q.field", "q.value")
-    mval = F.element_at(
+            F.col("qual_values").alias("value")).alias("__quals"))
+    doc_meta = meta.select(
+        "doc_id",
         F.create_map(*[x for f in qualifier_fields
-                       for x in (F.lit(f), F.col(f).cast("string"))]),
-        F.col("field"))
-    npos = quals.filter(F.col("sign") != "-").groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_pos_quals"))
-    qsat = (
-        cand.select("query_id", "doc_id")
-        .join(meta.select("doc_id", *qualifier_fields), "doc_id", "left")
-        .join(F.broadcast(quals), "query_id")
-        .withColumn("sat", _qual_sat(mval))
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.when((F.col("sign") != "-") & F.col("sat"), 1)
-                  .otherwise(0)).cast("long").alias("n_pos_sat"),
-            F.sum(F.when((F.col("sign") == "-") & F.col("sat"), 1)
-                  .otherwise(0)).cast("long").alias("n_neg_sat"),
-        )
-    )
-    zero = F.lit(0).cast("long")
+                       for x in (F.lit(f), F.col(f).cast("string"))])
+        .alias("__meta"))
+
+    def holds(q):
+        sat = _qual_sat(F.element_at("__meta", q["field"]), q["value"])
+        return sat != (q["sign"] == "-")
+
     return (
-        cand.join(F.broadcast(npos), "query_id", "left")
-        .join(qsat, ["query_id", "doc_id"], "left")
-        .filter((F.coalesce("n_pos_quals", zero) ==
-                 F.coalesce("n_pos_sat", zero)) &
-                (F.coalesce("n_neg_sat", zero) == zero))
-        .drop("n_pos_quals", "n_pos_sat", "n_neg_sat")
+        cand.join(F.broadcast(quals), "query_id", "left")
+        .join(doc_meta, "doc_id", "left")
+        .filter(F.coalesce(F.forall("__quals", holds), F.lit(True)))
+        .drop("__quals", "__meta")
     )
 
 
@@ -605,7 +578,7 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
     )
     from invertedfiles_jl_spark.streaming.serve import percolate
 
-    assert default_operator in ("or", "and"), default_operator
+    _check_operator(default_operator)
     cfg = cfg or index.cfg
     parsed = parse_query_strings(standing, "content")
     flags = _clause_flags(parsed)

@@ -88,20 +88,14 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
         .config("spark.ui.showConsoleProgress", "false")
-        # Shuffle/broadcast block codec knob (A/B measured 2026-08-17:
-        # zstd made the tokenize stage ~25% SLOWER at local[16] — raw
-        # source text costs more to zstd-compress than the saved bytes
-        # return on a tmpfs shuffle path — so the Spark default lz4 stays).
-        .config("spark.io.compression.codec",
-                os.environ.get("SPARK_GRAFT_IO_CODEC", "lz4"))
     )
-    if master.startswith("local") and (local_dir or "").startswith("/dev/shm"):
+    if master.startswith("local") and local_dir and _is_tmpfs(local_dir):
         # local-mode shuffle through a tmpfs local dir hits RAM, not a NIC
         # or a disk — lz4 on that path is pure CPU for zero saved I/O.
         # A/B (08-21, pinned weak cells): compress off is ~7% faster at
-        # both local[4]/20k and local[16]/80k.  Gated on the dir actually
-        # being tmpfs: a disk-backed local dir (no /dev/shm, or
-        # SPARK_LOCAL_DIRS pointing at real storage) keeps compression —
+        # both local[4]/20k and local[16]/80k.  Gated on the dir's mount
+        # being tmpfs (fs type, not path): a disk-backed local dir (no
+        # /dev/shm, or SPARK_LOCAL_DIRS on real storage) keeps compression —
         # uncompressed shuffle files there are several times larger and
         # disk-bound.  Cluster masters always keep the Spark defaults:
         # network shuffle bytes are worth compressing.
@@ -111,3 +105,22 @@ def get_spark(
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     return builder.getOrCreate()
+
+
+def _is_tmpfs(path: str, mounts: str = "/proc/mounts") -> bool:
+    """Whether ``path`` lives on a tmpfs mount, per the mount table
+    ``mounts``: the longest mount point containing the resolved path wins,
+    and a later mount of the same point shadows an earlier one.  An
+    unreadable table counts as not tmpfs (compression stays on)."""
+    path = os.path.realpath(path)
+    best, fstype = "", None
+    try:
+        with open(mounts) as f:
+            for line in f:
+                mnt, typ = line.split()[1:3]
+                inside = path == mnt or path.startswith(mnt.rstrip("/") + "/")
+                if inside and len(mnt) >= len(best):
+                    best, fstype = mnt, typ
+    except OSError:
+        return False
+    return fstype == "tmpfs"

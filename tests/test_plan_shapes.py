@@ -459,7 +459,10 @@ def test_query_string_gate_joins_candidate_keyed(spark, served, documents):
     BroadcastHashJoin; any remaining shuffle join must be one of the
     documented gate joins keyed on the AGGREGATED (query_id, doc_id)
     candidate rows — never on term/term_id (which would shuffle the whole
-    postings relation per query batch)."""
+    postings relation per query batch).  No gate reads the scored
+    candidates twice: nothing is cached, and a qualifier adds no postings
+    scan to a batch that already carries a phrase and a required
+    wildcard."""
     from pyspark.sql import functions as F
 
     from invertedfiles_jl_spark.operators.positional import (
@@ -485,6 +488,17 @@ def test_query_string_gate_joins_candidate_keyed(spark, served, documents):
             # term/term_id key (that would shuffle postings per batch)
             assert "doc_id" in line, line
             assert "term" not in line, line
+
+    def qs_plan(s):
+        q = spark.createDataFrame([(1, s)], "query_id long, content string")
+        return formatted_plan(query_string_topk(idx, pos, q, k=10, meta=meta))
+
+    mixed = 'merge table "fast query" +sc*'
+    with_qual = qs_plan(mixed + " lang:en")
+    assert "InMemoryRelation" not in with_qual
+    assert "InMemoryTableScan" not in with_qual
+    assert len(postings_scan_schemas(with_qual)) == \
+        len(postings_scan_schemas(qs_plan(mixed)))
 
 
 def test_chunk_documents_shuffle_free(spark, documents):

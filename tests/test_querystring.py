@@ -310,6 +310,16 @@ class TestQualifierGates:
         # a batch with no qualifiers must not require meta
         assert _run(spark, tiny, "fast")
 
+    def test_gated_batch_leaves_nothing_persisted(self, spark, tiny, meta):
+        """Every gate family in one batch; serving it must not leave a
+        cached relation behind in the session (no hidden per-batch state)."""
+        jsc = spark.sparkContext._jsc
+        before = set(jsc.getPersistentRDDs().keys())
+        rows = _runq(spark, tiny, meta,
+                     '"fast query" +fa* scan -row lang:en stars:>=10')
+        assert set(rows) == {1, 4}
+        assert set(jsc.getPersistentRDDs().keys()) == before
+
 
 class TestWildcards:
     """Trailing-star wildcards: vocab-bounded prefix expansion.  Tiny
@@ -511,11 +521,17 @@ class TestDefaultOperator:
         assert a == b
 
     def test_bad_operator_rejected(self, spark, tiny):
+        from invertedfiles_jl_spark.operators.querystring import (
+            query_string_percolate,
+        )
+
         idx, pos = tiny
         q = spark.createDataFrame([(1, "x")],
                                   "query_id long, content string")
-        with pytest.raises(AssertionError):
+        with pytest.raises(ValueError, match="default_operator"):
             query_string_topk(idx, pos, q, default_operator="not")
+        with pytest.raises(ValueError, match="default_operator"):
+            query_string_percolate(idx, q, q, default_operator="AND")
 
 
 class TestCompositionParity:

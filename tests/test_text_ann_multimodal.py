@@ -653,3 +653,19 @@ def test_scrub_pii_counts_and_redaction(spark):
                                   "key <HEXSECRET> end")
     assert (got[1]["n_email"], got[1]["n_ipv4"], got[1]["n_hexsecret"]) == (0, 0, 0)
     assert got[1]["redacted"] == "clean text, no pii at all"
+
+
+def test_scrub_pii_preserve_schema_count_columns(spark):
+    """preserve_schema replaces a complete prior-scrub n_* set in place and
+    refuses a partial one instead of silently dropping the user's column."""
+    from invertedfiles_jl_spark.functions.text import scrub_pii
+
+    df = spark.createDataFrame([(0, "a@b.co", 7)],
+                               "doc_id long, content string, n_email long")
+    with pytest.raises(ValueError, match="n_email"):
+        scrub_pii(df, preserve_schema=True)
+
+    once = scrub_pii(df.drop("n_email"), preserve_schema=True)
+    twice = scrub_pii(once, preserve_schema=True)
+    assert twice.columns == once.columns
+    assert twice.first()["n_email"] == 0  # counted on the redacted text
