@@ -45,9 +45,14 @@ Grammar notes (kept deliberately small and regular):
   * a query may carry up to ``MAX_PHRASES`` phrases (the composite
     phrase-key stride — ids collide past that; fixtures sit far below).
 
-Plan shape: :func:`~invertedfiles_jl_spark.operators.search._boolean_scored`
-(broadcast probes + one partial+final agg + per-clause candidate joins)
-plus one gate per clause family the batch carries.  Phrases:
+Plan shape: the caller's batch is read ONCE — parsed, then collected into
+a local relation (``search._local_batch``), so every branch below reads a
+``LocalTableScan``.  Scoring is
+:func:`~invertedfiles_jl_spark.operators.search._boolean_scored`: one
+postings probe and one (query, doc) aggregate that scores and applies the
+must/must_not gates together, so a batch without required wildcards scans
+postings once.  On top comes one gate per clause family the batch
+carries.  Phrases:
 ``positional ⋈ broadcast(phrase slots)`` keyed on a composite (query,
 phrase) id and one (query, doc) count compared against the per-query
 phrase count (Q rows, broadcast).  Required wildcards: the same
@@ -71,6 +76,7 @@ from invertedfiles_jl_spark.operators.build import InvertedIndex
 from invertedfiles_jl_spark.operators.search import (
     _boolean_scored,
     _distinct_term_matches,
+    _local_batch,
     topk,
 )
 
@@ -252,7 +258,7 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
     Elasticsearch ``default_operator: AND`` setting)."""
     _check_operator(default_operator)
     cfg = cfg or index.cfg
-    parsed = parse_query_strings(queries, content_col)
+    parsed = _local_batch(parse_query_strings(queries, content_col))
     flags = _clause_flags(parsed)
     folded, req = _wildcard_setup(index, parsed,
                                   _fold_clauses(parsed, default_operator),
@@ -265,12 +271,14 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
             req_terms.select(
                 (F.col("query_id") * MAX_PHRASES + F.col("widx"))
                 .alias("query_id"), "term_id").distinct())
+        # gh holds one row per (wildcard group, doc): a plain count is
+        # the number of distinct groups hit
         group_hits = (
             gh.select(
                 F.floor(F.col("query_id") / MAX_PHRASES).alias("query_id"),
-                F.col("query_id").alias("wg_id"), "doc_id")
+                "doc_id")
             .groupBy("query_id", "doc_id")
-            .agg(F.countDistinct("wg_id").cast("long").alias("n_wild_hit"))
+            .agg(F.count(F.lit(1)).alias("n_wild_hit"))
         )
         scored = _required_wildcard_filter(scored, n_req, group_hits)
     if flags["n_quals"]:
@@ -515,6 +523,8 @@ def _phrase_filter(cand: DataFrame, parsed: DataFrame, positional: DataFrame,
             .select("query_id", "doc_id")
         )
         hits = shits if hits is None else hits.unionByName(shits)
+    # hits hold one row per (phrase, doc), so plain conditional counts
+    # are the distinct phrases satisfied / excluded
     hit = (
         hits.select(
             F.floor(F.col("query_id") / MAX_PHRASES).alias("query_id"),
@@ -522,7 +532,7 @@ def _phrase_filter(cand: DataFrame, parsed: DataFrame, positional: DataFrame,
         .join(F.broadcast(qp_signs), "qp_id")
         .groupBy("query_id", "doc_id")
         .agg(
-            F.countDistinct(F.when(F.col("sign") != "-", F.col("qp_id")))
+            F.sum(F.when(F.col("sign") != "-", 1).otherwise(0))
             .cast("long").alias("n_ph_hit"),
             F.sum(F.when(F.col("sign") == "-", 1).otherwise(0))
             .cast("long").alias("n_neg_ph_hit"),

@@ -164,10 +164,17 @@ def _bm25_qterms(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     vocab ⋈ broadcast(qterms) on term_id: attaches df for idf; inner join
     drops out-of-vocabulary terms (empty Q ⇒ empty result,
     src/invfilesearch.jl:44)."""
+    return _with_idf(index, query_terms(queries, index.cfg))
+
+
+def _with_idf(index: InvertedIndex, qt: DataFrame) -> DataFrame:
+    """(query_id, term_id, <qt cols>, idf) — the vocab join of
+    :func:`_bm25_qterms` for any (query_id, term, term_id, ...) relation;
+    extra columns ride along."""
     n = float(index.stats["n_docs"])
-    qt = query_terms(queries, index.cfg)
+    cols = [c for c in qt.columns if c not in ("query_id", "term", "term_id")]
     return index.vocab.select("term_id", "df").join(F.broadcast(qt), "term_id").select(
-        "query_id", "term_id", "qtf",
+        "query_id", "term_id", *cols,
         F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
     )
 
@@ -345,9 +352,9 @@ def _distinct_term_matches(index: InvertedIndex,
                            expanded: DataFrame) -> DataFrame:
     """(query_id, doc_id, n_terms) — distinct matched terms per doc for an
     expanded (query_id, term_id) term set: the shared engine under prefix,
-    fuzzy and boolean must/must_not gating.  Broadcast the expansion into
-    the postings join (fixed-width key, pruned scan), explode matched
-    lists only, partial+final distinct-count."""
+    fuzzy, wildcard and regex search and the query-string required-wildcard
+    gate.  Broadcast the expansion into the postings join (fixed-width key,
+    pruned scan), explode matched lists only, partial+final distinct-count."""
     id_col = "ids_vb" if "ids_vb" in index.postings.columns else "doc_ids"
     postings = index.postings.select("term_id", id_col)
     joined = postings.join(F.broadcast(expanded), "term_id")
@@ -508,13 +515,24 @@ def boolean_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     rows (the conjunctive analogue of the empty-Q contract — ``n_must``
     counts the RAW distinct query terms, before the vocab join drops OOV).
 
-    Plan shape: the BM25 scoring aggregation (shared with
-    :func:`bm25_topk`), one :func:`_distinct_term_matches` per non-empty
-    clause (must ⇒ equality gate, must_not ⇒ left-anti), every join keyed
-    on (query_id, doc_id) over already-aggregated candidate rows."""
-    scored = _boolean_scored(index, queries, must_col, should_col,
+    Plan shape: the batch is read once into a local relation
+    (:func:`_local_batch`), then ONE postings probe and ONE (query_id,
+    doc_id) aggregate score and gate every clause together (see
+    :func:`_boolean_scored`)."""
+    batch = _local_batch(
+        queries.select("query_id", must_col, should_col, must_not_col))
+    scored = _boolean_scored(index, batch, must_col, should_col,
                              must_not_col)
     return topk(scored, k, "score", ascending=False, rank_round=rank_round)
+
+
+def _local_batch(queries: DataFrame) -> DataFrame:
+    """The query batch as a JVM local relation: collected once over Arrow,
+    so every later branch of the plan reads a ``LocalTableScan`` instead of
+    re-running the caller's lineage (a list-built batch would otherwise
+    unpickle its rows in Python workers once per branch).  Only for
+    driver-sized relations — a query batch is one by contract."""
+    return queries.sparkSession.createDataFrame(queries.toArrow())
 
 
 def _boolean_scored(index: InvertedIndex, queries: DataFrame,
@@ -522,41 +540,48 @@ def _boolean_scored(index: InvertedIndex, queries: DataFrame,
                     must_not_col: str = "must_not") -> DataFrame:
     """The boolean gate + BM25 score WITHOUT the top-k: (query_id, doc_id,
     score) — shared by :func:`boolean_topk` and the query-string parser
-    (operators/querystring.query_string_topk)."""
+    (operators/querystring.query_string_topk).
+
+    One read of ``queries`` builds a role table (query_id, term_id, qtf,
+    is_must, is_not): ``qtf`` counts the term's must + should occurrences
+    (0 for a must_not-only term).  One matched-postings probe and one
+    (query_id, doc_id) aggregate then yield the score, the must terms hit
+    and whether any must_not term hit; a doc is kept when it hits all
+    ``n_must`` terms and no must_not term.  ``n_must`` counts the RAW
+    distinct must terms, before the vocab join drops OOV ones, so an OOV
+    must term is unsatisfiable while an OOV must_not term excludes
+    nothing."""
+    from invertedfiles_jl_spark.functions.tokenize import tokens_sql
+
     assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
 
-    def field(col):
-        return queries.select(
-            "query_id", F.coalesce(F.col(col), F.lit("")).alias("content"))
-
-    scoring = queries.select(
-        "query_id",
-        F.concat_ws(
-            " ",
-            F.coalesce(F.col(must_col), F.lit("")),
-            F.coalesce(F.col(should_col), F.lit("")),
-        ).alias("content"))
-    scored = _bm25_scored(index, scoring, with_matches=False)
-
-    mq = query_terms(field(must_col), index.cfg)
-    n_must = mq.groupBy("query_id").agg(
-        F.countDistinct("term_id").cast("long").alias("n_must"))
-    must_hit = _distinct_term_matches(
-        index, mq.select("query_id", "term_id").distinct()
-    ).withColumnRenamed("n_terms", "n_must_hit")
-    scored = (
-        scored.join(F.broadcast(n_must), "query_id", "left")
-        .join(must_hit, ["query_id", "doc_id"], "left")
-        .filter(F.coalesce("n_must", F.lit(0)) ==
-                F.coalesce("n_must_hit", F.lit(0)))
+    # role 0 = must, 1 = should, 2 = must_not
+    clauses = queries.select("query_id", F.posexplode(F.array(*[
+        F.coalesce(F.col(c), F.lit(""))
+        for c in (must_col, should_col, must_not_col)])).alias("role", "text"))
+    role = F.col("role")
+    roles = (
+        clauses.select("query_id", "role", F.explode(
+            F.expr(tokens_sql("text", index.cfg))).alias("term"))
+        .groupBy("query_id", "term")
+        .agg(F.count(F.when(role < 2, 1)).alias("qtf"),
+             F.max((role == 0).cast("int")).alias("is_must"),
+             F.max((role == 2).cast("int")).alias("is_not"))
+        .withColumn("term_id", term_id_col(F.col("term")))
+    )
+    n_must = roles.groupBy("query_id").agg(
+        F.sum("is_must").alias("n_must"))
+    m = _matched(index, _with_idf(index, roles))
+    return (
+        m.groupBy("query_id", "doc_id").agg(
+            F.sum(F.col("qtf") * F.col("idf") * F.col("weight")).alias("score"),
+            F.sum("is_must").alias("n_must_hit"),
+            F.max("is_not").alias("n_not"))
+        .join(F.broadcast(n_must), "query_id")
+        .filter((F.col("n_must_hit") == F.col("n_must")) &
+                (F.col("n_not") == 0))
         .select("query_id", "doc_id", "score")
     )
-
-    nq = query_terms(field(must_not_col), index.cfg)
-    excluded = _distinct_term_matches(
-        index, nq.select("query_id", "term_id").distinct()
-    ).select("query_id", "doc_id")
-    return scored.join(excluded, ["query_id", "doc_id"], "left_anti")
 
 
 def facet_counts(index: InvertedIndex, queries: DataFrame, meta: DataFrame,

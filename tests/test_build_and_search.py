@@ -253,6 +253,34 @@ def test_boolean_topk_semantics(corpus, texts, spark):
                 k=10, rank_round=6).collect()]
     assert bres == pres and len(bres) == 10
 
+    # clause edge cases, each rank-identical to a brute-force scorer
+    edge = [
+        (11, "scan", "", "scan"),              # +a -a: nothing
+        (12, "", "scan window", "scan"),       # a -a b: no doc with a
+        (13, "scan scan", "window", ""),       # +a +a: one must term
+        (14, "scan", "scan", ""),              # +a a: qtf 2
+        (15, "", "", "scan"),                  # must_not only: nothing
+        (16, "", "scan window", "zzzmissing"),  # OOV must_not: no-op
+    ]
+    eq = spark.createDataFrame(
+        edge, "query_id long, must string, should string, must_not string")
+    got = {}
+    for r in boolean_topk(idx, eq, k=big, rank_round=6).collect():
+        got.setdefault(r.query_id, []).append((r.rank, r.doc_id, r.score))
+    for qid, must, should, must_not in edge:
+        need = set(oracle.tokenize_ws(must))
+        nots = set(oracle.tokenize_ws(must_not))
+        brute = {d: s for d, s in
+                 oracle.bm25_scores(texts, f"{must} {should}").items()
+                 if need <= toks[d] and not nots & toks[d]}
+        gold = oracle.topk_of(brute, big, ascending=False)
+        mine = sorted(got.get(qid, []))
+        assert [d for _, d, _ in mine] == [d for d, _ in gold], f"q{qid}"
+        for (_, _, s), (_, gs) in zip(mine, gold):
+            assert math.isclose(s, gs, rel_tol=1e-5, abs_tol=1e-5), f"q{qid}"
+    assert not {11, 15} & got.keys()
+    assert got[16] and got[12]
+
 
 def test_msm_generalizes_t_threshold(corpus, spark):
     """With every query reduced to its in-vocab terms, msm = 1.0 requires

@@ -501,6 +501,66 @@ def test_query_string_gate_joins_candidate_keyed(spark, served, documents):
         len(postings_scan_schemas(qs_plan(mixed)))
 
 
+def test_boolean_scoring_scans_postings_once(spark, served, documents):
+    """Must and must_not fold into the scoring aggregate: a query string
+    with terms, +must, -must_not and a phrase scans postings once; a
+    required wildcard adds exactly one scan (its group-coverage gate);
+    a boolean_topk batch scans once."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.positional import (
+        positional_postings,
+    )
+    from invertedfiles_jl_spark.operators.querystring import (
+        query_string_topk,
+    )
+    from invertedfiles_jl_spark.operators.search import boolean_topk
+    from invertedfiles_jl_spark.sources.queries import boolean_df
+
+    idx, _ = served
+    pos = positional_postings(
+        documents.select("doc_id", F.col("text").alias("content")))
+
+    def n_scans(s):
+        q = spark.createDataFrame([(1, s)], "query_id long, content string")
+        return len(postings_scan_schemas(
+            formatted_plan(query_string_topk(idx, pos, q, k=10))))
+
+    mixed = 'merge +table -row "fast query"'
+    assert n_scans(mixed) == 1
+    assert n_scans(mixed + " +sc*") == 2
+    plan = formatted_plan(boolean_topk(idx, boolean_df(spark), k=10))
+    assert len(postings_scan_schemas(plan)) == 1
+
+
+def test_query_string_batch_read_once(spark, served, documents):
+    """query_string_topk collects the parsed batch into a local relation:
+    a list-built batch (a Python RDD) is read once, and the plan reads a
+    LocalTableScan, never the RDD.  Percolation's standing relation is
+    not driver-sized and stays a distributed scan."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.positional import (
+        positional_postings,
+    )
+    from invertedfiles_jl_spark.operators.querystring import (
+        query_string_percolate,
+        query_string_topk,
+    )
+
+    idx, _ = served
+    corpus = documents.select("doc_id", F.col("text").alias("content"))
+    q = spark.createDataFrame(
+        [(1, 'merge +table -row "fast query" +sc*'), (2, "window")],
+        "query_id long, content string")
+    df = query_string_topk(idx, positional_postings(corpus), q, k=10)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "LocalTableScan" in plan
+    assert "ExistingRDD" not in plan
+    perc = query_string_percolate(idx, q, corpus)
+    assert "ExistingRDD" in perc._jdf.queryExecution().executedPlan().toString()
+
+
 def test_chunk_documents_shuffle_free(spark, documents):
     """The chunk manifest is a flatMap in relational clothing: ZERO
     exchanges — it must scale with input bytes only."""
