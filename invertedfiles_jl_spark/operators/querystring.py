@@ -46,8 +46,8 @@ Grammar notes (kept deliberately small and regular):
     phrase-key stride — ids collide past that; fixtures sit far below).
 
 Plan shape: the caller's batch is read ONCE — parsed, then collected into
-a local relation (``search._local_batch``), so every branch below reads a
-``LocalTableScan``.  Scoring is
+a local relation (``createDataFrame(parsed.toArrow())``), so every branch
+below reads a ``LocalTableScan``.  Scoring is
 :func:`~invertedfiles_jl_spark.operators.search._boolean_scored`: one
 postings probe and one (query, doc) aggregate that scores and applies the
 must/must_not gates together, so a batch without required wildcards scans
@@ -76,7 +76,6 @@ from invertedfiles_jl_spark.operators.build import InvertedIndex
 from invertedfiles_jl_spark.operators.search import (
     _boolean_scored,
     _distinct_term_matches,
-    _local_batch,
     topk,
 )
 
@@ -258,7 +257,11 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
     Elasticsearch ``default_operator: AND`` setting)."""
     _check_operator(default_operator)
     cfg = cfg or index.cfg
-    parsed = _local_batch(parse_query_strings(queries, content_col))
+    # the batch is driver-sized by contract: collect it once over Arrow so
+    # every branch below reads a LocalTableScan, not the caller's lineage
+    # (a list-built batch would re-unpickle its rows once per branch)
+    parsed = parse_query_strings(queries, content_col)
+    parsed = parsed.sparkSession.createDataFrame(parsed.toArrow())
     flags = _clause_flags(parsed)
     folded, req = _wildcard_setup(index, parsed,
                                   _fold_clauses(parsed, default_operator),

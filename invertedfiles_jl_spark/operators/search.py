@@ -515,24 +515,11 @@ def boolean_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     rows (the conjunctive analogue of the empty-Q contract — ``n_must``
     counts the RAW distinct query terms, before the vocab join drops OOV).
 
-    Plan shape: the batch is read once into a local relation
-    (:func:`_local_batch`), then ONE postings probe and ONE (query_id,
-    doc_id) aggregate score and gate every clause together (see
-    :func:`_boolean_scored`)."""
-    batch = _local_batch(
-        queries.select("query_id", must_col, should_col, must_not_col))
-    scored = _boolean_scored(index, batch, must_col, should_col,
+    Plan shape: ONE postings probe and ONE (query_id, doc_id) aggregate
+    score and gate every clause together (see :func:`_boolean_scored`)."""
+    scored = _boolean_scored(index, queries, must_col, should_col,
                              must_not_col)
     return topk(scored, k, "score", ascending=False, rank_round=rank_round)
-
-
-def _local_batch(queries: DataFrame) -> DataFrame:
-    """The query batch as a JVM local relation: collected once over Arrow,
-    so every later branch of the plan reads a ``LocalTableScan`` instead of
-    re-running the caller's lineage (a list-built batch would otherwise
-    unpickle its rows in Python workers once per branch).  Only for
-    driver-sized relations — a query batch is one by contract."""
-    return queries.sparkSession.createDataFrame(queries.toArrow())
 
 
 def _boolean_scored(index: InvertedIndex, queries: DataFrame,
@@ -547,37 +534,40 @@ def _boolean_scored(index: InvertedIndex, queries: DataFrame,
     (0 for a must_not-only term).  One matched-postings probe and one
     (query_id, doc_id) aggregate then yield the score, the must terms hit
     and whether any must_not term hit; a doc is kept when it hits all
-    ``n_must`` terms and no must_not term.  ``n_must`` counts the RAW
-    distinct must terms, before the vocab join drops OOV ones, so an OOV
-    must term is unsatisfiable while an OOV must_not term excludes
-    nothing."""
-    from invertedfiles_jl_spark.functions.tokenize import tokens_sql
+    ``n_must`` terms and no must_not term.  ``n_must`` is a per-query
+    window over the role table, so it counts the RAW distinct must terms
+    before the vocab join drops OOV ones (an OOV must term is
+    unsatisfiable, an OOV must_not term excludes nothing) without a second
+    read of the batch."""
+    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
 
     assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
 
-    # role 0 = must, 1 = should, 2 = must_not
+    # role 0 = must, 1 = should, 2 = must_not, folded into a composite
+    # (query, role) key so the clauses tokenize like every query relation
     clauses = queries.select("query_id", F.posexplode(F.array(*[
         F.coalesce(F.col(c), F.lit(""))
-        for c in (must_col, should_col, must_not_col)])).alias("role", "text"))
-    role = F.col("role")
+        for c in (must_col, should_col, must_not_col)])).alias("role", "text")
+    ).select((F.col("query_id") * 3 + F.col("role")).alias("key"), "text")
+    key = F.col("key")
+    role = F.pmod(key, F.lit(3))
     roles = (
-        clauses.select("query_id", "role", F.explode(
-            F.expr(tokens_sql("text", index.cfg))).alias("term"))
-        .groupBy("query_id", "term")
+        exploded_terms(clauses, "key", "key", "text", index.cfg)
+        .groupBy(F.floor(key / 3).alias("query_id"), "term")
         .agg(F.count(F.when(role < 2, 1)).alias("qtf"),
              F.max((role == 0).cast("int")).alias("is_must"),
              F.max((role == 2).cast("int")).alias("is_not"))
         .withColumn("term_id", term_id_col(F.col("term")))
+        .withColumn("n_must", F.sum("is_must").over(
+            Window.partitionBy("query_id")))
     )
-    n_must = roles.groupBy("query_id").agg(
-        F.sum("is_must").alias("n_must"))
     m = _matched(index, _with_idf(index, roles))
     return (
         m.groupBy("query_id", "doc_id").agg(
             F.sum(F.col("qtf") * F.col("idf") * F.col("weight")).alias("score"),
             F.sum("is_must").alias("n_must_hit"),
-            F.max("is_not").alias("n_not"))
-        .join(F.broadcast(n_must), "query_id")
+            F.max("is_not").alias("n_not"),
+            F.max("n_must").alias("n_must"))
         .filter((F.col("n_must_hit") == F.col("n_must")) &
                 (F.col("n_not") == 0))
         .select("query_id", "doc_id", "score")

@@ -505,7 +505,8 @@ def test_boolean_scoring_scans_postings_once(spark, served, documents):
     """Must and must_not fold into the scoring aggregate: a query string
     with terms, +must, -must_not and a phrase scans postings once; a
     required wildcard adds exactly one scan (its group-coverage gate);
-    a boolean_topk batch scans once."""
+    a boolean_topk batch scans postings once and reads its list-built
+    batch once (n_must is a window, not a second aggregate of it)."""
     from pyspark.sql import functions as F
 
     from invertedfiles_jl_spark.operators.positional import (
@@ -529,8 +530,10 @@ def test_boolean_scoring_scans_postings_once(spark, served, documents):
     mixed = 'merge +table -row "fast query"'
     assert n_scans(mixed) == 1
     assert n_scans(mixed + " +sc*") == 2
-    plan = formatted_plan(boolean_topk(idx, boolean_df(spark), k=10))
-    assert len(postings_scan_schemas(plan)) == 1
+    bq = boolean_topk(idx, boolean_df(spark), k=10)
+    assert len(postings_scan_schemas(formatted_plan(bq))) == 1
+    executed = bq._jdf.queryExecution().executedPlan().toString()
+    assert executed.count("ExistingRDD") == 1
 
 
 def test_query_string_batch_read_once(spark, served, documents):
