@@ -7,13 +7,23 @@ oracle-compared plans (the engine's reference-parity float32 path is covered
 by pytest instead), ranked on round(score, 6) with a doc_id tie-break so
 sub-ULP summation-order differences can never flip a rank, and emitted
 rounded to 5-6 decimals so value-hashes match.
+
+Both tables are derived from one ordered registry, ``_ROWS``.  To add a
+row, append one line ``"key": (spark_fn, oracle_builder)`` to its end (rows
+are audited by position, so existing keys never move), where
+``oracle_builder`` is a zero-argument callable returning DuckDB SQL built
+from the shared fragments of ``invertedfiles_jl_spark.plans.oracles``
+(``base_ctes``, ``bm25_qterm``/``bm25_scored``, ``rank_cut``, ``top_n``).
+Oracles are independent references: they never call engine Spark code.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 # ---------------------------------------------------------------------------
 # engine imports
@@ -25,12 +35,35 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import build_index
+from invertedfiles_jl_spark.operators.hybrid import hybrid_minmax_topk, hybrid_rrf_topk
 from invertedfiles_jl_spark.operators.search import (
+    bm25_msm_topk,
     bm25_topk,
     cosine_topk,
+    lm_dirichlet_topk,
     postings_exploded,
     set_distance_topk,
+    tfidf_topk,
 )
+from invertedfiles_jl_spark.operators.sharded import sharded_topk
+from invertedfiles_jl_spark.operators.wand import wand_topk
+from invertedfiles_jl_spark.plans import oracles as _osql
+from invertedfiles_jl_spark.plans.oracles import (
+    SCORE_COLS,
+    base_ctes,
+    bm25_idf,
+    bm25_qterm,
+    bm25_sat,
+    bm25_scored,
+    phrase_chains,
+    phrase_hits,
+    rank_over,
+    rank_cut,
+    tokens,
+    top_n,
+    values_sql,
+)
+from invertedfiles_jl_spark.plans.router import auto_topk
 from invertedfiles_jl_spark.sources.queries import (
     FIELDED_SET,
     FUZZY_SET,
@@ -40,15 +73,12 @@ from invertedfiles_jl_spark.sources.queries import (
     REGEX_SET as _REGEX_SET,
     WILDCARD_SET,
     queries_df,
-    queries_values_sql,
 )
 
 _INDEX_CACHE: dict = {}
 
 
 def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     return (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", F.col("text").alias("content"))
@@ -56,7 +86,13 @@ def _corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _index(spark: SparkSession, sf_dir: str, weighting: str, compress: bool = False):
-    key = (sf_dir, weighting, compress)
+    """The cached index of ``sf_dir`` for this session.  Entries built by
+    another (stopped) session are dropped: their cached DataFrames belong
+    to a dead SparkContext."""
+    app = spark.sparkContext.applicationId
+    for stale in [key for key in _INDEX_CACHE if key[0] != app]:
+        del _INDEX_CACHE[stale]
+    key = (app, sf_dir, weighting, compress)
     if key not in _INDEX_CACHE:
         cfg = IndexConfig(weighting=weighting, weight_dtype="double", compress=compress)
         idx = build_index(_corpus(spark, sf_dir), cfg)
@@ -70,41 +106,27 @@ def _index(spark: SparkSession, sf_dir: str, weighting: str, compress: bool = Fa
     return _INDEX_CACHE[key]
 
 
+def _ranked(res: DataFrame, col: str = "score", digits: int = 5,
+            item: str = "doc_id") -> DataFrame:
+    """The (query_id, rank, item, round(col, digits)) shape of a ranked
+    row."""
+    return res.select("query_id", "rank", item, F.round(col, digits).alias(col))
+
+
 # ---------------------------------------------------------------------------
-# shared DuckDB SQL fragments (must mirror the Spark plans token-for-token in
-# arithmetic shape — see invertedfiles_jl_spark/functions/tokenize.py)
+# DuckDB oracles (built from the shared fragments of plans.oracles, which
+# mirror the Spark plans token-for-token in arithmetic shape)
 # ---------------------------------------------------------------------------
 
-_TOK = "list_filter(string_split_regex(lower({col}), '\\s+'), t -> t != '')"
+_DIST_ORDER = "round(dist, 6) ASC, doc_id ASC"
+_DIST_COLS = "query_id, rank, doc_id, round(dist, 5) AS dist"
 
-_BASE_CTES = f"""
-tok AS (
-  SELECT doc_id, unnest({_TOK.format(col='text')}) AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term
-),
-dl AS (
-  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS doc_len, CAST(count(*) AS BIGINT) AS nnz,
-         sqrt(CAST(sum(tf * tf) AS DOUBLE)) AS norm
-  FROM tf GROUP BY doc_id
-),
-stats AS (
-  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM documents) AS n_docs,
-         (SELECT avg(doc_len) FROM dl) AS avgdl
-),
-vocab AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS cf
-  FROM tf GROUP BY term
-),
-qtok AS (
-  SELECT query_id, unnest({_TOK.format(col='content')}) AS term
-  FROM {{queries}}
-),
-qt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf FROM qtok GROUP BY query_id, term
-)
-""".replace("{queries}", queries_values_sql())
+
+def _bm25_chain(k1: float, b: float, where: str = "TRUE",
+                min_match: int = 1) -> str:
+    """Base CTEs + ``qterm`` + ``scored``: plain BM25 over QUERY_SET."""
+    return (f"{base_ctes()},\nqterm AS ({bm25_qterm()}),\n"
+            f"scored AS ({bm25_scored(k1, b, where=where, min_match=min_match)})")
 
 
 def _bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75, t: int = 1,
@@ -118,39 +140,14 @@ def _bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75, t: int = 1,
     never match, while idf and every surviving score stay frozen at their
     full-corpus values.
     ``offset`` — pagination: ranks (offset, offset + k] (search.topk)."""
-    having = f"HAVING count(*) >= {t}" if t > 1 else ""
     clauses = []
     if accept_where:
         clauses.append(f"tf.doc_id IN (SELECT doc_id FROM documents WHERE {accept_where})")
     if term_where:
         clauses.append(f"tf.term IN (SELECT term FROM vocab WHERE {term_where})")
-    accept = f"WHERE {' AND '.join(clauses)}" if clauses else ""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  {accept}
-  GROUP BY query_id, tf.doc_id {having}
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank > {offset} AND rank <= {offset + k}
+WITH {_bm25_chain(k1, b, " AND ".join(clauses) or "TRUE", t)},
+{rank_cut('scored', k, offset=offset)}
 """
 
 
@@ -160,16 +157,10 @@ def _bm25_explain_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     arithmetic, search.explain_bm25's docstring) and re-rank to find the
     top-k docs whose rows are emitted."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
+WITH {base_ctes()},
+qterm AS ({bm25_qterm()}),
 det AS (
-  SELECT query_id, tf.doc_id, qterm.term, qtf, idf,
-         (tf * ({k1} + 1.0)
-          / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl))) AS sat_tf
+  SELECT query_id, tf.doc_id, qterm.term, qtf, idf, {bm25_sat(k1, b)} AS sat_tf
   FROM qterm
   JOIN tf ON qterm.term = tf.term
   JOIN dl ON tf.doc_id = dl.doc_id
@@ -179,17 +170,11 @@ scored AS (
   SELECT query_id, doc_id, sum(qtf * idf * sat_tf) AS score
   FROM det GROUP BY query_id, doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
+top AS ({top_n('scored', k, 'query_id, doc_id, rank')})
 SELECT d.query_id, r.rank, d.doc_id, d.term, d.qtf,
        round(d.idf, 5) AS idf, round(d.sat_tf, 5) AS sat_tf,
        round(d.qtf * d.idf * d.sat_tf, 5) AS contrib
-FROM det d JOIN ranked r ON d.query_id = r.query_id AND d.doc_id = r.doc_id
-WHERE r.rank <= {k}
+FROM det d JOIN top r ON d.query_id = r.query_id AND d.doc_id = r.doc_id
 """
 
 
@@ -199,110 +184,40 @@ def _prf_bm25_sql(k: int = 10, fb_docs: int = 5, fb_terms: int = 5,
     expansion = top-fb_terms by round(tf·idf, 6) over the feedback docs'
     tokens (original query terms excluded), re-score with qtf/β weights —
     stage-for-stage the plan of ``search.prf_bm25_topk``."""
-    sat = (f"(tf * ({k1} + 1.0) / (tf + {k1} * ((1.0 - {b}) "
-           f"+ {b} * doc_len / avgdl)))")
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored1 AS (
-  SELECT query_id, tf.doc_id, sum(qtf * idf * {sat}) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-fb AS (
-  SELECT query_id, doc_id FROM (
-    SELECT query_id, doc_id,
-           row_number() OVER (PARTITION BY query_id
-               ORDER BY round(score, 6) DESC, doc_id ASC) AS r
-    FROM scored1
-  ) WHERE r <= {fb_docs}
-),
+WITH {base_ctes()},
+qterm AS ({bm25_qterm()}),
+scored1 AS ({bm25_scored(k1, b)}),
+fb AS ({top_n('scored1', fb_docs, 'query_id, doc_id')}),
 ftf AS (
   SELECT f.query_id, tok.term, CAST(count(*) AS BIGINT) AS ftf
   FROM fb f JOIN tok ON tok.doc_id = f.doc_id
   GROUP BY f.query_id, tok.term
 ),
 cand AS (
-  SELECT ftf.query_id, ftf.term, ftf.ftf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
+  SELECT ftf.query_id, ftf.term, ftf.ftf, {bm25_idf()} AS idf
   FROM ftf JOIN vocab ON ftf.term = vocab.term CROSS JOIN stats
   WHERE NOT EXISTS (SELECT 1 FROM qt
                     WHERE qt.query_id = ftf.query_id AND qt.term = ftf.term)
 ),
-expansion AS (
-  SELECT query_id, term, CAST({beta} AS DOUBLE) AS w, idf FROM (
-    SELECT *, row_number() OVER (PARTITION BY query_id
-        ORDER BY round(ftf * idf, 6) DESC, term ASC) AS trank
-    FROM cand
-  ) WHERE trank <= {fb_terms}
-),
+expansion AS ({top_n('cand', fb_terms, f'query_id, term, CAST({beta} AS DOUBLE) AS w, idf',
+                     'round(ftf * idf, 6) DESC, term ASC')}),
 combined AS (
   SELECT query_id, term, CAST(qtf AS DOUBLE) AS w, idf FROM qterm
   UNION ALL
   SELECT query_id, term, w, idf FROM expansion
 ),
-scored AS (
-  SELECT query_id, tf.doc_id, sum(w * idf * {sat}) AS score
-  FROM combined
-  JOIN tf ON combined.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+scored AS ({bm25_scored(k1, b, qterm='combined', w='w')}),
+{rank_cut('scored', k)}
 """
 
 
-def _boolean_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    """Boolean (must/should/must_not) oracle: BM25 over must+should terms,
-    gated on count(DISTINCT raw must terms) == count(DISTINCT matched must
-    terms) per doc (OOV must ⇒ unsatisfiable), anti-gated on any must_not
-    match.  Mirrors search.boolean_topk."""
-    from invertedfiles_jl_spark.sources.queries import boolean_values_sql
-
-    mtok = _TOK.format(col="must")
-    ntok = _TOK.format(col="must_not")
-    stok = _TOK.format(col="concat(must, ' ', should)")
-    return f"""
-WITH {_BASE_CTES},
-bq AS (SELECT * FROM {boolean_values_sql()}),
-sq AS (
-  SELECT query_id, unnest({stok}) AS term FROM bq
-),
-sqt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM sq GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, sqt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM sqt JOIN vocab ON sqt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-mtokens AS (SELECT query_id, unnest({mtok}) AS term FROM bq),
+def _must_gates(not_union: str = "") -> str:
+    """Boolean gate CTEs over ``bq``: distinct raw must terms per query
+    (OOV included, so an OOV must is unsatisfiable) vs the distinct must
+    terms a doc holds, and the docs holding any must_not term (or a term
+    of the ``not_union`` rows)."""
+    return f"""mtokens AS (SELECT query_id, unnest({tokens('must')}) AS term FROM bq),
 nmust AS (
   SELECT query_id, CAST(count(DISTINCT term) AS BIGINT) AS n_must
   FROM mtokens GROUP BY query_id
@@ -314,29 +229,44 @@ musthit AS (
   JOIN tf ON tf.term = m.term
   GROUP BY m.query_id, tf.doc_id
 ),
-ntokens AS (SELECT query_id, unnest({ntok}) AS term FROM bq),
+ntokens AS (
+  SELECT query_id, unnest({tokens('must_not')}) AS term FROM bq{not_union}
+),
 excluded AS (
   SELECT DISTINCT n.query_id, tf.doc_id
   FROM (SELECT DISTINCT query_id, term FROM ntokens) n
   JOIN tf ON tf.term = n.term
-),
+)"""
+
+
+# joins and predicate of the _must_gates gate over candidates ``s``
+_MUST_JOINS = """  LEFT JOIN nmust USING (query_id)
+  LEFT JOIN musthit mh ON mh.query_id = s.query_id AND mh.doc_id = s.doc_id
+"""
+_MUST_PRED = """COALESCE(nmust.n_must, 0) = COALESCE(mh.n_hit, 0)
+    AND NOT EXISTS (SELECT 1 FROM excluded x
+                    WHERE x.query_id = s.query_id AND x.doc_id = s.doc_id)"""
+
+
+def _boolean_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
+    """Boolean (must/should/must_not) oracle: BM25 over must+should terms,
+    gated on count(DISTINCT raw must terms) == count(DISTINCT matched must
+    terms) per doc (OOV must ⇒ unsatisfiable), anti-gated on any must_not
+    match.  Mirrors search.boolean_topk."""
+    from invertedfiles_jl_spark.sources.queries import boolean_values_sql
+
+    return f"""
+WITH bq AS (SELECT * FROM {boolean_values_sql()}),
+{base_ctes("(SELECT query_id, concat(must, ' ', should) AS content FROM bq)")},
+qterm AS ({bm25_qterm()}),
+scored AS ({bm25_scored(k1, b)}),
+{_must_gates()},
 gated AS (
   SELECT s.query_id, s.doc_id, s.score
   FROM scored s
-  LEFT JOIN nmust USING (query_id)
-  LEFT JOIN musthit mh ON mh.query_id = s.query_id AND mh.doc_id = s.doc_id
-  WHERE COALESCE(nmust.n_must, 0) = COALESCE(mh.n_hit, 0)
-    AND NOT EXISTS (SELECT 1 FROM excluded x
-                    WHERE x.query_id = s.query_id AND x.doc_id = s.doc_id)
+{_MUST_JOINS}  WHERE {_MUST_PRED}
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM gated
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('gated', k)}
 """
 
 
@@ -358,16 +288,30 @@ def _pos_phrases(p) -> list:
             if sg != "-"]
 
 
-def _qstring_gate_sql(parsed, alias: str, wild_hit_src: str = "tf") -> dict:
-    """Shared gate-SQL generation for the query-string oracles: phrase
-    branches over ``tsx`` (exact = _phrase_bm25_sql's start-survival
-    predicate, sloppy = proximity_topk_sql's ordered m-way join with min
-    span ≤ m-1+N), per-query phrase counts, the qualifier CTEs/joins
-    (equality + the numeric >/>=/</<=/lo..hi forms of _qual_sat) over
-    (lang, source, n_chars), and the wildcard parts (vocab-bounded
-    ``starts_with`` expansion: scoring/must_not unions plus the
-    required-group coverage gate over ``wild_hit_src``).  ``alias`` is
-    the candidate relation the gate joins attach to."""
+def _qstring_gated(k1: float, b: float) -> str:
+    """CTEs through ``gated``: every (query, doc) of the BM25-scored
+    query-string batch that passes all of its query's gates.
+
+    The fixture strings are parsed HERE with the same Python mirror the
+    tests gate against the distributed parser
+    (operators/querystring.parse_query_string_py), and the parsed clauses
+    are inlined as literals.  Scoring = BM25 over must + should + positive
+    phrase words (Lucene's default: phrases rank like their words) plus the
+    vocab-bounded ``starts_with`` expansion of every non-negated wildcard.
+    Gates = the boolean must coverage (raw tokens) and must_not anti-join
+    (plus negated wildcard expansions); per phrase an exact-adjacency hit
+    (:func:`plans.oracles.phrase_hits`) or, for a ``~N`` sloppy phrase, the
+    ordered position chains of :func:`plans.oracles.phrase_chains` with
+    min span ≤ m-1+N; negated phrases exclude; conjunctive ``field:value`` qualifiers (equality + the numeric
+    >/>=/</<=/lo..hi forms of _qual_sat) over (lang, source, n_chars); and
+    every required wildcard group must hit."""
+    parsed = _qstring_parsed()
+    rows = ", ".join(
+        "(CAST({} AS BIGINT), '{}', '{}', '{}')".format(
+            qid, p["must"],
+            (p["should"] + " " + " ".join(_pos_phrases(p))).strip(),
+            p["must_not"])
+        for qid, p in parsed)
     branches, neg_branches, nph_rows, pos_ctes = [], [], [], []
     for qid, p in parsed:
         n_pos_ph = sum(1 for s in p["phrase_signs"] if s != "-")
@@ -376,61 +320,29 @@ def _qstring_gate_sql(parsed, alias: str, wild_hit_src: str = "tf") -> dict:
         for pidx, (text, slop, sign) in enumerate(
                 zip(p["phrases"], p["slops"], p["phrase_signs"])):
             dest = neg_branches if sign == "-" else branches
-            ws = text.lower().split()
-            m = len(ws)
             if slop == 0:
-                conds = " AND ".join(
-                    f"ts[i+{j}] = '{w}'" for j, w in enumerate(ws))
                 dest.append(
                     f"  SELECT CAST({qid} AS BIGINT) AS query_id, "
-                    f"{pidx} AS pidx, doc_id FROM tsx\n"
-                    f"  WHERE len(list_filter(range(1, len(ts) - {m} + 2), "
-                    f"i -> {conds})) > 0"
-                )
+                    f"{pidx} AS pidx, doc_id FROM toks\n"
+                    f"  WHERE {phrase_hits(text)} > 0")
                 continue
-            # sloppy: per-slot position lists, ordered m-way join, min
-            # ordered span <= (m-1)+slop — proximity_topk_sql's shape
-            for j, wd in enumerate(ws):
-                pos_ctes.append(
-                    f"qe_{qid}_{pidx}_{j} AS (SELECT doc_id, "
-                    f"unnest(list_filter(range(1, len(ts) + 1), "
-                    f"i -> ts[i] = '{wd}')) AS p FROM tsx)")
-            if m == 1:
-                dest.append(
-                    f"  SELECT CAST({qid} AS BIGINT) AS query_id, "
-                    f"{pidx} AS pidx, doc_id FROM qe_{qid}_{pidx}_0 "
-                    f"GROUP BY doc_id")
-                continue
-            joins = "".join(
-                f"\n  JOIN qe_{qid}_{pidx}_{j} e{j} "
-                f"ON e{j}.doc_id = e0.doc_id AND e{j}.p > e{j - 1}.p"
-                for j in range(1, m))
+            # sloppy: min ordered span of the m-way chains <= (m-1)+slop
+            ctes, chains = phrase_chains([(qid, text)], f"qe{pidx}_")
+            pos_ctes.append(ctes)
             dest.append(
-                f"  SELECT CAST({qid} AS BIGINT) AS query_id, "
-                f"{pidx} AS pidx, e0.doc_id AS doc_id\n"
-                f"  FROM qe_{qid}_{pidx}_0 e0{joins}\n"
-                f"  GROUP BY e0.doc_id\n"
-                f"  HAVING min(e{m - 1}.p - e0.p) <= {m - 1 + slop}"
-            )
-    empty_branch = ("  SELECT CAST(NULL AS BIGINT) AS query_id, 0 AS pidx, "
-                    "CAST(NULL AS BIGINT) AS doc_id WHERE FALSE")
-    out = {
-        "gate": "\n  UNION ALL\n".join(branches) or empty_branch,
-        "pos_cte_sql": "".join(c + ",\n" for c in pos_ctes),
-        "nph_rows": nph_rows,
-    }
+                f"  SELECT query_id, {pidx} AS pidx, doc_id FROM (\n{chains}\n"
+                f"  ) GROUP BY query_id, doc_id\n"
+                f"  HAVING min(span) <= {len(text.split()) - 1 + slop}")
+    gate = "\n  UNION ALL\n".join(branches) or (
+        "  SELECT CAST(NULL AS BIGINT) AS query_id, 0 AS pidx, "
+        "CAST(NULL AS BIGINT) AS doc_id WHERE FALSE")
     # negated phrases ('-"..."'): any hit excludes the (query, doc) pair
+    neg_cte = neg_pred = ""
     if neg_branches:
-        neg_union = "\n  UNION ALL\n".join(neg_branches)
-        out["neg_ph_cte_sql"] = (
-            "phneg AS (\n  SELECT DISTINCT query_id, doc_id FROM (\n"
-            + neg_union + "\n  )\n),\n")
-        out["neg_ph_pred"] = (
-            "    AND NOT EXISTS (SELECT 1 FROM phneg pn "
-            "WHERE pn.query_id = {a}.query_id "
-            "AND pn.doc_id = {a}.doc_id)\n".format(a=alias))
-    else:
-        out["neg_ph_cte_sql"] = out["neg_ph_pred"] = ""
+        neg_cte = ("phneg AS (\n  SELECT DISTINCT query_id, doc_id FROM (\n"
+                   + "\n  UNION ALL\n".join(neg_branches) + "\n  )\n),\n")
+        neg_pred = ("    AND NOT EXISTS (SELECT 1 FROM phneg pn "
+                    "WHERE pn.query_id = s.query_id AND pn.doc_id = s.doc_id)\n")
     # metadata qualifiers: conjunctive filters — the same coalesce-counting
     # gate shape as phrases, CROSS JOIN quals × documents at fixture scale
     # (production gates candidates only)
@@ -443,6 +355,7 @@ def _qstring_gate_sql(parsed, alias: str, wild_hit_src: str = "tf") -> dict:
         for s, fld, val in zip(p["qual_signs"], p["qual_fields"],
                                p["qual_values"]):
             qrows.append(f"(CAST({qid} AS BIGINT), '{s}', '{fld}', '{val}')")
+    qual_cte = qual_joins = qual_pred = ""
     if qrows:
         fval = ("CASE q.field WHEN 'lang' THEN d.lang "
                 "WHEN 'source' THEN d.source "
@@ -458,7 +371,7 @@ def _qstring_gate_sql(parsed, alias: str, wild_hit_src: str = "tf") -> dict:
                      BETWEEN try_cast(string_split(q.value, '..')[1] AS DOUBLE)
                          AND try_cast(string_split(q.value, '..')[2] AS DOUBLE)
             ELSE {fval} = q.value END, FALSE)"""
-        out["qual_cte_sql"] = f"""quals(query_id, sign, field, value) AS (VALUES {", ".join(qrows)}),
+        qual_cte = f"""quals(query_id, sign, field, value) AS (VALUES {", ".join(qrows)}),
 nposq(query_id, n_pos) AS (VALUES {", ".join(npos_rows)}),
 qsat AS (
   SELECT q.query_id, d.doc_id,
@@ -470,15 +383,13 @@ qsat AS (
   GROUP BY q.query_id, d.doc_id
 ),
 """
-        out["qual_joins"] = (
-            f"  LEFT JOIN nposq ON nposq.query_id = {alias}.query_id\n"
-            f"  LEFT JOIN qsat qq ON qq.query_id = {alias}.query_id "
-            f"AND qq.doc_id = {alias}.doc_id\n")
-        out["qual_pred"] = (
+        qual_joins = (
+            "  LEFT JOIN nposq ON nposq.query_id = s.query_id\n"
+            "  LEFT JOIN qsat qq ON qq.query_id = s.query_id "
+            "AND qq.doc_id = s.doc_id\n")
+        qual_pred = (
             "    AND COALESCE(nposq.n_pos, 0) = COALESCE(qq.n_pos_sat, 0)\n"
             "    AND COALESCE(qq.n_neg_sat, 0) = 0\n")
-    else:
-        out["qual_cte_sql"] = out["qual_joins"] = out["qual_pred"] = ""
     # wildcards: vocab-bounded prefix expansion (OR-mode semantics — the
     # driver rows use the default operator)
     score_exp, not_exp, req_branches, nreq_rows = [], [], [], []
@@ -489,124 +400,47 @@ qsat AS (
                 f"(CAST({qid} AS BIGINT), CAST({n_req} AS BIGINT))")
         for widx, (s, pre) in enumerate(zip(p["wild_signs"],
                                             p["wild_prefixes"])):
-            sel = (f"  SELECT CAST({qid} AS BIGINT) AS query_id, term "
-                   f"FROM vocab WHERE starts_with(term, '{pre}')")
-            (not_exp if s == "-" else score_exp).append(sel)
+            (not_exp if s == "-" else score_exp).append(
+                f"\n  UNION ALL\n  SELECT CAST({qid} AS BIGINT) AS query_id, "
+                f"term FROM vocab WHERE starts_with(term, '{pre}')")
             if s == "+":
                 req_branches.append(
                     f"  SELECT CAST({qid} AS BIGINT) AS query_id, "
                     f"{widx} AS widx, t.doc_id\n"
-                    f"  FROM {wild_hit_src} t "
-                    f"JOIN vocab v ON t.term = v.term\n"
+                    f"  FROM tf t JOIN vocab v ON t.term = v.term\n"
                     f"  WHERE starts_with(v.term, '{pre}')\n"
                     f"  GROUP BY t.doc_id"
                 )
-    out["wild_score_union"] = (
-        "\n  UNION ALL\n" + "\n  UNION ALL\n".join(score_exp)
-        if score_exp else "")
-    out["wild_not_union"] = (
-        "\n  UNION ALL\n" + "\n  UNION ALL\n".join(not_exp)
-        if not_exp else "")
+    wild_cte = wild_joins = wild_pred = ""
     if req_branches:
-        out["wild_cte_sql"] = f"""wghit AS (
+        wild_cte = f"""wghit AS (
   SELECT query_id, doc_id,
          CAST(count(DISTINCT widx) AS BIGINT) AS n_wild_hit
   FROM (
-{"{}".format(chr(10) + "  UNION ALL" + chr(10)).join(req_branches)}
+{chr(10).join([chr(10) + "  UNION ALL" + chr(10)]).join(req_branches)}
   ) GROUP BY query_id, doc_id
 ),
 nreqw(query_id, n_req) AS (VALUES {", ".join(nreq_rows)}),
 """
-        out["wild_joins"] = (
-            f"  LEFT JOIN nreqw ON nreqw.query_id = {alias}.query_id\n"
-            f"  LEFT JOIN wghit wg ON wg.query_id = {alias}.query_id "
-            f"AND wg.doc_id = {alias}.doc_id\n")
-        out["wild_pred"] = (
-            "    AND COALESCE(nreqw.n_req, 0) = "
-            "COALESCE(wg.n_wild_hit, 0)\n")
-    else:
-        out["wild_cte_sql"] = out["wild_joins"] = out["wild_pred"] = ""
-    return out
-
-
-def _query_string_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    """Query-string (Lucene ``QueryParser`` mini-language) oracle.
-
-    The fixture strings are parsed HERE with the same Python mirror the
-    tests gate against the distributed parser
-    (operators/querystring.parse_query_string_py), and the parsed clauses
-    are inlined as literals: the boolean oracle's gates (must-coverage +
-    must_not anti-join) plus, per phrase, an exact-adjacency branch (the
-    start-survival predicate of :func:`_phrase_bm25_sql`) or — for a
-    ``~N`` sloppy phrase — an ordered m-way position join requiring min
-    ordered span ≤ m-1+N (the proximity oracle's shape) — plus conjunctive
-    ``field:value`` metadata-qualifier gates over (lang, source).  Scoring
-    folds phrase words into should — Lucene's default, phrases rank like
-    their words — and a doc must satisfy EVERY phrase and qualifier of its
-    query."""
-    parsed = _qstring_parsed()
-    rows = ", ".join(
-        "(CAST({} AS BIGINT), '{}', '{}', '{}')".format(
-            qid, p["must"],
-            (p["should"] + " " + " ".join(_pos_phrases(p))).strip(),
-            p["must_not"])
-        for qid, p in parsed)
-    g = _qstring_gate_sql(parsed, alias="s", wild_hit_src="tf")
-    gate, pos_cte_sql = g["gate"], g["pos_cte_sql"]
-    nph_rows = g["nph_rows"]
-    qual_cte_sql, qual_joins, qual_pred = (
-        g["qual_cte_sql"], g["qual_joins"], g["qual_pred"])
-    mtok = _TOK.format(col="must")
-    ntok = _TOK.format(col="must_not")
-    stok = _TOK.format(col="concat(must, ' ', should)")
+        wild_joins = (
+            "  LEFT JOIN nreqw ON nreqw.query_id = s.query_id\n"
+            "  LEFT JOIN wghit wg ON wg.query_id = s.query_id "
+            "AND wg.doc_id = s.doc_id\n")
+        wild_pred = ("    AND COALESCE(nreqw.n_req, 0) = "
+                     "COALESCE(wg.n_wild_hit, 0)\n")
+    # a vocab term tokenizes to itself, so expansions join the query text
+    scoring = ("(SELECT query_id, concat(must, ' ', should) AS content "
+               f"FROM bq{''.join(score_exp)})")
+    pos_cte_sql = "".join(c + ",\n" for c in pos_ctes)
     return f"""
-WITH {_BASE_CTES},
-bq(query_id, must, should, must_not) AS (VALUES {rows}),
-tsx AS (
-  SELECT doc_id, {_TOK.format(col='text')} AS ts FROM documents
+WITH bq(query_id, must, should, must_not) AS (VALUES {rows}),
+{base_ctes(scoring)},
+qterm AS ({bm25_qterm()}),
+scored AS ({bm25_scored(k1, b)}),
+toks AS (
+  SELECT doc_id, {tokens()} AS ts FROM documents
 ),
-{pos_cte_sql}sq AS (
-  SELECT query_id, unnest({stok}) AS term FROM bq{g["wild_score_union"]}
-),
-sqt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM sq GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, sqt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM sqt JOIN vocab ON sqt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-mtokens AS (SELECT query_id, unnest({mtok}) AS term FROM bq),
-nmust AS (
-  SELECT query_id, CAST(count(DISTINCT term) AS BIGINT) AS n_must
-  FROM mtokens GROUP BY query_id
-),
-musthit AS (
-  SELECT m.query_id, tf.doc_id,
-         CAST(count(DISTINCT tf.term) AS BIGINT) AS n_hit
-  FROM (SELECT DISTINCT query_id, term FROM mtokens) m
-  JOIN tf ON tf.term = m.term
-  GROUP BY m.query_id, tf.doc_id
-),
-ntokens AS (
-  SELECT query_id, unnest({ntok}) AS term FROM bq{g["wild_not_union"]}
-),
-excluded AS (
-  SELECT DISTINCT n.query_id, tf.doc_id
-  FROM (SELECT DISTINCT query_id, term FROM ntokens) n
-  JOIN tf ON tf.term = n.term
-),
+{pos_cte_sql}{_must_gates(''.join(not_exp))},
 phhit AS (
   SELECT query_id, doc_id,
          CAST(count(DISTINCT pidx) AS BIGINT) AS n_ph_hit
@@ -615,143 +449,33 @@ phhit AS (
   ) GROUP BY query_id, doc_id
 ),
 nph(query_id, n_ph) AS (VALUES {", ".join(nph_rows)}),
-{qual_cte_sql}{g["wild_cte_sql"]}{g["neg_ph_cte_sql"]}gated AS (
-  SELECT s.query_id, s.doc_id, s.score
+{qual_cte}{wild_cte}{neg_cte}gated AS (
+  SELECT s.query_id, s.doc_id, s.n_matched, s.score
   FROM scored s
-  LEFT JOIN nmust USING (query_id)
-  LEFT JOIN musthit mh ON mh.query_id = s.query_id AND mh.doc_id = s.doc_id
-  LEFT JOIN nph ON nph.query_id = s.query_id
+{_MUST_JOINS}  LEFT JOIN nph ON nph.query_id = s.query_id
   LEFT JOIN phhit ph ON ph.query_id = s.query_id AND ph.doc_id = s.doc_id
-{qual_joins}{g["wild_joins"]}  WHERE COALESCE(nmust.n_must, 0) = COALESCE(mh.n_hit, 0)
+{qual_joins}{wild_joins}  WHERE {_MUST_PRED}
     AND COALESCE(nph.n_ph, 0) = COALESCE(ph.n_ph_hit, 0)
-{qual_pred}{g["wild_pred"]}{g["neg_ph_pred"]}    AND NOT EXISTS (SELECT 1 FROM excluded x
-                    WHERE x.query_id = s.query_id AND x.doc_id = s.doc_id)
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM gated
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{qual_pred}{wild_pred}{neg_pred})"""
+
+
+def _query_string_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
+    """Query-string (Lucene ``QueryParser`` mini-language) oracle: the
+    gated batch of :func:`_qstring_gated`, ranked; a doc must satisfy
+    EVERY phrase and qualifier of its query."""
+    return f"""{_qstring_gated(k1, b)},
+{rank_cut('gated', k)}
 """
 
 
 def _qstring_percolate_sql(k1: float = 1.2, b: float = 0.75) -> str:
-    """Oracle for query-string percolation: every (query, doc) pair
-    passing the mini-language gates.
-
-    Scoring = the frozen-stats BM25 of :func:`_percolate_sql` over the
-    query's scoring terms (must + should + phrase words; vocab-joined, so
-    index-OOV terms score 0), DISJUNCTIVE (n_matched ≥ 1).  Gates = must
-    coverage counted on RAW tokens against the doc's distinct token set
-    (a doc can satisfy a term the index never saw), must_not anti-join on
-    the same, plus the shared phrase and qualifier gate SQL of
-    :func:`_qstring_gate_sql`."""
-    parsed = _qstring_parsed()
-    srows = ", ".join(
-        "(CAST({} AS BIGINT), '{}')".format(
-            qid, (p["must"] + " " + p["should"] + " "
-                  + " ".join(_pos_phrases(p))).strip())
-        for qid, p in parsed)
-    mrows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{p['must']}')" for qid, p in parsed)
-    nrows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{p['must_not']}')" for qid, p in parsed)
-    g = _qstring_gate_sql(parsed, alias="per", wild_hit_src="dtt")
-    tok = _TOK.format(col="content")
-    return f"""
-WITH {_BASE_CTES},
-tsx AS (
-  SELECT doc_id, {_TOK.format(col='text')} AS ts FROM documents
-),
-{g["pos_cte_sql"]}sq(query_id, content) AS (VALUES {srows}),
-sqt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM (SELECT query_id, unnest({tok}) AS term FROM sq{g["wild_score_union"]})
-  GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, sqt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM sqt JOIN vocab ON sqt.term = vocab.term CROSS JOIN stats
-),
-pscore AS (
-  SELECT tf.doc_id, qterm.query_id,
-         CAST(count(*) AS BIGINT) AS n_matched,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY tf.doc_id, qterm.query_id
-),
-dtt AS (SELECT DISTINCT doc_id, unnest(ts) AS term FROM tsx),
-sctok AS (
-  SELECT DISTINCT query_id, term FROM (
-    SELECT query_id, unnest({tok}) AS term FROM sq{g["wild_score_union"]}
-  )
-),
-pcand AS (
-  SELECT DISTINCT s.query_id, dtt.doc_id
-  FROM sctok s JOIN dtt ON dtt.term = s.term
-),
-per AS (
-  SELECT pcand.query_id, pcand.doc_id,
-         COALESCE(pscore.n_matched, CAST(0 AS BIGINT)) AS n_matched,
-         COALESCE(pscore.score, 0.0) AS score
-  FROM pcand LEFT JOIN pscore ON pscore.query_id = pcand.query_id
-                             AND pscore.doc_id = pcand.doc_id
-),
-mq(query_id, content) AS (VALUES {mrows}),
-mtok AS (
-  SELECT DISTINCT query_id, unnest({tok}) AS term FROM mq
-),
-nmust AS (
-  SELECT query_id, CAST(count(*) AS BIGINT) AS n_must
-  FROM mtok GROUP BY query_id
-),
-musthit AS (
-  SELECT m.query_id, dtt.doc_id,
-         CAST(count(*) AS BIGINT) AS n_must_hit
-  FROM mtok m JOIN dtt ON dtt.term = m.term
-  GROUP BY m.query_id, dtt.doc_id
-),
-nq(query_id, content) AS (VALUES {nrows}),
-ntok AS (
-  SELECT DISTINCT query_id, term FROM (
-    SELECT query_id, unnest({tok}) AS term FROM nq{g["wild_not_union"]}
-  )
-),
-excluded AS (
-  SELECT DISTINCT n.query_id, dtt.doc_id
-  FROM ntok n JOIN dtt ON dtt.term = n.term
-),
-phhit AS (
-  SELECT query_id, doc_id,
-         CAST(count(DISTINCT pidx) AS BIGINT) AS n_ph_hit
-  FROM (
-{g["gate"]}
-  ) GROUP BY query_id, doc_id
-),
-nph(query_id, n_ph) AS (VALUES {", ".join(g["nph_rows"])}),
-{g["qual_cte_sql"]}{g["wild_cte_sql"]}{g["neg_ph_cte_sql"]}gated AS (
-  SELECT per.query_id, per.doc_id, per.n_matched, per.score
-  FROM per
-  LEFT JOIN nmust ON nmust.query_id = per.query_id
-  LEFT JOIN musthit mh ON mh.query_id = per.query_id
-                      AND mh.doc_id = per.doc_id
-  LEFT JOIN nph ON nph.query_id = per.query_id
-  LEFT JOIN phhit ph ON ph.query_id = per.query_id
-                    AND ph.doc_id = per.doc_id
-{g["qual_joins"]}{g["wild_joins"]}  WHERE COALESCE(nmust.n_must, 0) = COALESCE(mh.n_must_hit, 0)
-    AND COALESCE(nph.n_ph, 0) = COALESCE(ph.n_ph_hit, 0)
-{g["qual_pred"]}{g["wild_pred"]}{g["neg_ph_pred"]}    AND NOT EXISTS (SELECT 1 FROM excluded x
-                    WHERE x.query_id = per.query_id
-                      AND x.doc_id = per.doc_id)
-)
+    """Oracle for query-string percolation: every (query, doc) pair of
+    :func:`_qstring_gated` — DISJUNCTIVE scoring (n_matched ≥ 1) with the
+    frozen-stats BM25 of :func:`_percolate_sql`.  Here the standing batch
+    is the indexed corpus itself, so the doc's distinct token set the
+    Spark side gates on equals its ``tf`` terms, and every candidate
+    sharing a raw scoring token with its query is a scored pair."""
+    return f"""{_qstring_gated(k1, b)}
 SELECT query_id, doc_id, n_matched, round(score, 5) AS score FROM gated
 """
 
@@ -760,57 +484,25 @@ def _phrase_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     """Oracle for phrase-gated BM25: score = plain BM25 of the phrase's
     terms; candidates = docs where the phrase occurs consecutively (same
     start-survival predicate as oracles.phrase_topk_sql)."""
-    rows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in PHRASE_SET)
-    branches = []
-    for qid, text in PHRASE_SET:
-        ws = text.lower().split()
-        m = len(ws)
-        conds = " AND ".join(f"ts[i+{j}] = '{w}'" for j, w in enumerate(ws))
-        branches.append(
-            f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id FROM tsx\n"
-            f"  WHERE len(list_filter(range(1, len(ts) - {m} + 2), "
-            f"i -> {conds})) > 0"
-        )
-    gate = "\n  UNION ALL\n".join(branches)
-    tok = _TOK.format(col="content")
+    gate = "\n  UNION ALL\n".join(
+        f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id FROM toks\n"
+        f"  WHERE {phrase_hits(text)} > 0"
+        for qid, text in PHRASE_SET)
     return f"""
-WITH {_BASE_CTES},
-tsx AS (
-  SELECT doc_id, {_TOK.format(col='text')} AS ts FROM documents
-),
-pq(query_id, content) AS (VALUES {rows}),
-pqtok AS (SELECT query_id, unnest({tok}) AS term FROM pq),
-pqt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM pqtok GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, pqt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM pqt JOIN vocab ON pqt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
+WITH {base_ctes(values_sql(PHRASE_SET))},
+qterm AS ({bm25_qterm()}),
+scored AS ({bm25_scored(k1, b)}),
+toks AS (
+  SELECT doc_id, {tokens()} AS ts FROM documents
 ),
 gate AS (
 {gate}
 ),
-ranked AS (
-  SELECT s.query_id, s.doc_id, s.score,
-         CAST(row_number() OVER (PARTITION BY s.query_id
-              ORDER BY round(s.score, 6) DESC, s.doc_id ASC) AS INTEGER) AS rank
-  FROM scored s JOIN gate g ON g.query_id = s.query_id AND g.doc_id = s.doc_id
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+gated AS (
+  SELECT s.* FROM scored s
+  JOIN gate g ON g.query_id = s.query_id AND g.doc_id = s.doc_id
+),
+{rank_cut('gated', k)}
 """
 
 
@@ -818,46 +510,32 @@ def _doc_keywords_sql(n: int = 5) -> str:
     """TF-IDF keyword oracle mirroring functions.text.doc_keywords: same
     idf formula as BM25, rank on round(tfidf, 6), term asc tie-break."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 tfidf AS (
-  SELECT doc_id, term,
-         tf * ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS tfidf
+  SELECT doc_id, term, tf * {bm25_idf()} AS tfidf
   FROM tf JOIN vocab USING (term) CROSS JOIN stats
 ),
-ranked AS (
-  SELECT doc_id, term, tfidf,
-         CAST(row_number() OVER (PARTITION BY doc_id
-              ORDER BY round(tfidf, 6) DESC, term ASC) AS INTEGER) AS rank
-  FROM tfidf
-)
-SELECT doc_id, rank, term, round(tfidf, 5) AS tfidf
-FROM ranked WHERE rank <= {n}
+{rank_cut('tfidf', n, 'doc_id, rank, term, round(tfidf, 5) AS tfidf',
+          'round(tfidf, 6) DESC, term ASC', by='doc_id')}
 """
 
 
 def _suggest_terms_sql(prefixes, k: int = 10) -> str:
     """Autocomplete oracle: vocab terms per prefix by cf desc, term asc."""
-    rows = ", ".join(f"(CAST({qid} AS BIGINT), '{p}')" for qid, p in prefixes)
     return f"""
-WITH {_BASE_CTES},
-q(query_id, prefix) AS (VALUES {rows}),
+WITH {base_ctes()},
 m AS (
   SELECT q.query_id, v.term, v.cf
-  FROM q JOIN vocab v ON starts_with(v.term, q.prefix)
+  FROM {values_sql(prefixes, 'query_id, prefix')}
+  JOIN vocab v ON starts_with(v.term, q.prefix)
 ),
-ranked AS (
-  SELECT query_id, term, cf,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY cf DESC, term ASC) AS INTEGER) AS rank
-  FROM m
-)
-SELECT query_id, rank, term, cf FROM ranked WHERE rank <= {k}
+{rank_cut('m', k, 'query_id, rank, term, cf', 'cf DESC, term ASC')}
 """
 
 
 def _cosine_sql(k: int = 10) -> str:
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 qn AS (
   SELECT query_id, sqrt(CAST(sum(qtf * qtf) AS DOUBLE)) AS qn FROM qt GROUP BY query_id
 ),
@@ -870,14 +548,7 @@ scored AS (
   JOIN dl ON tf.doc_id = dl.doc_id
   GROUP BY qt.query_id, tf.doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, dist,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(dist, 6) ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(dist, 5) AS dist
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k, _DIST_COLS, _DIST_ORDER)}
 """
 
 
@@ -890,33 +561,26 @@ _SET_DIST_SQL_EXPR = {
 
 
 def _set_dist_sql(dist: str, k: int = 10, t: int = 1) -> str:
-    having = f"HAVING count(*) >= {t}" if t > 1 else ""
+    expr = _SET_DIST_SQL_EXPR[dist].replace("dsize", "dl.nnz")
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 qsz AS (
   SELECT query_id, CAST(count(*) AS BIGINT) AS qsize FROM qt GROUP BY query_id
 ),
 inter AS (
   SELECT query_id, tf.doc_id, CAST(count(*) AS BIGINT) AS isize
   FROM qt JOIN tf ON qt.term = tf.term
-  GROUP BY query_id, tf.doc_id {having}
+  GROUP BY query_id, tf.doc_id HAVING count(*) >= {t}
 ),
 scored AS (
-  SELECT inter.query_id, inter.doc_id,
-         {{expr}} AS dist
+  SELECT inter.query_id, inter.doc_id, {expr} AS dist
   FROM inter
   JOIN qsz ON inter.query_id = qsz.query_id
   JOIN dl ON inter.doc_id = dl.doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, dist,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(dist, 9) ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(dist, 6) AS dist
-FROM ranked WHERE rank <= {k}
-""".replace("{expr}", _SET_DIST_SQL_EXPR[dist].replace("dsize", "nnz").replace("nnz", "dl.nnz"))
+{rank_cut('scored', k, 'query_id, rank, doc_id, round(dist, 6) AS dist',
+          'round(dist, 9) ASC, doc_id ASC')}
+"""
 
 
 # ---------------------------------------------------------------------------
@@ -924,107 +588,61 @@ FROM ranked WHERE rank <= {k}
 # ---------------------------------------------------------------------------
 
 
-def _q_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
+def _q_topk(op, weighting: str = "bm25", compress: bool = False, **kw):
+    """Row: ``op(index, QUERY_SET, k=10, rank_round=6, **kw)`` over the
+    cached index — the BM25-family plans that share one oracle shape."""
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        idx = _index(spark, sf_dir, weighting, compress)
+        return _ranked(op(idx, queries_df(spark), k=10, rank_round=6, **kw))
 
-    idx = _index(spark, sf_dir, "bm25")
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
+    return q
+
+
+_q_bm25 = _q_topk(bm25_topk)
 
 
 def _q_bm25_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Filtered retrieval: BM25 top-k restricted to an accept set from a
     metadata predicate (lang = 'en') — full-corpus idf/avgdl, non-accepted
     docs never enter the pool (search._accept)."""
-    from pyspark.sql import functions as F
-
     idx = _index(spark, sf_dir, "bm25")
     accept = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .filter(F.col("lang") == "en").select("doc_id")
     )
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6, accept_docs=accept)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
-
-
-def _q_bm25_msm(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """minimum_should_match retrieval: docs matching ≥ ceil(0.67 · m) of
-    each query's m in-vocab terms (the fractional t-threshold)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.search import bm25_msm_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = bm25_msm_topk(idx, queries_df(spark), k=10, msm=0.67, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(bm25_topk(idx, queries_df(spark), k=10, rank_round=6,
+                             accept_docs=accept))
 
 
 def _bm25_msm_sql(k: int = 10, msm: float = 0.67, k1: float = 1.2,
                   b: float = 0.75) -> str:
-    """DuckDB mirror of :func:`_q_bm25_msm`: per-query in-vocab term count
-    → HAVING count ≥ ceil(msm · m)."""
+    """minimum_should_match oracle: docs matching ≥ ceil(msm · m) of each
+    query's m in-vocab terms (the fractional t-threshold)."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
+WITH {_bm25_chain(k1, b)},
 need AS (
   SELECT query_id, CAST(ceil({msm!r} * count(*)) AS BIGINT) AS need
   FROM qterm GROUP BY query_id
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score,
-         CAST(count(*) AS BIGINT) AS n_matched
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
 ),
 kept AS (
   SELECT scored.query_id, doc_id, score
   FROM scored JOIN need ON scored.query_id = need.query_id
   WHERE n_matched >= need
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM kept
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('kept', k)}
 """
 
 
-def _q_bm25_t2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6, t=2)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
-
-
 def _q_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     idx = _index(spark, sf_dir, "normcosine")
-    res = cosine_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("dist", 5).alias("dist"))
+    return _ranked(cosine_topk(idx, queries_df(spark), k=10, rank_round=6), "dist")
 
 
 def _q_set(dist: str, t: int = 1):
     def q(spark: SparkSession, sf_dir: str) -> DataFrame:
-        from pyspark.sql import functions as F
-
         idx = _index(spark, sf_dir, "binary")
         res = set_distance_topk(idx, queries_df(spark), k=10, dist=dist, t=t, rank_round=9)
-        return res.select("query_id", "rank", "doc_id", F.round("dist", 6).alias("dist"))
+        return _ranked(res, "dist", 6)
 
     return q
 
@@ -1051,70 +669,30 @@ def _q_corpus_commits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return corpus_from_documents(docs).select("doc_id", "repo", "path", "commit", "lang")
 
 
+def _base_select(select: str) -> str:
+    """A plain SELECT over the base CTEs."""
+    return f"WITH {base_ctes()}\n{select}"
+
+
+def _postings_sql(where: str = "TRUE") -> str:
+    return _base_select(f"SELECT DISTINCT term, doc_id FROM tf WHERE {where}")
+
+
 # ---------------------------------------------------------------------------
 # training-data operators (dedup / text analysis / ANN / multimodal)
 # ---------------------------------------------------------------------------
-
-from invertedfiles_jl_spark.plans import oracles as _osql
-
-
-def _q_bm25_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Same BM25 plan over a delta-gap+varbyte COMPRESSED index — the
-    north-rule codec path, driver-gated against the same oracle (matched
-    lists are decoded by search._matched)."""
-    from pyspark.sql import functions as F
-
-    idx = _index(spark, sf_dir, "bm25", compress=True)
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
-
-
-def _q_wand_bm25_compressed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Block-max MaxScore kernel over the compressed index (kernel-side
-    varbyte decode, operators.wand)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.wand import wand_topk
-
-    idx = _index(spark, sf_dir, "bm25", compress=True)
-    res = wand_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
-
-
-def _q_wand_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.wand import wand_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = wand_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
-
-
-def _q_sharded_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Doc-sharded batch scorer (operators.sharded) — rank-identical to
-    bm25_topk, so it shares the bm25 oracle."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.sharded import sharded_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = sharded_topk(idx, queries_df(spark), k=10, n_shards=8, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
 
 
 def _q_sharded_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Binary set-distance serving on the doc-sharded layout
     (operators.sharded.sharded_set_topk) — rank-identical to jaccard_topk,
     so it shares the jaccard oracle."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.sharded import sharded_set_topk
 
     idx = _index(spark, sf_dir, "binary")
     res = sharded_set_topk(idx, queries_df(spark), k=10, dist="jaccard",
                            n_shards=8, rank_round=9)
-    return res.select("query_id", "rank", "doc_id", F.round("dist", 6).alias("dist"))
+    return _ranked(res, "dist", 6)
 
 
 def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1124,8 +702,6 @@ def _q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _q_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.dedup import near_duplicates_minhash
 
     res = near_duplicates_minhash(_corpus(spark, sf_dir), threshold=0.5)
@@ -1186,22 +762,18 @@ def _substring_sql() -> str:
     contains + the shared left-to-right replace occurrence count."""
     from invertedfiles_jl_spark.sources.queries import SUBSTRING_SET
 
-    rows = ", ".join(f"(CAST({qid} AS BIGINT), '{s}')"
-                     for qid, s in SUBSTRING_SET)
     return f"""
-WITH q(query_id, needle) AS (VALUES {rows})
 SELECT q.query_id, d.doc_id,
        CAST((length(lower(d.text)) - length(replace(lower(d.text), lower(q.needle), '')))
             / length(q.needle) AS BIGINT) AS n_occ
-FROM q JOIN documents d ON contains(lower(d.text), lower(q.needle))
+FROM {values_sql(SUBSTRING_SET, 'query_id, needle')}
+JOIN documents d ON contains(lower(d.text), lower(q.needle))
 """
 
 
 def _q_query_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-query significant terms over the top-50 BM25 hit set, JLH vs the
     corpus background, top-10 per query (significant_text analog)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import query_significant_terms
 
     idx = _index(spark, sf_dir, "bm25")
@@ -1219,29 +791,8 @@ def _query_significant_terms_sql(n: int = 10, depth: int = 50,
     chain for the top-depth hit set, document-presence fg from the tf
     relation, bg straight from vocab, the identical JLH chain."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-  FROM scored
-),
-hits AS (SELECT query_id, doc_id FROM ranked WHERE rank <= {depth}),
+WITH {_bm25_chain(k1, b)},
+hits AS ({top_n('scored', depth, 'query_id, doc_id')}),
 nfg AS (
   SELECT query_id, CAST(count(*) AS BIGINT) AS n_fg FROM hits GROUP BY query_id
 ),
@@ -1264,22 +815,14 @@ jl AS (
          (fg_pct - bg_pct) * (fg_pct / bg_pct) AS jlh
   FROM sig WHERE fg_pct > bg_pct
 ),
-out AS (
-  SELECT query_id, term, fg, bg, jlh,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(jlh, 6) DESC, term ASC) AS INTEGER) AS rank
-  FROM jl
-)
-SELECT query_id, rank, term, fg, bg, round(jlh, 6) AS jlh
-FROM out WHERE rank <= {n}
+{rank_cut('jl', n, 'query_id, rank, term, fg, bg, round(jlh, 6) AS jlh',
+          'round(jlh, 6) DESC, term ASC')}
 """
 
 
 def _q_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Forward doc view for the first 5 docs: every distinct term with
     (tf, df, tfidf) — the getcontainer/TermVectors analog."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import term_vectors
 
     idx = _index(spark, sf_dir, "bm25")
@@ -1292,13 +835,10 @@ def _q_term_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _term_vectors_sql(n_docs: int = 5) -> str:
     """DuckDB mirror of :func:`_q_term_vectors`: the shared tf/vocab CTEs
     restricted to the requested ids, tfidf with the engine's idf form."""
-    return f"""
-WITH {_BASE_CTES}
-SELECT tf.doc_id, tf.term, tf.tf, vocab.df,
-       round(tf.tf * ln(1.0 + (n_docs - vocab.df + 0.5) / (vocab.df + 0.5)), 6) AS tfidf
+    return _base_select(f"""SELECT tf.doc_id, tf.term, tf.tf, vocab.df,
+       round(tf.tf * {bm25_idf()}, 6) AS tfidf
 FROM tf JOIN vocab ON tf.term = vocab.term CROSS JOIN stats
-WHERE tf.doc_id < {n_docs}
-"""
+WHERE tf.doc_id < {n_docs}""")
 
 
 def _q_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1306,8 +846,6 @@ def _q_bm25_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
     (operators/search.explain_bm25, Lucene ``explain`` analog): one row per
     (query, top-k doc, matched term) with qtf/idf/sat_tf/contrib factors,
     Σ contrib = the doc's bm25_topk score."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import explain_bm25
 
     idx = _index(spark, sf_dir, "bm25")
@@ -1326,17 +864,13 @@ def _q_bm25f_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     b=0.75, fields combined before saturation.  Fixture mixes
     path-universal / extension / mid-rare / doc-unique path tokens and an
     OOV query (sources/queries FIELDED_SET)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.fielded import bm25f_topk
     from invertedfiles_jl_spark.sources.corpus import corpus_from_documents
     from invertedfiles_jl_spark.sources.queries import fielded_df
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    res = bm25f_topk(corpus_from_documents(docs), fielded_df(spark), k=10,
-                     rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(bm25f_topk(corpus_from_documents(docs), fielded_df(spark),
+                              k=10, rank_round=6))
 
 
 def _q_dismax_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1344,17 +878,13 @@ def _q_dismax_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     content scored as independent BM25s, best field dominates, tie=0.3
     folds the rest in — the max-based complement to BM25F over the same
     FIELDED_SET fixture."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.fielded import dismax_topk
     from invertedfiles_jl_spark.sources.corpus import corpus_from_documents
     from invertedfiles_jl_spark.sources.queries import fielded_df
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    res = dismax_topk(corpus_from_documents(docs), fielded_df(spark), k=10,
-                      tie=0.3, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(dismax_topk(corpus_from_documents(docs), fielded_df(spark),
+                               k=10, tie=0.3, rank_round=6))
 
 
 _BOOST_SQL = "1.0 + (doc_id % 5) * 0.05"
@@ -1364,50 +894,24 @@ def _q_boosted_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Function-score retrieval (operators/search.boosted_bm25_topk):
     BM25 × a deterministic per-doc metadata boost (1.0 + (doc_id%5)·0.05 —
     a stand-in for recency/quality), joined after aggregation."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import boosted_bm25_topk
 
     idx = _index(spark, sf_dir, "bm25")
     boosts = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.expr(_BOOST_SQL).alias("boost"))
-    res = boosted_bm25_topk(idx, queries_df(spark), boosts, k=10,
-                            rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(boosted_bm25_topk(idx, queries_df(spark), boosts, k=10,
+                                     rank_round=6))
 
 
 def _boosted_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     """Oracle: the plain BM25 scored CTE times the same boost expression."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
+WITH {_bm25_chain(k1, b)},
 boosted AS (
   SELECT query_id, s.doc_id, s.score * ({_BOOST_SQL.replace('doc_id', 's.doc_id')}) AS score
   FROM scored s
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM boosted
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('boosted', k)}
 """
 
 
@@ -1415,32 +919,15 @@ def _q_prf_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pseudo-relevance feedback (operators/search.prf_bm25_topk): BM25
     pass 1, top-5 feedback docs → top-5 tf·idf expansion terms (originals
     excluded) at weight β=0.5 → re-score.  OOV query ⇒ zero rows."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import prf_bm25_topk
 
     idx = _index(spark, sf_dir, "bm25")
-    res = prf_bm25_topk(idx, _corpus(spark, sf_dir), queries_df(spark),
-                        k=10, fb_docs=5, fb_terms=5, beta=0.5, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(prf_bm25_topk(idx, _corpus(spark, sf_dir), queries_df(spark),
+                                 k=10, fb_docs=5, fb_terms=5, beta=0.5,
+                                 rank_round=6))
 
 
 _PACK_CTX = 128
-
-
-def _q_auto_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """BM25 through the adaptive plan router (plans/router.py): the batch's
-    metadata stats pick Plan A / WAND / sharded; output is rank-identical to
-    bm25_topk whichever plan runs, so the oracle is the plain BM25 SQL."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.plans.router import auto_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = auto_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
 
 
 def _q_route_explain(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1457,7 +944,7 @@ def _route_explain_sql(batch_threshold: int = 64,
     """DuckDB mirror of :func:`_q_route_explain` — the same two stats from
     the query-term ⋈ vocab relation and the same CASE rules."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 s AS (
   SELECT CAST(count(DISTINCT query_id) AS BIGINT) AS n_queries,
          CAST(sum(df) AS BIGINT) AS entries
@@ -1475,8 +962,6 @@ FROM s
 def _q_collapsed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Field-collapsed BM25: best doc per (query, source), top-10 of the
     collapsed candidates — one result per source group."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import collapse_topk
 
     idx = _index(spark, sf_dir, "bm25")
@@ -1489,40 +974,17 @@ def _q_collapsed_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _collapsed_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
-    """DuckDB mirror of :func:`_q_collapsed_bm25` — the ``_bm25_sql`` scoring
-    CTE, a per-(query, source) best-doc window, then the final top-k window,
-    both on the shared (round(score, 6) desc, doc_id asc) key."""
+    """DuckDB mirror of :func:`_q_collapsed_bm25` — the BM25 scoring CTE, a
+    per-(query, source) best-doc cut, then the final top-k cut, both on the
+    shared (round(score, 6) desc, doc_id asc) key."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-grouped AS (
-  SELECT query_id, scored.doc_id, score, d.source AS group_key,
-         row_number() OVER (PARTITION BY query_id, d.source
-              ORDER BY round(score, 6) DESC, scored.doc_id ASC) AS rn
+WITH {_bm25_chain(k1, b)},
+sourced AS (
+  SELECT scored.query_id, scored.doc_id, score, d.source AS group_key
   FROM scored JOIN documents d ON scored.doc_id = d.doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, score, group_key,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM grouped WHERE rn = 1
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score, group_key
-FROM ranked WHERE rank <= {k}
+grouped AS ({top_n('sourced', 1, 'query_id, doc_id, score, group_key', by='query_id, group_key')}),
+{rank_cut('grouped', k, SCORE_COLS + ', group_key')}
 """
 
 
@@ -1530,16 +992,12 @@ def _q_synonym_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 with query-time synonym expansion over the fixed thesaurus
     (SYNONYM_SET): original terms at weight qtf, synonyms at qtf · weight,
     weights accumulating when expansion lands on a direct query term."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import synonym_bm25_topk
     from invertedfiles_jl_spark.sources.queries import synonyms_df
 
     idx = _index(spark, sf_dir, "bm25")
-    res = synonym_bm25_topk(idx, queries_df(spark), synonyms_df(spark),
-                            k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(synonym_bm25_topk(idx, queries_df(spark), synonyms_df(spark),
+                                     k=10, rank_round=6))
 
 
 def _synonym_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
@@ -1549,7 +1007,7 @@ def _synonym_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     from invertedfiles_jl_spark.sources.queries import synonyms_values_sql
 
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 qex AS (
   SELECT query_id, term, round(sum(qw), 9) AS qw FROM (
     SELECT query_id, term, CAST(qtf AS DOUBLE) AS qw FROM qt
@@ -1558,29 +1016,9 @@ qex AS (
     FROM qt JOIN {synonyms_values_sql()} ON qt.term = syn.term
   ) GROUP BY query_id, term
 ),
-qterm AS (
-  SELECT query_id, qex.term, qw,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qex JOIN vocab ON qex.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qw * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+qterm AS ({bm25_qterm('qex', 'qw')}),
+scored AS ({bm25_scored(k1, b, w='qw')}),
+{rank_cut('scored', k)}
 """
 
 
@@ -1596,8 +1034,6 @@ def _q_pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_doc_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-doc TF-IDF keyword extraction (functions/text.doc_keywords):
     top-5 terms per document, rank-rounded like the search kernels."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.functions.text import doc_keywords
 
     res = doc_keywords(_corpus(spark, sf_dir), n=5, rank_round=6)
@@ -1619,15 +1055,11 @@ def _q_boolean_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Boolean must/should/must_not retrieval (operators/search.boolean_topk)
     over the BM25 index; fixture mixes conjunctions, exclusions and an OOV
     must clause (sources/queries BOOLEAN_SET)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import boolean_topk
     from invertedfiles_jl_spark.sources.queries import boolean_df
 
     idx = _index(spark, sf_dir, "bm25")
-    res = boolean_topk(idx, boolean_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(boolean_topk(idx, boolean_df(spark), k=10, rank_round=6))
 
 
 def _q_query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1641,8 +1073,6 @@ def _q_query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, source, n_chars) incl. negation, an unknown field and numeric
     forms, and ``prefix*`` wildcards (bare / required / negated /
     OOV-required) — sources/queries QSTRING_SET."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.positional import (
         positional_postings,
     )
@@ -1655,11 +1085,9 @@ def _q_query_string_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pos = positional_postings(_corpus(spark, sf_dir))
     meta = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", "lang", "source", "n_chars")
-    res = query_string_topk(idx, pos, qstring_df(spark), k=10, rank_round=6,
-                            meta=meta,
-                            qualifier_fields=("lang", "source", "n_chars"))
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(query_string_topk(
+        idx, pos, qstring_df(spark), k=10, rank_round=6, meta=meta,
+        qualifier_fields=("lang", "source", "n_chars")))
 
 
 def _q_qstring_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1671,8 +1099,6 @@ def _q_qstring_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (lang, source, n_chars) columns — scored with the frozen-stats BM25
     of the streaming server.  Same QSTRING_SET standing relation as
     query_string_topk."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.querystring import (
         query_string_percolate,
     )
@@ -1742,8 +1168,6 @@ def _q_hash_split(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language deterministic downsampling
     (operators/sampling.stratified_sample) on the raw documents table."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.sampling import stratified_sample
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet") \
@@ -1767,8 +1191,6 @@ def _q_temperature_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _q_significant_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language overrepresented terms (operators/meta.significant_terms,
     JLH heuristic) — top-10 per language, ≥3 docs of presence."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.meta import significant_terms
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -1827,31 +1249,25 @@ def _emb(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _equeries(emb, n: int = 5):
-    from pyspark.sql import functions as F
-
     return emb.filter(F.col("vec_id") < n).select(
         F.col("vec_id").alias("query_id"), F.col("embedding").alias("q_emb")
     )
 
 
 def _q_ann_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import brute_force_topk
 
     emb = _emb(spark, sf_dir)
-    res = brute_force_topk(emb, _equeries(emb), k=10, rank_round=6)
-    return res.select("query_id", "rank", "vec_id", F.round("cos", 5).alias("cos"))
+    return _ranked(brute_force_topk(emb, _equeries(emb), k=10, rank_round=6),
+                   "cos", item="vec_id")
 
 
 def _q_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import ivf_topk
 
     emb = _emb(spark, sf_dir)
-    res = ivf_topk(emb, _equeries(emb), k=10, n_clusters=16, nprobe=4)
-    return res.select("query_id", "rank", "vec_id", F.round("cos", 5).alias("cos"))
+    return _ranked(ivf_topk(emb, _equeries(emb), k=10, n_clusters=16, nprobe=4),
+                   "cos", item="vec_id")
 
 
 def _q_emb_near_dups(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1882,8 +1298,6 @@ def _q_ce_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic cross-encoder stub (the production scorer hook is
     pytest-gated with a fake model; this row pins the plumbing — candidate
     cut, pair assembly, rank contract — against the oracle)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.rerank import crossencoder_rerank
 
     idx = _index(spark, sf_dir, "bm25")
@@ -1910,18 +1324,11 @@ p AS (
          md5(q.content || chr(1) || d.text) AS h
   FROM cands c
   JOIN documents d ON d.doc_id = c.doc_id
-  JOIN {queries_values_sql()} ON q.query_id = c.query_id
+  JOIN {values_sql(QUERY_SET)} ON q.query_id = c.query_id
 ),
 scored AS (SELECT query_id, doc_id, bm25_score, {ce} AS ce_score FROM p),
-ranked AS (
-  SELECT query_id, doc_id, ce_score, bm25_score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(ce_score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(ce_score, 6) AS ce_score,
-       round(bm25_score, 5) AS bm25_score
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k, 'query_id, rank, doc_id, round(ce_score, 6) AS ce_score, '
+          'round(bm25_score, 5) AS bm25_score', 'round(ce_score, 6) DESC, doc_id ASC')}
 """
 
 
@@ -1937,8 +1344,6 @@ def _q_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PII scrub over deterministically synthesized PII (the corpus itself
     contains none — an email + ipv4 is appended per doc IN THE QUERY, in
     both engines, so the counts and redaction are non-vacuously gated)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.functions.text import scrub_pii
 
     c = _corpus(spark, sf_dir).select(
@@ -1984,40 +1389,34 @@ def _q_ann_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """int8 scalar-quantized cosine top-k with exact re-scoring — the
     memory-scale dense path (1 byte/dim candidate scan, ``depth``-bounded
     full-precision rerank)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import sq8_topk
 
     emb = _emb(spark, sf_dir)
-    res = sq8_topk(emb, _equeries(emb), k=10, depth=50)
-    return res.select("query_id", "rank", "vec_id", F.round("cos", 5).alias("cos"))
+    return _ranked(sq8_topk(emb, _equeries(emb), k=10, depth=50), "cos",
+                   item="vec_id")
 
 
 def _q_ann_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product-quantization ADC top-k with exact re-scoring — the
     codebook-compression scale path (m·log2(ksub) bits/vector; candidates
     scored from the broadcast lookup table, never the vectors)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import pq_topk
 
     emb = _emb(spark, sf_dir)
-    res = pq_topk(emb, _equeries(emb), k=10, m=8, ksub=16, depth=50)
-    return res.select("query_id", "rank", "vec_id", F.round("cos", 5).alias("cos"))
+    return _ranked(pq_topk(emb, _equeries(emb), k=10, m=8, ksub=16, depth=50),
+                   "cos", item="vec_id")
 
 
 def _q_ann_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FAISS-style IVF-PQ composition: coarse probe prune × PQ-ADC code
     scoring × exact rescore — the 10^12-vector serving shape, gated
     end-to-end."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import ivf_pq_topk
 
     emb = _emb(spark, sf_dir)
     res = ivf_pq_topk(emb, _equeries(emb), k=10, n_clusters=16, nprobe=4,
                       m=8, ksub=16, depth=50)
-    return res.select("query_id", "rank", "vec_id", F.round("cos", 5).alias("cos"))
+    return _ranked(res, "cos", item="vec_id")
 
 
 def _q_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2025,8 +1424,6 @@ def _q_recall_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     reference's recall-validation loop (test/invfiles.jl:23) applied to
     the engine's own approximate dense path, driver-gated so a quantizer
     regression shows up as a value change, not just a pytest failure."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.ann import brute_force_topk, sq8_topk
     from invertedfiles_jl_spark.operators.exhaustive import recallscore
 
@@ -2077,14 +1474,11 @@ def _q_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR diversity re-rank over dense candidates: top-20 cosine
     candidates per query vector, greedy λ=0.7 marginal-relevance selection
     of 5 — rank 1 carries raw relevance, later ranks the marginal score."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.rerank import mmr_rerank
 
     emb = _emb(spark, sf_dir)
-    res = mmr_rerank(emb, _equeries(emb), k=5, depth=20, lam=0.7)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("mmr", 6).alias("mmr"))
+    return _ranked(mmr_rerank(emb, _equeries(emb), k=5, depth=20, lam=0.7),
+                   "mmr", 6)
 
 
 def _mmr_sql(k: int = 5, depth: int = 20, lam: float = 0.7,
@@ -2094,46 +1488,41 @@ def _mmr_sql(k: int = 5, depth: int = 20, lam: float = 0.7,
     cosine expression, then the greedy UNROLLED into k chained CTE stages
     (each one window + one max-over-selected join; no recursion).  The
     arithmetic (λ·rel − (1−λ)·maxsim over 6-dp-rounded inputs, rank on
-    round(mmr, 9) desc / doc_id asc) is token-identical to the kernel."""
+    round(mmr, 9) desc / doc_id asc) is token-identical to the kernel.
+    Every CTE is MATERIALIZED: inlined, ``cand``/``pair`` would be
+    recomputed inside each of the k stages, which exhausts memory."""
     cos_qc = _osql._cos("q.q_emb", "e.embedding")
     cos_ab = _osql._cos("e1.embedding", "e2.embedding")
     one_minus = repr(1.0 - lam)
-    parts = [f"""
-q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-scored AS (
+    ctes = [
+        ("q", f"SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings "
+              f"WHERE vec_id < {n_queries}"),
+        ("scored", f"""
   SELECT q.query_id, e.vec_id AS doc_id, {cos_qc} AS cos
   FROM q CROSS JOIN embeddings e
-),
-cr AS (
-  SELECT query_id, doc_id, round(cos, 6) AS rel,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, doc_id ASC) AS rn
-  FROM scored
-),
-cand AS (SELECT query_id, doc_id, rel FROM cr WHERE rn <= {depth}),
-cpair AS (
+"""),
+        ("cand", top_n("scored", depth, "query_id, doc_id, round(cos, 6) AS rel",
+                       "round(cos, 6) DESC, doc_id ASC")),
+        ("cpair", f"""
   SELECT c1.query_id, c1.doc_id AS a, c2.doc_id AS b,
          round({cos_ab}, 6) AS sim
   FROM cand c1
   JOIN cand c2 ON c1.query_id = c2.query_id AND c1.doc_id < c2.doc_id
   JOIN embeddings e1 ON e1.vec_id = c1.doc_id
   JOIN embeddings e2 ON e2.vec_id = c2.doc_id
-),
-pair AS (
+"""),
+        ("pair", """
   SELECT query_id, a, b, sim FROM cpair
   UNION ALL
   SELECT query_id, b AS a, a AS b, sim FROM cpair
-),
-pick1 AS (
-  SELECT query_id, doc_id, rel AS mmr,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(rel, 9) DESC, doc_id ASC) AS rn
-  FROM cand
-),
-sel1 AS (SELECT query_id, doc_id FROM pick1 WHERE rn = 1)"""]
+"""),
+        ("pick1", f"SELECT query_id, doc_id, rel AS mmr, "
+                  f"{rank_over('round(rel, 9) DESC, doc_id ASC')} AS rn FROM cand"),
+        ("sel1", "SELECT query_id, doc_id FROM pick1 WHERE rn = 1"),
+    ]
     for i in range(2, k + 1):
-        parts.append(f"""
-m{i} AS (
+        ctes += [
+            (f"m{i}", f"""
   SELECT c.query_id, c.doc_id,
          {lam} * c.rel - {one_minus} * max(p.sim) AS mmr
   FROM cand c
@@ -2142,24 +1531,17 @@ m{i} AS (
   WHERE c.doc_id NOT IN (SELECT doc_id FROM sel{i - 1} sx
                          WHERE sx.query_id = c.query_id)
   GROUP BY c.query_id, c.doc_id, c.rel
-),
-pick{i} AS (
-  SELECT query_id, doc_id, mmr,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(mmr, 9) DESC, doc_id ASC) AS rn
-  FROM m{i}
-),
-sel{i} AS (
-  SELECT query_id, doc_id FROM sel{i - 1}
-  UNION ALL
-  SELECT query_id, doc_id FROM pick{i} WHERE rn = 1
-)""")
-    outs = ["SELECT query_id, 1 AS r, doc_id, mmr FROM pick1 WHERE rn = 1"]
-    outs += [f"SELECT query_id, {i} AS r, doc_id, mmr FROM pick{i} WHERE rn = 1"
-             for i in range(2, k + 1)]
-    union = "\n  UNION ALL\n  ".join(outs)
+"""),
+            (f"pick{i}", f"SELECT query_id, doc_id, mmr, "
+                         f"{rank_over('round(mmr, 9) DESC, doc_id ASC')} AS rn FROM m{i}"),
+            (f"sel{i}", f"SELECT query_id, doc_id FROM sel{i - 1} UNION ALL "
+                        f"SELECT query_id, doc_id FROM pick{i} WHERE rn = 1"),
+        ]
+    union = "\n  UNION ALL\n  ".join(
+        f"SELECT query_id, {i} AS r, doc_id, mmr FROM pick{i} WHERE rn = 1"
+        for i in range(1, k + 1))
     return f"""
-WITH {','.join(parts)}
+WITH {','.join(f'{chr(10)}{name} AS MATERIALIZED ({body})' for name, body in ctes)}
 SELECT query_id, CAST(r AS INTEGER) AS rank, doc_id, round(mmr, 6) AS mmr
 FROM ({union})
 """
@@ -2177,9 +1559,7 @@ def _q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     import uuid
 
     from pyspark.sql import Window
-    from pyspark.sql import functions as F
 
-    from invertedfiles_jl_spark.sources.queries import queries_df
     from invertedfiles_jl_spark.streaming.serve import streaming_bm25_topk
 
     idx = _index(spark, sf_dir, "bm25")
@@ -2220,8 +1600,7 @@ def _q_streaming_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("query_id")
     final = emitted.withColumn("mx", F.max("n_seen").over(w)).filter(
         F.col("n_seen") == F.col("mx"))
-    return final.select("query_id", "rank", "doc_id",
-                        F.round("score", 5).alias("score"))
+    return _ranked(final)
 
 
 _QREL_CASE = ("CASE WHEN m = 0 THEN 3.0 WHEN m = 1 THEN 2.0 "
@@ -2232,13 +1611,10 @@ def _q_ranking_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Graded IR metrics (P@10 / MRR / nDCG@10) of the BM25 run against a
     deterministic synthetic qrel set (rel = f((doc_id + query_id) % 5)
     over doc_id < 500) — the engine's self-evaluation harness."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.exhaustive import ranking_metrics
-    from invertedfiles_jl_spark.operators.search import bm25_topk as _bt
 
     idx = _index(spark, sf_dir, "bm25")
-    run = _bt(idx, queries_df(spark), k=10, rank_round=6).select(
+    run = bm25_topk(idx, queries_df(spark), k=10, rank_round=6).select(
         "query_id", "rank", "doc_id")
     qrels = (
         spark.range(500).select(F.col("id").alias("doc_id"))
@@ -2261,29 +1637,8 @@ def _ranking_metrics_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     """DuckDB mirror of :func:`_q_ranking_metrics` — BM25 run CTE, the same
     synthetic qrels, identical metric arithmetic (ln(x)/ln(2) discount)."""
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-run AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-  FROM scored
-  QUALIFY rank <= {k}
-),
+WITH {_bm25_chain(k1, b)},
+run AS ({top_n('scored', k, 'query_id, doc_id, rank')}),
 qrels AS (
   SELECT * FROM (
     SELECT q.query_id, d.doc_id,
@@ -2305,13 +1660,7 @@ m AS (
          sum((pow(2.0, rel) - 1.0) / (ln(rank + 1.0) / ln(2.0))) AS dcg
   FROM j GROUP BY query_id
 ),
-ideal AS (
-  SELECT query_id, rel,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY rel DESC, doc_id ASC) AS irank
-  FROM qrels
-  QUALIFY irank <= {k}
-),
+ideal AS ({top_n('qrels', k, 'query_id, rel, rank AS irank', 'rel DESC, doc_id ASC')}),
 idcg AS (
   SELECT query_id,
          sum((pow(2.0, rel) - 1.0) / (ln(irank + 1.0) / ln(2.0))) AS idcg
@@ -2328,8 +1677,6 @@ def _q_percolate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reverse search (percolator): every (doc, standing query) pair where
     the doc contains ALL the query's in-vocab terms, scored with the
     frozen-stats BM25 of the streaming server."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.streaming.serve import percolate
 
     idx = _index(spark, sf_dir, "bm25")
@@ -2344,369 +1691,142 @@ def _percolate_sql(k1: float = 1.2, b: float = 0.75) -> str:
     one (doc, query) aggregation, the conjunctive n_matched == n_need gate.
     """
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
+WITH {_bm25_chain(k1, b)},
 need AS (
   SELECT query_id, CAST(count(*) AS BIGINT) AS n_need
   FROM qterm GROUP BY query_id
-),
-per AS (
-  SELECT tf.doc_id, qterm.query_id,
-         CAST(count(*) AS BIGINT) AS n_matched,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY tf.doc_id, qterm.query_id
 )
-SELECT per.doc_id, per.query_id, n_matched, round(score, 5) AS score
-FROM per JOIN need ON per.query_id = need.query_id
+SELECT s.doc_id, s.query_id, n_matched, round(score, 5) AS score
+FROM scored s JOIN need ON s.query_id = need.query_id
 WHERE n_matched = n_need
 """
 
 
-def _q_hybrid_rrf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid BM25 + dense-cosine retrieval fused by reciprocal rank (RRF).
+def _q_hybrid(fuse, col: str, **kw):
+    """Row: hybrid BM25 + dense-cosine retrieval (``fuse`` from
+    operators.hybrid, fused score ``col``) with doc-as-query over the first
+    5 ids: the text side queries the BM25 inverted index with document i's
+    own text, the dense side queries the embedding table with vector i
+    (fixture contract: embeddings row i embeds document i); each side
+    contributes its top-20 ranks and candidates fuse on doc_id ≡ vec_id."""
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        idx = _index(spark, sf_dir, "bm25")
+        emb = _emb(spark, sf_dir)
+        tq = _corpus(spark, sf_dir).filter(F.col("doc_id") < 5).select(
+            F.col("doc_id").alias("query_id"), "content")
+        res = fuse(idx, emb, tq, _equeries(emb), k=10, depth=20, **kw)
+        return res.select("query_id", "rank", "doc_id",
+                          F.round(col, 6).alias(col), "n_lists")
 
-    Doc-as-query over the first 5 ids: the text side queries the BM25
-    inverted index with document i's own text, the dense side queries the
-    embedding table with vector i (fixture contract: embeddings row i
-    embeds document i).  Each side contributes its top-20 ranks; candidates
-    fuse on doc_id ≡ vec_id with rrf = Σ 1/(60 + rank)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.hybrid import hybrid_rrf_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    emb = _emb(spark, sf_dir)
-    corpus = _corpus(spark, sf_dir)
-    tq = corpus.filter(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"), "content")
-    res = hybrid_rrf_topk(idx, emb, tq, _equeries(emb), k=10, depth=20, rrf_k=60)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("rrf", 6).alias("rrf"), "n_lists")
+    return q
 
 
-def _q_hybrid_minmax(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid BM25 + dense-cosine retrieval fused by per-query MIN-MAX
-    score normalization + weighted sum (alpha = 0.5) — the score-based
-    fusion alternative to RRF.  Same doc-as-query fixture as
-    ``hybrid_rrf_topk``; scores round to 6 dp before normalization so both
-    engines normalize identical doubles (hybrid.minmax_fuse contract)."""
-    from pyspark.sql import functions as F
+def _dense_ivf(e, q, k):
+    """The approximate dense ranker of the hybrid_rrf_ivf row: Lloyd-refined
+    IVF, nprobe-bounded candidate scan, self included."""
+    from invertedfiles_jl_spark.operators.ann import ivf_topk
 
-    from invertedfiles_jl_spark.operators.hybrid import hybrid_minmax_topk
+    return ivf_topk(e, q, k=k, n_clusters=16, nprobe=4, exclude_self=False,
+                    lloyd_iters=1)
 
-    idx = _index(spark, sf_dir, "bm25")
-    emb = _emb(spark, sf_dir)
-    corpus = _corpus(spark, sf_dir)
-    tq = corpus.filter(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"), "content")
-    res = hybrid_minmax_topk(idx, emb, tq, _equeries(emb), k=10, depth=20,
-                             alpha=0.5)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("fused", 6).alias("fused"), "n_lists")
+
+def _hybrid_ctes(dense: str, depth: int, n_queries: int, k1: float,
+                 b: float) -> str:
+    """The two top-``depth`` lists a hybrid row fuses: ``sparse`` — BM25
+    with doc-as-query (qtf straight from tf) — and ``dense`` — over the
+    (query_id, doc_id, cos) rows of the ``dense_scored`` CTE that the
+    ``dense`` CTE text defines.  Both carry rank and the 6-dp score ``s``."""
+    return f"""{base_ctes()},
+hq AS (SELECT doc_id AS query_id, term, tf AS qtf FROM tf WHERE doc_id < {n_queries}),
+qterm AS ({bm25_qterm('hq')}),
+scored AS ({bm25_scored(k1, b)}),
+sparse AS ({top_n('scored', depth, 'query_id, doc_id, rank, round(score, 6) AS s')}),
+{dense},
+dense AS ({top_n('dense_scored', depth, 'query_id, doc_id, rank, round(cos, 6) AS s',
+                 'round(cos, 6) DESC, doc_id ASC')})"""
+
+
+def _brute_dense(n_queries: int) -> str:
+    return f"""{_osql.vec_queries(n_queries)},
+dense_scored AS (
+  SELECT q.query_id, e.vec_id AS doc_id, {_osql._cos('q.q_emb', 'e.embedding')} AS cos
+  FROM q CROSS JOIN embeddings e
+)"""
+
+
+def _fused_cut(contrib: str, col: str, k: int) -> str:
+    """Sum per (query, doc) of the ``contrib`` rows' ``c`` as ``col``, with
+    the number of lists, ranked on round(col, 9)."""
+    return f"""contrib AS ({contrib}),
+fused AS (
+  SELECT query_id, doc_id, sum(c) AS {col}, CAST(count(*) AS BIGINT) AS n_lists
+  FROM contrib GROUP BY query_id, doc_id
+),
+{rank_cut('fused', k, f'query_id, rank, doc_id, round({col}, 6) AS {col}, n_lists',
+          f'round({col}, 9) DESC, doc_id ASC')}"""
+
+
+def _rrf_sql(dense: str, k: int, depth: int, rrf_k: int, n_queries: int,
+             k1: float, b: float) -> str:
+    """RRF fusion: rrf = Σ 1/(rrf_k + rank).  A candidate joins ≤2 lists
+    and IEEE addition of two doubles is commutative, so the rrf sum is
+    bit-stable for the value hash."""
+    contrib = "\n  UNION ALL\n".join(
+        f"  SELECT query_id, doc_id, 1.0 / ({float(rrf_k)} + CAST(rank AS DOUBLE)) AS c "
+        f"FROM {side}" for side in ("sparse", "dense"))
+    return f"""
+WITH {_hybrid_ctes(dense, depth, n_queries, k1, b)},
+{_fused_cut(contrib, 'rrf', k)}
+"""
 
 
 def _hybrid_minmax_sql(k: int = 10, depth: int = 20, alpha: float = 0.5,
                        n_queries: int = 5, k1: float = 1.2,
                        b: float = 0.75) -> str:
-    """DuckDB mirror of :func:`_q_hybrid_minmax` — candidate CTEs as in
-    ``_hybrid_rrf_sql``, then per-(query, list) min/max over the rounded
-    scores of the top-``depth`` set and the weighted-sum combine.  The
-    normalization chain ((s − lo)/(hi − lo), 1.0 on a constant list) is the
-    identical IEEE expression :func:`hybrid.minmax_fuse` evaluates."""
-    cos = _osql._cos("vq.q_emb", "e.embedding")
+    """DuckDB mirror of the hybrid_minmax_topk row — the brute-force
+    hybrid lists, then per-(query, list) min/max over the rounded scores of
+    the top-``depth`` set and the weighted-sum combine.  The normalization
+    chain ((s − lo)/(hi − lo), 1.0 on a constant list) is the identical
+    IEEE expression :func:`hybrid.minmax_fuse` evaluates."""
+    lo, hi = "min(s) OVER (PARTITION BY query_id)", "max(s) OVER (PARTITION BY query_id)"
+    norm = f"(CASE WHEN {hi} = {lo} THEN 1.0 ELSE (s - {lo}) / ({hi} - {lo}) END)"
+    contrib = (f"  SELECT query_id, doc_id, {alpha} * {norm} AS c FROM sparse\n"
+               f"  UNION ALL\n"
+               f"  SELECT query_id, doc_id, {1.0 - alpha} * {norm} AS c FROM dense")
     return f"""
-WITH {_BASE_CTES},
-hq AS (SELECT doc_id AS query_id, term, tf AS qtf FROM tf WHERE doc_id < {n_queries}),
-hqterm AS (
-  SELECT query_id, hq.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM hq JOIN vocab ON hq.term = vocab.term CROSS JOIN stats
-),
-sparse_scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM hqterm
-  JOIN tf ON hqterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-sparse AS (
-  SELECT query_id, doc_id, round(score, 6) AS s,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-  FROM sparse_scored
-),
-vq AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-dense_scored AS (
-  SELECT vq.query_id, e.vec_id AS doc_id, {cos} AS cos
-  FROM vq CROSS JOIN embeddings e
-),
-dense AS (
-  SELECT query_id, doc_id, round(cos, 6) AS s,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, doc_id ASC) AS rank
-  FROM dense_scored
-),
-contrib AS (
-  SELECT query_id, doc_id,
-         {alpha} * (CASE WHEN max(s) OVER (PARTITION BY query_id)
-                            = min(s) OVER (PARTITION BY query_id) THEN 1.0
-                    ELSE (s - min(s) OVER (PARTITION BY query_id))
-                         / (max(s) OVER (PARTITION BY query_id)
-                            - min(s) OVER (PARTITION BY query_id)) END) AS c
-  FROM sparse WHERE rank <= {depth}
-  UNION ALL
-  SELECT query_id, doc_id,
-         {1.0 - alpha} * (CASE WHEN max(s) OVER (PARTITION BY query_id)
-                                  = min(s) OVER (PARTITION BY query_id) THEN 1.0
-                          ELSE (s - min(s) OVER (PARTITION BY query_id))
-                               / (max(s) OVER (PARTITION BY query_id)
-                                  - min(s) OVER (PARTITION BY query_id)) END) AS c
-  FROM dense WHERE rank <= {depth}
-),
-fused AS (
-  SELECT query_id, doc_id, sum(c) AS fused, CAST(count(*) AS BIGINT) AS n_lists
-  FROM contrib GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, fused, n_lists,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(fused, 9) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM fused
-)
-SELECT query_id, rank, doc_id, round(fused, 6) AS fused, n_lists
-FROM ranked WHERE rank <= {k}
+WITH {_hybrid_ctes(_brute_dense(n_queries), depth, n_queries, k1, b)},
+{_fused_cut(contrib, 'fused', k)}
 """
 
 
 def _hybrid_rrf_sql(k: int = 10, depth: int = 20, rrf_k: int = 60,
                     n_queries: int = 5, k1: float = 1.2, b: float = 0.75) -> str:
-    """DuckDB mirror of :func:`_q_hybrid_rrf` — BM25 CTE shape from
-    ``_bm25_sql`` (doc-as-query: qtf comes straight from tf), dense side
-    from ``plans.oracles.ann_bruteforce_sql`` without self-exclusion, RRF
-    combine.  A candidate joins ≤2 lists and IEEE addition of two doubles
-    is commutative, so the rrf sum is bit-stable for the value hash."""
-    cos = _osql._cos("vq.q_emb", "e.embedding")
-    return f"""
-WITH {_BASE_CTES},
-hq AS (SELECT doc_id AS query_id, term, tf AS qtf FROM tf WHERE doc_id < {n_queries}),
-hqterm AS (
-  SELECT query_id, hq.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM hq JOIN vocab ON hq.term = vocab.term CROSS JOIN stats
-),
-sparse_scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM hqterm
-  JOIN tf ON hqterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-sparse AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-  FROM sparse_scored
-),
-vq AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-dense_scored AS (
-  SELECT vq.query_id, e.vec_id AS doc_id, {cos} AS cos
-  FROM vq CROSS JOIN embeddings e
-),
-dense AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, doc_id ASC) AS rank
-  FROM dense_scored
-),
-contrib AS (
-  SELECT query_id, doc_id,
-         1.0 / ({float(rrf_k)} + CAST(rank AS DOUBLE)) AS c FROM sparse WHERE rank <= {depth}
-  UNION ALL
-  SELECT query_id, doc_id,
-         1.0 / ({float(rrf_k)} + CAST(rank AS DOUBLE)) AS c FROM dense WHERE rank <= {depth}
-),
-fused AS (
-  SELECT query_id, doc_id, sum(c) AS rrf, CAST(count(*) AS BIGINT) AS n_lists
-  FROM contrib GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, rrf, n_lists,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(rrf, 9) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM fused
-)
-SELECT query_id, rank, doc_id, round(rrf, 6) AS rrf, n_lists
-FROM ranked WHERE rank <= {k}
-"""
-
-
-def _q_hybrid_rrf_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Hybrid RRF with the APPROXIMATE dense side — the production fusion
-    path: BM25 sparse ranks fused with ``ivf_topk`` (Lloyd-refined IVF,
-    nprobe-bounded candidate scan) instead of the brute-force ranker.
-    Gates the ivf → rrf composition end-to-end against a DuckDB oracle
-    that mirrors the IVF CTE chain of ``plans.oracles.ann_ivf_sql``."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.ann import ivf_topk
-    from invertedfiles_jl_spark.operators.hybrid import hybrid_rrf_topk
-
-    idx = _index(spark, sf_dir, "bm25")
-    emb = _emb(spark, sf_dir)
-    corpus = _corpus(spark, sf_dir)
-    tq = corpus.filter(F.col("doc_id") < 5).select(
-        F.col("doc_id").alias("query_id"), "content")
-
-    def dense(e, q, k):
-        return ivf_topk(e, q, k=k, n_clusters=16, nprobe=4,
-                        exclude_self=False, lloyd_iters=1)
-
-    res = hybrid_rrf_topk(idx, emb, tq, _equeries(emb), k=10, depth=20,
-                          rrf_k=60, dense_topk=dense)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("rrf", 6).alias("rrf"), "n_lists")
+    """DuckDB mirror of the hybrid_rrf_topk row — dense side from
+    ``plans.oracles.ann_bruteforce_sql`` without self-exclusion."""
+    return _rrf_sql(_brute_dense(n_queries), k, depth, rrf_k, n_queries, k1, b)
 
 
 def _hybrid_rrf_ivf_sql(k: int = 10, depth: int = 20, rrf_k: int = 60,
                         n_queries: int = 5, k1: float = 1.2, b: float = 0.75,
                         n_clusters: int = 16, nprobe: int = 4) -> str:
-    """DuckDB mirror of :func:`_q_hybrid_rrf_ivf` — sparse side identical
-    to ``_hybrid_rrf_sql``; dense side is the IVF chain of
-    ``plans.oracles.ann_ivf_sql`` (seed → 1 Lloyd step → assign → probe →
-    candidate scan) WITHOUT self-exclusion, exactly like the Spark call."""
-    cos_q = _osql._cos("vq.q_emb", "e.embedding")
-    cos_seed = _osql._cos("c.c_emb", "e.embedding")
-    cos_probe = _osql._cos("vq.q_emb", "c.c_emb")
-    cos_cand = _osql._cos("q_emb", "d_emb")
-    return f"""
-WITH {_BASE_CTES},
-hq AS (SELECT doc_id AS query_id, term, tf AS qtf FROM tf WHERE doc_id < {n_queries}),
-hqterm AS (
-  SELECT query_id, hq.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM hq JOIN vocab ON hq.term = vocab.term CROSS JOIN stats
-),
-sparse_scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM hqterm
-  JOIN tf ON hqterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-sparse AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS rank
-  FROM sparse_scored
-),
-seed AS (
-  SELECT vec_id AS cluster, embedding AS c_emb FROM embeddings WHERE vec_id < {n_clusters}
-),
-a0_scored AS (
-  SELECT e.vec_id, c.cluster, {cos_seed} AS cos
-  FROM embeddings e CROSS JOIN seed c
-),
-a0 AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM a0_scored
-  ) WHERE r = 1
-),
-cents AS (
-  SELECT cluster, list(m ORDER BY pos) AS c_emb FROM (
-    SELECT a.cluster, pos, avg(CAST(e.embedding[pos] AS DOUBLE)) AS m
-    FROM a0 a JOIN embeddings e USING (vec_id),
-         LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS pos)
-    GROUP BY a.cluster, pos
-  ) GROUP BY cluster
-),
-assign_scored AS (
-  SELECT e.vec_id, c.cluster, {cos_seed} AS cos
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM assign_scored
-  ) WHERE r = 1
-),
-vq AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-qprobe AS (
-  SELECT vq.query_id, c.cluster, {cos_probe} AS cos
-  FROM vq CROSS JOIN cents c
-),
-probed AS (
-  SELECT query_id, cluster FROM (
-    SELECT query_id, cluster,
-           row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM qprobe
-  ) WHERE r <= {nprobe}
-),
-ivcands AS (
-  SELECT p.query_id, a.vec_id, vq.q_emb, e.embedding AS d_emb
+    """DuckDB mirror of the hybrid_rrf_ivf_topk row — dense side is the IVF
+    chain of ``plans.oracles.ivf_probe_ctes`` (seed → 1 Lloyd step →
+    assign → probe → candidate scan) WITHOUT self-exclusion, exactly like
+    :func:`_dense_ivf`."""
+    dense = f"""{_osql.ivf_probe_ctes(n_clusters, nprobe, n_queries)},
+dense_scored AS (
+  SELECT p.query_id, a.vec_id AS doc_id, {_osql._cos('q.q_emb', 'e.embedding')} AS cos
   FROM probed p
   JOIN assign a ON a.cluster = p.cluster
   JOIN embeddings e ON e.vec_id = a.vec_id
-  JOIN vq ON vq.query_id = p.query_id
-),
-dense_scored AS (
-  SELECT query_id, vec_id AS doc_id, {cos_cand} AS cos FROM ivcands
-),
-dense AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, doc_id ASC) AS rank
-  FROM dense_scored
-),
-contrib AS (
-  SELECT query_id, doc_id,
-         1.0 / ({float(rrf_k)} + CAST(rank AS DOUBLE)) AS c FROM sparse WHERE rank <= {depth}
-  UNION ALL
-  SELECT query_id, doc_id,
-         1.0 / ({float(rrf_k)} + CAST(rank AS DOUBLE)) AS c FROM dense WHERE rank <= {depth}
-),
-fused AS (
-  SELECT query_id, doc_id, sum(c) AS rrf, CAST(count(*) AS BIGINT) AS n_lists
-  FROM contrib GROUP BY query_id, doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, rrf, n_lists,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(rrf, 9) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM fused
-)
-SELECT query_id, rank, doc_id, round(rrf, 6) AS rrf, n_lists
-FROM ranked WHERE rank <= {k}
-"""
+  JOIN q ON q.query_id = p.query_id
+)"""
+    return _rrf_sql(dense, k, depth, rrf_k, n_queries, k1, b)
 
 
 def _q_incremental_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Half-then-append build, flattened postings — oracle is the FULL-build
     posting relation, proving append ≡ rebuild."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.build import build_index
-    from invertedfiles_jl_spark.operators.search import postings_exploded
     from invertedfiles_jl_spark.streaming.incremental import append_documents
 
     base = _corpus(spark, sf_dir)
@@ -2764,8 +1884,6 @@ def _q_sql_surface(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _norm_doc_pairs(spark: SparkSession, sf_dir: str):
     """(doc_id, term, weight=tf/‖tf‖) pairs — the pre-normalized vector view
     of the corpus (Dist.NormCosine contract)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.build import doc_term_freqs
 
     cfg = IndexConfig(weighting="normcosine", weight_dtype="double")
@@ -2779,8 +1897,6 @@ def _norm_doc_pairs(spark: SparkSession, sf_dir: str):
 
 
 def _norm_query_pairs(spark: SparkSession):
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import query_terms
 
     qt = query_terms(queries_df(spark), IndexConfig())
@@ -2795,22 +1911,18 @@ def _norm_query_pairs(spark: SparkSession):
 def _q_exhaustive_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ExhaustiveSearch gold standard (/root/reference/test/invfiles.jl:21):
     every doc scored, non-overlapping docs at distance 1."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.exhaustive import exhaustive_cosine_topk
 
     res = exhaustive_cosine_topk(
         _norm_doc_pairs(spark, sf_dir), _norm_query_pairs(spark), k=10,
         docs=_corpus(spark, sf_dir).select("doc_id"), rank_round=6,
     )
-    return res.select("query_id", "rank", "doc_id", F.round("dist", 5).alias("dist"))
+    return _ranked(res, "dist")
 
 
 def _q_recall_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recallscore of the indexed cosine search vs the exhaustive gold
     (/root/reference/test/invfiles.jl:23 semantics, per query)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.exhaustive import (
         exhaustive_cosine_topk,
         recallscore,
@@ -2827,71 +1939,110 @@ def _q_recall_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _q_allknn_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """allknn over the first 50 docs as queries — self-join cosine oracle
-    (reference contract /root/reference/test/invfiles.jl:97)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.build import doc_term_freqs
-    from invertedfiles_jl_spark.operators.knn import allknn, build_vector_index
-
-    corpus = _corpus(spark, sf_dir)
-    cfg = IndexConfig(weighting="normcosine", weight_dtype="double")
-    tf = doc_term_freqs(corpus, cfg)
-    norm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("n")
-    )
-    pairs = tf.join(norm, "doc_id").select(
-        "doc_id", "term", (F.col("tf") / F.col("n")).alias("weight")
-    )
-    idx = build_vector_index(pairs, cfg)
-    sample = pairs.filter(F.col("doc_id") < 50)
-    res = allknn(idx, sample, k=3, rank_round=6)
-    # "+ 0.0" mirrors the oracle's negative-zero canonicalization (IEEE
-    # -0.0 + 0.0 == +0.0) so both sides hash identically byte-for-byte.
-    return res.select(
-        "query_id", "rank", "doc_id",
-        (F.round("dist", 5) + F.lit(0.0)).alias("dist"),
-    )
+def _exhaustive_ctes() -> str:
+    """``dots`` (query ⋅ doc over shared terms) and ``scored`` — every
+    (query, doc) pair at cosine distance, 1 when nothing is shared."""
+    return f"""{base_ctes()},
+qn AS (
+  SELECT query_id, sqrt(CAST(sum(qtf * qtf) AS DOUBLE)) AS qn FROM qt GROUP BY query_id
+),
+dots AS (
+  SELECT qt.query_id, tf.doc_id, sum((qtf / qn) * (tf / norm)) AS dot
+  FROM qt JOIN qn ON qt.query_id = qn.query_id
+  JOIN tf ON qt.term = tf.term
+  JOIN dl ON tf.doc_id = dl.doc_id
+  GROUP BY qt.query_id, tf.doc_id
+),
+allp AS (
+  SELECT q.query_id, d.doc_id
+  FROM (SELECT DISTINCT query_id FROM qt) q CROSS JOIN (SELECT doc_id FROM documents) d
+),
+scored AS (
+  SELECT allp.query_id, allp.doc_id, 1.0 - coalesce(dot, 0.0) AS dist
+  FROM allp LEFT JOIN dots ON allp.query_id = dots.query_id AND allp.doc_id = dots.doc_id
+)"""
 
 
-def _q_allknn_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """allknn with ``df_cap`` — the 100-TB escape from the exact plan's
-    Σ df² candidate join (knn.allknn): candidate pairs are generated only
-    from terms with df ≤ 390 (prefix filtering), then every candidate is
-    re-scored EXACTLY over ALL shared terms, hot ones included.  The oracle
-    mirrors both halves, pinning the rescoring contract: emitted distances
-    must equal the exact plan's on every surviving pair.  Reference
-    contract: /root/reference/test/invfiles.jl:97."""
-    from pyspark.sql import functions as F
+def _recall_cosine_sql() -> str:
+    return f"""
+WITH {_exhaustive_ctes()},
+gold AS ({top_n('scored', 10, 'query_id, doc_id', _DIST_ORDER)}),
+res AS ({top_n('(SELECT query_id, doc_id, 1.0 - dot AS dist FROM dots)', 10,
+               'query_id, doc_id', _DIST_ORDER)}),
+per AS (
+  SELECT g.query_id, CAST(count(r.doc_id) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
+  FROM gold g LEFT JOIN res r ON g.query_id = r.query_id AND g.doc_id = r.doc_id
+  GROUP BY g.query_id
+)
+SELECT query_id, round(recall, 6) AS recall FROM per
+"""
 
-    from invertedfiles_jl_spark.operators.build import doc_term_freqs
-    from invertedfiles_jl_spark.operators.knn import allknn, build_vector_index
 
-    corpus = _corpus(spark, sf_dir)
-    cfg = IndexConfig(weighting="normcosine", weight_dtype="double")
-    tf = doc_term_freqs(corpus, cfg)
-    norm = tf.groupBy("doc_id").agg(
-        F.sqrt(F.sum(F.col("tf") * F.col("tf"))).alias("n")
-    )
-    pairs = tf.join(norm, "doc_id").select(
-        "doc_id", "term", (F.col("tf") / F.col("n")).alias("weight")
-    )
-    idx = build_vector_index(pairs, cfg)
-    sample = pairs.filter(F.col("doc_id") < 50)
-    res = allknn(idx, sample, k=3, rank_round=6, df_cap=390)
-    return res.select(
-        "query_id", "rank", "doc_id",
-        (F.round("dist", 5) + F.lit(0.0)).alias("dist"),
-    )
+def _q_allknn(**kw):
+    """Row: allknn over the first 50 docs as queries — self-join cosine
+    oracle (the reference's allknn contract, test/invfiles.jl:97)."""
+    def q(spark: SparkSession, sf_dir: str) -> DataFrame:
+        from invertedfiles_jl_spark.operators.knn import allknn, build_vector_index
+
+        pairs = _norm_doc_pairs(spark, sf_dir)
+        idx = build_vector_index(pairs, IndexConfig(weighting="normcosine",
+                                                    weight_dtype="double"))
+        res = allknn(idx, pairs.filter(F.col("doc_id") < 50), k=3,
+                     rank_round=6, **kw)
+        # "+ 0.0" mirrors the oracle's negative-zero canonicalization (IEEE
+        # -0.0 + 0.0 == +0.0) so both sides hash identically byte-for-byte.
+        return res.select("query_id", "rank", "doc_id",
+                          (F.round("dist", 5) + F.lit(0.0)).alias("dist"))
+
+    return q
+
+
+def _allknn_sql(dots: str) -> str:
+    """allknn oracle: the ``dots`` CTE over normalized pairs ``np`` and the
+    query docs ``q``, ranked by distance."""
+    return f"""
+WITH {base_ctes()},
+np AS (
+  SELECT tf.doc_id, term, tf / norm AS w
+  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
+),
+q AS (SELECT doc_id AS query_id, term, w AS qw FROM np WHERE doc_id < 50),
+{dots},
+-- "+ 0.0" canonicalizes IEEE negative zero: DuckDB's round(1.0 - sum(w*w), 5)
+-- lands on -0.0 for self-matches where Spark emits +0.0; values are equal but
+-- the value-hash gate compares bytes (-0.0 + 0.0 == +0.0 in IEEE 754).
+{rank_cut('dots', 3, 'query_id, rank, doc_id, round(dist, 5) + 0.0 AS dist', _DIST_ORDER)}
+"""
+
+
+_ALLKNN_DOTS = """dots AS (
+  SELECT q.query_id, np.doc_id, 1.0 - sum(q.qw * np.w) AS dist
+  FROM q JOIN np ON q.term = np.term
+  GROUP BY q.query_id, np.doc_id
+)"""
+
+# df_cap: candidate pairs come only from terms with df <= 390
+# (knn.allknn_candidates restricts BOTH join sides to those terms), then
+# every candidate is re-scored exactly over ALL shared terms (hot ones
+# included) — the df_cap rescoring contract (knn.allknn)
+_ALLKNN_CAPPED_DOTS = """cand AS (
+  SELECT DISTINCT q.query_id, np.doc_id
+  FROM q JOIN np ON q.term = np.term
+  WHERE q.term IN (SELECT term FROM vocab WHERE df <= 390)
+),
+dots AS (
+  SELECT q.query_id, np.doc_id, 1.0 - sum(q.qw * np.w) AS dist
+  FROM cand
+  JOIN q ON q.query_id = cand.query_id
+  JOIN np ON np.doc_id = cand.doc_id AND np.term = q.term
+  GROUP BY q.query_id, np.doc_id
+)"""
 
 
 def _q_positional_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Flat positional postings, exploded to (term, doc_id, pos) — gates the
     position space (0-based offsets over the filtered token array) that
     phrase search intersects."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.positional import positional_postings
 
     pos = positional_postings(_corpus(spark, sf_dir))
@@ -2975,11 +2126,26 @@ def _q_corpus_profile_approx(spark: SparkSession, sf_dir: str) -> DataFrame:
                           accuracy=1_000_000)
 
 
+def _corpus_profile_sql(quantile: str) -> str:
+    """The corpus_profile report with ``quantile`` (quantile_cont for the
+    exact row, quantile_disc for the approx row)."""
+    def pct(col: str, rel: str, p: float) -> str:
+        return f"(SELECT round(CAST({quantile}({col}, {p}) AS DOUBLE), 6) FROM {rel})"
+
+    return _base_select(f"""SELECT (SELECT CAST(count(*) AS BIGINT) FROM dl) AS n_docs,
+       (SELECT CAST(sum(doc_len) AS BIGINT) FROM dl) AS total_tokens,
+       (SELECT CAST(count(*) AS BIGINT) FROM vocab) AS distinct_terms,
+       {pct('doc_len', 'dl', 0.5)} AS doc_len_p50,
+       {pct('doc_len', 'dl', 0.9)} AS doc_len_p90,
+       {pct('doc_len', 'dl', 0.99)} AS doc_len_p99,
+       (SELECT CAST(max(doc_len) AS BIGINT) FROM dl) AS doc_len_max,
+       {pct('df', 'vocab', 0.9)} AS df_p90,
+       (SELECT CAST(max(df) AS BIGINT) FROM vocab) AS df_max""")
+
+
 def _q_phrase_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Relevance-ranked phrase retrieval (positional gate × BM25 postings
     score, operators/positional.phrase_bm25_topk)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.positional import (
         phrase_bm25_topk,
         positional_postings,
@@ -2988,10 +2154,8 @@ def _q_phrase_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     idx = _index(spark, sf_dir, "bm25")
     pos = positional_postings(_corpus(spark, sf_dir))
-    res = phrase_bm25_topk(idx, pos, phrases_df(spark), k=10, rank_round=6,
-                           vocab=idx.vocab)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(phrase_bm25_topk(idx, pos, phrases_df(spark), k=10,
+                                    rank_round=6, vocab=idx.vocab))
 
 
 _DELETE_PRED = "doc_id % 7 = 3"  # deterministic ~14% delete fixture
@@ -3001,8 +2165,6 @@ def _deleted_index(spark: SparkSession, sf_dir: str):
     """BM25 index with the fixture delete applied (maintenance contract:
     scoring statistics stay frozen, so post-delete BM25 ≡ full-corpus BM25
     restricted to the survivors — exactly the accept-set oracle)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.maintenance import delete_documents
 
     idx = _index(spark, sf_dir, "bm25")
@@ -3011,31 +2173,23 @@ def _deleted_index(spark: SparkSession, sf_dir: str):
 
 
 def _q_delete_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import functions as F
-
     idx = _deleted_index(spark, sf_dir)
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
+    return _ranked(bm25_topk(idx, queries_df(spark), k=10, rank_round=6))
 
 
 def _q_delete_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exploded postings after the fixture delete — gates that the map-only
     array rewrite removed every deleted entry and nothing else."""
-    from invertedfiles_jl_spark.operators.search import postings_exploded
-
     return postings_exploded(_deleted_index(spark, sf_dir)).select("term", "doc_id")
 
 
 def _q_pruned_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BM25 over a df-pruned index (stopword lists dropped at
     max_df_ratio=0.78): pruned terms never match, surviving scores frozen."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.maintenance import prune_postings
 
     idx = prune_postings(_index(spark, sf_dir, "bm25"), max_df_ratio=0.78)
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id", F.round("score", 5).alias("score"))
+    return _ranked(bm25_topk(idx, queries_df(spark), k=10, rank_round=6))
 
 
 # ---------------------------------------------------------------------------
@@ -3044,17 +2198,6 @@ def _q_pruned_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _MLT_PRED = "doc_id % 29 = 0"       # deterministic more-like-this source set
 _BENCH_PRED = "doc_id % 23 = 0"     # deterministic benchmark (eval) slice
-
-
-def _q_bm25_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Page 2 (ranks 11..20) of the BM25 ranking — search_after pagination:
-    same window, same tie-break, globally consistent ranks across pages."""
-    from pyspark.sql import functions as F
-
-    idx = _index(spark, sf_dir, "bm25")
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6, offset=10)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
 
 
 def _q_facet_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -3069,7 +2212,7 @@ def _q_facet_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _facet_counts_sql(k: int = 5) -> str:
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 cand AS (
   SELECT DISTINCT query_id, tf.doc_id
   FROM (SELECT DISTINCT query_id, term FROM qt) q
@@ -3080,14 +2223,7 @@ counts AS (
   FROM cand JOIN documents ON cand.doc_id = documents.doc_id
   GROUP BY query_id, lang
 ),
-ranked AS (
-  SELECT query_id, facet, n_docs,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY n_docs DESC, facet ASC) AS INTEGER) AS facet_rank
-  FROM counts
-)
-SELECT query_id, facet_rank, facet, n_docs
-FROM ranked WHERE facet_rank <= {k}
+{rank_cut('counts', k, 'query_id, rank AS facet_rank, facet, n_docs', 'n_docs DESC, facet ASC')}
 """
 
 
@@ -3106,7 +2242,7 @@ def _facet_histogram_sql(width: int = 200) -> str:
     """DuckDB mirror of :func:`_q_facet_histogram` — distinct matched
     candidates, floor(n_chars / width) · width buckets, count per bucket."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 cand AS (
   SELECT DISTINCT qt.query_id, tf.doc_id
   FROM qt JOIN tf ON qt.term = tf.term
@@ -3123,17 +2259,13 @@ FROM m GROUP BY query_id, bucket_lo
 def _q_more_like_this(spark: SparkSession, sf_dir: str) -> DataFrame:
     """More-like-this: each source doc's top-4 tf-idf terms (qtf=1 each)
     BM25-rank the rest of the corpus; source excluded."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import more_like_this
 
     idx = _index(spark, sf_dir, "bm25")
     src = (spark.read.parquet(f"{sf_dir}/documents.parquet")
            .filter(_MLT_PRED).select("doc_id"))
-    res = more_like_this(idx, _corpus(spark, sf_dir), src, k=5, n_terms=4,
-                         rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(more_like_this(idx, _corpus(spark, sf_dir), src, k=5,
+                                  n_terms=4, rank_round=6))
 
 
 def _mlt_sql(k: int = 5, n_terms: int = 4, k1: float = 1.2,
@@ -3142,35 +2274,16 @@ def _mlt_sql(k: int = 5, n_terms: int = 4, k1: float = 1.2,
     round(tf*idf, 6) desc / term asc (search.doc_term_profile); scoring is
     plain BM25 with qtf = 1 over the chosen terms, self excluded."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 prof AS (
-  SELECT tf.doc_id AS query_id, tf.term,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf,
-         CAST(row_number() OVER (PARTITION BY tf.doc_id
-              ORDER BY round(tf * ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)), 6) DESC,
-                       tf.term ASC) AS INTEGER) AS trank
+  SELECT tf.doc_id AS query_id, tf.term, {bm25_idf()} AS idf,
+         {rank_over(f'round(tf * {bm25_idf()}, 6) DESC, tf.term ASC', by='tf.doc_id')} AS trank
   FROM tf JOIN vocab ON tf.term = vocab.term CROSS JOIN stats
-  WHERE tf.doc_id % 29 = 0
+  WHERE tf.{_MLT_PRED}
 ),
 qterm AS (SELECT query_id, term, idf FROM prof WHERE trank <= {n_terms}),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term AND tf.doc_id != qterm.query_id
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+scored AS ({bm25_scored(k1, b, w='1', where='tf.doc_id != qterm.query_id')}),
+{rank_cut('scored', k)}
 """
 
 
@@ -3223,25 +2336,16 @@ def _q_suggest_corrections(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _suggest_corrections_sql(k: int = 3, max_dist: int = 2) -> str:
-    rows = ", ".join(f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in FUZZY_SET)
     return f"""
-WITH {_BASE_CTES},
-fq AS (SELECT * FROM (VALUES {rows}) AS fq(query_id, qterm)),
+WITH {base_ctes()},
 m AS (
   SELECT query_id, term, cf,
          CAST(levenshtein(term, lower(qterm)) AS INTEGER) AS dist
-  FROM vocab CROSS JOIN fq
+  FROM vocab CROSS JOIN {values_sql(FUZZY_SET, 'query_id, qterm')}
   WHERE abs(length(term) - length(lower(qterm))) <= {max_dist}
     AND levenshtein(term, lower(qterm)) <= {max_dist}
 ),
-ranked AS (
-  SELECT query_id, term, dist, cf,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY dist ASC, cf DESC, term ASC) AS INTEGER) AS rank
-  FROM m
-)
-SELECT query_id, rank, term, dist, cf
-FROM ranked WHERE rank <= {k}
+{rank_cut('m', k, 'query_id, rank, term, dist, cf', 'dist ASC, cf DESC, term ASC')}
 """
 
 
@@ -3254,7 +2358,7 @@ def _q_term_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _term_cooccurrence_sql(k: int = 20, min_pair_df: int = 2) -> str:
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 pairs AS (
   SELECT a.term AS term_a, b.term AS term_b,
          CAST(count(*) AS BIGINT) AS pair_df
@@ -3270,15 +2374,8 @@ scored AS (
   JOIN vocab db ON term_b = db.term
   CROSS JOIN stats
 ),
-ranked AS (
-  SELECT term_a, term_b, pair_df, pmi,
-         CAST(row_number() OVER (
-              ORDER BY round(pmi, 6) DESC, term_a ASC, term_b ASC)
-              AS INTEGER) AS pair_rank
-  FROM scored
-)
-SELECT pair_rank, term_a, term_b, pair_df, round(pmi, 6) AS pmi
-FROM ranked WHERE pair_rank <= {k}
+{rank_cut('scored', k, 'rank AS pair_rank, term_a, term_b, pair_df, round(pmi, 6) AS pmi',
+          'round(pmi, 6) DESC, term_a ASC, term_b ASC', by='')}
 """
 
 
@@ -3291,27 +2388,14 @@ _LM_MU = 2000.0
 _CHUNK_W, _CHUNK_S = 64, 48
 
 
-def _q_lm_dirichlet(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Query-likelihood LM retrieval with Dirichlet smoothing over the
-    raw-tf index (operators/search.lm_dirichlet_topk)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.search import lm_dirichlet_topk
-
-    idx = _index(spark, sf_dir, "tf")
-    res = lm_dirichlet_topk(idx, queries_df(spark), k=10, mu=_LM_MU,
-                            rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
-
-
 def _lm_dirichlet_sql(k: int = 10, mu: float = _LM_MU) -> str:
-    """DuckDB mirror of :func:`_q_lm_dirichlet` — identical expression
+    """DuckDB mirror of the lm_dirichlet_topk row (query-likelihood LM
+    with Dirichlet smoothing over the raw-tf index) — identical expression
     tree: ln(1 + (tf · T) / (μ · cf)) per matched term, plus the per-query
     |q| · ln(μ / (μ + doc_len)) length term.  OOV query terms drop (no
     smoothing mass) and are excluded from |q|."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 tot AS (SELECT CAST(sum(doc_len) AS DOUBLE) AS T FROM dl),
 qv AS (
   SELECT query_id, qt.term, qtf, cf
@@ -3331,35 +2415,16 @@ scored AS (
   JOIN dl ON part.doc_id = dl.doc_id
   JOIN qlen ON part.query_id = qlen.query_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k)}
 """
 
 
-def _q_tfidf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SMART lnc.ltc tf-idf cosine retrieval (operators/search.tfidf_topk)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.search import tfidf_topk
-
-    idx = _index(spark, sf_dir, "tf")
-    res = tfidf_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
-
-
 def _tfidf_sql(k: int = 10) -> str:
-    """DuckDB mirror of :func:`_q_tfidf` — lnc doc vectors, ltc query
-    vectors, cosine.  idf = ln(N / df); OOV query terms drop from both the
-    weights and the query norm."""
+    """DuckDB mirror of the tfidf_topk row (SMART lnc.ltc) — lnc doc
+    vectors, ltc query vectors, cosine.  idf = ln(N / df); OOV query terms
+    drop from both the weights and the query norm."""
     return f"""
-WITH {_BASE_CTES},
+WITH {base_ctes()},
 lnc AS (
   SELECT doc_id,
          sqrt(sum((1.0 + ln(tf)) * (1.0 + ln(tf)))) AS lnc_norm
@@ -3387,14 +2452,7 @@ scored AS (
   SELECT query_id, dot.doc_id, dot / lnc_norm AS score
   FROM dot JOIN lnc ON dot.doc_id = lnc.doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k)}
 """
 
 
@@ -3403,8 +2461,6 @@ def _q_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     search_after cursor; the operator returns the next 10 docs WITHOUT
     ranking past depth k (operators/search.search_after_topk).  Queries
     with < 10 page-1 results have no cursor and emit no page-2 rows."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import search_after_topk
 
     idx = _index(spark, sf_dir, "bm25")
@@ -3412,10 +2468,8 @@ def _q_search_after(spark: SparkSession, sf_dir: str) -> DataFrame:
     cursor = page1.filter(F.col("rank") == 10).select(
         "query_id", F.col("score").alias("after_score"),
         F.col("doc_id").alias("after_doc_id"))
-    res = search_after_topk(idx, queries_df(spark), cursor, k=10,
-                            rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(search_after_topk(idx, queries_df(spark), cursor, k=10,
+                                     rank_round=6))
 
 
 def _search_after_sql(k: int = 10) -> str:
@@ -3435,8 +2489,6 @@ def _q_facet_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-facet-bucket top hits: for each query, the 3 largest lang
     buckets of the matched set and each bucket's best 2 docs by BM25
     (operators/search.facet_top_hits)."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import facet_top_hits
 
     idx = _index(spark, sf_dir, "bm25")
@@ -3449,22 +2501,7 @@ def _q_facet_top_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _facet_top_hits_sql(k_buckets: int = 3, k_hits: int = 2) -> str:
     return f"""
-WITH {_BASE_CTES},
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * (1.2 + 1.0)
-             / (tf + 1.2 * ((1.0 - 0.75) + 0.75 * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
+WITH {_bm25_chain(1.2, 0.75)},
 m AS (
   SELECT scored.*, lang AS facet
   FROM scored JOIN documents ON scored.doc_id = documents.doc_id
@@ -3473,24 +2510,10 @@ counts AS (
   SELECT query_id, facet, count(*) AS n_docs
   FROM m GROUP BY query_id, facet
 ),
-tb AS (
-  SELECT query_id, facet
-  FROM (SELECT query_id, facet,
-               row_number() OVER (PARTITION BY query_id
-                    ORDER BY n_docs DESC, facet ASC) AS facet_rank
-        FROM counts)
-  WHERE facet_rank <= {k_buckets}
-),
-hits AS (
-  SELECT m.query_id, m.facet,
-         CAST(row_number() OVER (PARTITION BY m.query_id, m.facet
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER)
-           AS hit_rank,
-         doc_id, round(score, 5) AS score
-  FROM m JOIN tb ON m.query_id = tb.query_id AND m.facet = tb.facet
-)
-SELECT query_id, facet, hit_rank, doc_id, score
-FROM hits WHERE hit_rank <= {k_hits}
+tb AS ({top_n('counts', k_buckets, 'query_id, facet', 'n_docs DESC, facet ASC')}),
+{rank_cut('m JOIN tb USING (query_id, facet)', k_hits,
+          'query_id, facet, rank AS hit_rank, doc_id, round(score, 5) AS score',
+          by='query_id, facet')}
 """
 
 
@@ -3508,7 +2531,7 @@ def _q_chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _chunk_documents_sql(window: int = _CHUNK_W, stride: int = _CHUNK_S) -> str:
     return f"""
 WITH tok AS (
-  SELECT doc_id, {_TOK.format(col='text')} AS toks FROM documents
+  SELECT doc_id, {tokens()} AS toks FROM documents
 ),
 t AS (
   SELECT doc_id, toks, len(toks) AS n FROM tok WHERE len(toks) > 0
@@ -3540,8 +2563,6 @@ def _q_symbol_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     (sources/corpus.symbolized_from_documents): plain BM25 over the raw
     rewrite scores ZERO for every query — every hit here is attributable
     to the normalizer."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.functions.tokenize import symbol_normalize_sql
     from invertedfiles_jl_spark.sources.corpus import symbolized_from_documents
 
@@ -3550,14 +2571,13 @@ def _q_symbol_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", F.expr(symbol_normalize_sql("content")).alias("content"))
     cfg = IndexConfig(weighting="bm25", weight_dtype="double")
     idx = build_index(corpus, cfg)
-    res = bm25_topk(idx, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(bm25_topk(idx, queries_df(spark), k=10, rank_round=6))
 
 
 def _symbol_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     """DuckDB mirror of :func:`_q_symbol_bm25`: the same symbolize →
-    subtoken-normalize → tokenize → BM25 pipeline in SQL."""
+    subtoken-normalize → tokenize → BM25 pipeline in SQL (the normalized
+    content is already lowercase, so the base tokenizer applies as is)."""
     from invertedfiles_jl_spark.functions.tokenize import (
         duckdb_symbol_normalize_sql,
     )
@@ -3569,55 +2589,10 @@ def _symbol_bm25_sql(k: int = 10, k1: float = 1.2, b: float = 0.75) -> str:
     return f"""
 WITH sym AS ({SYMBOLIZED_FROM_DOCUMENTS_DUCKDB}),
 normed AS (SELECT doc_id, {norm} AS content FROM sym),
-tok AS (
-  SELECT doc_id,
-         unnest(list_filter(string_split_regex(content, '\\s+'), t -> t != ''))
-           AS term
-  FROM normed
-),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term
-),
-dl AS (
-  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS doc_len FROM tf GROUP BY doc_id
-),
-stats AS (
-  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM normed) AS n_docs,
-         (SELECT avg(doc_len) FROM dl) AS avgdl
-),
-vocab AS (
-  SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term
-),
-qtok AS (
-  SELECT query_id, unnest({_TOK.format(col='content')}) AS term
-  FROM {queries_values_sql()}
-),
-qt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf FROM qtok GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + (n_docs - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN vocab ON qt.term = vocab.term CROSS JOIN stats
-),
-scored AS (
-  SELECT query_id, tf.doc_id,
-         sum(qtf * idf * (tf * ({k1} + 1.0)
-             / (tf + {k1} * ((1.0 - {b}) + {b} * doc_len / avgdl)))) AS score
-  FROM qterm
-  JOIN tf ON qterm.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  CROSS JOIN stats
-  GROUP BY query_id, tf.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{base_ctes(docs='normed', text='content')},
+qterm AS ({bm25_qterm()}),
+scored AS ({bm25_scored(k1, b)}),
+{rank_cut('scored', k)}
 """
 
 
@@ -3627,17 +2602,34 @@ def _q_federated_bm25(spark: SparkSession, sf_dir: str) -> DataFrame:
     parity, queried with global collection stats.  The oracle is the PLAIN
     monolithic BM25 SQL — a value-hash match proves segmentation is
     rank-AND-score invisible."""
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import federated_bm25_topk
 
     corpus = _corpus(spark, sf_dir)
     cfg = IndexConfig(weighting="tf", weight_dtype="double")
     segs = [build_index(corpus.filter(F.col("doc_id") % 2 == p), cfg)
             for p in (0, 1)]
-    res = federated_bm25_topk(segs, queries_df(spark), k=10, rank_round=6)
-    return res.select("query_id", "rank", "doc_id",
-                      F.round("score", 5).alias("score"))
+    return _ranked(federated_bm25_topk(segs, queries_df(spark), k=10,
+                                       rank_round=6))
+
+
+def _q_bm25_reloaded(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The persisted-index read path: save_index → load_index → bm25_topk,
+    gated against the bm25_topk oracle.  The ranked rows are collected into
+    a local relation before the index directory is removed, so the
+    returned DataFrame reads nothing from disk."""
+    import shutil
+    import tempfile
+
+    from invertedfiles_jl_spark.plans.pipeline import load_index, save_index
+
+    tmp = tempfile.mkdtemp(prefix="ifreload_gate_")
+    try:
+        save_index(_index(spark, sf_dir, "bm25"), tmp)
+        res = _ranked(bm25_topk(load_index(spark, tmp), queries_df(spark),
+                                k=10, rank_round=6))
+        return spark.createDataFrame(res.collect(), res.schema)
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def entry(spark: SparkSession) -> DataFrame:
@@ -3645,429 +2637,133 @@ def entry(spark: SparkSession) -> DataFrame:
     return _q_bm25(spark, "/root/testdata/sf0.001")
 
 
-def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    # Key order is an AUDIT-ROTATION POLICY, not edit history: the driver
-    # verifies the first 50 keys in dict order, so each round the keys with
-    # the weakest (oldest / never-run) driver evidence go first.
-    # Round-5 window: 39 never-driver-run rows, then pack_sequences (oracle
-    # type fix to attest), then the 10 highest-drift-risk round-3 rows.
-    return {
-        # -- never driver-run before round 5 (39) --
-        "positional_postings": _q_positional_postings,
-        "phrase_topk": _q_phrase_topk,
-        "proximity_topk": _q_proximity_topk,
-        "snippet_topk": _q_snippet_topk,
-        "phrase_bm25_topk": _q_phrase_bm25_topk,
-        "ann_sq8": _q_ann_sq8,
-        "ann_pq": _q_ann_pq,
-        "ann_ivf_pq": _q_ann_ivf_pq,
-        "recall_sq8_vs_bruteforce": _q_recall_sq8,
-        "semantic_dedup": _q_semantic_dedup,
-        "lm_perplexity": _q_lm_perplexity,
-        "curation_verdict": _q_curate,
-        "curation_verdict_rep": _q_curate_rep,
-        "repetition_stats": _q_repetition_stats,
-        "pii_scrub": _q_pii_scrub,
-        "ce_rerank_topk": _q_ce_rerank,
-        "mmr_rerank": _q_mmr_rerank,
-        "hybrid_rrf_ivf_topk": _q_hybrid_rrf_ivf,
-        "hybrid_minmax_topk": _q_hybrid_minmax,
-        "percolate_matches": _q_percolate,
-        "ranking_metrics": _q_ranking_metrics,
-        "allknn_capped": _q_allknn_capped,
-        "delete_docs_bm25_topk": _q_delete_bm25,
-        "delete_docs_postings": _q_delete_postings,
-        "pruned_bm25_topk": _q_pruned_bm25,
-        "bm25_page2": _q_bm25_page2,
-        "facet_counts_lang": _q_facet_counts,
-        "more_like_this": _q_more_like_this,
-        "suggest_corrections": _q_suggest_corrections,
-        "search_after_topk": _q_search_after,
-        "facet_top_hits": _q_facet_top_hits,
-        "lm_dirichlet_topk": _q_lm_dirichlet,
-        "tfidf_topk": _q_tfidf,
-        "symbol_bm25_topk": _q_symbol_bm25,
-        "federated_bm25_topk": _q_federated_bm25,
-        "corpus_profile": _q_corpus_profile,
-        "benchmark_contamination": _q_contamination,
-        "term_cooccurrence": _q_term_cooccurrence,
-        "chunk_documents": _q_chunk_documents,
-        # -- red in r4 (oracle HUGEINT cast fixed this round) --
-        "pack_sequences": _q_pack_sequences,
-        # -- green in r3 but code drifted since; re-attest (10) --
-        "streaming_bm25_topk": _q_streaming_topk,
-        "ann_ivf": _q_ann_ivf,
-        "hybrid_rrf_topk": _q_hybrid_rrf,
-        "allknn_sample": _q_allknn_sample,
-        "exhaustive_cosine": _q_exhaustive_cosine,
-        "recall_cosine_vs_exhaustive": _q_recall_cosine,
-        "incremental_postings": _q_incremental_postings,
-        "embedding_near_dups": _q_emb_near_dups,
-        "ann_bruteforce": _q_ann_bruteforce,
-        "sql_surface": _q_sql_surface,
-        # ---- end of the round-5 driver window (50 keys) ----
-        # new this round (locally verified; next rotation candidate)
-        "corpus_profile_approx": _q_corpus_profile_approx,
-        # remaining r3-green rows (next rotation candidates)
-        "embedding_near_dups_exact": _q_emb_near_dups_exact,
-        "index_stats": _q_index_stats,
-        "search_cost": _q_search_cost,
-        "media_features": _q_media_features,
-        "frame_sample_plan": _q_frame_plan,
-        "rolling_fingerprint": _q_rolling_fp,
-        "ngram_set_dups": _q_ngram_dups,
-        "simhash": _q_simhash,
-        "fingerprint": _q_fingerprint,
-        "lang_id": _q_lang_id,
-        "token_stats": _q_token_stats,
-        "quality_score": _q_quality,
-        # rows green in the round-4 driver window
-        "bm25_topk": _q_bm25,
-        "bm25_filtered_topk": _q_bm25_filtered,
-        "bm25_tthreshold2": _q_bm25_t2,
-        "bm25_msm_topk": _q_bm25_msm,
-        "cosine_topk": _q_cosine,
-        "jaccard_topk": _q_set("jaccard"),
-        "dice_topk": _q_set("dice"),
-        "cosineset_topk": _q_set("cosine_set"),
-        "intersection_topk": _q_set("intersection"),
-        "jaccard_tthreshold2": _q_set("jaccard", t=2),
-        "vocab": _q_vocab,
-        "doc_stats": _q_doc_stats,
-        "postings_flat": _q_postings_flat,
-        "corpus_commits": _q_corpus_commits,
-        "wand_bm25_topk": _q_wand_bm25,
-        "bm25_compressed_topk": _q_bm25_compressed,
-        "wand_bm25_compressed_topk": _q_wand_bm25_compressed,
-        "sharded_bm25_topk": _q_sharded_bm25,
-        "sharded_jaccard_topk": _q_sharded_jaccard,
-        "dedup_exact": _q_dedup_exact,
-        "minhash_near_dups": _q_minhash,
-        "near_dup_clusters": _q_near_dup_clusters,
-        "prefix_topk": _q_prefix_topk,
-        "wildcard_topk": _q_wildcard_topk,
-        "regex_topk": _q_regex_topk,
-        "term_vectors": _q_term_vectors,
-        "substring_search": _q_substring_search,
-        "query_significant_terms": _q_query_significant_terms,
-        "fuzzy_topk": _q_fuzzy_topk,
-        "bm25_explain": _q_bm25_explain,
-        "bm25f_topk": _q_bm25f_topk,
-        "dismax_topk": _q_dismax_topk,
-        "prf_bm25_topk": _q_prf_bm25,
-        "boosted_bm25_topk": _q_boosted_bm25,
-        "synonym_bm25_topk": _q_synonym_bm25,
-        "collapsed_bm25_topk": _q_collapsed_bm25,
-        "auto_bm25_topk": _q_auto_bm25,
-        "route_explain": _q_route_explain,
-        "facet_histogram_chars": _q_facet_histogram,
-        "boolean_topk": _q_boolean_topk,
-        "query_string_topk": _q_query_string_topk,
-        "qstring_percolate": _q_qstring_percolate,
-        "doc_keywords": _q_doc_keywords,
-        "suggest_terms": _q_suggest_terms,
-        "hash_split": _q_hash_split,
-        "shuffle_order": _q_shuffle_order,
-        "stratified_sample": _q_stratified_sample,
-        "temperature_sample": _q_temperature_sample,
-        "significant_terms": _q_significant_terms,
-    }
-
-
-def oracle_sql() -> dict[str, str]:
-    return {
-        "bm25_topk": _bm25_sql(),
-        "bm25_filtered_topk": _bm25_sql(accept_where="lang = 'en'"),
-        "bm25_tthreshold2": _bm25_sql(t=2),
-        "bm25_msm_topk": _bm25_msm_sql(),
-        "cosine_topk": _cosine_sql(),
-        "jaccard_topk": _set_dist_sql("jaccard"),
-        "dice_topk": _set_dist_sql("dice"),
-        "cosineset_topk": _set_dist_sql("cosine_set"),
-        "intersection_topk": _set_dist_sql("intersection"),
-        "jaccard_tthreshold2": _set_dist_sql("jaccard", t=2),
-        "vocab": f"WITH {_BASE_CTES} SELECT term, df, cf FROM vocab",
-        "doc_stats": f"""
-WITH {_BASE_CTES}
-SELECT d.doc_id,
-       coalesce(dl.doc_len, 0) AS doc_len,
-       coalesce(dl.nnz, 0) AS nnz,
-       sha256(d.text) AS content_sha256
-FROM documents d LEFT JOIN dl ON d.doc_id = dl.doc_id
-""",
-        "postings_flat": f"WITH {_BASE_CTES} SELECT DISTINCT term, doc_id FROM tf",
-        "wand_bm25_topk": _bm25_sql(),
-        "bm25_compressed_topk": _bm25_sql(),
-        "wand_bm25_compressed_topk": _bm25_sql(),
-        "sharded_bm25_topk": _bm25_sql(),
-        "sharded_jaccard_topk": _set_dist_sql("jaccard"),
-        "dedup_exact": _osql.dedup_exact_sql(),
-        "minhash_near_dups": _osql.minhash_near_dups_sql(),
-        "near_dup_clusters": _osql.near_dup_clusters_sql(),
-        "prefix_topk": _osql.prefix_topk_sql(PREFIX_SET),
-        "wildcard_topk": _osql.wildcard_topk_sql(WILDCARD_SET),
-        "regex_topk": _osql.regex_topk_sql(_REGEX_SET),
-        "term_vectors": _term_vectors_sql(),
-        "substring_search": _substring_sql(),
-        "query_significant_terms": _query_significant_terms_sql(),
-        "fuzzy_topk": _osql.fuzzy_topk_sql(FUZZY_SET),
-        "bm25_explain": _bm25_explain_sql(),
-        "bm25f_topk": _osql.bm25f_topk_sql(FIELDED_SET),
-        "dismax_topk": _osql.dismax_topk_sql(FIELDED_SET),
-        "prf_bm25_topk": _prf_bm25_sql(),
-        "boosted_bm25_topk": _boosted_bm25_sql(),
-        "synonym_bm25_topk": _synonym_bm25_sql(),
-        "collapsed_bm25_topk": _collapsed_bm25_sql(),
-        "auto_bm25_topk": _bm25_sql(),
-        "route_explain": _route_explain_sql(),
-        "facet_histogram_chars": _facet_histogram_sql(),
-        "pack_sequences": _osql.pack_sequences_sql(_PACK_CTX),
-        "boolean_topk": _boolean_sql(),
-        "query_string_topk": _query_string_sql(),
-        "qstring_percolate": _qstring_percolate_sql(),
-        "doc_keywords": _doc_keywords_sql(n=5),
-        "suggest_terms": _suggest_terms_sql(PREFIX_SET),
-        "hash_split": _osql.hash_split_sql(_SPLIT_WEIGHTS),
-        "shuffle_order": _shuffle_order_sql(),
-        "stratified_sample": _osql.stratified_sample_sql(
-            _SAMPLE_FRACS, "lang", default=_SAMPLE_DEFAULT),
-        "temperature_sample": _osql.temperature_sample_sql(
-            "lang", temperature=2.0),
-        "significant_terms": _osql.significant_terms_sql(n=10, min_fg=3),
-        "ngram_set_dups": _osql.ngram_set_dups_sql(),
-        "simhash": _osql.simhash_sql(),
-        "lang_id": _osql.lang_id_sql(),
-        "token_stats": _osql.token_stats_sql(),
-        "quality_score": _osql.quality_score_sql(),
-        "fingerprint": _osql.fingerprint_sql(),
-        "ann_bruteforce": _osql.ann_bruteforce_sql(),
-        "ann_ivf": _osql.ann_ivf_sql(),
-        "ann_sq8": _osql.ann_sq8_sql(),
-        "ann_pq": _osql.pq_topk_sql(k=10, m=8, ksub=16, depth=50),
-        "ann_ivf_pq": _osql.ivf_pq_topk_sql(
-            k=10, n_clusters=16, nprobe=4, m=8, ksub=16, depth=50),
-        "recall_sq8_vs_bruteforce": _recall_sq8_sql(),
-        "semantic_dedup": _osql.semantic_dedup_sql(threshold=0.4, n_clusters=8),
-        "lm_perplexity": _osql.lm_perplexity_sql(),
-        "curation_verdict": _osql.curate_sql(
-            langs=("en",), quality_min=0.45, near_threshold=0.5),
-        "ce_rerank_topk": _ce_rerank_sql(k=10, depth=50),
-        "repetition_stats": _osql.repetition_stats_sql(),
-        "pii_scrub": _osql.scrub_pii_sql(_PII_CONTENT_SQL),
-        "curation_verdict_rep": _osql.curate_sql(
-            langs=("en",), quality_min=0.45, near_threshold=0.5,
-            max_top_bigram_frac=0.04),
-        "hybrid_rrf_topk": _hybrid_rrf_sql(),
-        "hybrid_minmax_topk": _hybrid_minmax_sql(),
-        "mmr_rerank": _mmr_sql(),
-        "hybrid_rrf_ivf_topk": _hybrid_rrf_ivf_sql(),
-        "streaming_bm25_topk": _bm25_sql(),
-        "percolate_matches": _percolate_sql(),
-        "ranking_metrics": _ranking_metrics_sql(),
-        "embedding_near_dups": _osql.embedding_near_dups_sql(
-            threshold=0.4, n_bands=16, band_width=4),
-        "embedding_near_dups_exact": _osql.embedding_near_dups_sql(
-            threshold=0.4, n_bands=None),
-        "media_features": _osql.media_features_sql(),
-        "frame_sample_plan": _osql.frame_sample_plan_sql(),
-        "rolling_fingerprint": _osql.rolling_fingerprint_sql(),
-        "positional_postings": _osql.positional_postings_sql(),
-        "phrase_topk": _osql.phrase_topk_sql(PHRASE_SET),
-        "proximity_topk": _osql.proximity_topk_sql(
-            PHRASE_SET, max_span=_PROX_SPAN),
-        "snippet_topk": _osql.snippet_topk_sql(
-            PHRASE_SET, max_span=_PROX_SPAN),
-        "phrase_bm25_topk": _phrase_bm25_sql(),
-        "corpus_profile": f"""
-WITH {_BASE_CTES}
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM dl) AS n_docs,
-       (SELECT CAST(sum(doc_len) AS BIGINT) FROM dl) AS total_tokens,
-       (SELECT CAST(count(*) AS BIGINT) FROM vocab) AS distinct_terms,
-       (SELECT round(quantile_cont(doc_len, 0.5), 6) FROM dl) AS doc_len_p50,
-       (SELECT round(quantile_cont(doc_len, 0.9), 6) FROM dl) AS doc_len_p90,
-       (SELECT round(quantile_cont(doc_len, 0.99), 6) FROM dl) AS doc_len_p99,
-       (SELECT CAST(max(doc_len) AS BIGINT) FROM dl) AS doc_len_max,
-       (SELECT round(quantile_cont(df, 0.9), 6) FROM vocab) AS df_p90,
-       (SELECT CAST(max(df) AS BIGINT) FROM vocab) AS df_max
-""",
-        # approx variant: accuracy ≥ n ⇒ the GK sketch is exact, and Spark
-        # approx_percentile's discrete convention == DuckDB quantile_disc
-        "corpus_profile_approx": f"""
-WITH {_BASE_CTES}
-SELECT (SELECT CAST(count(*) AS BIGINT) FROM dl) AS n_docs,
-       (SELECT CAST(sum(doc_len) AS BIGINT) FROM dl) AS total_tokens,
-       (SELECT CAST(count(*) AS BIGINT) FROM vocab) AS distinct_terms,
-       (SELECT round(CAST(quantile_disc(doc_len, 0.5) AS DOUBLE), 6) FROM dl) AS doc_len_p50,
-       (SELECT round(CAST(quantile_disc(doc_len, 0.9) AS DOUBLE), 6) FROM dl) AS doc_len_p90,
-       (SELECT round(CAST(quantile_disc(doc_len, 0.99) AS DOUBLE), 6) FROM dl) AS doc_len_p99,
-       (SELECT CAST(max(doc_len) AS BIGINT) FROM dl) AS doc_len_max,
-       (SELECT round(CAST(quantile_disc(df, 0.9) AS DOUBLE), 6) FROM vocab) AS df_p90,
-       (SELECT CAST(max(df) AS BIGINT) FROM vocab) AS df_max
-""",
-        "delete_docs_bm25_topk": _bm25_sql(accept_where=f"NOT ({_DELETE_PRED})"),
-        "delete_docs_postings": f"""
-WITH {_BASE_CTES}
-SELECT DISTINCT term, doc_id FROM tf WHERE NOT ({_DELETE_PRED})
-""",
-        "pruned_bm25_topk": _bm25_sql(
-            term_where="df <= CAST(floor(0.78 * (SELECT count(*) FROM documents)) AS BIGINT)"),
-        "bm25_page2": _bm25_sql(offset=10),
-        "facet_counts_lang": _facet_counts_sql(),
-        "more_like_this": _mlt_sql(),
-        "benchmark_contamination": _contamination_sql(),
-        "suggest_corrections": _suggest_corrections_sql(),
-        "term_cooccurrence": _term_cooccurrence_sql(),
-        "lm_dirichlet_topk": _lm_dirichlet_sql(),
-        "tfidf_topk": _tfidf_sql(),
-        "search_after_topk": _search_after_sql(),
-        "facet_top_hits": _facet_top_hits_sql(),
-        "chunk_documents": _chunk_documents_sql(),
-        "symbol_bm25_topk": _symbol_bm25_sql(),
-        "federated_bm25_topk": _bm25_sql(),
-        "allknn_sample": f"""
-WITH {_BASE_CTES},
-np AS (
-  SELECT tf.doc_id, term, tf / norm AS w
-  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-),
-q AS (SELECT doc_id AS query_id, term, w AS qw FROM np WHERE doc_id < 50),
-dots AS (
-  SELECT q.query_id, np.doc_id, 1.0 - sum(q.qw * np.w) AS dist
-  FROM q JOIN np ON q.term = np.term
-  GROUP BY q.query_id, np.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, dist,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(dist, 6) ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM dots
-)
--- "+ 0.0" canonicalizes IEEE negative zero: DuckDB's round(1.0 - sum(w*w), 5)
--- lands on -0.0 for self-matches where Spark emits +0.0; values are equal but
--- the driver's value-hash compares bytes (-0.0 + 0.0 == +0.0 in IEEE 754).
-SELECT query_id, rank, doc_id, round(dist, 5) + 0.0 AS dist
-FROM ranked WHERE rank <= 3
-""",
-        "allknn_capped": f"""
-WITH {_BASE_CTES},
-np AS (
-  SELECT tf.doc_id, term, tf / norm AS w
-  FROM tf JOIN dl ON tf.doc_id = dl.doc_id
-),
-q AS (SELECT doc_id AS query_id, term, w AS qw FROM np WHERE doc_id < 50),
--- prefix filter: candidate pairs come only from terms with df <= 390
--- (knn.allknn_candidates restricts BOTH join sides to those terms)
-cand AS (
-  SELECT DISTINCT q.query_id, np.doc_id
-  FROM q JOIN np ON q.term = np.term
-  WHERE q.term IN (SELECT term FROM vocab WHERE df <= 390)
-),
--- exact re-score of every candidate pair over ALL shared terms (hot
--- ones included) — the df_cap rescoring contract (knn.allknn)
-dots AS (
-  SELECT q.query_id, np.doc_id, 1.0 - sum(q.qw * np.w) AS dist
-  FROM cand
-  JOIN q ON q.query_id = cand.query_id
-  JOIN np ON np.doc_id = cand.doc_id AND np.term = q.term
-  GROUP BY q.query_id, np.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, dist,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(dist, 6) ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM dots
-)
-SELECT query_id, rank, doc_id, round(dist, 5) + 0.0 AS dist
-FROM ranked WHERE rank <= 3
-""",
-        "incremental_postings": f"WITH {_BASE_CTES} SELECT DISTINCT term, doc_id FROM tf",
-        "index_stats": f"""
-WITH {_BASE_CTES}
-SELECT 'binary' AS weighting,
+# Key order is an AUDIT-ROTATION POLICY, not edit history: the audit
+# verifies the first 50 keys in dict order, so each round the keys with
+# the weakest (oldest / never-run) audit evidence go first.  New rows are
+# appended at the end.
+_ROWS: dict[str, tuple[Callable[[SparkSession, str], DataFrame], Callable[[], str]]] = {
+    # -- never audited before round 5 (39) --
+    "positional_postings": (_q_positional_postings, _osql.positional_postings_sql),
+    "phrase_topk": (_q_phrase_topk, partial(_osql.phrase_topk_sql, PHRASE_SET)),
+    "proximity_topk": (_q_proximity_topk, partial(
+        _osql.proximity_topk_sql, PHRASE_SET, max_span=_PROX_SPAN)),
+    "snippet_topk": (_q_snippet_topk, partial(
+        _osql.snippet_topk_sql, PHRASE_SET, max_span=_PROX_SPAN)),
+    "phrase_bm25_topk": (_q_phrase_bm25_topk, _phrase_bm25_sql),
+    "ann_sq8": (_q_ann_sq8, _osql.ann_sq8_sql),
+    "ann_pq": (_q_ann_pq, partial(_osql.pq_topk_sql, k=10, m=8, ksub=16, depth=50)),
+    "ann_ivf_pq": (_q_ann_ivf_pq, partial(
+        _osql.ivf_pq_topk_sql, k=10, n_clusters=16, nprobe=4, m=8, ksub=16, depth=50)),
+    "recall_sq8_vs_bruteforce": (_q_recall_sq8, _recall_sq8_sql),
+    "semantic_dedup": (_q_semantic_dedup, partial(
+        _osql.semantic_dedup_sql, threshold=0.4, n_clusters=8)),
+    "lm_perplexity": (_q_lm_perplexity, _osql.lm_perplexity_sql),
+    "curation_verdict": (_q_curate, partial(
+        _osql.curate_sql, langs=("en",), quality_min=0.45, near_threshold=0.5)),
+    "curation_verdict_rep": (_q_curate_rep, partial(
+        _osql.curate_sql, langs=("en",), quality_min=0.45, near_threshold=0.5,
+        max_top_bigram_frac=0.04)),
+    "repetition_stats": (_q_repetition_stats, _osql.repetition_stats_sql),
+    "pii_scrub": (_q_pii_scrub, partial(_osql.scrub_pii_sql, _PII_CONTENT_SQL)),
+    "ce_rerank_topk": (_q_ce_rerank, _ce_rerank_sql),
+    "mmr_rerank": (_q_mmr_rerank, _mmr_sql),
+    # the approximate (IVF) dense side fused by RRF — the production path
+    "hybrid_rrf_ivf_topk": (_q_hybrid(hybrid_rrf_topk, "rrf", rrf_k=60,
+                                      dense_topk=_dense_ivf), _hybrid_rrf_ivf_sql),
+    # per-query min-max normalization + weighted sum (alpha = 0.5); scores
+    # round to 6 dp before normalization (hybrid.minmax_fuse contract)
+    "hybrid_minmax_topk": (_q_hybrid(hybrid_minmax_topk, "fused", alpha=0.5),
+                           _hybrid_minmax_sql),
+    "percolate_matches": (_q_percolate, _percolate_sql),
+    "ranking_metrics": (_q_ranking_metrics, _ranking_metrics_sql),
+    "allknn_capped": (_q_allknn(df_cap=390), partial(_allknn_sql, _ALLKNN_CAPPED_DOTS)),
+    "delete_docs_bm25_topk": (_q_delete_bm25, partial(
+        _bm25_sql, accept_where=f"NOT ({_DELETE_PRED})")),
+    "delete_docs_postings": (_q_delete_postings, partial(
+        _postings_sql, f"NOT ({_DELETE_PRED})")),
+    "pruned_bm25_topk": (_q_pruned_bm25, partial(
+        _bm25_sql, term_where="df <= CAST(floor(0.78 * (SELECT count(*) FROM documents)) AS BIGINT)")),
+    # page 2 (ranks 11..20): same window, same tie-break as page 1
+    "bm25_page2": (_q_topk(bm25_topk, offset=10), partial(_bm25_sql, offset=10)),
+    "facet_counts_lang": (_q_facet_counts, _facet_counts_sql),
+    "more_like_this": (_q_more_like_this, _mlt_sql),
+    "suggest_corrections": (_q_suggest_corrections, _suggest_corrections_sql),
+    "search_after_topk": (_q_search_after, _search_after_sql),
+    "facet_top_hits": (_q_facet_top_hits, _facet_top_hits_sql),
+    "lm_dirichlet_topk": (_q_topk(lm_dirichlet_topk, "tf", mu=_LM_MU), _lm_dirichlet_sql),
+    "tfidf_topk": (_q_topk(tfidf_topk, "tf"), _tfidf_sql),
+    "symbol_bm25_topk": (_q_symbol_bm25, _symbol_bm25_sql),
+    "federated_bm25_topk": (_q_federated_bm25, _bm25_sql),
+    "corpus_profile": (_q_corpus_profile, partial(_corpus_profile_sql, "quantile_cont")),
+    "benchmark_contamination": (_q_contamination, _contamination_sql),
+    "term_cooccurrence": (_q_term_cooccurrence, _term_cooccurrence_sql),
+    "chunk_documents": (_q_chunk_documents, _chunk_documents_sql),
+    # -- red in r4 (oracle HUGEINT cast fixed this round) --
+    "pack_sequences": (_q_pack_sequences, partial(_osql.pack_sequences_sql, _PACK_CTX)),
+    # -- green in r3 but code drifted since; re-attest (10) --
+    "streaming_bm25_topk": (_q_streaming_topk, _bm25_sql),
+    "ann_ivf": (_q_ann_ivf, _osql.ann_ivf_sql),
+    "hybrid_rrf_topk": (_q_hybrid(hybrid_rrf_topk, "rrf", rrf_k=60), _hybrid_rrf_sql),
+    "allknn_sample": (_q_allknn(), partial(_allknn_sql, _ALLKNN_DOTS)),
+    "exhaustive_cosine": (_q_exhaustive_cosine, lambda: f"""
+WITH {_exhaustive_ctes()},
+{rank_cut('scored', 10, _DIST_COLS, _DIST_ORDER)}
+"""),
+    "recall_cosine_vs_exhaustive": (_q_recall_cosine, _recall_cosine_sql),
+    "incremental_postings": (_q_incremental_postings, _postings_sql),
+    "embedding_near_dups": (_q_emb_near_dups, partial(
+        _osql.embedding_near_dups_sql, threshold=0.4, n_bands=16, band_width=4)),
+    "ann_bruteforce": (_q_ann_bruteforce, _osql.ann_bruteforce_sql),
+    "sql_surface": (_q_sql_surface, partial(
+        _base_select, "SELECT term, df, cf FROM vocab WHERE df > 10 ORDER BY term")),
+    # ---- end of the round-5 audit window (50 keys) ----
+    # new this round (locally verified; next rotation candidate); at
+    # accuracy >= n the GK sketch is exact, and Spark approx_percentile's
+    # discrete convention == DuckDB quantile_disc
+    "corpus_profile_approx": (_q_corpus_profile_approx, partial(
+        _corpus_profile_sql, "quantile_disc")),
+    # remaining r3-green rows (next rotation candidates)
+    "embedding_near_dups_exact": (_q_emb_near_dups_exact, partial(
+        _osql.embedding_near_dups_sql, threshold=0.4, n_bands=None)),
+    "index_stats": (_q_index_stats, partial(_base_select, """SELECT 'binary' AS weighting,
        CAST((SELECT count(*) FROM vocab) AS BIGINT) AS vocab_size,
        CAST((SELECT count(*) FROM documents) AS BIGINT) AS n_docs,
-       CAST((SELECT count(*) FROM tf) AS BIGINT) AS total_postings
-""",
-        "search_cost": f"""
-WITH {_BASE_CTES}
-SELECT query_id,
+       CAST((SELECT count(*) FROM tf) AS BIGINT) AS total_postings""")),
+    "search_cost": (_q_search_cost, partial(_base_select, """SELECT query_id,
        CAST(count(*) AS BIGINT) AS n_lists,
        CAST(sum(df) AS BIGINT) AS n_entries
 FROM (SELECT DISTINCT query_id, term FROM qt) q
 JOIN vocab USING (term)
-GROUP BY query_id
-""",
-        "sql_surface": f"""
-WITH {_BASE_CTES}
-SELECT term, df, cf FROM vocab WHERE df > 10 ORDER BY term
-""",
-        "exhaustive_cosine": f"""
-WITH {_BASE_CTES},
-qn AS (
-  SELECT query_id, sqrt(CAST(sum(qtf * qtf) AS DOUBLE)) AS qn FROM qt GROUP BY query_id
-),
-dots AS (
-  SELECT qt.query_id, tf.doc_id, sum((qtf / qn) * (tf / norm)) AS dot
-  FROM qt JOIN qn ON qt.query_id = qn.query_id
-  JOIN tf ON qt.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  GROUP BY qt.query_id, tf.doc_id
-),
-allp AS (
-  SELECT q.query_id, d.doc_id
-  FROM (SELECT DISTINCT query_id FROM qt) q CROSS JOIN (SELECT doc_id FROM documents) d
-),
-scored AS (
-  SELECT allp.query_id, allp.doc_id, 1.0 - coalesce(dot, 0.0) AS dist
-  FROM allp LEFT JOIN dots ON allp.query_id = dots.query_id AND allp.doc_id = dots.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, dist,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(dist, 6) ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(dist, 5) AS dist
-FROM ranked WHERE rank <= 10
-""",
-        "recall_cosine_vs_exhaustive": f"""
-WITH {_BASE_CTES},
-qn AS (
-  SELECT query_id, sqrt(CAST(sum(qtf * qtf) AS DOUBLE)) AS qn FROM qt GROUP BY query_id
-),
-dots AS (
-  SELECT qt.query_id, tf.doc_id, sum((qtf / qn) * (tf / norm)) AS dot
-  FROM qt JOIN qn ON qt.query_id = qn.query_id
-  JOIN tf ON qt.term = tf.term
-  JOIN dl ON tf.doc_id = dl.doc_id
-  GROUP BY qt.query_id, tf.doc_id
-),
-allp AS (
-  SELECT q.query_id, d.doc_id
-  FROM (SELECT DISTINCT query_id FROM qt) q CROSS JOIN (SELECT doc_id FROM documents) d
-),
-ex AS (
-  SELECT allp.query_id, allp.doc_id,
-         row_number() OVER (PARTITION BY allp.query_id
-              ORDER BY round(1.0 - coalesce(dot, 0.0), 6) ASC, allp.doc_id ASC) AS rank
-  FROM allp LEFT JOIN dots ON allp.query_id = dots.query_id AND allp.doc_id = dots.doc_id
-),
-gold AS (SELECT query_id, doc_id FROM ex WHERE rank <= 10),
-ires AS (
-  SELECT query_id, doc_id,
-         row_number() OVER (PARTITION BY query_id
-              ORDER BY round(1.0 - dot, 6) ASC, doc_id ASC) AS rank
-  FROM dots
-),
-res AS (SELECT query_id, doc_id FROM ires WHERE rank <= 10),
-per AS (
-  SELECT g.query_id, CAST(count(r.doc_id) AS DOUBLE) / CAST(count(*) AS DOUBLE) AS recall
-  FROM gold g LEFT JOIN res r ON g.query_id = r.query_id AND g.doc_id = r.doc_id
-  GROUP BY g.query_id
-)
-SELECT query_id, round(recall, 6) AS recall FROM per
-""",
-        "corpus_commits": """
+GROUP BY query_id""")),
+    "media_features": (_q_media_features, _osql.media_features_sql),
+    "frame_sample_plan": (_q_frame_plan, _osql.frame_sample_plan_sql),
+    "rolling_fingerprint": (_q_rolling_fp, _osql.rolling_fingerprint_sql),
+    "ngram_set_dups": (_q_ngram_dups, _osql.ngram_set_dups_sql),
+    "simhash": (_q_simhash, _osql.simhash_sql),
+    "fingerprint": (_q_fingerprint, _osql.fingerprint_sql),
+    "lang_id": (_q_lang_id, _osql.lang_id_sql),
+    "token_stats": (_q_token_stats, _osql.token_stats_sql),
+    "quality_score": (_q_quality, _osql.quality_score_sql),
+    # rows green in the round-4 audit window
+    "bm25_topk": (_q_bm25, _bm25_sql),
+    "bm25_filtered_topk": (_q_bm25_filtered, partial(_bm25_sql, accept_where="lang = 'en'")),
+    "bm25_tthreshold2": (_q_topk(bm25_topk, t=2), partial(_bm25_sql, t=2)),
+    # docs matching >= ceil(0.67 * m) of each query's m in-vocab terms
+    "bm25_msm_topk": (_q_topk(bm25_msm_topk, msm=0.67), _bm25_msm_sql),
+    "cosine_topk": (_q_cosine, _cosine_sql),
+    "jaccard_topk": (_q_set("jaccard"), partial(_set_dist_sql, "jaccard")),
+    "dice_topk": (_q_set("dice"), partial(_set_dist_sql, "dice")),
+    "cosineset_topk": (_q_set("cosine_set"), partial(_set_dist_sql, "cosine_set")),
+    "intersection_topk": (_q_set("intersection"), partial(_set_dist_sql, "intersection")),
+    "jaccard_tthreshold2": (_q_set("jaccard", t=2), partial(_set_dist_sql, "jaccard", t=2)),
+    "vocab": (_q_vocab, partial(_base_select, "SELECT term, df, cf FROM vocab")),
+    "doc_stats": (_q_doc_stats, partial(_base_select, """SELECT d.doc_id,
+       coalesce(dl.doc_len, 0) AS doc_len,
+       coalesce(dl.nnz, 0) AS nnz,
+       sha256(d.text) AS content_sha256
+FROM documents d LEFT JOIN dl ON d.doc_id = dl.doc_id""")),
+    "postings_flat": (_q_postings_flat, _postings_sql),
+    "corpus_commits": (_q_corpus_commits, lambda: """
 SELECT doc_id,
        'org' || CAST(doc_id % 7 AS VARCHAR) || '/repo' || CAST(doc_id % 97 AS VARCHAR) AS repo,
        'src/mod' || CAST(doc_id % 53 AS VARCHAR) || '/file' || CAST(doc_id AS VARCHAR) || '.txt' AS path,
@@ -4075,5 +2771,57 @@ SELECT doc_id,
               || '/src/mod' || CAST(doc_id % 53 AS VARCHAR) || '/file' || CAST(doc_id AS VARCHAR) || '.txt'), 1, 40) AS commit,
        lang
 FROM documents
-""",
-    }
+"""),
+    # the plans below are rank-identical to bm25_topk, so they share its
+    # oracle: block-max MaxScore (operators.wand), the delta-gap+varbyte
+    # compressed index (decoded by search._matched or kernel-side), the
+    # doc-sharded batch scorer and the adaptive router (plans/router.py)
+    "wand_bm25_topk": (_q_topk(wand_topk), _bm25_sql),
+    "bm25_compressed_topk": (_q_topk(bm25_topk, compress=True), _bm25_sql),
+    "wand_bm25_compressed_topk": (_q_topk(wand_topk, compress=True), _bm25_sql),
+    "sharded_bm25_topk": (_q_topk(sharded_topk, n_shards=8), _bm25_sql),
+    "sharded_jaccard_topk": (_q_sharded_jaccard, partial(_set_dist_sql, "jaccard")),
+    "dedup_exact": (_q_dedup_exact, _osql.dedup_exact_sql),
+    "minhash_near_dups": (_q_minhash, _osql.minhash_near_dups_sql),
+    "near_dup_clusters": (_q_near_dup_clusters, _osql.near_dup_clusters_sql),
+    "prefix_topk": (_q_prefix_topk, partial(_osql.prefix_topk_sql, PREFIX_SET)),
+    "wildcard_topk": (_q_wildcard_topk, partial(_osql.wildcard_topk_sql, WILDCARD_SET)),
+    "regex_topk": (_q_regex_topk, partial(_osql.regex_topk_sql, _REGEX_SET)),
+    "term_vectors": (_q_term_vectors, _term_vectors_sql),
+    "substring_search": (_q_substring_search, _substring_sql),
+    "query_significant_terms": (_q_query_significant_terms, _query_significant_terms_sql),
+    "fuzzy_topk": (_q_fuzzy_topk, partial(_osql.fuzzy_topk_sql, FUZZY_SET)),
+    "bm25_explain": (_q_bm25_explain, _bm25_explain_sql),
+    "bm25f_topk": (_q_bm25f_topk, partial(_osql.bm25f_topk_sql, FIELDED_SET)),
+    "dismax_topk": (_q_dismax_topk, partial(_osql.dismax_topk_sql, FIELDED_SET)),
+    "prf_bm25_topk": (_q_prf_bm25, _prf_bm25_sql),
+    "boosted_bm25_topk": (_q_boosted_bm25, _boosted_bm25_sql),
+    "synonym_bm25_topk": (_q_synonym_bm25, _synonym_bm25_sql),
+    "collapsed_bm25_topk": (_q_collapsed_bm25, _collapsed_bm25_sql),
+    "auto_bm25_topk": (_q_topk(auto_topk), _bm25_sql),
+    "route_explain": (_q_route_explain, _route_explain_sql),
+    "facet_histogram_chars": (_q_facet_histogram, _facet_histogram_sql),
+    "boolean_topk": (_q_boolean_topk, _boolean_sql),
+    "query_string_topk": (_q_query_string_topk, _query_string_sql),
+    "qstring_percolate": (_q_qstring_percolate, _qstring_percolate_sql),
+    "doc_keywords": (_q_doc_keywords, partial(_doc_keywords_sql, n=5)),
+    "suggest_terms": (_q_suggest_terms, partial(_suggest_terms_sql, PREFIX_SET)),
+    "hash_split": (_q_hash_split, partial(_osql.hash_split_sql, _SPLIT_WEIGHTS)),
+    "shuffle_order": (_q_shuffle_order, _shuffle_order_sql),
+    "stratified_sample": (_q_stratified_sample, partial(
+        _osql.stratified_sample_sql, _SAMPLE_FRACS, "lang", default=_SAMPLE_DEFAULT)),
+    "temperature_sample": (_q_temperature_sample, partial(
+        _osql.temperature_sample_sql, "lang", temperature=2.0)),
+    "significant_terms": (_q_significant_terms, partial(
+        _osql.significant_terms_sql, n=10, min_fg=3)),
+    # -- appended after the 112 audited keys --
+    "bm25_topk_reloaded": (_q_bm25_reloaded, _bm25_sql),
+}
+
+
+def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
+    return {key: fn for key, (fn, _) in _ROWS.items()}
+
+
+def oracle_sql() -> dict[str, str]:
+    return {key: build() for key, (_, build) in _ROWS.items()}

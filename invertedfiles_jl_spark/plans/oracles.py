@@ -1,8 +1,23 @@
-"""DuckDB oracle SQL builders for the training-data operators.
+"""DuckDB oracle SQL: the shared fragments every ``__spark_entry__``
+oracle is built from, and the builders for the training-data operators.
 
 Each builder mirrors the corresponding Spark plan's arithmetic token for
 token (md5/ascii/floor/round behave identically in both engines — probed).
 Tokenization/shingling dialects live in functions.tokenize / operators.dedup.
+
+Fragments, one spelling each (they take SQL text and numbers, never
+mode flags):
+
+- :func:`tokens` — the engine's default tokenizer as a DuckDB list;
+- :func:`base_ctes` — ``tok/tf/dl/stats/vocab`` over a documents relation
+  plus ``qtok/qt`` (:func:`query_ctes`) over a (query_id, content) one;
+- :func:`bm25_idf` / :func:`bm25_sat` — the BM25 idf and saturation
+  expressions; :func:`bm25_qterm` / :func:`bm25_scored` — the ``qterm``
+  and ``scored`` CTE bodies built from them;
+- :func:`rank_over` — the engine's rank window (default key
+  ``round(score, 6) DESC, doc_id ASC``), :func:`rank_cut` — the
+  ``ranked`` CTE plus the final ``rank <= k`` (or offset page) select,
+  :func:`top_n` — the first n rows per group as a derived table.
 """
 
 from __future__ import annotations
@@ -18,10 +33,184 @@ from invertedfiles_jl_spark.operators.dedup import (
     simhash_bit_sums_sql,
     simhash_combine_sql,
 )
+from invertedfiles_jl_spark.sources.queries import QUERY_SET
 
 _CFG = IndexConfig()
-_T = duckdb_tokens_sql("text", _CFG)
 _SH = duckdb_shingles_sql("text", _CFG, 3)
+
+# ---------------------------------------------------------------------------
+# shared fragments
+# ---------------------------------------------------------------------------
+
+SCORE_ORDER = "round(score, 6) DESC, doc_id ASC"
+SCORE_COLS = "query_id, rank, doc_id, round(score, 5) AS score"
+
+
+def tokens(col: str = "text") -> str:
+    """The engine's default tokenization of ``col`` as a DuckDB list."""
+    return duckdb_tokens_sql(col, _CFG)
+
+
+def values_sql(rows, cols: str = "query_id, content") -> str:
+    """Fixture ``(id, text)`` pairs as a VALUES relation ``q(cols)``."""
+    body = ", ".join(f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in rows)
+    return f"(VALUES {body}) AS q({cols})"
+
+
+def query_ctes(queries_sql: str) -> str:
+    """``qtok``/``qt``: per-query term counts of a (query_id, content)
+    relation."""
+    return f"""qtok AS (
+  SELECT query_id, unnest({tokens('content')}) AS term FROM {queries_sql}
+),
+qt AS (
+  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf FROM qtok GROUP BY query_id, term
+)"""
+
+
+def base_ctes(queries_sql: str = values_sql(QUERY_SET), docs: str = "documents",
+              text: str = "text") -> str:
+    """The index as CTEs — ``tok/tf/dl/stats/vocab`` over ``docs.text`` —
+    plus the query side (:func:`query_ctes`) of ``queries_sql``, which may
+    read ``vocab``."""
+    return f"""tok AS (
+  SELECT doc_id, unnest({tokens(text)}) AS term FROM {docs}
+),
+tf AS (
+  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term
+),
+dl AS (
+  SELECT doc_id, CAST(sum(tf) AS BIGINT) AS doc_len, CAST(count(*) AS BIGINT) AS nnz,
+         sqrt(CAST(sum(tf * tf) AS DOUBLE)) AS norm
+  FROM tf GROUP BY doc_id
+),
+stats AS (
+  SELECT (SELECT CAST(count(*) AS DOUBLE) FROM {docs}) AS n_docs,
+         (SELECT avg(doc_len) FROM dl) AS avgdl
+),
+vocab AS (
+  SELECT term, CAST(count(*) AS BIGINT) AS df, CAST(sum(tf) AS BIGINT) AS cf
+  FROM tf GROUP BY term
+),
+{query_ctes(queries_sql)}"""
+
+
+def bm25_idf() -> str:
+    """BM25 idf over ``n_docs`` (stats) and ``df`` (vocab)."""
+    return "ln(1.0 + (n_docs - df + 0.5) / (df + 0.5))"
+
+
+def bm25_sat(k1: float, b: float, tf: str = "tf", dl: str = "doc_len",
+             avgdl: str = "avgdl") -> str:
+    """BM25 term-frequency saturation with length normalization."""
+    return (f"({tf} * ({k1} + 1.0) / ({tf} + {k1} * ((1.0 - {b}) "
+            f"+ {b} * {dl} / {avgdl})))")
+
+
+def bm25_qterm(qt: str = "qt", w: str = "qtf", vocab: str = "vocab") -> str:
+    """``qterm`` body: the in-vocab query terms of ``qt`` with weight ``w``
+    and idf."""
+    return (f"SELECT query_id, {qt}.term, {w}, {bm25_idf()} AS idf\n"
+            f"  FROM {qt} JOIN {vocab} ON {qt}.term = {vocab}.term CROSS JOIN stats")
+
+
+def bm25_scored(k1: float, b: float, qterm: str = "qterm", w: str = "qtf",
+                where: str = "TRUE", min_match: int = 1) -> str:
+    """``scored`` body: Σ w·idf·sat per (query, doc) over ``qterm``, with
+    the matched-term count; ``where`` filters postings before the sum."""
+    return f"""SELECT query_id, tf.doc_id,
+         sum({w} * idf * {bm25_sat(k1, b)}) AS score,
+         CAST(count(*) AS BIGINT) AS n_matched
+  FROM {qterm}
+  JOIN tf ON {qterm}.term = tf.term
+  JOIN dl ON tf.doc_id = dl.doc_id
+  CROSS JOIN stats
+  WHERE {where}
+  GROUP BY query_id, tf.doc_id HAVING count(*) >= {min_match}"""
+
+
+def rank_over(order: str = SCORE_ORDER, by: str = "query_id") -> str:
+    """The engine's rank: row_number over ``order`` per ``by`` group
+    (no partition when ``by`` is empty)."""
+    part = f"PARTITION BY {by} " if by else ""
+    return f"CAST(row_number() OVER ({part}ORDER BY {order}) AS INTEGER)"
+
+
+def rank_cut(src: str, k: int, cols: str = SCORE_COLS, order: str = SCORE_ORDER,
+             by: str = "query_id", offset: int = 0) -> str:
+    """The ``ranked`` CTE over ``src`` and the final select of ``cols``
+    for ranks (offset, offset + k]."""
+    return f"""ranked AS (
+  SELECT *, {rank_over(order, by)} AS rank FROM {src}
+)
+SELECT {cols}
+FROM ranked WHERE rank > {offset} AND rank <= {offset + k}"""
+
+
+def top_n(src: str, n: int, cols: str, order: str = SCORE_ORDER,
+          by: str = "query_id") -> str:
+    """The first ``n`` rows of ``src`` per ``by`` under ``order`` (``rank``
+    is selectable in ``cols``) — a derived-table body."""
+    return (f"SELECT {cols} FROM (\n"
+            f"    SELECT *, {rank_over(order, by)} AS rank FROM {src}\n"
+            f"  ) WHERE rank <= {n}")
+
+
+def phrase_hits(text: str) -> str:
+    """Count of exact consecutive occurrences of ``text`` in ``ts``
+    (1-based starts; empty when the doc is shorter than the phrase)."""
+    ws = text.lower().split()
+    conds = " AND ".join(f"ts[i+{j}] = '{w}'" for j, w in enumerate(ws))
+    return f"len(list_filter(range(1, len(ts) - {len(ws)} + 2), i -> {conds}))"
+
+
+def phrase_chains(phrases: list[tuple[int, str]], prefix: str = "s_") -> tuple[str, str]:
+    """(position-list CTEs named ``prefix…``, chain union) of ordered m-way
+    position joins over ``toks.ts``: one (query_id, doc_id, span, start)
+    row per chain (fixture scale; the Spark kernel's windowed DP avoids
+    exactly this blowup).  Positions are 1-based; ``start`` is shifted to
+    the kernel's 0-based offsets."""
+    ctes, branches = [], []
+    for qid, text in phrases:
+        ws = text.lower().split()
+        m = len(ws)
+        for j, wd in enumerate(ws):
+            ctes.append(
+                f"{prefix}{qid}_{j} AS (SELECT doc_id, unnest(list_filter("
+                f"range(1, len(ts) + 1), i -> ts[i] = '{wd}')) AS p FROM toks)"
+            )
+        joins = "".join(
+            f"\n  JOIN {prefix}{qid}_{j} e{j} ON e{j}.doc_id = e0.doc_id "
+            f"AND e{j}.p > e{j - 1}.p" for j in range(1, m))
+        branches.append(
+            f"  SELECT CAST({qid} AS BIGINT) AS query_id, e0.doc_id,\n"
+            f"         CAST(e{m - 1}.p - e0.p AS BIGINT) AS span,"
+            f" CAST(e0.p - 1 AS BIGINT) AS start\n"
+            f"  FROM {prefix}{qid}_0 e0{joins}"
+        )
+    return ",\n".join(ctes), "\n  UNION ALL\n".join(branches)
+
+
+def _chain_ctes(phrases: list[tuple[int, str]], max_span: int | None) -> str:
+    """toks, the chains and ``agg`` — min span per (query, doc), cut to
+    ``max_span`` (equivalent to filtering chains first: the min is
+    unchanged whenever any chain survives)."""
+    cte_sql, union = phrase_chains(phrases)
+    span_pred = "TRUE" if max_span is None else f"min(span) <= {max_span}"
+    return f"""toks AS (
+  SELECT doc_id, {tokens()} AS ts FROM documents
+),
+{cte_sql},
+chains AS (
+{union}
+),
+agg AS (
+  SELECT query_id, doc_id, min(span) AS min_span
+  FROM chains GROUP BY query_id, doc_id HAVING {span_pred}
+)"""
+
+
+_SPAN_ORDER = "min_span ASC, doc_id ASC"
 
 
 def dedup_exact_sql() -> str:
@@ -81,50 +270,9 @@ def snippet_topk_sql(phrases: list[tuple[int, str]], k: int = 10,
                      max_span: int | None = None) -> str:
     """Snippet oracle mirroring ``snippet_topk``: enumerate chains (m-way
     join, fixture scale), take min span per doc, then the EARLIEST start
-    among spans equal to the min; snippet = the 0-based token slice.
-    Oracle chain positions are 1-based (``range(1, len+1)``) — ``start``
-    is shifted to the Spark kernel's 0-based offset space."""
-    ctes, branches = [], []
-    for qid, text in phrases:
-        ws = text.lower().split()
-        m = len(ws)
-        for j, wd in enumerate(ws):
-            ctes.append(
-                f"s_{qid}_{j} AS (SELECT doc_id, unnest(list_filter("
-                f"range(1, len(ts) + 1), i -> ts[i] = '{wd}')) AS p FROM toks)"
-            )
-        if m == 1:
-            branches.append(
-                f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id,\n"
-                f"         CAST(0 AS BIGINT) AS span,"
-                f" CAST(p - 1 AS BIGINT) AS start\n"
-                f"  FROM s_{qid}_0"
-            )
-            continue
-        joins = "".join(
-            f"\n  JOIN s_{qid}_{j} e{j} ON e{j}.doc_id = e0.doc_id "
-            f"AND e{j}.p > e{j - 1}.p" for j in range(1, m))
-        branches.append(
-            f"  SELECT CAST({qid} AS BIGINT) AS query_id, e0.doc_id,\n"
-            f"         CAST(e{m - 1}.p - e0.p AS BIGINT) AS span,"
-            f" CAST(e0.p - 1 AS BIGINT) AS start\n"
-            f"  FROM s_{qid}_0 e0{joins}"
-        )
-    cte_sql = ",\n".join(ctes)
-    union = "\n  UNION ALL\n".join(branches)
-    span_pred = "TRUE" if max_span is None else f"min_span <= {max_span}"
+    among spans equal to the min; snippet = the 0-based token slice."""
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_T} AS ts FROM documents
-),
-{cte_sql},
-chains AS (
-{union}
-),
-agg AS (
-  SELECT query_id, doc_id, min(span) AS min_span
-  FROM chains GROUP BY query_id, doc_id
-),
+WITH {_chain_ctes(phrases, max_span)},
 pick AS (
   SELECT c.query_id, c.doc_id, a.min_span, min(c.start) AS start
   FROM chains c
@@ -133,10 +281,7 @@ pick AS (
   GROUP BY c.query_id, c.doc_id, a.min_span
 ),
 ranked AS (
-  SELECT query_id, doc_id, min_span, start,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY min_span ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM pick WHERE {span_pred}
+  SELECT *, {rank_over(_SPAN_ORDER)} AS rank FROM pick
 )
 SELECT r.query_id, r.rank, r.doc_id, r.min_span, r.start,
        array_to_string(list_slice(t.ts, CAST(r.start + 1 AS INTEGER),
@@ -146,30 +291,29 @@ WHERE r.rank <= {k}
 """
 
 
-def prefix_topk_sql(prefixes: list[tuple[int, str]], k: int = 10) -> str:
-    """Prefix top-k oracle: distinct (doc, term) pairs from the same token
-    arrays, count distinct matching terms per (prefix query, doc)."""
-    rows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{p}')" for qid, p in prefixes)
+def _term_match_topk(rows: list[tuple[int, str]], col: str, match: str,
+                     k: int) -> str:
+    """Distinct (doc, term) pairs matched against one fixture string per
+    query by ``match``; rank by distinct matching terms per doc."""
     return f"""
 WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_T}) AS term FROM documents
+  SELECT DISTINCT doc_id, unnest({tokens()}) AS term FROM documents
 ),
-q(query_id, prefix) AS (VALUES {rows}),
 scored AS (
   SELECT q.query_id, dt.doc_id,
          CAST(count(DISTINCT dt.term) AS BIGINT) AS n_terms
-  FROM q JOIN dt ON starts_with(dt.term, q.prefix)
+  FROM {values_sql(rows, f'query_id, {col}')} JOIN dt ON {match}
   GROUP BY q.query_id, dt.doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, n_terms,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY n_terms DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, n_terms FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k, 'query_id, rank, doc_id, n_terms', 'n_terms DESC, doc_id ASC')}
 """
+
+
+def prefix_topk_sql(prefixes: list[tuple[int, str]], k: int = 10) -> str:
+    """Prefix top-k oracle: distinct (doc, term) pairs from the same token
+    arrays, count distinct matching terms per (prefix query, doc)."""
+    return _term_match_topk(prefixes, "prefix",
+                            "starts_with(dt.term, q.prefix)", k)
 
 
 def pack_sequences_sql(ctx: int) -> str:
@@ -178,7 +322,7 @@ def pack_sequences_sql(ctx: int) -> str:
     one window + generate_series explode."""
     return f"""
 WITH tl AS (
-  SELECT doc_id, CAST(len({_T}) AS BIGINT) AS n FROM documents
+  SELECT doc_id, CAST(len({tokens()}) AS BIGINT) AS n FROM documents
 ),
 c AS (
   SELECT doc_id, n,
@@ -202,28 +346,31 @@ FROM spans
 """
 
 
+_PATH_TOKENS = ("list_filter(string_split_regex(lower(path), '[^a-z0-9]+'), "
+                "t -> t != '')")
+
+
+def _field_tokens(field: str) -> str:
+    return _PATH_TOKENS if field == "path" else tokens(field)
+
+
 def bm25f_topk_sql(queries: list[tuple[int, str]], k: int = 10,
                    fields: list[tuple[str, float, float]] | None = None,
                    k1: float = 1.2) -> str:
     """BM25F oracle over the derived north-rule corpus
     (sources.corpus.CORPUS_FROM_DOCUMENTS_DUCKDB): per-field tf, per-field
     length normalization, field-weighted combination BEFORE saturation —
-    token-for-token the arithmetic of ``operators.fielded.bm25f_topk``."""
+    token-for-token the arithmetic of ``operators.fielded.bm25f_topk``
+    (the saturation has no length term: it is already in ``wtf``)."""
     from invertedfiles_jl_spark.operators.fielded import DEFAULT_FIELDS
     from invertedfiles_jl_spark.sources.corpus import CORPUS_FROM_DOCUMENTS_DUCKDB
 
     fields = DEFAULT_FIELDS if fields is None else fields
     params = ", ".join(f"('{f}', CAST({w} AS DOUBLE), CAST({b} AS DOUBLE))"
                        for f, w, b in fields)
-    ptok = ("list_filter(string_split_regex(lower(path), '[^a-z0-9]+'), "
-            "t -> t != '')")
-    ctok = ("list_filter(string_split_regex(lower(content), '\\s+'), "
-            "t -> t != '')")
-    toks = {"path": ptok, "content": ctok}
     tok_union = " UNION ALL ".join(
-        f"SELECT doc_id, '{f}' AS field, unnest({toks[f]}) AS term FROM corpus"
+        f"SELECT doc_id, '{f}' AS field, unnest({_field_tokens(f)}) AS term FROM corpus"
         for f, _, _ in fields)
-    qrows = ", ".join(f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in queries)
     return f"""
 WITH corpus AS ({CORPUS_FROM_DOCUMENTS_DUCKDB}),
 tok AS ({tok_union}),
@@ -234,32 +381,18 @@ tf AS (
 flen AS (
   SELECT doc_id, field, sum(tf) AS flen FROM tf GROUP BY doc_id, field
 ),
-nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM corpus),
+stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM corpus),
 avglen AS (
-  SELECT field, sum(flen) / (SELECT n FROM nd) AS avglen
+  SELECT field, sum(flen) / (SELECT n_docs FROM stats) AS avglen
   FROM flen GROUP BY field
 ),
 params(field, w, b) AS (VALUES {params}),
-dfr AS (
+vocab AS (
   SELECT term, CAST(count(DISTINCT doc_id) AS DOUBLE) AS df
   FROM tf GROUP BY term
 ),
-q(query_id, content) AS (VALUES {qrows}),
-qtok AS (
-  SELECT query_id,
-         unnest(list_filter(string_split_regex(lower(content), '\\s+'),
-                t -> t != '')) AS term
-  FROM q
-),
-qt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM qtok GROUP BY query_id, term
-),
-qterm AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + ((SELECT n FROM nd) - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN dfr ON qt.term = dfr.term
-),
+{query_ctes(values_sql(queries))},
+qterm AS ({bm25_qterm()}),
 norm AS (
   SELECT query_id, tf.doc_id, tf.term, qtf, idf,
          p.w * tf.tf / (1.0 - p.b + p.b * flen.flen / avglen.avglen) AS wtf_f
@@ -278,14 +411,7 @@ scored AS (
          sum(qtf * idf * wtf * {k1 + 1.0} / ({k1} + wtf)) AS score
   FROM pt GROUP BY query_id, doc_id
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k)}
 """
 
 
@@ -294,27 +420,8 @@ def wildcard_topk_sql(patterns: list[tuple[int, str]], k: int = 10) -> str:
     prefix oracle, matched on SQL LIKE with ``*`` → ``%`` (fixture patterns
     contain no literal ``%``/``_``, so the engine's escape pass is a
     no-op on them)."""
-    rows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{p}')" for qid, p in patterns)
-    return f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_T}) AS term FROM documents
-),
-q(query_id, pattern) AS (VALUES {rows}),
-scored AS (
-  SELECT q.query_id, dt.doc_id,
-         CAST(count(DISTINCT dt.term) AS BIGINT) AS n_terms
-  FROM q JOIN dt ON dt.term LIKE replace(q.pattern, '*', '%')
-  GROUP BY q.query_id, dt.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, n_terms,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY n_terms DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, n_terms FROM ranked WHERE rank <= {k}
-"""
+    return _term_match_topk(patterns, "pattern",
+                            "dt.term LIKE replace(q.pattern, '*', '%')", k)
 
 
 def dismax_topk_sql(queries: list[tuple[int, str]], k: int = 10,
@@ -329,52 +436,32 @@ def dismax_topk_sql(queries: list[tuple[int, str]], k: int = 10,
     from invertedfiles_jl_spark.sources.corpus import CORPUS_FROM_DOCUMENTS_DUCKDB
 
     fields = DEFAULT_FIELDS if fields is None else fields
-    ptok = ("list_filter(string_split_regex(lower(path), '[^a-z0-9]+'), "
-            "t -> t != '')")
-    ctok = ("list_filter(string_split_regex(lower(content), '\\s+'), "
-            "t -> t != '')")
-    toks = {"path": ptok, "content": ctok}
-    qrows = ", ".join(f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in queries)
     parts = [f"""
 corpus AS ({CORPUS_FROM_DOCUMENTS_DUCKDB}),
-nd AS (SELECT CAST(count(*) AS DOUBLE) AS n FROM corpus),
-q(query_id, content) AS (VALUES {qrows}),
-qtok AS (
-  SELECT query_id,
-         unnest(list_filter(string_split_regex(lower(content), '\\s+'),
-                t -> t != '')) AS term
-  FROM q
-),
-qt AS (
-  SELECT query_id, term, CAST(count(*) AS BIGINT) AS qtf
-  FROM qtok GROUP BY query_id, term
-)"""]
+stats AS (SELECT CAST(count(*) AS DOUBLE) AS n_docs FROM corpus),
+{query_ctes(values_sql(queries))}"""]
     unions = []
     for fname, w, b in fields:
+        sat = bm25_sat(k1, repr(b), "t.tf", "fl.flen", "a.avglen")
         parts.append(f"""
 tf_{fname} AS (
   SELECT doc_id, term, CAST(count(*) AS DOUBLE) AS tf
-  FROM (SELECT doc_id, unnest({toks[fname]}) AS term FROM corpus)
+  FROM (SELECT doc_id, unnest({_field_tokens(fname)}) AS term FROM corpus)
   GROUP BY doc_id, term
 ),
 flen_{fname} AS (
   SELECT doc_id, sum(tf) AS flen FROM tf_{fname} GROUP BY doc_id
 ),
 avg_{fname} AS (
-  SELECT sum(flen) / (SELECT n FROM nd) AS avglen FROM flen_{fname}
+  SELECT sum(flen) / (SELECT n_docs FROM stats) AS avglen FROM flen_{fname}
 ),
 df_{fname} AS (
   SELECT term, CAST(count(*) AS DOUBLE) AS df FROM tf_{fname} GROUP BY term
 ),
-qterm_{fname} AS (
-  SELECT query_id, qt.term, qtf,
-         ln(1.0 + ((SELECT n FROM nd) - df + 0.5) / (df + 0.5)) AS idf
-  FROM qt JOIN df_{fname} ON qt.term = df_{fname}.term
-),
+qterm_{fname} AS ({bm25_qterm(vocab=f'df_{fname}')}),
 s_{fname} AS (
   SELECT query_id, t.doc_id,
-         round({w!r} * sum(qtf * idf * (t.tf * {k1 + 1.0}
-             / (t.tf + {k1} * ((1.0 - {b!r}) + {b!r} * fl.flen / a.avglen)))), 9) AS s
+         round({w!r} * sum(qtf * idf * {sat}), 9) AS s
   FROM qterm_{fname}
   JOIN tf_{fname} t ON qterm_{fname}.term = t.term
   JOIN flen_{fname} fl ON t.doc_id = fl.doc_id
@@ -393,14 +480,7 @@ comb AS (
 scored AS (
   SELECT query_id, doc_id, mx + {tie!r} * (tot - mx) AS score FROM comb
 ),
-ranked AS (
-  SELECT query_id, doc_id, score,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(score, 6) DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, round(score, 5) AS score
-FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k)}
 """
 
 
@@ -408,27 +488,8 @@ def regex_topk_sql(patterns: list[tuple[int, str]], k: int = 10) -> str:
     """Regex top-k oracle: the wildcard oracle's distinct (doc, term)
     relation matched on ``regexp_full_match`` — whole-term anchoring, the
     same semantics the engine gets from its explicit ``^(?:…)$`` wrap."""
-    rows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{p}')" for qid, p in patterns)
-    return f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_T}) AS term FROM documents
-),
-q(query_id, pattern) AS (VALUES {rows}),
-scored AS (
-  SELECT q.query_id, dt.doc_id,
-         CAST(count(DISTINCT dt.term) AS BIGINT) AS n_terms
-  FROM q JOIN dt ON regexp_full_match(dt.term, q.pattern)
-  GROUP BY q.query_id, dt.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, n_terms,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY n_terms DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, n_terms FROM ranked WHERE rank <= {k}
-"""
+    return _term_match_topk(patterns, "pattern",
+                            "regexp_full_match(dt.term, q.pattern)", k)
 
 
 def fuzzy_topk_sql(fuzzy: list[tuple[int, str]], k: int = 10,
@@ -436,27 +497,8 @@ def fuzzy_topk_sql(fuzzy: list[tuple[int, str]], k: int = 10,
     """Fuzzy top-k oracle: DuckDB's classic ``levenshtein`` mirrors
     Spark's; the length prefilter is only a speedup and does not change
     the match set."""
-    rows = ", ".join(
-        f"(CAST({qid} AS BIGINT), '{t}')" for qid, t in fuzzy)
-    return f"""
-WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_T}) AS term FROM documents
-),
-q(query_id, qterm) AS (VALUES {rows}),
-scored AS (
-  SELECT q.query_id, dt.doc_id,
-         CAST(count(DISTINCT dt.term) AS BIGINT) AS n_terms
-  FROM q JOIN dt ON levenshtein(dt.term, q.qterm) <= {max_dist}
-  GROUP BY q.query_id, dt.doc_id
-),
-ranked AS (
-  SELECT query_id, doc_id, n_terms,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY n_terms DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, doc_id, n_terms FROM ranked WHERE rank <= {k}
-"""
+    return _term_match_topk(fuzzy, "qterm",
+                            f"levenshtein(dt.term, q.qterm) <= {max_dist}", k)
 
 
 def hash_split_sql(weights: dict[str, float], salt: str = "split") -> str:
@@ -508,7 +550,7 @@ def significant_terms_sql(n: int = 10, min_fg: int = 3,
     ``lang``: distinct document presence, JLH = (fg% − bg%)·(fg%/bg%)."""
     return f"""
 WITH dt AS (
-  SELECT DISTINCT doc_id, unnest({_T}) AS term FROM documents
+  SELECT DISTINCT doc_id, unnest({tokens()}) AS term FROM documents
 ),
 dts AS (
   SELECT dt.doc_id, dt.term, d.lang FROM dt JOIN documents d USING (doc_id)
@@ -517,7 +559,7 @@ ss AS (
   SELECT lang, CAST(count(DISTINCT doc_id) AS BIGINT) AS n_stratum
   FROM documents GROUP BY lang
 ),
-nd AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n FROM documents),
+stats AS (SELECT CAST(count(DISTINCT doc_id) AS DOUBLE) AS n_docs FROM documents),
 bg AS (
   SELECT term, CAST(count(DISTINCT doc_id) AS BIGINT) AS bg
   FROM dts GROUP BY term
@@ -529,7 +571,7 @@ fg AS (
 scored AS (
   SELECT fg.lang, fg.term, fg.fg, bg.bg,
          fg.fg / CAST(n_stratum AS DOUBLE) AS fg_pct,
-         bg.bg / (SELECT n FROM nd) AS bg_pct
+         bg.bg / (SELECT n_docs FROM stats) AS bg_pct
   FROM fg JOIN bg USING (term) JOIN ss USING (lang)
   WHERE fg.fg >= {min_fg}
 ),
@@ -538,14 +580,8 @@ j AS (
          (fg_pct - bg_pct) * (fg_pct / bg_pct) AS jlh
   FROM scored WHERE fg_pct > bg_pct
 ),
-ranked AS (
-  SELECT *, CAST(row_number() OVER (PARTITION BY lang
-       ORDER BY round(jlh, {jlh_round}) DESC, term ASC) AS INTEGER) AS rank
-  FROM j
-)
-SELECT lang AS stratum, rank, term, fg, bg,
-       round(jlh, {jlh_round}) AS jlh
-FROM ranked WHERE rank <= {n}
+{rank_cut('j', n, f'lang AS stratum, rank, term, fg, bg, round(jlh, {jlh_round}) AS jlh',
+          f'round(jlh, {jlh_round}) DESC, term ASC', by='lang')}
 """
 
 
@@ -628,12 +664,7 @@ SELECT doc_id, canonical_id, group_size FROM fp JOIN g USING (fp)
 def simhash_sql() -> str:
     sums = ",\n         ".join(f"{e} AS {a}" for e, a in simhash_bit_sums_sql(SIMHASH_BITS))
     return f"""
-WITH tok AS (
-  SELECT doc_id, unnest({_T}) AS term FROM documents
-),
-tf AS (
-  SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf FROM tok GROUP BY doc_id, term
-),
+WITH {base_ctes()},
 hashed AS (SELECT doc_id, md5(term) AS h, tf FROM tf),
 sums AS (
   SELECT doc_id, {sums}
@@ -647,11 +678,11 @@ def _lang_exprs() -> tuple[str, str]:
     """(hit_cols, pred) fragments of the marker-argmax language gate —
     shared by ``lang_id_sql`` and ``curate_sql``."""
     langs = sorted(LANG_MARKERS)
+    # python list repr uses single quotes — valid DuckDB list literal
     hit_cols = ",\n         ".join(
-        f"len(list_intersect({_T}, {LANG_MARKERS[lang]!r})) AS hits_{lang}".replace("'", "'")
+        f"len(list_intersect({tokens()}, {LANG_MARKERS[lang]!r})) AS hits_{lang}"
         for lang in langs
     )
-    # python list repr uses single quotes — valid DuckDB list literal
     best = "greatest(" + ", ".join(f"hits_{lang}" for lang in langs) + ")"
     pred = "CASE WHEN " + f"{best} <= 0 THEN 'und' "
     for lang in langs:
@@ -672,11 +703,12 @@ SELECT doc_id, {pred} AS pred_lang FROM scored
 
 
 def token_stats_sql() -> str:
+    t = tokens()
     return f"""
 SELECT doc_id,
-       CAST(len({_T}) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct({_T})) AS BIGINT) AS n_distinct,
-       round(list_sum(list_transform({_T}, x -> length(x))) / greatest(len({_T}), 1), 6) AS mean_token_len
+       CAST(len({t}) AS BIGINT) AS n_tokens,
+       CAST(len(list_distinct({t})) AS BIGINT) AS n_distinct,
+       round(list_sum(list_transform({t}, x -> length(x))) / greatest(len({t}), 1), 6) AS mean_token_len
 FROM documents
 """
 
@@ -684,10 +716,11 @@ FROM documents
 def _quality_exprs() -> tuple[str, str, str]:
     """(stop_ratio, distinct_ratio, quality) expression fragments — shared
     by ``quality_score_sql`` and ``curate_sql``."""
+    t = tokens()
     stop = str(STOPWORDS)
-    n = f"len({_T})"
-    stops = f"len(list_filter({_T}, x -> list_contains({stop}, x)))"
-    distinct = f"len(list_distinct({_T}))"
+    n = f"len({t})"
+    stops = f"len(list_filter({t}, x -> list_contains({stop}, x)))"
+    distinct = f"len(list_distinct({t}))"
     sr = f"({stops} / greatest({n}, 1))"
     dr = f"({distinct} / greatest({n}, 1))"
     q = f"(0.5 * least({n} / 100.0, 1.0) + 0.3 * {dr} + 0.2 * (1.0 - abs({sr} - 0.4)))"
@@ -706,7 +739,7 @@ FROM documents
 
 
 def fingerprint_sql() -> str:
-    return f"SELECT doc_id, md5(array_to_string({_T}, ' ')) AS fp FROM documents"
+    return f"SELECT doc_id, md5(array_to_string({tokens()}, ' ')) AS fp FROM documents"
 
 
 # ---------------------------------------------------------------------------
@@ -718,54 +751,42 @@ _DOT = ("(SELECT sum(CAST(a AS DOUBLE) * CAST(b AS DOUBLE)) "
 _NRM = ("sqrt((SELECT sum(CAST(a AS DOUBLE) * CAST(a AS DOUBLE)) "
         "FROM (SELECT unnest({x}) a)))")
 
+_COS_ORDER = "round(cos, 6) DESC, vec_id ASC"
+_COS_COLS = "query_id, rank, vec_id, round(cos, 5) AS cos"
+_CLUSTER_ORDER = "round(cos, 9) DESC, cluster ASC"
+
 
 def _cos(x: str, y: str) -> str:
     return f"({_DOT.format(x=x, y=y)} / ({_NRM.format(x=x)} * {_NRM.format(x=y)}))"
 
 
-def ann_bruteforce_sql(k: int = 10, n_queries: int = 5) -> str:
-    return f"""
-WITH q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-scored AS (
-  SELECT q.query_id, e.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
-  FROM q CROSS JOIN embeddings e
-  WHERE e.vec_id != q.query_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, round(cos, 5) AS cos FROM ranked WHERE rank <= {k}
-"""
+def vec_queries(n_queries: int, name: str = "q") -> str:
+    """CTE ``name``: the first ``n_queries`` vectors as (query_id, q_emb)."""
+    return (f"{name} AS (SELECT vec_id AS query_id, embedding AS q_emb "
+            f"FROM embeddings WHERE vec_id < {n_queries})")
 
 
-def ann_ivf_sql(k: int = 10, n_clusters: int = 16, nprobe: int = 4,
-                n_queries: int = 5, lloyd_iters: int = 1) -> str:
-    """Mirrors ``operators.ann.ivf_topk`` including the Lloyd refinement:
-    seed centroids = first n vectors, then ``lloyd_iters`` steps of
-    assign → per-cluster per-dimension mean (supports 0 or 1)."""
-    assert lloyd_iters in (0, 1), "oracle supports lloyd_iters 0 or 1"
-    seed = f"""
-seed AS (
-  SELECT vec_id AS cluster, embedding AS c_emb FROM embeddings WHERE vec_id < {n_clusters}
-)"""
-    if lloyd_iters == 0:
-        cents = seed.replace("seed AS", "cents AS")
-    else:
-        cents = f"""{seed},
-a0_scored AS (
+def _assign(name: str, cents: str) -> str:
+    """CTE ``name``: each vector's nearest centroid of ``cents``
+    (round(cos, 9) desc, cluster asc)."""
+    return f"""{name}_scored AS (
   SELECT e.vec_id, c.cluster, {_cos('c.c_emb', 'e.embedding')} AS cos
-  FROM embeddings e CROSS JOIN seed c
+  FROM embeddings e CROSS JOIN {cents} c
 ),
-a0 AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM a0_scored
-  ) WHERE r = 1
-),
+{name} AS ({top_n(f'{name}_scored', 1, 'vec_id, cluster', _CLUSTER_ORDER, by='vec_id')})"""
+
+
+def ivf_ctes(n_clusters: int, lloyd_iters: int = 1) -> str:
+    """``cents``/``assign`` of ``operators.ann.ivf_topk``: seed centroids =
+    the first n vectors, then ``lloyd_iters`` steps (0 or 1) of assign →
+    per-cluster per-dimension mean, then the final assignment."""
+    assert lloyd_iters in (0, 1), "oracle supports lloyd_iters 0 or 1"
+    seed = (f"SELECT vec_id AS cluster, embedding AS c_emb FROM embeddings "
+            f"WHERE vec_id < {n_clusters}")
+    if lloyd_iters == 0:
+        return f"cents AS ({seed}),\n{_assign('assign', 'cents')}"
+    return f"""seed AS ({seed}),
+{_assign('a0', 'seed')},
 cents AS (
   SELECT cluster, list(m ORDER BY pos) AS c_emb FROM (
     SELECT a.cluster, pos, avg(CAST(e.embedding[pos] AS DOUBLE)) AS m
@@ -773,32 +794,53 @@ cents AS (
          LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS pos)
     GROUP BY a.cluster, pos
   ) GROUP BY cluster
-)"""
-    return f"""
-WITH {cents},
-assign_scored AS (
-  SELECT e.vec_id, c.cluster, {_cos('c.c_emb', 'e.embedding')} AS cos
-  FROM embeddings e CROSS JOIN cents c
 ),
-assign AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM assign_scored
-  ) WHERE r = 1
-),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
+{_assign('assign', 'cents')}"""
+
+
+def ivf_probe_ctes(n_clusters: int, nprobe: int, n_queries: int,
+                   lloyd_iters: int = 1) -> str:
+    """:func:`ivf_ctes`, the query vectors ``q`` and ``probed`` — each
+    query's top-``nprobe`` centroids."""
+    return f"""{ivf_ctes(n_clusters, lloyd_iters)},
+{vec_queries(n_queries)},
 qprobe AS (
   SELECT q.query_id, c.cluster, {_cos('q.q_emb', 'c.c_emb')} AS cos
   FROM q CROSS JOIN cents c
 ),
-probed AS (
-  SELECT query_id, cluster FROM (
-    SELECT query_id, cluster,
-           row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM qprobe
-  ) WHERE r <= {nprobe}
+probed AS ({top_n('qprobe', nprobe, 'query_id, cluster', _CLUSTER_ORDER)})"""
+
+
+def _rescore_cut(k: int) -> str:
+    """Exact cosine re-score of the ``cand`` (query_id, vec_id) pairs and
+    the final rank at round(cos, 6)."""
+    return f"""rescored AS (
+  SELECT c.query_id, c.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
+  FROM cand c
+  JOIN q ON q.query_id = c.query_id
+  JOIN embeddings e ON e.vec_id = c.vec_id
 ),
+{rank_cut('rescored', k, _COS_COLS, _COS_ORDER)}"""
+
+
+def ann_bruteforce_sql(k: int = 10, n_queries: int = 5) -> str:
+    return f"""
+WITH {vec_queries(n_queries)},
+scored AS (
+  SELECT q.query_id, e.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
+  FROM q CROSS JOIN embeddings e
+  WHERE e.vec_id != q.query_id
+),
+{rank_cut('scored', k, _COS_COLS, _COS_ORDER)}
+"""
+
+
+def ann_ivf_sql(k: int = 10, n_clusters: int = 16, nprobe: int = 4,
+                n_queries: int = 5, lloyd_iters: int = 1) -> str:
+    """Mirrors ``operators.ann.ivf_topk`` including the Lloyd refinement
+    (:func:`ivf_ctes`), self excluded."""
+    return f"""
+WITH {ivf_probe_ctes(n_clusters, nprobe, n_queries, lloyd_iters)},
 cands AS (
   SELECT p.query_id, a.vec_id, q.q_emb, e.embedding AS d_emb
   FROM probed p
@@ -810,13 +852,7 @@ cands AS (
 scored AS (
   SELECT query_id, vec_id, {_cos('q_emb', 'd_emb')} AS cos FROM cands
 ),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM scored
-)
-SELECT query_id, rank, vec_id, round(cos, 5) AS cos FROM ranked WHERE rank <= {k}
+{rank_cut('scored', k, _COS_COLS, _COS_ORDER)}
 """
 
 
@@ -852,20 +888,7 @@ cand AS (
    AND a.vec_id < b.vec_id
 )"""
     return f"""
-WITH cents AS (
-  SELECT vec_id AS cluster, embedding AS c_emb FROM embeddings WHERE vec_id < {n_clusters}
-),
-assign_scored AS (
-  SELECT e.vec_id, c.cluster, {_cos('c.c_emb', 'e.embedding')} AS cos
-  FROM embeddings e CROSS JOIN cents c
-),
-assign AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM assign_scored
-  ) WHERE r = 1
-),
+WITH {ivf_ctes(n_clusters, lloyd_iters=0)},
 wc AS (SELECT e.vec_id, e.embedding, a.cluster FROM embeddings e JOIN assign a USING (vec_id)),{cand},
 pairs AS (
   SELECT c.vec_a, c.vec_b, {_cos('ea.embedding', 'eb.embedding')} AS cos
@@ -999,7 +1022,7 @@ def positional_postings_sql() -> str:
     ``unnest`` + ``generate_subscripts`` zip in DuckDB)."""
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_T} AS ts FROM documents
+  SELECT doc_id, {tokens()} AS ts FROM documents
 )
 SELECT unnest(ts) AS term, doc_id,
        CAST(generate_subscripts(ts, 1) - 1 AS INTEGER) AS pos
@@ -1008,91 +1031,34 @@ FROM toks
 
 
 def phrase_topk_sql(phrases: list[tuple[int, str]], k: int = 10) -> str:
-    """Phrase top-k oracle: per fixture phrase, count starts i where every
-    token of the phrase matches consecutively (1-based list indexing;
-    ``range(1, len-m+2)`` is empty when the doc is shorter than the
-    phrase), then rank phrase_tf DESC, doc_id ASC — the Spark kernel's
-    KnnSorted contract."""
-    branches = []
-    for qid, text in phrases:
-        ws = text.lower().split()
-        m = len(ws)
-        conds = " AND ".join(f"ts[i+{j}] = '{w}'" for j, w in enumerate(ws))
-        branches.append(
-            f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id,\n"
-            f"         CAST(len(list_filter(range(1, len(ts) - {m} + 2), "
-            f"i -> {conds})) AS BIGINT) AS phrase_tf\n"
-            f"  FROM toks"
-        )
-    union = "\n  UNION ALL\n".join(branches)
+    """Phrase top-k oracle: per fixture phrase, count the starts where
+    every token matches consecutively (:func:`phrase_hits`), then rank
+    phrase_tf DESC, doc_id ASC — the Spark kernel's KnnSorted contract."""
+    union = "\n  UNION ALL\n".join(
+        f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id,\n"
+        f"         CAST({phrase_hits(text)} AS BIGINT) AS phrase_tf\n"
+        f"  FROM toks"
+        for qid, text in phrases)
     return f"""
 WITH toks AS (
-  SELECT doc_id, {_T} AS ts FROM documents
+  SELECT doc_id, {tokens()} AS ts FROM documents
 ),
 scored AS (
 {union}
 ),
-ranked AS (
-  SELECT query_id, doc_id, phrase_tf,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY phrase_tf DESC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored WHERE phrase_tf > 0
-)
-SELECT query_id, rank, doc_id, phrase_tf FROM ranked WHERE rank <= {k}
+{rank_cut('scored WHERE phrase_tf > 0', k, 'query_id, rank, doc_id, phrase_tf',
+          'phrase_tf DESC, doc_id ASC')}
 """
 
 
 def proximity_topk_sql(phrases: list[tuple[int, str]], k: int = 10,
                        max_span: int | None = None) -> str:
-    """Ordered-proximity oracle mirroring ``proximity_topk``: per query an
-    explicit m-way self-join over per-slot position lists (fine at fixture
-    scale; the Spark kernel's windowed DP avoids exactly this blowup),
-    min span per doc, rank min_span ASC / doc_id ASC.  Filtering chains to
-    ``max_span`` after the min is equivalent to filtering before it: the
-    min is unchanged whenever any chain survives."""
-    ctes, branches = [], []
-    for qid, text in phrases:
-        ws = text.lower().split()
-        m = len(ws)
-        for j, wd in enumerate(ws):
-            ctes.append(
-                f"e_{qid}_{j} AS (SELECT doc_id, unnest(list_filter("
-                f"range(1, len(ts) + 1), i -> ts[i] = '{wd}')) AS p FROM toks)"
-            )
-        if m == 1:
-            branches.append(
-                f"  SELECT CAST({qid} AS BIGINT) AS query_id, doc_id,\n"
-                f"         CAST(0 AS BIGINT) AS min_span\n"
-                f"  FROM e_{qid}_0 GROUP BY doc_id"
-            )
-            continue
-        joins = "".join(
-            f"\n  JOIN e_{qid}_{j} e{j} ON e{j}.doc_id = e0.doc_id "
-            f"AND e{j}.p > e{j - 1}.p" for j in range(1, m))
-        branches.append(
-            f"  SELECT CAST({qid} AS BIGINT) AS query_id, e0.doc_id,\n"
-            f"         CAST(min(e{m - 1}.p - e0.p) AS BIGINT) AS min_span\n"
-            f"  FROM e_{qid}_0 e0{joins}\n"
-            f"  GROUP BY e0.doc_id"
-        )
-    cte_sql = ",\n".join(ctes)
-    union = "\n  UNION ALL\n".join(branches)
-    span_pred = "TRUE" if max_span is None else f"min_span <= {max_span}"
+    """Ordered-proximity oracle mirroring ``proximity_topk``: the min
+    ordered span per doc over the explicit m-way chains
+    (:func:`_chain_ctes`), rank min_span ASC / doc_id ASC."""
     return f"""
-WITH toks AS (
-  SELECT doc_id, {_T} AS ts FROM documents
-),
-{cte_sql},
-scored AS (
-{union}
-),
-ranked AS (
-  SELECT query_id, doc_id, min_span,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY min_span ASC, doc_id ASC) AS INTEGER) AS rank
-  FROM scored WHERE {span_pred}
-)
-SELECT query_id, rank, doc_id, min_span FROM ranked WHERE rank <= {k}
+WITH {_chain_ctes(phrases, max_span)},
+{rank_cut('agg', k, 'query_id, rank, doc_id, min_span', _SPAN_ORDER)}
 """
 
 
@@ -1119,7 +1085,7 @@ dehat AS (
          sc.mn + CAST(least(255.0, greatest(0.0, round((d.v - sc.mn) / sc.s))) AS INT) * sc.s AS dv
   FROM dims d JOIN sc USING (pos)
 ),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
+{vec_queries(n_queries)},
 qdims AS (
   SELECT query_id, generate_subscripts(q_emb, 1) AS pos,
          CAST(unnest(q_emb) AS DOUBLE) AS qv
@@ -1136,27 +1102,8 @@ ascored AS (
   WHERE dh.vec_id != qd.query_id
   GROUP BY qd.query_id, dh.vec_id
 ),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY round(acos, 6) DESC, vec_id ASC) AS r
-    FROM ascored
-  ) WHERE r <= {depth}
-),
-rescored AS (
-  SELECT c.query_id, c.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
-  FROM cand c
-  JOIN q ON q.query_id = c.query_id
-  JOIN embeddings e ON e.vec_id = c.vec_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM rescored
-)
-SELECT query_id, rank, vec_id, round(cos, 5) AS cos FROM ranked WHERE rank <= {k}
+cand AS ({top_n('ascored', depth, 'query_id, vec_id', 'round(acos, 6) DESC, vec_id ASC')}),
+{_rescore_cut(k)}
 """
 
 
@@ -1182,7 +1129,7 @@ def lm_perplexity_sql(alpha: float = 0.5, ppl_round: int = 4) -> str:
     """Mirrors ``functions.text.lm_perplexity``: add-alpha unigram LM from
     the corpus's own counts, per-doc exp(mean negative log-likelihood)."""
     return f"""
-WITH occ AS (SELECT doc_id, unnest({_T}) AS term FROM documents),
+WITH occ AS (SELECT doc_id, unnest({tokens()}) AS term FROM documents),
 counts AS (SELECT term, count(*) AS c FROM occ GROUP BY term),
 tot AS (SELECT CAST(sum(c) AS DOUBLE) AS n, CAST(count(*) AS DOUBLE) AS v FROM counts),
 probs AS (
@@ -1217,7 +1164,7 @@ def curate_sql(langs: tuple[str, ...] = ("en",), quality_min: float = 0.45,
     rep_when = ""
     if max_top_bigram_frac is not None:
         rep_cte = f"""
-rt AS (SELECT doc_id, {_T} AS toks FROM documents),
+rt AS (SELECT doc_id, {tokens()} AS toks FROM documents),
 rg AS (
   SELECT doc_id, unnest(CASE WHEN len(toks) >= 2 THEN
     list_transform(range(1, len(toks)), i -> toks[i] || ' ' || toks[i+1])
@@ -1236,7 +1183,7 @@ rp AS (
 WITH{rep_cte} ex AS (
   SELECT doc_id FROM ({dedup_exact_sql()}) WHERE doc_id != canonical_id
 ),
-nd AS (
+near AS (
   SELECT doc_id FROM ({near_dup_clusters_sql(near_threshold)}) WHERE doc_id != cluster_id
 ),
 scored AS (
@@ -1250,11 +1197,11 @@ r AS (
          CASE WHEN NOT list_contains({langs_lit}, l.pred_lang) THEN 'lang'
               WHEN l.quality < {quality_min} THEN 'quality'{rep_when}
               WHEN ex.doc_id IS NOT NULL THEN 'exact_dup'
-              WHEN nd.doc_id IS NOT NULL THEN 'near_dup'
+              WHEN near.doc_id IS NOT NULL THEN 'near_dup'
               ELSE 'ok' END AS reason
   FROM lbl l
   LEFT JOIN ex ON ex.doc_id = l.doc_id
-  LEFT JOIN nd ON nd.doc_id = l.doc_id{rep_join}
+  LEFT JOIN near ON near.doc_id = l.doc_id{rep_join}
 )
 SELECT doc_id, reason = 'ok' AS keep, reason FROM r
 """
@@ -1264,15 +1211,11 @@ _L2 = ("(SELECT sum((a - b) * (a - b)) "
        "FROM (SELECT unnest({x}) a, unnest({y}) b))")
 
 
-def pq_topk_sql(k: int = 10, m: int = 8, ksub: int = 16, depth: int = 50,
-                n_queries: int = 5, dim: int = 64,
-                lloyd_iters: int = 1) -> str:
-    """Mirrors ``operators.ann.pq_topk``: per-subspace codebooks (first-k
-    seeds + one L2-Lloyd step), squared-L2 code assignment (argmin at
-    round 9, tie cluster asc), ADC lookup-table scoring (sum of per-
-    subspace dots), top-``depth`` cut at round(adot, 6), exact cosine
-    re-score, final rank at round(cos, 6)."""
-    assert lloyd_iters == 1, "oracle mirrors exactly one Lloyd step"
+def _pq_ctes(m: int, ksub: int, n_queries: int, dim: int) -> str:
+    """Product-quantizer CTEs of ``operators.ann.pq_topk``: per-subspace
+    codebooks (first-ksub seeds + one L2-Lloyd step), squared-L2 codes
+    (argmin at round 9, tie cluster asc) and the per-query ADC lookup
+    table ``lut``."""
     assert dim % m == 0
     sub_len = dim // m
     sub_rows = "\n  UNION ALL\n".join(
@@ -1281,70 +1224,56 @@ def pq_topk_sql(k: int = 10, m: int = 8, ksub: int = 16, depth: int = 50,
         "x -> CAST(x AS DOUBLE)) AS sub FROM embeddings"
         for mi in range(m)
     )
-    l2 = _L2.format(x="s.sub", y="c.c_sub")
-    return f"""
-WITH subs AS (
+
+    def nearest(cents: str) -> str:
+        pairs = (f"(SELECT s.id, s.m, c.cluster, {_L2.format(x='s.sub', y='c.c_sub')} AS l2 "
+                 f"FROM subs s JOIN {cents} c ON c.m = s.m)")
+        return top_n(pairs, 1, "id, m, cluster", "round(l2, 9) ASC, cluster ASC",
+                     by="id, m")
+
+    return f"""subs AS (
 {sub_rows}
 ),
-seeds AS (SELECT m, id AS cluster, sub AS c_sub FROM subs WHERE id < {ksub}),
-a0 AS (
-  SELECT id, m, cluster FROM (
-    SELECT s.id, s.m, c.cluster,
-           row_number() OVER (PARTITION BY s.id, s.m
-                ORDER BY round({l2}, 9) ASC, c.cluster ASC) AS r
-    FROM subs s JOIN seeds c ON c.m = s.m
-  ) WHERE r = 1
-),
-cents AS (
+pseed AS (SELECT m, id AS cluster, sub AS c_sub FROM subs WHERE id < {ksub}),
+p0 AS ({nearest('pseed')}),
+pcents AS (
   SELECT m, cluster, list(mu ORDER BY pos) AS c_sub FROM (
-    SELECT a0.m, a0.cluster, pos, avg(s.sub[pos]) AS mu
-    FROM a0 JOIN subs s ON s.id = a0.id AND s.m = a0.m,
+    SELECT p0.m, p0.cluster, pos, avg(s.sub[pos]) AS mu
+    FROM p0 JOIN subs s ON s.id = p0.id AND s.m = p0.m,
          LATERAL (SELECT unnest(generate_series(1, len(s.sub))) AS pos)
-    GROUP BY a0.m, a0.cluster, pos
+    GROUP BY p0.m, p0.cluster, pos
   ) GROUP BY m, cluster
 ),
-codes AS (
-  SELECT id AS vec_id, m, cluster AS code FROM (
-    SELECT s.id, s.m, c.cluster,
-           row_number() OVER (PARTITION BY s.id, s.m
-                ORDER BY round({l2}, 9) ASC, c.cluster ASC) AS r
-    FROM subs s JOIN cents c ON c.m = s.m
-  ) WHERE r = 1
-),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
+codes AS (SELECT id AS vec_id, m, cluster AS code FROM ({nearest('pcents')})),
 lut AS (
   SELECT s.id AS query_id, s.m, c.cluster AS code,
          {_DOT.format(x='s.sub', y='c.c_sub')} AS part
-  FROM subs s JOIN cents c ON c.m = s.m
+  FROM subs s JOIN pcents c ON c.m = s.m
   WHERE s.id < {n_queries}
-),
+)"""
+
+
+_ADC_CUT = "round(adot, 6) DESC, vec_id ASC"
+
+
+def pq_topk_sql(k: int = 10, m: int = 8, ksub: int = 16, depth: int = 50,
+                n_queries: int = 5, dim: int = 64,
+                lloyd_iters: int = 1) -> str:
+    """Mirrors ``operators.ann.pq_topk``: :func:`_pq_ctes`, ADC scoring
+    (sum of per-subspace dots), top-``depth`` cut at round(adot, 6), exact
+    cosine re-score, final rank at round(cos, 6)."""
+    assert lloyd_iters == 1, "oracle mirrors exactly one Lloyd step"
+    return f"""
+WITH {_pq_ctes(m, ksub, n_queries, dim)},
+{vec_queries(n_queries)},
 adc AS (
   SELECT l.query_id, cd.vec_id, sum(l.part) AS adot
   FROM codes cd JOIN lut l ON l.m = cd.m AND l.code = cd.code
   WHERE cd.vec_id != l.query_id
   GROUP BY l.query_id, cd.vec_id
 ),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY round(adot, 6) DESC, vec_id ASC) AS r
-    FROM adc
-  ) WHERE r <= {depth}
-),
-rescored AS (
-  SELECT c.query_id, c.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
-  FROM cand c
-  JOIN q ON q.query_id = c.query_id
-  JOIN embeddings e ON e.vec_id = c.vec_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM rescored
-)
-SELECT query_id, rank, vec_id, round(cos, 5) AS cos FROM ranked WHERE rank <= {k}
+cand AS ({top_n('adc', depth, 'query_id, vec_id', _ADC_CUT)}),
+{_rescore_cut(k)}
 """
 
 
@@ -1356,125 +1285,20 @@ def ivf_pq_topk_sql(k: int = 10, n_clusters: int = 16, nprobe: int = 4,
     probe = top-nprobe centroids per query), the fine stage exactly the
     ``pq_topk_sql`` codebook/ADC chain restricted to in-probe vectors,
     then the shared exact-rescore tail."""
-    assert dim % m == 0
-    sub_len = dim // m
-    sub_rows = "\n  UNION ALL\n".join(
-        f"  SELECT vec_id AS id, {mi} AS m, "
-        f"list_transform(embedding[{mi * sub_len + 1}:{(mi + 1) * sub_len}], "
-        "x -> CAST(x AS DOUBLE)) AS sub FROM embeddings"
-        for mi in range(m)
-    )
-    l2 = _L2.format(x="s.sub", y="c.c_sub")
     return f"""
-WITH iseed AS (
-  SELECT vec_id AS cluster, embedding AS c_emb FROM embeddings WHERE vec_id < {n_clusters}
-),
-i0_scored AS (
-  SELECT e.vec_id, c.cluster, {_cos('c.c_emb', 'e.embedding')} AS cos
-  FROM embeddings e CROSS JOIN iseed c
-),
-i0 AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM i0_scored
-  ) WHERE r = 1
-),
-icents AS (
-  SELECT cluster, list(mu ORDER BY pos) AS c_emb FROM (
-    SELECT a.cluster, pos, avg(CAST(e.embedding[pos] AS DOUBLE)) AS mu
-    FROM i0 a JOIN embeddings e USING (vec_id),
-         LATERAL (SELECT unnest(generate_series(1, len(e.embedding))) AS pos)
-    GROUP BY a.cluster, pos
-  ) GROUP BY cluster
-),
-iassign_scored AS (
-  SELECT e.vec_id, c.cluster, {_cos('c.c_emb', 'e.embedding')} AS cos
-  FROM embeddings e CROSS JOIN icents c
-),
-iassign AS (
-  SELECT vec_id, cluster FROM (
-    SELECT vec_id, cluster,
-           row_number() OVER (PARTITION BY vec_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM iassign_scored
-  ) WHERE r = 1
-),
-q AS (SELECT vec_id AS query_id, embedding AS q_emb FROM embeddings WHERE vec_id < {n_queries}),
-iprobe_scored AS (
-  SELECT q.query_id, c.cluster, {_cos('q.q_emb', 'c.c_emb')} AS cos
-  FROM q CROSS JOIN icents c
-),
-iprobed AS (
-  SELECT query_id, cluster FROM (
-    SELECT query_id, cluster,
-           row_number() OVER (PARTITION BY query_id ORDER BY round(cos, 9) DESC, cluster ASC) AS r
-    FROM iprobe_scored
-  ) WHERE r <= {nprobe}
-),
-subs AS (
-{sub_rows}
-),
-seeds AS (SELECT m, id AS cluster, sub AS c_sub FROM subs WHERE id < {ksub}),
-a0 AS (
-  SELECT id, m, cluster FROM (
-    SELECT s.id, s.m, c.cluster,
-           row_number() OVER (PARTITION BY s.id, s.m
-                ORDER BY round({l2}, 9) ASC, c.cluster ASC) AS r
-    FROM subs s JOIN seeds c ON c.m = s.m
-  ) WHERE r = 1
-),
-cents AS (
-  SELECT m, cluster, list(mu ORDER BY pos) AS c_sub FROM (
-    SELECT a0.m, a0.cluster, pos, avg(s.sub[pos]) AS mu
-    FROM a0 JOIN subs s ON s.id = a0.id AND s.m = a0.m,
-         LATERAL (SELECT unnest(generate_series(1, len(s.sub))) AS pos)
-    GROUP BY a0.m, a0.cluster, pos
-  ) GROUP BY m, cluster
-),
-codes AS (
-  SELECT id AS vec_id, m, cluster AS code FROM (
-    SELECT s.id, s.m, c.cluster,
-           row_number() OVER (PARTITION BY s.id, s.m
-                ORDER BY round({l2}, 9) ASC, c.cluster ASC) AS r
-    FROM subs s JOIN cents c ON c.m = s.m
-  ) WHERE r = 1
-),
-lut AS (
-  SELECT s.id AS query_id, s.m, c.cluster AS code,
-         {_DOT.format(x='s.sub', y='c.c_sub')} AS part
-  FROM subs s JOIN cents c ON c.m = s.m
-  WHERE s.id < {n_queries}
-),
+WITH {ivf_probe_ctes(n_clusters, nprobe, n_queries)},
+{_pq_ctes(m, ksub, n_queries, dim)},
 adc AS (
   SELECT l.query_id, cd.vec_id, sum(l.part) AS adot
   FROM codes cd
-  JOIN iassign ia ON ia.vec_id = cd.vec_id
-  JOIN iprobed p ON p.cluster = ia.cluster
+  JOIN assign ia ON ia.vec_id = cd.vec_id
+  JOIN probed p ON p.cluster = ia.cluster
   JOIN lut l ON l.query_id = p.query_id AND l.m = cd.m AND l.code = cd.code
   WHERE cd.vec_id != l.query_id
   GROUP BY l.query_id, cd.vec_id
 ),
-cand AS (
-  SELECT query_id, vec_id FROM (
-    SELECT query_id, vec_id,
-           row_number() OVER (PARTITION BY query_id
-                ORDER BY round(adot, 6) DESC, vec_id ASC) AS r
-    FROM adc
-  ) WHERE r <= {depth}
-),
-rescored AS (
-  SELECT c.query_id, c.vec_id, {_cos('q.q_emb', 'e.embedding')} AS cos
-  FROM cand c
-  JOIN q ON q.query_id = c.query_id
-  JOIN embeddings e ON e.vec_id = c.vec_id
-),
-ranked AS (
-  SELECT query_id, vec_id, cos,
-         CAST(row_number() OVER (PARTITION BY query_id
-              ORDER BY round(cos, 6) DESC, vec_id ASC) AS INTEGER) AS rank
-  FROM rescored
-)
-SELECT query_id, rank, vec_id, round(cos, 5) AS cos FROM ranked WHERE rank <= {k}
+cand AS ({top_n('adc', depth, 'query_id, vec_id', _ADC_CUT)}),
+{_rescore_cut(k)}
 """
 
 
@@ -1499,7 +1323,7 @@ p{n} AS (
   ) GROUP BY doc_id
 )"""
     return f"""
-WITH t AS (SELECT doc_id, {_T} AS toks FROM documents),{gram_cte(1, 'f1')},{gram_cte(2, 'f2')},{gram_cte(3, 'f3')}
+WITH t AS (SELECT doc_id, {tokens()} AS toks FROM documents),{gram_cte(1, 'f1')},{gram_cte(2, 'f2')},{gram_cte(3, 'f3')}
 SELECT d.doc_id,
        round(coalesce(p1.f1, 0), 6) AS top_word_frac,
        round(coalesce(p2.f2, 0), 6) AS top_bigram_frac,

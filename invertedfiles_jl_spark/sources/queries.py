@@ -3,7 +3,7 @@
 Deterministic — mixes hot terms, the rare term ``dup``, a repeated-term
 query (exercises qtf > 1), and one fully out-of-vocabulary query
 (exercises the empty-Q early return, /root/reference/src/invfilesearch.jl:44).
-Shared by tests, __spark_entry__ oracle queries, and bench.py.
+Shared by tests and the __spark_entry__ rows and oracles.
 """
 
 from __future__ import annotations
@@ -26,12 +26,6 @@ QUERY_SET: list[tuple[int, str]] = [
 
 def queries_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(QUERY_SET, "query_id long, content string")
-
-
-def queries_values_sql() -> str:
-    """The same query set as an ANSI VALUES relation for DuckDB oracles."""
-    rows = ", ".join(f"(CAST({qid} AS BIGINT), '{text}')" for qid, text in QUERY_SET)
-    return f"(VALUES {rows}) AS q(query_id, content)"
 
 
 # Fixed phrase-query set (positional index / phrase search).  Deterministic
