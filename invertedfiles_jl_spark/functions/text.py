@@ -210,6 +210,7 @@ def doc_keywords(corpus, cfg=None, n: int = 5, rank_round: int | None = None,
 
     from invertedfiles_jl_spark.config import IndexConfig
     from invertedfiles_jl_spark.operators.build import doc_term_freqs
+    from invertedfiles_jl_spark.operators.search import bm25_idf
 
     cfg = cfg or IndexConfig()
     tf = doc_term_freqs(corpus, cfg, doc_col, content_col)
@@ -218,11 +219,7 @@ def doc_keywords(corpus, cfg=None, n: int = 5, rank_round: int | None = None,
     scored = (
         tf.join(dft, "term")
         .crossJoin(F.broadcast(stats))
-        .withColumn(
-            "tfidf",
-            F.col("tf") * F.log(
-                F.lit(1.0) + (F.col("n_docs") - F.col("df") + 0.5)
-                / (F.col("df") + 0.5)))
+        .withColumn("tfidf", F.col("tf") * bm25_idf(F.col("n_docs")))
     )
     key = (F.round(F.col("tfidf"), rank_round)
            if rank_round is not None else F.col("tfidf"))

@@ -37,7 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.operators.search import topk
+from invertedfiles_jl_spark.operators.search import bm25_idf, topk
 
 #: (field column, weight w_f, length-normalization b_f) — the default code
 #: search profile: a path hit is worth 2x a body hit and path length barely
@@ -107,9 +107,7 @@ def dismax_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         dfr = tf.groupBy("term").agg(
             F.count(F.lit(1)).cast("double").alias("df"))
         qterm = qt.join(dfr, "term").select(
-            "query_id", "term", "qtf",
-            F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5)).alias("idf"))
+            "query_id", "term", "qtf", bm25_idf(n_docs).alias("idf"))
         contrib = (
             tf.join(F.broadcast(qterm), "term")
             .join(flen, "doc_id")
@@ -180,9 +178,7 @@ def bm25f_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.explode(F.expr(field_tokens_sql("content", "content"))).alias("term"),
     ).groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("qtf"))
     qterm = qt.join(df_rel, "term").select(
-        "query_id", "term", "qtf",
-        F.log(F.lit(1.0) + (F.lit(n_docs) - F.col("df") + 0.5)
-              / (F.col("df") + 0.5)).alias("idf"))
+        "query_id", "term", "qtf", bm25_idf(n_docs).alias("idf"))
 
     # tf~ then wtf: combine fields per (query, doc, term) BEFORE saturation
     norm = (

@@ -23,7 +23,12 @@ from invertedfiles_jl_spark.operators.build import (
     postings_table,
     term_id_col,
 )
-from invertedfiles_jl_spark.operators.search import set_distance_expr, topk
+from invertedfiles_jl_spark.operators.search import (
+    _matched,
+    read_postings,
+    set_distance_expr,
+    topk,
+)
 
 
 def build_vector_index(pairs: DataFrame, cfg: IndexConfig | None = None) -> InvertedIndex:
@@ -64,37 +69,20 @@ def build_vector_index(pairs: DataFrame, cfg: IndexConfig | None = None) -> Inve
 
 
 def _join_matched(index: InvertedIndex, qpairs: DataFrame, broadcast_queries: bool) -> DataFrame:
-    postings = index.postings
-    if "ids_vb" in postings.columns:
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        postings = decompress_postings(postings)
+    """(query_id, qw, doc_id, weight) rows of every posting entry the
+    (query_id, term, qw) pairs match."""
     # postings carry only the fixed-width term_id; derive it for the query
     # side with the same xxhash64(string) the build used
     qpairs = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
     if broadcast_queries:
-        joined = postings.join(F.broadcast(qpairs), "term_id")
-        return joined.select(
-            "query_id", "qw",
-            F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
-        ).select(
-            "query_id", "qw",
-            F.col("e.doc_ids").alias("doc_id"),
-            F.col("e.weights").alias("weight"),
-        )
+        return _matched(index, qpairs)
     # Shuffle-join path (query side too big to broadcast, e.g. allknn):
     # explode postings to ROW granularity BEFORE the join.  A hot term with
     # df=d still contributes d·q_d joined rows (inherent to exact allknn),
     # but as rows — not array payloads replicated per query — so AQE's
     # skew-join splitting can cut an oversized term partition into many
     # tasks; no single task ever holds a whole hot list × its queries.
-    flat = postings.select(
-        "term_id", F.explode(F.arrays_zip("doc_ids", "weights")).alias("e")
-    ).select(
-        "term_id",
-        F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
+    flat = read_postings(index.postings, "term_id")
     return flat.join(qpairs, "term_id").select("query_id", "qw", "doc_id", "weight")
 
 
@@ -165,7 +153,7 @@ def allknn(index: InvertedIndex, pairs: DataFrame, k: int = 3,
     # exact re-score of candidate pairs over ALL shared terms: restrict the
     # full (term_id, doc_id)-keyed posting rows to candidate pairs
     qp = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
-    flat = _flat_postings(index)
+    flat = read_postings(index.postings, "term_id")
     scored = (
         cand.join(qp, "query_id")
         .join(flat, ["term_id", "doc_id"])
@@ -173,22 +161,6 @@ def allknn(index: InvertedIndex, pairs: DataFrame, k: int = 3,
         .agg((F.lit(1.0) - F.sum(F.col("qw") * F.col("weight"))).alias("dist"))
     )
     return topk(scored, k, "dist", ascending=True, rank_round=rank_round)
-
-
-def _flat_postings(index: InvertedIndex) -> DataFrame:
-    """postings exploded to (term_id, doc_id, weight) rows."""
-    postings = index.postings
-    if "ids_vb" in postings.columns:
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        postings = decompress_postings(postings)
-    return postings.select(
-        "term_id", F.explode(F.arrays_zip("doc_ids", "weights")).alias("e")
-    ).select(
-        "term_id",
-        F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
 
 
 def allknn_candidates(index: InvertedIndex, qpairs: DataFrame,
@@ -199,7 +171,8 @@ def allknn_candidates(index: InvertedIndex, qpairs: DataFrame,
     (rows ≤ Σ_{df ≤ cap} df²  when the query side is the corpus itself)."""
     rare = index.vocab.filter(F.col("df") <= df_cap).select("term_id")
     qp = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
-    flat_rare = _flat_postings(index).join(rare, "term_id", "left_semi")
+    flat_rare = read_postings(index.postings, "term_id").join(
+        rare, "term_id", "left_semi")
     qp_rare = qp.join(rare, "term_id", "left_semi")
     return flat_rare.join(
         qp_rare.select("query_id", "term_id"), "term_id"

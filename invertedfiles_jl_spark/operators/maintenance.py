@@ -34,6 +34,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex
+from invertedfiles_jl_spark.operators.search import decode_ids, stored_ids_col
 
 MAX_DELETE_BATCH = 100_000
 
@@ -73,12 +74,8 @@ def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
             "chunk the delete or rebuild (a rebuild re-centers statistics)")
     dels = F.lit(ids)
 
-    p = index.postings
-    compressed = "ids_vb" in p.columns
-    if compressed:
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        p = decompress_postings(p)
+    compressed = stored_ids_col(index.postings) == "ids_vb"
+    p = decode_ids(index.postings)
 
     zipped = F.arrays_zip("doc_ids", "weights")
     kept = F.filter(zipped, lambda e: ~F.array_contains(dels, e["doc_ids"]))

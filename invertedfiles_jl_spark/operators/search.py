@@ -18,11 +18,20 @@ is only the *matched* posting entries; per-query score cardinality is bounded
 by Σ df of the query's terms.  The window top-k shuffles one row per scored
 (query, doc) — for throughput-critical paths use ``wand.wand_topk`` (Plan B,
 bounded heaps, block-max pruning), which is rank-identical by test gate.
+
+Shared pieces, one home each, called by every engine path (search, wand,
+sharded, knn, fielded, maintenance, streaming, functions/text):
+  * :func:`read_postings` — THE posting-list reader: :func:`decode_ids`
+    (``ids_vb`` → ``doc_ids`` on a compressed index) then explode to
+    (…, doc_id, weight); :func:`_matched` is its broadcast-probe form.
+  * :func:`bm25_idf` — the BM25 idf column ln(1 + (N − df + 0.5)/(df + 0.5)).
+  * :func:`query_weights` — (query_id, term_id, qw): qtf·idf for bm25,
+    qtf/‖q‖ for normcosine; the query side of WAND, sharded and cosine.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.config import IndexConfig
@@ -46,13 +55,44 @@ def query_terms(queries: DataFrame, cfg: IndexConfig,
     return qt.withColumn("term_id", term_id_col(F.col("term")))
 
 
+def stored_ids_col(postings: DataFrame) -> str:
+    """The stored doc-id column: ``ids_vb`` (compressed) or ``doc_ids``."""
+    return "ids_vb" if "ids_vb" in postings.columns else "doc_ids"
+
+
+def decode_ids(postings: DataFrame) -> DataFrame:
+    """``postings`` with ``doc_ids`` decoded from ``ids_vb`` when the index
+    is compressed, unchanged otherwise — the one JVM-side decode step."""
+    if stored_ids_col(postings) == "doc_ids":
+        return postings
+    from invertedfiles_jl_spark.operators.codec import decompress_postings
+
+    return decompress_postings(postings)
+
+
+def read_postings(postings: DataFrame, *keep: str,
+                  weights: bool = True) -> DataFrame:
+    """The posting-list reader (the reference's ``select_posting_lists``,
+    src/invfilesearch.jl:6-27): decode (:func:`decode_ids`) and explode
+    posting rows to (*keep, doc_id, weight) — or (*keep, doc_id) with
+    ``weights=False``, which leaves the weights column unread.  Every
+    engine path that flattens postings reads them here; WAND's in-kernel
+    ``codec.decode_posting`` is the Python-side reader."""
+    p = decode_ids(postings)
+    if not weights:
+        return p.select(*keep, F.explode("doc_ids").alias("doc_id"))
+    return p.select(
+        *keep, F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
+    ).select(
+        *keep, F.col("e.doc_ids").alias("doc_id"),
+        F.col("e.weights").alias("weight"),
+    )
+
+
 def postings_exploded(index: InvertedIndex) -> DataFrame:
     """Flatten posting arrays back to (term, doc_id, weight) rows — the
     term string is recovered from vocab (postings carry only term_id)."""
-    flat = index.postings.select(
-        "term_id",
-        F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
-    ).select("term_id", F.col("e.doc_ids").alias("doc_id"), F.col("e.weights").alias("weight"))
+    flat = read_postings(index.postings, "term_id")
     # no broadcast hint: vocab auto-broadcasts under the threshold at test
     # scale; at 10^9 terms AQE plans a shuffle join instead of OOMing
     return flat.join(index.vocab.select("term_id", "term"), "term_id").select(
@@ -63,24 +103,14 @@ def postings_exploded(index: InvertedIndex) -> DataFrame:
 def _matched(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     """Broadcast-join query terms against postings on the long ``term_id``
     and explode only the matched lists: (query_id, <qterm cols>, doc_id,
-    weight).  The postings scan prunes to (term_id, doc_ids, weights) —
-    fixed-width join key, no string column off disk."""
+    weight).  The postings scan prunes to (term_id, doc_ids|ids_vb,
+    weights) — fixed-width join key, no string column off disk; a
+    compressed index decodes the matched lists only."""
     qcols = [c for c in qterms.columns if c not in ("term", "term_id")]
-    id_col = "ids_vb" if "ids_vb" in index.postings.columns else "doc_ids"
-    postings = index.postings.select("term_id", id_col, "weights")
+    postings = index.postings.select(
+        "term_id", stored_ids_col(index.postings), "weights")
     joined = postings.join(F.broadcast(qterms.select("term_id", *qcols)), "term_id")
-    if id_col == "ids_vb":  # compressed index → decode matched lists only
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        joined = decompress_postings(joined)
-    return joined.select(
-        *qcols,
-        F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
-    ).select(
-        *qcols,
-        F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
+    return read_postings(joined, *qcols)
 
 
 def _accept(m: DataFrame, accept_docs: DataFrame | None) -> DataFrame:
@@ -167,6 +197,14 @@ def _bm25_qterms(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     return _with_idf(index, query_terms(queries, index.cfg))
 
 
+def bm25_idf(n) -> Column:
+    """BM25 idf ``ln(1 + (N − df + 0.5)/(df + 0.5))`` over the ``df``
+    column — the one spelling every BM25 path uses.  ``n`` is the corpus
+    size N, a number or a column."""
+    df = F.col("df")
+    return F.log(F.lit(1.0) + (F.lit(n) - df + 0.5) / (df + 0.5))
+
+
 def _with_idf(index: InvertedIndex, qt: DataFrame) -> DataFrame:
     """(query_id, term_id, <qt cols>, idf) — the vocab join of
     :func:`_bm25_qterms` for any (query_id, term, term_id, ...) relation;
@@ -174,9 +212,22 @@ def _with_idf(index: InvertedIndex, qt: DataFrame) -> DataFrame:
     n = float(index.stats["n_docs"])
     cols = [c for c in qt.columns if c not in ("query_id", "term", "term_id")]
     return index.vocab.select("term_id", "df").join(F.broadcast(qt), "term_id").select(
-        "query_id", "term_id", *cols,
-        F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
-    )
+        "query_id", "term_id", *cols, bm25_idf(n).alias("idf"))
+
+
+def query_weights(index: InvertedIndex, queries: DataFrame) -> DataFrame:
+    """(query_id, term_id, qw) — the query side of the dot-product scorers
+    (WAND, sharded, cosine): ``qw = qtf · idf`` on a bm25 index (OOV terms
+    drop at the vocab join), ``qw = qtf / ‖q‖₂`` on a normcosine index
+    (the norm spans every query term, OOV included)."""
+    qt = query_terms(queries, index.cfg)
+    if index.cfg.weighting == "bm25":
+        return _with_idf(index, qt).select(
+            "query_id", "term_id", (F.col("qtf") * F.col("idf")).alias("qw"))
+    qn = qt.groupBy("query_id").agg(
+        F.sqrt(F.sum(F.col("qtf") * F.col("qtf"))).alias("qn"))
+    return qt.join(qn, "query_id").select(
+        "query_id", "term_id", (F.col("qtf") / F.col("qn")).alias("qw"))
 
 
 def _bm25_scored(index: InvertedIndex, queries: DataFrame,
@@ -264,13 +315,8 @@ def cosine_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     dist = 1 − Σ q·w, /root/reference/src/winvfilesearch.jl:8-16).
     Ascending distance, doc_id tie-break; ``t`` as in :func:`bm25_topk`."""
     assert index.cfg.weighting == "normcosine", "index not built with normcosine weighting"
-    qt = query_terms(queries, index.cfg)
-    qnorm = qt.groupBy("query_id").agg(F.sqrt(F.sum(F.col("qtf") * F.col("qtf"))).alias("qn"))
-    qt = qt.join(qnorm, "query_id").select(
-        "query_id", "term_id", (F.col("qtf") / F.col("qn")).alias("qw"),
-    ).withColumnRenamed("qw", "qtf")
-    m = _accept(_matched(index, qt), accept_docs)
-    aggs = [(F.lit(1.0) - F.sum(F.col("qtf") * F.col("weight"))).alias("dist")]
+    m = _accept(_matched(index, query_weights(index, queries)), accept_docs)
+    aggs = [(F.lit(1.0) - F.sum(F.col("qw") * F.col("weight"))).alias("dist")]
     if t > 1:  # same narrow-agg policy as _bm25_scored
         aggs.append(F.count(F.lit(1)).alias("n_matched"))
     scored = m.groupBy("query_id", "doc_id").agg(*aggs)
@@ -355,15 +401,9 @@ def _distinct_term_matches(index: InvertedIndex,
     fuzzy, wildcard and regex search and the query-string required-wildcard
     gate.  Broadcast the expansion into the postings join (fixed-width key,
     pruned scan), explode matched lists only, partial+final distinct-count."""
-    id_col = "ids_vb" if "ids_vb" in index.postings.columns else "doc_ids"
-    postings = index.postings.select("term_id", id_col)
-    joined = postings.join(F.broadcast(expanded), "term_id")
-    if id_col == "ids_vb":
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        joined = decompress_postings(joined)
-    m = joined.select("query_id", "term_id",
-                      F.explode("doc_ids").alias("doc_id"))
+    postings = index.postings.select("term_id", stored_ids_col(index.postings))
+    m = read_postings(postings.join(F.broadcast(expanded), "term_id"),
+                      "query_id", "term_id", weights=False)
     return m.groupBy("query_id", "doc_id").agg(
         F.countDistinct("term_id").cast("long").alias("n_terms"))
 
@@ -661,10 +701,7 @@ def doc_term_profile(index: InvertedIndex, corpus: DataFrame,
     tf = t.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     tf = tf.withColumn("term_id", term_id_col(F.col("term")))
     prof = index.vocab.select("term_id", "df").join(tf, "term_id").select(
-        "query_id", "term_id", "term", "tf",
-        F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5)
-              / (F.col("df") + 0.5)).alias("idf"),
-    )
+        "query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("tf") * F.col("idf"), sel_round).desc(),
         F.col("term").asc())
@@ -751,12 +788,7 @@ def term_vectors(index: InvertedIndex, corpus: DataFrame,
     tf = t.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     tf = tf.withColumn("term_id", term_id_col(F.col("term")))
     return index.vocab.select("term_id", "df").join(tf, "term_id").select(
-        "doc_id", "term", "tf", "df",
-        (
-            F.col("tf")
-            * F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        ).alias("tfidf"),
-    )
+        "doc_id", "term", "tf", "df", (F.col("tf") * bm25_idf(n)).alias("tfidf"))
 
 
 def more_like_this(index: InvertedIndex, corpus: DataFrame,
@@ -889,12 +921,7 @@ def synonym_bm25_topk(index: InvertedIndex, queries: DataFrame,
     n = float(index.stats["n_docs"])
     ex = expand_synonyms(queries, synonyms, index.cfg)
     qt = index.vocab.select("term_id", "df").join(F.broadcast(ex), "term_id").select(
-        "query_id", "term_id",
-        (
-            F.col("qw")
-            * F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-        ).alias("qwi"),
-    )
+        "query_id", "term_id", (F.col("qw") * bm25_idf(n)).alias("qwi"))
     m = _matched(index, qt)
     scored = m.groupBy("query_id", "doc_id").agg(
         F.sum(F.col("qwi") * F.col("weight")).alias("score"))
@@ -944,10 +971,7 @@ def prf_bm25_topk(index: InvertedIndex, corpus: DataFrame,
         index.vocab.select("term_id", "df").join(ftf, "term_id")
         .join(F.broadcast(qt_orig.select("query_id", "term_id")),
               ["query_id", "term_id"], "left_anti")
-        .select(
-            "query_id", "term_id", "term", "tf",
-            F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5)
-                  / (F.col("df") + 0.5)).alias("idf"))
+        .select("query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
     )
     w = Window.partitionBy("query_id").orderBy(
         F.round(F.col("tf") * F.col("idf"), sel_round).desc(),
@@ -1089,10 +1113,7 @@ def tfidf_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     n = float(index.stats["n_docs"])
     one_plus_ln = F.lit(1.0) + F.log(F.col("weight"))
     lnc_norm = (
-        index.postings.select(
-            F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"))
-        .select(F.col("e.doc_ids").alias("doc_id"),
-                F.col("e.weights").alias("weight"))
+        read_postings(index.postings)
         .groupBy("doc_id")
         .agg(F.sqrt(F.sum(one_plus_ln * one_plus_ln)).alias("lnc_norm"))
     )
@@ -1227,10 +1248,7 @@ def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
 
     qt = query_terms(queries, cfg)
     qterms = gvocab.join(F.broadcast(qt), "term_id").select(
-        "query_id", "term_id", "qtf",
-        F.log(F.lit(1.0) + (F.lit(n_g) - F.col("df") + 0.5)
-              / (F.col("df") + 0.5)).alias("idf"),
-    )
+        "query_id", "term_id", "qtf", bm25_idf(n_g).alias("idf"))
 
     matched = None
     for s in segments:

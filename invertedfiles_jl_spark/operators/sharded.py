@@ -36,6 +36,14 @@ reference's two-level knnqueue merge contract (bounded per-thread queues
 merged into one result, /root/reference/src/InvertedFiles.jl:57) — the shard
 is the thread, the final window is the merge.
 
+Shared pieces: ``shard_postings`` reads through ``search.read_postings``
+(so a compressed index decodes once, at layout time); query weights come
+from ``search.query_weights``; the BM25/dot-product and set-distance
+scorers share one serve path (``_serve``: collect → broadcast qmap →
+semi-join prune → kernel → top-k) and one kernel-factory pair
+(``_partition_kernel``/``_shard_kernel``) parameterized by
+``(gather, emit)``.
+
 Sharding reuses the hot-term salt invariant (doc-range-disjoint sub-lists,
 ``build.postings_table``) generalized to every term, so delta-gap encoding
 stays valid per sub-list.  ``shard_postings`` is a one-time build-side
@@ -44,15 +52,20 @@ shuffle; per-batch traffic after it is the pruned-row shuffle only.
 
 from __future__ import annotations
 
+from collections import Counter
+
 import numpy as np
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex, doc_range, range_bucket
-from invertedfiles_jl_spark.operators.search import query_terms, topk
+from invertedfiles_jl_spark.operators.search import (
+    query_terms,
+    query_weights,
+    read_postings,
+    topk,
+)
 from invertedfiles_jl_spark.operators.wand import round_half_up as _round_half_up
-
-_OUT_SCHEMA = "query_id long, doc_id long, score double"
 
 
 def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
@@ -62,24 +75,14 @@ def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
     scheme applied universally), then grouped per (shard, term_id), carrying
     the list-max AND per-block ``block_max`` skip metadata (recomputed per
     sub-list — the split changes block boundaries) so the serving kernel can
-    prune.  Handles compressed indexes (``ids_vb``) by decoding before the
-    re-layout.  Build-time cost: one shuffle of the index.
+    prune.  Reads postings through ``search.read_postings``, so a
+    compressed index (``ids_vb``) decodes before the re-layout.  Build-time
+    cost: one shuffle of the index.
     Returns postings(shard, term_id, doc_ids, weights, max_weight, block_max).
     """
     doc_lo, doc_hi = doc_range(index.stats)
     bs = int(index.cfg.block_size)
-    postings = index.postings
-    if "ids_vb" in postings.columns:
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        postings = decompress_postings(postings)
-    flat = postings.select(
-        "term_id", F.explode(F.arrays_zip("doc_ids", "weights")).alias("e")
-    ).select(
-        "term_id",
-        F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
+    flat = read_postings(index.postings, "term_id")
     if index.cfg.weighting == "binary":
         # Set-distance serving needs each candidate's |doc| (distinct-term
         # count) INSIDE its shard; binary entry weights are all 1, so the
@@ -110,37 +113,28 @@ def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
     )
 
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-_EMPTY_F64 = np.empty(0, dtype=np.float64)
+_NO_MATCH = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))
 
 
-def _match_rows(qmap: dict, tids: np.ndarray, weighted: bool = True):
+def _match_rows(qmap: dict, tids: np.ndarray):
     """Expand the batch's rows against the query map in numpy: yields
     ``(qid, row_indices, qws)`` groups — every (row × matching-query)
     pair produced by ONE repeat/concatenate/argsort pass instead of a
-    per-pair Python append loop (r3 verdict perf finding #3).
+    per-pair Python append loop.
 
-    ``qmap`` values are ``(qids, qws)`` tuples when ``weighted`` else
-    plain qid arrays (the binary layout), in which case the yielded
-    ``qws`` is a zero placeholder.  One ``qmap`` lookup per UNIQUE term
-    in the batch; the per-pair bookkeeping (repeat row ids, concat
-    qids/qws, stable-sort by qid, split at group boundaries) is all
-    C-side."""
+    ``qmap`` maps term_id → ``(qids, qws)`` arrays.  One ``qmap`` lookup
+    per UNIQUE term in the batch; the per-pair bookkeeping (repeat row
+    ids, concat qids/qws, stable-sort by qid, split at group boundaries)
+    is all C-side."""
     utids, inv = np.unique(tids, return_inverse=True)
-    hits = [qmap.get(int(t)) for t in utids]
-    if weighted:
-        qids_of = [_EMPTY_I64 if h is None else h[0] for h in hits]
-        qws_of = [_EMPTY_F64 if h is None else h[1] for h in hits]
-    else:
-        qids_of = [_EMPTY_I64 if h is None else h for h in hits]
-        qws_of = [np.zeros(len(q), np.float64) for q in qids_of]
-    per_term_n = np.array([len(q) for q in qids_of], dtype=np.int64)
+    hits = [qmap.get(int(t), _NO_MATCH) for t in utids]
+    per_term_n = np.array([len(h[0]) for h in hits], dtype=np.int64)
     counts = per_term_n[inv]
     row_of = np.repeat(np.arange(len(tids), dtype=np.int64), counts)
     if row_of.size == 0:
         return []
-    qid_all = np.concatenate([qids_of[t] for t in inv])
-    qw_all = np.concatenate([qws_of[t] for t in inv])
+    qid_all = np.concatenate([hits[t][0] for t in inv])
+    qw_all = np.concatenate([hits[t][1] for t in inv])
     order = np.argsort(qid_all, kind="stable")
     qid_s, qw_s, row_s = qid_all[order], qw_all[order], row_of[order]
     bounds = np.flatnonzero(np.r_[True, qid_s[1:] != qid_s[:-1]])
@@ -206,6 +200,19 @@ def _score_all(qws, idl, wl):
     return uids, np.bincount(inv, weights=contrib, minlength=len(uids))
 
 
+def _partials(score_col: str, out_q: list, out_d: list, out_s: list):
+    """A kernel's output frame (query_id, doc_id, <score_col>) from its
+    per-query array chunks (none for a partition without matches)."""
+    import pandas as pd
+
+    def cat(chunks, dtype):
+        return np.concatenate(chunks) if chunks else np.empty(0, dtype)
+
+    return pd.DataFrame({"query_id": cat(out_q, np.int64),
+                         "doc_id": cat(out_d, np.int64),
+                         score_col: cat(out_s, np.float64)})
+
+
 def _emit_topk(per_q: dict, k: int, rank_round, block_size: int,
                stats: "dict | None" = None,
                prune_min_entries: int = PRUNE_MIN_ENTRIES):
@@ -216,16 +223,8 @@ def _emit_topk(per_q: dict, k: int, rank_round, block_size: int,
     window (HALF_UP-rounded score desc, doc_id asc).  Rank-safe: both paths
     yield every doc whose rounded score can reach the rounded kth, with
     exact scores."""
-    import pandas as pd
-
     from invertedfiles_jl_spark.operators.wand import maxscore_pool
 
-    if not per_q:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, np.int64),
-             "doc_id": np.empty(0, np.int64),
-             "score": np.empty(0, np.float64)}
-        )
     out_q, out_d, out_s = [], [], []
     for qid, (qws, idl, wl, bml, mwl) in per_q.items():
         if sum(map(len, idl)) < prune_min_entries:
@@ -244,42 +243,24 @@ def _emit_topk(per_q: dict, k: int, rank_round, block_size: int,
         out_q.append(np.full(len(sel), qid, dtype=np.int64))
         out_d.append(uids[sel])
         out_s.append(scores[sel])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, np.int64),
-             "doc_id": np.empty(0, np.int64),
-             "score": np.empty(0, np.float64)}
-        )
-    return pd.DataFrame(
-        {"query_id": np.concatenate(out_q),
-         "doc_id": np.concatenate(out_d),
-         "score": np.concatenate(out_s)}
-    )
+    return _partials("score", out_q, out_d, out_s)
 
 
-def _shard_kernel(qmap_bc, k: int, rank_round, block_size: int,
-                  prune_min_entries: int = PRUNE_MIN_ENTRIES):
+def _shard_kernel(gather, emit):
     """applyInPandas kernel (safe path): one call per shard group — gather
-    the shard's matched rows per query, MaxScore-prune, emit the shard's
-    top-k per query.
-
-    ``qmap_bc``: sc.broadcast of {term_id → (qids int64 array, qws float64
-    array)} — shipped once per executor, not per task.  All arithmetic is
-    numpy over whole posting arrays; Python touches O(#rows·#matching
-    queries) objects, and the block-max bounds skip most entries of
-    low-impact lists once a query's shard-local pool is full.
-    """
+    the shard's matched rows per query, emit the shard's top-k per query.
+    ``gather(per_q, pdf)`` buckets one Arrow batch's rows per query
+    (:func:`_gather` / :func:`_gather_set`); ``emit(per_q)`` returns the
+    cut rows (:func:`_emit_topk` / :func:`_emit_set_topk`)."""
     def kernel(pdf):
         per_q: dict = {}
-        _gather(per_q, qmap_bc.value, pdf)
-        return _emit_topk(per_q, k, rank_round, block_size,
-                          prune_min_entries=prune_min_entries)
+        gather(per_q, pdf)
+        return emit(per_q)
 
     return kernel
 
 
-def _partition_kernel(qmap_bc, k: int, rank_round, block_size: int,
-                      prune_min_entries: int = PRUNE_MIN_ENTRIES):
+def _partition_kernel(gather, emit):
     """mapInPandas kernel (co-located fast path): gather across ALL of
     the partition's Arrow batches, emit one top-k per query per PARTITION.
     Correct whenever every doc's rows live inside one partition — which
@@ -289,14 +270,10 @@ def _partition_kernel(qmap_bc, k: int, rank_round, block_size: int,
     def kernel(batches):
         per_q: dict = {}
         for pdf in batches:
-            _gather(per_q, qmap_bc.value, pdf)
-        yield _emit_topk(per_q, k, rank_round, block_size,
-                         prune_min_entries=prune_min_entries)
+            gather(per_q, pdf)
+        yield emit(per_q)
 
     return kernel
-
-
-_OUT_SCHEMA_SET = "query_id long, doc_id long, dist double"
 
 
 def _gather_set(per_q: dict, qmap: dict, pdf) -> None:
@@ -306,7 +283,7 @@ def _gather_set(per_q: dict, qmap: dict, pdf) -> None:
     matching the row's term, and the (row × query) expansion is the same
     vectorized :func:`_match_rows` pass as :func:`_gather`."""
     tids = pdf["term_id"].to_numpy()
-    groups = _match_rows(qmap, tids, weighted=False)
+    groups = _match_rows(qmap, tids)
     if not groups:
         return
     ids_col = pdf["doc_ids"].to_numpy()
@@ -345,14 +322,6 @@ def _emit_set_topk(per_q: dict, qsize: dict, k: int, dist: str, t: int,
     pass: a matched doc's distance needs its exact intersection count, so
     per-shard work is Σ matched-df — the same bound as the relational plan,
     minus its per-(query,doc) shuffle."""
-    import pandas as pd
-
-    if not per_q:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, np.int64),
-             "doc_id": np.empty(0, np.int64),
-             "dist": np.empty(0, np.float64)}
-        )
     out_q, out_d, out_s = [], [], []
     for qid, (idl, nnzl) in per_q.items():
         ids = np.concatenate(idl)
@@ -370,36 +339,53 @@ def _emit_set_topk(per_q: dict, qsize: dict, k: int, dist: str, t: int,
         out_q.append(np.full(len(sel), qid, dtype=np.int64))
         out_d.append(uids[sel])
         out_s.append(d[sel])
-    if not out_q:
-        return pd.DataFrame(
-            {"query_id": np.empty(0, np.int64),
-             "doc_id": np.empty(0, np.int64),
-             "dist": np.empty(0, np.float64)}
-        )
-    return pd.DataFrame(
-        {"query_id": np.concatenate(out_q),
-         "doc_id": np.concatenate(out_d),
-         "dist": np.concatenate(out_s)}
-    )
+    return _partials("dist", out_q, out_d, out_s)
 
 
-def _set_shard_kernel(qmap_bc, qsize_bc, k: int, dist: str, t: int, rank_round):
-    def kernel(pdf):
-        per_q: dict = {}
-        _gather_set(per_q, qmap_bc.value, pdf)
-        return _emit_set_topk(per_q, qsize_bc.value, k, dist, t, rank_round)
+def _serve(index: InvertedIndex, rows: list, gather, emit, score_col: str,
+           ascending: bool, k: int, rank_round, n_shards: int,
+           sharded: DataFrame | None, assume_colocated: bool) -> DataFrame:
+    """The doc-sharded serve path shared by :func:`sharded_topk` and
+    :func:`sharded_set_topk`: the batch's collected (query_id, term_id, qw)
+    ``rows`` become one term_id → (qids, qws) map, broadcast once per
+    executor; a JVM-side semi-join prunes the shards to matched term rows;
+    the kernel pair runs ``gather(per_q, qmap, pdf)`` / ``emit(per_q)``
+    under mapInPandas (co-located) or groupBy(shard).applyInPandas; one
+    final top-k window merges the partials on ``score_col``."""
+    spark = index.postings.sparkSession
+    qmap: dict = {}
+    for r in rows:
+        qids, qws = qmap.setdefault(int(r["term_id"]), ([], []))
+        qids.append(r["query_id"])
+        qws.append(r["qw"])
+    if not qmap:
+        return spark.createDataFrame(
+            [], f"query_id long, rank int, doc_id long, {score_col} double")
+    qmap = {t: (np.asarray(a, np.int64), np.asarray(b, np.float64))
+            for t, (a, b) in qmap.items()}
+    qmap_bc = spark.sparkContext.broadcast(qmap)
 
-    return kernel
+    def gather_bc(per_q, pdf):
+        gather(per_q, qmap_bc.value, pdf)
 
-
-def _set_partition_kernel(qmap_bc, qsize_bc, k: int, dist: str, t: int, rank_round):
-    def kernel(batches):
-        per_q: dict = {}
-        for pdf in batches:
-            _gather_set(per_q, qmap_bc.value, pdf)
-        yield _emit_set_topk(per_q, qsize_bc.value, k, dist, t, rank_round)
-
-    return kernel
+    if sharded is None:
+        # fresh repartition(n, "shard") output — co-location holds by
+        # construction and survives the narrow broadcast join below
+        sharded = shard_postings(index, n_shards)
+        assume_colocated = True
+    # JVM-side semi-join prune: only matched term rows reach Arrow.
+    qterms = spark.createDataFrame([(t,) for t in qmap], "term_id long")
+    pruned = sharded.join(F.broadcast(qterms), "term_id", "left_semi")
+    schema = f"query_id long, doc_id long, {score_col} double"
+    if assume_colocated:
+        partials = pruned.mapInPandas(_partition_kernel(gather_bc, emit), schema)
+    else:
+        # arbitrary layout: one groupBy(shard) shuffle of the matched rows
+        # restores co-location before the kernel
+        partials = pruned.groupBy("shard").applyInPandas(
+            _shard_kernel(gather_bc, emit), schema)
+    return topk(partials, k, score_col, ascending=ascending,
+                rank_round=rank_round)
 
 
 def sharded_set_topk(
@@ -419,36 +405,16 @@ def sharded_set_topk(
     ``search.set_distance_topk`` (pytest gate).  Same co-location contract
     as :func:`sharded_topk`; ``t`` is the xmerge t-threshold."""
     assert index.cfg.weighting == "binary", "index not built with binary weighting"
-    spark = queries.sparkSession
-    qt = query_terms(queries, index.cfg).select("query_id", "term_id")
-    qrows = qt.collect()
-    qmap: dict = {}
-    qsize: dict = {}
-    for r in qrows:
-        qmap.setdefault(int(r["term_id"]), []).append(int(r["query_id"]))
-        qsize[int(r["query_id"])] = qsize.get(int(r["query_id"]), 0) + 1
-    qmap = {tid: np.asarray(v, np.int64) for tid, v in qmap.items()}
-    if not qmap:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, dist double")
-    qmap_bc = spark.sparkContext.broadcast(qmap)
-    qsize_bc = spark.sparkContext.broadcast(qsize)
+    # binary query terms weigh 1 (the set kernel reads only the qids)
+    rows = query_terms(queries, index.cfg).select(
+        "query_id", "term_id", F.lit(1.0).alias("qw")).collect()
+    qsize = Counter(r["query_id"] for r in rows)
 
-    if sharded is None:
-        sharded = shard_postings(index, n_shards)
-        assume_colocated = True
-    qterms = spark.createDataFrame([(tid,) for tid in qmap], "term_id long")
-    pruned = sharded.join(F.broadcast(qterms), "term_id", "left_semi")
-    if assume_colocated:
-        partials = pruned.mapInPandas(
-            _set_partition_kernel(qmap_bc, qsize_bc, k, dist, t, rank_round),
-            _OUT_SCHEMA_SET,
-        )
-    else:
-        partials = pruned.groupBy("shard").applyInPandas(
-            _set_shard_kernel(qmap_bc, qsize_bc, k, dist, t, rank_round),
-            _OUT_SCHEMA_SET,
-        )
-    return topk(partials, k, "dist", ascending=True, rank_round=rank_round)
+    def emit(per_q):
+        return _emit_set_topk(per_q, qsize, k, dist, t, rank_round)
+
+    return _serve(index, rows, _gather_set, emit, "dist", True, k, rank_round,
+                  n_shards, sharded, assume_colocated)
 
 
 def load_shards(spark, path: str, n_shards: int) -> DataFrame:
@@ -467,7 +433,6 @@ def sharded_topk(
     rank_round: "int | None" = None,
     sharded: DataFrame | None = None,
     assume_colocated: bool = False,
-    prune_min_entries: int = PRUNE_MIN_ENTRIES,
 ) -> DataFrame:
     """Batch BM25 (or dot-product) top-k over a doc-sharded layout.
 
@@ -481,57 +446,12 @@ def sharded_topk(
     including over a written-then-re-read shards table).
     """
     assert index.cfg.weighting in ("bm25", "normcosine")
-    spark = queries.sparkSession
-    qt = query_terms(queries, index.cfg)
-    if index.cfg.weighting == "bm25":
-        n = float(index.stats["n_docs"])
-        qt = index.vocab.select("term_id", "df").join(F.broadcast(qt), "term_id").select(
-            "query_id", "term_id",
-            (
-                F.col("qtf")
-                * F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            ).alias("qw"),
-        )
-    else:
-        qn = qt.groupBy("query_id").agg(
-            F.sqrt(F.sum(F.col("qtf") * F.col("qtf"))).alias("qn")
-        )
-        qt = qt.join(qn, "query_id").select(
-            "query_id", "term_id", (F.col("qtf") / F.col("qn")).alias("qw")
-        )
-
-    # the query batch is tiny — collect once, build term_id → (qids, qws)
-    qrows = qt.collect()
-    qmap: dict = {}
-    for r in qrows:
-        qmap.setdefault(int(r["term_id"]), ([], []))
-        qmap[r["term_id"]][0].append(r["query_id"])
-        qmap[r["term_id"]][1].append(r["qw"])
-    qmap = {t: (np.asarray(a, np.int64), np.asarray(b, np.float64))
-            for t, (a, b) in qmap.items()}
-    if not qmap:
-        return spark.createDataFrame([], "query_id long, rank int, doc_id long, score double")
-    qmap_bc = spark.sparkContext.broadcast(qmap)
-
-    if sharded is None:
-        # fresh repartition(n, "shard") output — co-location holds by
-        # construction and survives the narrow broadcast join below
-        sharded = shard_postings(index, n_shards)
-        assume_colocated = True
-    # JVM-side semi-join prune: only matched term rows reach Arrow.
-    qterms = spark.createDataFrame([(t,) for t in qmap], "term_id long")
-    pruned = sharded.join(F.broadcast(qterms), "term_id", "left_semi")
+    # the query batch is tiny — collect once
+    rows = query_weights(index, queries).collect()
     block_size = int(index.cfg.block_size)
-    if assume_colocated:
-        partials = pruned.mapInPandas(
-            _partition_kernel(qmap_bc, k, rank_round, block_size,
-                              prune_min_entries), _OUT_SCHEMA
-        )
-    else:
-        # arbitrary layout: one groupBy(shard) shuffle of the matched rows
-        # restores co-location before the kernel
-        partials = pruned.groupBy("shard").applyInPandas(
-            _shard_kernel(qmap_bc, k, rank_round, block_size,
-                          prune_min_entries), _OUT_SCHEMA
-        )
-    return topk(partials, k, "score", ascending=False, rank_round=rank_round)
+
+    def emit(per_q):
+        return _emit_topk(per_q, k, rank_round, block_size)
+
+    return _serve(index, rows, _gather, emit, "score", False, k, rank_round,
+                  n_shards, sharded, assume_colocated)

@@ -22,6 +22,11 @@ join has already reduced data to the matched lists, so each group holds just
 the query's postings.  Arrow moves the arrays; numpy does the math; Python
 touches O(#lists) objects, not O(#postings).
 
+Query weights come from ``search.query_weights`` (qtf·idf or qtf/‖q‖, the
+same column every dot-product plan uses).  Matched rows reach the kernel
+with ``ids_vb`` still encoded; ``codec.decode_posting`` inside the kernel is
+the Python-side counterpart of the JVM-side ``search.read_postings``.
+
 Exactness: every pruning rule above compares against the threshold with a
 2·10^-rank_round safety margin, so a pruned doc's ROUNDED score is strictly
 below the rounded kth score — rank-identity with Plan A holds even at
@@ -36,7 +41,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex
-from invertedfiles_jl_spark.operators.search import query_terms
+from invertedfiles_jl_spark.operators.search import query_weights, stored_ids_col
 
 _OUT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
@@ -195,29 +200,12 @@ def wand_topk(
     the dot product; use :func:`wand_cosine_topk` for the distance form.
     """
     assert index.cfg.weighting in ("bm25", "normcosine")
-    qt = query_terms(queries, index.cfg)
-    if index.cfg.weighting == "bm25":
-        n = float(index.stats["n_docs"])
-        qt = index.vocab.select("term_id", "df").join(F.broadcast(qt), "term_id").select(
-            "query_id", "term_id",
-            (
-                F.col("qtf")
-                * F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            ).alias("qw"),
-        )
-    else:
-        qnorm = qt.groupBy("query_id").agg(
-            F.sqrt(F.sum(F.col("qtf") * F.col("qtf"))).alias("qn")
-        )
-        qt = qt.join(qnorm, "query_id").select(
-            "query_id", "term_id", (F.col("qtf") / F.col("qn")).alias("qw")
-        )
-
     cols = ["query_id", "qw", "weights", "max_weight"]
     if "block_max" in index.postings.columns:
         cols.append("block_max")
-    cols.append("ids_vb" if "ids_vb" in index.postings.columns else "doc_ids")
-    matched = index.postings.join(F.broadcast(qt), "term_id").select(*cols)
+    cols.append(stored_ids_col(index.postings))
+    matched = index.postings.join(
+        F.broadcast(query_weights(index, queries)), "term_id").select(*cols)
 
     block_size = int(index.cfg.block_size)
 

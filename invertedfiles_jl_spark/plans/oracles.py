@@ -617,11 +617,13 @@ WHERE {duckdb_split_bucket_sql('d.doc_id', salt)} < _thr
 def near_dup_clusters_sql(threshold: float = 0.5) -> str:
     """Connected components of the verified MinHash pair graph via a
     recursive reachability CTE (label = min reachable doc_id) — the
-    closed-form mirror of the Spark side's min-label propagation loop."""
+    closed-form mirror of the Spark side's min-label propagation loop.
+    ``pairs`` and ``edges`` are MATERIALIZED: DuckDB 1.0 otherwise inlines
+    them and recomputes the MinHash pairs on every recursion step."""
     pairs = minhash_near_dups_sql(threshold)
     return f"""
-WITH RECURSIVE pairs AS ({pairs}),
-edges AS (
+WITH RECURSIVE pairs AS MATERIALIZED ({pairs}),
+edges AS MATERIALIZED (
   SELECT doc_a AS a, doc_b AS b FROM pairs
   UNION
   SELECT doc_b, doc_a FROM pairs

@@ -45,7 +45,7 @@ def get_spark(
     # of a long-running executor's steady-state heap.  ParallelGC beats G1
     # for this pure-batch workload.  Must be set before the JVM launches,
     # hence PYSPARK_SUBMIT_ARGS and not builder.config.
-    driver_mem = os.environ.get("SPARK_DRIVER_MEMORY", "48g")
+    driver_mem = driver_memory()
     if (os.environ.get("SPARK_GRAFT_JVM_STABLE")
             and "PYSPARK_SUBMIT_ARGS" not in os.environ):
         os.environ["PYSPARK_SUBMIT_ARGS"] = (
@@ -105,6 +105,16 @@ def get_spark(
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
     return builder.getOrCreate()
+
+
+def driver_memory(environ=os.environ, sysconf=os.sysconf) -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEMORY`` when set, else half
+    of physical RAM.  A fixed default larger than the host lets the local
+    JVM grow its heap without collecting until the machine runs out."""
+    if environ.get("SPARK_DRIVER_MEMORY"):
+        return environ["SPARK_DRIVER_MEMORY"]
+    ram = sysconf("SC_PAGE_SIZE") * sysconf("SC_PHYS_PAGES")
+    return f"{ram // 2 // 2**20}m"
 
 
 def _is_tmpfs(path: str, mounts: str = "/proc/mounts") -> bool:

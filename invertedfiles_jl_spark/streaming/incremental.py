@@ -47,6 +47,7 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
         salted_pairs,
         term_id_col,
     )
+    from invertedfiles_jl_spark.operators.search import read_postings
 
     touched = delta.postings.select("term_id").distinct()
 
@@ -54,18 +55,7 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
     to_merge = old.postings.join(F.broadcast(touched), "term_id", "semi").unionByName(
         delta.postings, allowMissingColumns=True
     )
-    if "ids_vb" in to_merge.columns:
-        from invertedfiles_jl_spark.operators.codec import decompress_postings
-
-        to_merge = decompress_postings(to_merge)
-    exploded = to_merge.select(
-        "term_id",
-        F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
-    ).select(
-        "term_id",
-        F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
+    exploded = read_postings(to_merge, "term_id")
 
     docs = old.docs.unionByName(delta.docs)
     vocab = (
@@ -134,7 +124,7 @@ def stream_append(spark: SparkSession, stream_df: DataFrame, index_path: str,
     ``append_documents`` + checkpointed rewrite).  The reference has no
     streaming; this is the engine's micro-batch analog of repeated
     ``push_item!``."""
-    from invertedfiles_jl_spark.plans.pipeline import build_checkpointed, load_index
+    from invertedfiles_jl_spark.plans.pipeline import load_index
 
     def handle(batch_df: DataFrame, batch_id: int):
         if not batch_df.take(1):

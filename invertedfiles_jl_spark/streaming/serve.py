@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex, term_id_col
-from invertedfiles_jl_spark.operators.search import query_terms
+from invertedfiles_jl_spark.operators.search import bm25_idf, query_terms
 from invertedfiles_jl_spark.operators.wand import round_half_up
 
 
@@ -59,9 +59,7 @@ def standing_queries(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     n = float(index.stats["n_docs"])
     qt = query_terms(queries, index.cfg)
     return index.vocab.select("term_id", "df").join(qt, "term_id").select(
-        "query_id", "term_id", "qtf",
-        F.log(F.lit(1.0) + (F.lit(n) - F.col("df") + 0.5) / (F.col("df") + 0.5)).alias("idf"),
-    )
+        "query_id", "term_id", "qtf", bm25_idf(n).alias("idf"))
 
 
 def matched_occurrences(stream_docs: DataFrame, index: InvertedIndex,

@@ -186,6 +186,61 @@ def test_prefix_topk_vs_python(corpus, texts, spark):
     assert got_c == want
 
 
+def test_compressed_index_reads_like_plain(corpus, spark):
+    """Every posting-list reader returns the same rows on a
+    ``compress=True`` index as on the plain one: ``postings_exploded`` and
+    ``tfidf_topk``'s lnc norm read the whole table, ``searchbatch_cosine``
+    probes it by broadcast and ``allknn`` by shuffle join."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.knn import (
+        allknn,
+        build_vector_index,
+        searchbatch_cosine,
+    )
+    from invertedfiles_jl_spark.operators.search import (
+        postings_exploded,
+        tfidf_topk,
+    )
+
+    def rows(df):
+        return sorted(tuple(round(v, 9) if isinstance(v, float) else v
+                            for v in r) for r in df.collect())
+
+    def both(build, cfg):
+        return [build(IndexConfig(**cfg, compress=c)) for c in (False, True)]
+
+    def text_index(cfg):
+        return build_index(corpus, cfg)
+
+    plain, packed = both(text_index, {"weighting": "bm25"})
+    assert rows(postings_exploded(packed)) == rows(postings_exploded(plain))
+    plain, packed = both(text_index, {"weighting": "tf"})
+    q = queries_df(spark)
+    assert rows(tfidf_topk(packed, q, k=10, rank_round=6)) == \
+        rows(tfidf_topk(plain, q, k=10, rank_round=6))
+
+    # a small normalized vector corpus with one hot term, salted
+    raw = spark.createDataFrame(
+        [(d, t, w) for d in range(60)
+         for t, w in ((d % 5, 1.0 + d % 3), (5 + d % 7, 2.0), (20, 0.5))],
+        "doc_id long, term long, weight double")
+    nrm = raw.groupBy("doc_id").agg(
+        F.sqrt(F.sum(F.col("weight") ** 2)).alias("nn"))
+    pairs = raw.join(nrm, "doc_id").select(
+        "doc_id", "term", (F.col("weight") / F.col("nn")).alias("weight"))
+    plain, packed = both(
+        lambda cfg: build_vector_index(pairs, cfg),
+        {"weighting": "normcosine", "weight_dtype": "double",
+         "salt_df_threshold": 16, "salt_buckets": 4})
+    qpairs = pairs.filter(F.col("doc_id") < 10).select(
+        F.col("doc_id").alias("query_id"), "term", F.col("weight").alias("qw"))
+    assert rows(searchbatch_cosine(packed, qpairs, k=5, rank_round=6)) == \
+        rows(searchbatch_cosine(plain, qpairs, k=5, rank_round=6))
+    assert rows(allknn(packed, pairs, k=3, rank_round=6)) == \
+        rows(allknn(plain, pairs, k=3, rank_round=6))
+
+
 def test_fuzzy_topk_vs_python(corpus, texts, spark):
     """Edit-distance-1 expansion vs naive python Levenshtein; far-OOV
     yields nothing; exact terms include themselves and neighbors."""

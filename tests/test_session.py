@@ -6,7 +6,7 @@ import os
 
 import pytest
 
-from invertedfiles_jl_spark.session import _is_tmpfs
+from invertedfiles_jl_spark.session import _is_tmpfs, driver_memory
 
 MOUNTS = """\
 /dev/vda / ext4 rw,relatime 0 0
@@ -41,3 +41,13 @@ def test_is_tmpfs_live_mount_table():
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     if os.major(os.stat(repo).st_dev):
         assert not _is_tmpfs(repo)
+
+
+def test_driver_memory_default_is_half_of_ram():
+    pages = {"SC_PAGE_SIZE": 4096, "SC_PHYS_PAGES": 15 * 2**30 // 4096}
+    assert driver_memory({}, pages.__getitem__) == "7680m"
+    assert driver_memory({"SPARK_DRIVER_MEMORY": "2g"},
+                         pages.__getitem__) == "2g"
+    # the live host: never more than it has
+    mb = int(driver_memory({})[:-1])
+    assert 0 < mb * 2**20 <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
