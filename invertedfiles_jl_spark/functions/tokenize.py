@@ -41,8 +41,9 @@ def tokens_sql(content_sql: str, cfg: IndexConfig) -> str:
 
 
 def exploded_terms(df, doc_out: str, doc_col: str, content_col: str,
-                   cfg: IndexConfig):
-    """(doc_out, term) rows — the 100%-codegen tokenize hot path.
+                   cfg: IndexConfig, keep: tuple[str, ...] = ()):
+    """(doc_out, *keep, term) rows — the 100%-codegen tokenize hot path;
+    ``keep`` columns of ``df`` ride along on every token row.
 
     ``explode(split(lower(content)))`` + a row-level empty filter keeps the
     whole stage inside WholeStageCodegen: no higher-order-function lambdas
@@ -56,13 +57,13 @@ def exploded_terms(df, doc_out: str, doc_col: str, content_col: str,
         pat = IndexConfig.CODE_TOKEN_RE.replace("\\", "\\\\")
         arr = f"regexp_extract_all({content}, '{pat}', 0)"
         out = df.select(
-            F.col(doc_col).alias(doc_out),
+            F.col(doc_col).alias(doc_out), *keep,
             F.explode(F.expr(arr)).alias("term"),
         )
         return out  # the regex never matches the empty string
     arr = f"split({content}, '\\\\s+')"
     return df.select(
-        F.col(doc_col).alias(doc_out),
+        F.col(doc_col).alias(doc_out), *keep,
         F.explode(F.expr(arr)).alias("term"),
     ).filter(F.col("term") != "")
 

@@ -60,7 +60,10 @@ def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
     (lists that empty out are dropped; ``df_part``/``max_weight``/
     ``block_max`` recomputed for touched lists only), ``docs`` anti-joined,
     ``stats``/``vocab`` frozen (see module docstring).  A compressed index
-    round-trips through the codec for the touched rows.
+    decodes every posting row once and re-encodes every surviving row:
+    the codec is a pandas UDF, which runs over every row of the operator
+    it is planned in, so encoding only the touched rows would take a
+    second pass over the postings.
     """
     if isinstance(delete_ids, DataFrame):
         ids = sorted({r[0] for r in delete_ids.select("doc_id").distinct().collect()})
@@ -78,11 +81,16 @@ def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
     p = decode_ids(index.postings)
 
     zipped = F.arrays_zip("doc_ids", "weights")
-    kept = F.filter(zipped, lambda e: ~F.array_contains(dels, e["doc_ids"]))
     touched = F.arrays_overlap(F.col("doc_ids"), dels)
+    kept = F.when(touched, F.filter(
+        zipped, lambda e: ~F.array_contains(dels, e["doc_ids"]))
+    ).otherwise(zipped)
+    # lists that empty out drop by exploding a zero-or-one-element array,
+    # not by a Filter: Catalyst would copy `kept` (and the Python decode
+    # under it) into a pushed-down filter and decode every row twice
     p = (
-        p.withColumn("kept", F.when(touched, kept).otherwise(zipped))
-        .filter(F.size("kept") > 0)
+        p.select("term_id", "salt", F.explode(
+            F.when(F.size(kept) > 0, F.array(kept))).alias("kept"))
         .select(
             "term_id",
             "salt",

@@ -22,14 +22,17 @@ Phrase search is pure JVM relational algebra — no UDF anywhere:
     transform(positions, p → p − offset)       — shift each term's offsets
                                                  back to candidate START slots
     groupBy(query_id, doc_id):
-      count(DISTINCT offset) = m               — every phrase slot matched
+      count(*) = m                             — every phrase slot matched
       fold array_intersect over shifted sets   — surviving starts = phrase hits
   phrase_tf = |∩ shifted_i|  →  bounded top-k (score desc, doc_id asc)
 
 A start position p is a phrase occurrence iff term_i occurs at p+i for every
 i — i.e. p survives the intersection of every term's shifted offset set.
 Duplicate phrase terms ("scan scan") fall out naturally: the same posting
-row joins once per offset and contributes one shifted set per slot.
+row joins once per offset and contributes one shifted set per slot.  The
+positional table holds ONE row per (term_id, doc_id), so each matched
+(query, doc, offset) row is unique and a plain count is the number of
+distinct slots matched — no distinct-aggregate exchange.
 
 At 100 TB: the positional table is ~2-4× the weighted postings (offsets
 instead of one weight), partitioned the same way (term_id-keyed, salting
@@ -106,12 +109,10 @@ def phrase_terms(queries: DataFrame, cfg: IndexConfig | None = None,
     """(query_id, offset, term_id, m) — the phrase's slot table.  ``m`` is
     the phrase length in tokens; a doc must match all m distinct offsets."""
     cfg = cfg or IndexConfig()
-    arr = F.expr(_token_array_sql(content_col, cfg))
-    toks = queries.select(
-        F.col(query_col).alias("query_id"),
-        F.size(arr).alias("m"),
-        F.posexplode(arr).alias("offset", "term"),
-    )
+    arr = _token_array_sql(content_col, cfg)
+    toks = queries.selectExpr(
+        f"`{query_col}` AS query_id", f"size({arr}) AS m",
+        f"posexplode({arr}) AS (offset, term)")
     return toks.select(
         "query_id", "offset", "m", term_id_col(F.col("term")).alias("term_id")
     )
@@ -168,34 +169,26 @@ def phrase_matches(positional: DataFrame, queries: DataFrame,
                    vocab: DataFrame | None = None) -> DataFrame:
     """The ungated phrase match set: (query_id, doc_id, phrase_tf) for every
     doc containing each phrase at least once — :func:`phrase_topk` is this
-    plus the bounded top-k; :func:`phrase_bm25_topk` re-ranks it by BM25."""
+    plus the bounded top-k; :func:`phrase_bm25_topk` re-ranks it by BM25
+    and the query-string phrase gate reads its hits.  ``positional`` holds
+    one row per (term_id, doc_id) (what :func:`positional_postings`
+    builds), so ``count(*)`` per (query, doc) counts distinct matched
+    slots."""
     pt = phrase_terms(queries, cfg)
-    matched = positional.join(
-        F.broadcast(pt), "term_id"
-    ).select(
+    matched = positional.join(F.broadcast(pt), "term_id").selectExpr(
         "query_id", "doc_id", "m", "offset",
-        F.expr("transform(positions, p -> p - offset)").alias("shifted"),
-    )
+        "transform(positions, p -> p - offset) AS shifted")
     if vocab is not None:
         cand = _rarest_slot_candidates(positional, pt, vocab)
         matched = matched.join(cand, ["query_id", "doc_id"], "left_semi")
     g = matched.groupBy("query_id", "doc_id").agg(
-        F.first("m").alias("m"),
-        F.countDistinct("offset").alias("n_off"),
-        F.collect_list("shifted").alias("arrs"),
-    )
-    return (
-        g.filter(F.col("n_off") == F.col("m"))
-        .withColumn(
-            "phrase_tf",
-            F.expr(
-                "size(aggregate(slice(arrs, 2, size(arrs) - 1), "
-                "element_at(arrs, 1), (acc, x) -> array_intersect(acc, x)))"
-            ).cast("long"),
-        )
-        .filter(F.col("phrase_tf") > 0)
-        .select("query_id", "doc_id", "phrase_tf")
-    )
+        F.expr("first(m) AS m"), F.expr("count(1) AS n_off"),
+        F.expr("collect_list(shifted) AS arrs"))
+    return g.filter("n_off = m").selectExpr(
+        "query_id", "doc_id",
+        "CAST(size(aggregate(slice(arrs, 2, size(arrs) - 1), "
+        "element_at(arrs, 1), (acc, x) -> array_intersect(acc, x)))"
+        " AS BIGINT) AS phrase_tf").filter("phrase_tf > 0")
 
 
 def phrase_bm25_topk(index, positional: DataFrame, queries: DataFrame,

@@ -23,12 +23,13 @@ over the must + should + phrase + wildcard-expansion terms a doc matches
 (phrases score like their words — Lucene's default — while ALSO gating
 on adjacency/proximity).
 
-Parsing is PURE COLUMN WORK (three ``regexp_extract_all`` / two
-``regexp_replace`` passes) so a standing-query relation of any size parses
-distributed — no driver loop; :func:`parse_query_string_py` is the
-one-string Python mirror used by tests and by the DuckDB-oracle generator
-(the oracle inlines the parsed clauses as literals, the same way the
-phrase fixtures do).
+Parsing: :func:`parse_query_strings` is PURE COLUMN WORK (three
+``regexp_extract_all`` / two ``regexp_replace`` passes), so a
+standing-query relation of any size parses distributed — no driver loop;
+:func:`parse_query_string_py` is its one-string Python mirror (parity is
+test-gated), used for driver-sized top-k batches and by the
+DuckDB-oracle generator (the oracle inlines the parsed clauses as
+literals, the same way the phrase fixtures do).
 
 Grammar notes (kept deliberately small and regular):
   * ``+``/``-`` bind only at a token's start (after whitespace);
@@ -42,32 +43,37 @@ Grammar notes (kept deliberately small and regular):
     case-folded, values stay case-sensitive (they are data);
   * a lone ``+``/``-`` token is dropped as noise (it can never name a
     clause, and AND mode must not promote it to an unsatisfiable must);
-  * a query may carry up to ``MAX_PHRASES`` phrases (the composite
-    phrase-key stride — ids collide past that; fixtures sit far below).
+  * a query may carry up to ``MAX_SLOTS`` phrases + wildcards together
+    (one bit each in the gate mask); more raise ``ValueError``.
 
-Plan shape: the caller's batch is read ONCE — parsed, then collected into
-a local relation (``createDataFrame(parsed.toArrow())``), so every branch
-below reads a ``LocalTableScan``.  Scoring is
-:func:`~invertedfiles_jl_spark.operators.search._boolean_scored`: one
-postings probe and one (query, doc) aggregate that scores and applies the
-must/must_not gates together, so a batch without required wildcards scans
-postings once.  On top comes one gate per clause family the batch
-carries.  Phrases:
-``positional ⋈ broadcast(phrase slots)`` keyed on a composite (query,
-phrase) id and one (query, doc) count compared against the per-query
-phrase count (Q rows, broadcast).  Required wildcards: the same
-count-vs-needed join over ``_distinct_term_matches``.  Qualifiers: one
-linear pass — candidates ⋈ broadcast(per-query qualifier array) ⋈ meta
-on doc_id, filtered by a ``forall`` over the array.  No gate reads the
-candidates a second time, so the scoring subtree appears once in the
-plan.  A query whose phrase never occurs — or contains an OOV term —
-matches nothing, the conjunctive empty-Q contract.
+Plan shape of :func:`query_string_topk`: the batch is driver-sized by
+contract, so it is collected ONCE over Arrow, parsed in Python and
+re-planned as a one-partition local relation — the SQL parse and the
+flags action never run.  Scoring is
+:func:`~invertedfiles_jl_spark.operators.search._boolean_scored`: one role
+table, one postings probe and one (query_id, doc_id) aggregate that
+scores and applies EVERY gate.  On top of the must terms, each positive
+phrase and each required ``+pre*`` group is a gate SLOT (one bit of a
+long mask): phrase-hit rows (exact adjacency or the sloppy proximity DP)
+join the matched postings rows with their slot bit (a negated phrase's
+row carries the must_not flag instead), and wildcard expansions join the
+role table as should (or must_not) terms carrying their group's bit, so
+the aggregate's ``bit_or`` counts a group once however many expansions a
+doc hits.  Postings are scanned once for every shape, with no
+candidate-keyed gate join.  Qualifiers: one linear pass — candidates ⋈
+broadcast(per-query qualifier array) ⋈ meta on doc_id, filtered by a
+``forall`` over the array.  A query whose phrase never occurs — or
+contains an OOV term — matches nothing, the conjunctive empty-Q contract.
+:func:`query_string_percolate` keeps the SQL parse (its standing relation
+is not driver-sized) and runs the same role table, phrase-hit producer and
+gate aggregate over the doc batch's raw tokens.
 """
 
 from __future__ import annotations
 
 import re
 
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -75,11 +81,14 @@ from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import InvertedIndex
 from invertedfiles_jl_spark.operators.search import (
     _boolean_scored,
-    _distinct_term_matches,
+    _clause_tokens,
+    _gated,
+    _role_table,
     topk,
 )
 
-MAX_PHRASES = 128
+# gate slots per query (phrases + wildcards): one bit each in a long mask
+MAX_SLOTS = 64
 
 # quoted phrase with an optional [+|-] sign directly before the opening
 # quote ('-"..."' is a phrase EXCLUSION, Lucene QueryParser semantics)
@@ -235,9 +244,8 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
     ordered span of ``(m-1)+N`` tokens — the proximity DP
     (:func:`~invertedfiles_jl_spark.operators.positional._chain_ends`)
     with a per-phrase span budget, ordered-only semantics (documented
-    departure from Lucene's transposition-cost model).  Both paths emit
-    (composite qp_id, doc_id) hits; a doc must satisfy EVERY phrase of
-    its query.
+    departure from Lucene's transposition-cost model).  A doc must
+    satisfy EVERY positive phrase of its query and no negated one.
 
     Qualifier gates: ``field:value`` tokens (GitHub-code-search style,
     e.g. ``lang:py``, ``-source:vendored``, ``stars:>100``,
@@ -254,46 +262,26 @@ def query_string_topk(index: InvertedIndex, positional: DataFrame,
 
     ``default_operator``: ``"or"`` (Lucene's default — bare terms are
     optional should clauses) or ``"and"`` (every bare term required, the
-    Elasticsearch ``default_operator: AND`` setting)."""
+    Elasticsearch ``default_operator: AND`` setting).
+
+    A query may carry at most ``MAX_SLOTS`` phrases + wildcards together
+    (ValueError beyond)."""
     _check_operator(default_operator)
     cfg = cfg or index.cfg
-    # the batch is driver-sized by contract: collect it once over Arrow so
-    # every branch below reads a LocalTableScan, not the caller's lineage
-    # (a list-built batch would re-unpickle its rows once per branch)
-    parsed = parse_query_strings(queries, content_col)
-    parsed = parsed.sparkSession.createDataFrame(parsed.toArrow())
-    flags = _clause_flags(parsed)
-    folded, req = _wildcard_setup(index, parsed,
-                                  _fold_clauses(parsed, default_operator),
-                                  flags, default_operator)
-    scored = _boolean_scored(index, folded)
-    if req is not None:
-        n_req, req_terms = req
-        gh = _distinct_term_matches(
-            index,
-            req_terms.select(
-                (F.col("query_id") * MAX_PHRASES + F.col("widx"))
-                .alias("query_id"), "term_id").distinct())
-        # gh holds one row per (wildcard group, doc): a plain count is
-        # the number of distinct groups hit
-        group_hits = (
-            gh.select(
-                F.floor(F.col("query_id") / MAX_PHRASES).alias("query_id"),
-                "doc_id")
-            .groupBy("query_id", "doc_id")
-            .agg(F.count(F.lit(1)).alias("n_wild_hit"))
-        )
-        scored = _required_wildcard_filter(scored, n_req, group_hits)
+    parsed, flags = _parse_batch(queries, content_col, default_operator)
+    if flags["n_quals"] and meta is None:
+        raise ValueError(
+            "query strings carry field:value qualifiers — pass `meta` "
+            "(doc_id + " + ", ".join(qualifier_fields) + ")")
+    scored = _boolean_scored(
+        index, _fold_clauses(parsed, default_operator),
+        slot_terms=(_wildcard_terms(index, parsed, default_operator)
+                    if flags["n_wild"] else None),
+        slot_hits=(_phrase_hits(positional, parsed, cfg, flags)
+                   if flags["n_ph"] else None))
     if flags["n_quals"]:
-        if meta is None:
-            raise ValueError(
-                "query strings carry field:value qualifiers — pass `meta` "
-                "(doc_id + " + ", ".join(qualifier_fields) + ")")
         scored = _qualifier_filter(scored, parsed, meta, qualifier_fields)
-    if flags["n_ph"]:
-        scored = _phrase_filter(scored, parsed, positional, cfg, flags)
-    return topk(scored.select("query_id", "doc_id", "score"),
-                k, "score", ascending=False, rank_round=rank_round)
+    return topk(scored, k, "score", ascending=False, rank_round=rank_round)
 
 
 def _check_operator(default_operator: str) -> None:
@@ -302,8 +290,64 @@ def _check_operator(default_operator: str) -> None:
             f"default_operator must be 'or' or 'and', got {default_operator!r}")
 
 
+_PARSED_SCHEMA = pa.schema(
+    [("query_id", pa.int64())]
+    + [(c, pa.string()) for c in ("must", "should", "must_not")]
+    + [("phrases", pa.list_(pa.string())), ("slops", pa.list_(pa.int32()))]
+    + [(c, pa.list_(pa.string())) for c in (
+        "phrase_signs", "qual_signs", "qual_fields", "qual_values",
+        "wild_signs", "wild_prefixes")])
+
+
+def _parse_batch(queries: DataFrame, content_col: str,
+                 default_operator: str):
+    """``(parsed, flags)`` for a driver-sized batch: ONE Arrow collect of
+    (query_id, content), each string parsed by
+    :func:`parse_query_string_py` (parity with the SQL parser is
+    test-gated) and the gate flags of :func:`_clause_flags` counted in
+    Python.  ``parsed`` — the :func:`parse_query_strings` columns plus
+    ``n_slots`` — is a one-partition local relation, so no plan above it
+    reads the caller's lineage again."""
+    batch = queries.select(
+        "query_id", F.col(content_col).alias("content")).toArrow()
+    rows = [dict(parse_query_string_py(s or ""), query_id=q)
+            for q, s in zip(batch["query_id"].to_pylist(),
+                            batch["content"].to_pylist())]
+    flags = {
+        "n_ph": sum(len(r["phrases"]) for r in rows),
+        "n_sloppy": sum(s > 0 for r in rows for s in r["slops"]),
+        "n_quals": sum(len(r["qual_fields"]) for r in rows),
+        "n_wild": sum(len(r["wild_prefixes"]) for r in rows),
+        "max_slots": max((len(r["phrases"]) + len(r["wild_prefixes"])
+                          for r in rows), default=None),
+    }
+    _check_slots(flags)
+    parsed = queries.sparkSession.createDataFrame(
+        pa.Table.from_pylist(rows, schema=_PARSED_SCHEMA)).coalesce(1)
+    return _with_slots(parsed, default_operator), flags
+
+
+def _check_slots(flags) -> None:
+    if (flags["max_slots"] or 0) > MAX_SLOTS:
+        raise ValueError(
+            f"a query carries {flags['max_slots']} phrases + wildcards; "
+            f"at most {MAX_SLOTS} gate slots fit one query")
+
+
+def _with_slots(parsed: DataFrame, default_operator: str) -> DataFrame:
+    """``parsed`` + ``n_slots``: the gate slots a doc must fill — one per
+    positive phrase and one per required wildcard group (``+pre*``; in
+    AND mode bare wildcards too).  Slot bits: phrase ``i`` → bit ``i``,
+    wildcard ``j`` → bit ``size(phrases) + j``."""
+    req = "s != '-'" if default_operator == "and" else "s = '+'"
+    return parsed.selectExpr(
+        "*", "CAST(size(filter(phrase_signs, s -> s != '-')) + "
+        f"size(filter(wild_signs, s -> {req})) AS BIGINT) AS n_slots")
+
+
 def _fold_clauses(parsed: DataFrame, default_operator: str) -> DataFrame:
-    """(query_id, must, should, must_not) scoring/gating clause relation.
+    """(query_id, n_slots, must, should, must_not) scoring/gating clause
+    relation.
 
     POSITIVE phrases rank like their words: their text folds into the
     should field (a negated phrase is pure exclusion — its words never
@@ -311,141 +355,57 @@ def _fold_clauses(parsed: DataFrame, default_operator: str) -> DataFrame:
     folds the BARE terms into must instead — every unmarked term becomes
     required; phrase words stay should-only (the phrase is already a gate
     of its own)."""
-    pos_ph = F.expr(
-        "array_join(transform(filter(arrays_zip(phrases, phrase_signs), "
-        "x -> x.phrase_signs != '-'), x -> x.phrases), ' ')")
+    pos_ph = ("array_join(transform(filter(arrays_zip(phrases, phrase_signs),"
+              " x -> x.phrase_signs != '-'), x -> x.phrases), ' ')")
     if default_operator == "and":
-        return parsed.select(
-            "query_id", "must_not",
-            F.concat_ws(" ", F.col("must"), F.col("should")).alias("must"),
-            pos_ph.alias("should"),
-        )
-    return parsed.select(
-        "query_id", "must", "must_not",
-        F.concat_ws(" ", F.col("should"), pos_ph).alias("should"),
-    )
+        return parsed.selectExpr(
+            "query_id", "n_slots", "must_not",
+            "concat_ws(' ', must, should) AS must", f"{pos_ph} AS should")
+    return parsed.selectExpr(
+        "query_id", "n_slots", "must", "must_not",
+        f"concat_ws(' ', should, {pos_ph}) AS should")
 
 
 def _clause_flags(parsed: DataFrame):
-    """ONE tiny-relation driver action deciding which gate families a
-    batch needs (the query batch is driver-sized by contract, same as
-    the proximity DP's own max(m) action).  A batch without phrases /
-    qualifiers / wildcards keeps its physical plan free of the
-    corresponding subtree — no positional scan, no meta join, no vocab
-    expansion — instead of dragging empty-but-planned gate joins through
-    every execution."""
+    """ONE driver action over a distributed parsed relation deciding which
+    gate families it needs (:func:`_parse_batch` counts the same flags in
+    Python for a driver-sized batch).  Absent families add no subtree —
+    no positional scan, no meta join, no vocab expansion."""
     return parsed.agg(
         F.sum(F.size("phrases")).alias("n_ph"),
         F.sum(F.expr("size(filter(slops, s -> s > 0))")).alias("n_sloppy"),
-        F.sum(F.expr(
-            "size(filter(phrase_signs, s -> s = '-'))")).alias("n_ph_neg"),
         F.sum(F.size("qual_fields")).alias("n_quals"),
         F.sum(F.size("wild_prefixes")).alias("n_wild"),
-        F.sum(F.expr(
-            "size(filter(wild_signs, s -> s = '+'))")).alias("n_wild_plus"),
-        F.sum(F.expr(
-            "size(filter(wild_signs, s -> s = ''))")).alias("n_wild_bare"),
-    ).first()
+        F.max(F.size("phrases") + F.size("wild_prefixes")).alias("max_slots"),
+    ).first().asDict()
 
 
-def _wildcard_parts(index: InvertedIndex, parsed: DataFrame,
-                    default_operator: str):
+def _wildcard_terms(index: InvertedIndex, parsed: DataFrame,
+                    default_operator: str) -> DataFrame:
     """Expand ``prefix*`` wildcards against the index vocabulary (ONE
     broadcast theta join per batch — :func:`search.expand_prefixes`'
-    shape) and split by sign:
-
-    Returns ``(wild_should, wild_not, n_req, req_terms)``:
-    * ``wild_should`` — (query_id, wild_should): space-joined sorted
-      expansion terms of the non-negated wildcards, appended to the
-      should field so expansions SCORE like ordinary words (one qtf
-      each);
-    * ``wild_not`` — (query_id, wild_not): expansion terms of negated
-      wildcards, appended to must_not (any match excludes — exact Lucene
-      semantics for ``-pre*``);
-    * ``n_req`` — (query_id, n_req_wilds) counted from the PARSE, so an
-      OOV required prefix (zero expansions) makes its query unsatisfiable
-      (conjunctive empty-Q contract);
-    * ``req_terms`` — (query_id, widx, term, term_id) of the REQUIRED
-      wildcards (``+pre*``; in AND mode bare wildcards too): the caller
-      gates candidates on ≥ 1 match per (query, wildcard) group.
-
-    Expansion is vocab-snapshot-bounded in both search and percolation —
-    a prefix only ever means "the index's known terms starting with it".
-    """
-    wq = parsed.select(
-        "query_id",
-        F.posexplode(F.arrays_zip(
-            F.col("wild_signs").alias("sign"),
-            F.col("wild_prefixes").alias("prefix"))).alias("widx", "w"),
-    ).select("query_id", "widx", "w.sign", "w.prefix")
-    if default_operator == "and":
-        wq = wq.withColumn(
-            "sign", F.when(F.col("sign") == "", "+").otherwise(F.col("sign")))
-    exp = index.vocab.select("term", "term_id").join(
-        F.broadcast(wq), F.col("term").startswith(F.col("prefix")))
-    wild_should = (
-        exp.filter(F.col("sign") != "-").groupBy("query_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term")))
-             .alias("wild_should"))
-    )
-    wild_not = (
-        exp.filter(F.col("sign") == "-").groupBy("query_id")
-        .agg(F.concat_ws(" ", F.sort_array(F.collect_list("term")))
-             .alias("wild_not"))
-    )
-    n_req = wq.filter(F.col("sign") == "+").groupBy("query_id").agg(
-        F.count("*").cast("long").alias("n_req_wilds"))
-    req_terms = exp.filter(F.col("sign") == "+").select(
-        "query_id", "widx", "term", "term_id")
-    return wild_should, wild_not, n_req, req_terms
-
-
-def _fold_wildcards(folded: DataFrame, wild_should: DataFrame,
-                    wild_not: DataFrame) -> DataFrame:
-    """Append the expansion strings to the clause relation (concat_ws
-    skips the NULLs of queries without wildcards).  Both expansion
-    relations aggregate to ≤ one row per query — broadcast, so the tiny
-    clause relation never shuffles."""
-    return (
-        folded.join(F.broadcast(wild_should), "query_id", "left")
-        .join(F.broadcast(wild_not), "query_id", "left")
-        .select(
-            "query_id", "must",
-            F.concat_ws(" ", "should", "wild_should").alias("should"),
-            F.concat_ws(" ", "must_not", "wild_not").alias("must_not"),
-        )
-    )
-
-
-def _wildcard_setup(index: InvertedIndex, parsed: DataFrame,
-                    folded: DataFrame, flags, default_operator: str):
-    """Shared wildcard wiring for the forward and percolation paths:
-    expand, fold the expansion strings into the clause relation, and
-    decide whether a required-group gate is needed.  Returns
-    ``(folded, req)`` with ``req = (n_req, req_terms)`` or ``None``."""
-    if not flags["n_wild"]:
-        return folded, None
-    ws, wn, n_req, req_terms = _wildcard_parts(index, parsed,
-                                               default_operator)
-    folded = _fold_wildcards(folded, ws, wn)
-    n_required = flags["n_wild_plus"] + (
-        flags["n_wild_bare"] if default_operator == "and" else 0)
-    return folded, ((n_req, req_terms) if n_required else None)
-
-
-def _required_wildcard_filter(cand: DataFrame, n_req: DataFrame,
-                              group_hits: DataFrame) -> DataFrame:
-    """Gate candidates on required-wildcard group coverage:
-    ``group_hits`` = (query_id, doc_id, n_wild_hit) distinct satisfied
-    groups; every parsed ``+pre*`` group must be hit."""
-    zero = F.lit(0).cast("long")
-    return (
-        cand.join(F.broadcast(n_req), "query_id", "left")
-        .join(group_hits, ["query_id", "doc_id"], "left")
-        .filter(F.coalesce("n_req_wilds", zero) ==
-                F.coalesce("n_wild_hit", zero))
-        .drop("n_req_wilds", "n_wild_hit")
-    )
+    shape) into role-table token rows (query_id, n_slots, role, term,
+    slot_mask): expansions of a negated wildcard are must_not terms (any
+    match excludes — Lucene's ``-pre*``), all others score as should
+    terms (one qtf per expansion), and those of a REQUIRED wildcard
+    (``+pre*``; in AND mode bare ones too) carry their group's slot bit,
+    so a doc fills the slot by matching any expansion.  A required prefix
+    without expansions leaves its slot unfillable (the conjunctive
+    empty-Q contract).  Expansion is vocab-snapshot-bounded in search and
+    percolation alike — a prefix only ever means "the index's known terms
+    starting with it"."""
+    sign = "w.wild_signs"
+    req = f"{sign} != '-'" if default_operator == "and" else f"{sign} = '+'"
+    wq = parsed.selectExpr(
+        "query_id", "n_slots", "size(phrases) AS n_ph",
+        "posexplode(arrays_zip(wild_signs, wild_prefixes)) AS (widx, w)",
+    ).selectExpr(
+        "query_id", "n_slots", "w.wild_prefixes AS prefix",
+        f"IF({sign} = '-', 2, 1) AS role",
+        f"IF({req}, shiftleft(1L, n_ph + widx), 0L) AS slot_mask")
+    return index.vocab.select("term").join(
+        F.broadcast(wq), F.col("term").startswith(F.col("prefix"))
+    ).select("query_id", "n_slots", "role", "term", "slot_mask")
 
 
 def _qualifier_filter(cand: DataFrame, parsed: DataFrame, meta: DataFrame,
@@ -480,36 +440,37 @@ def _qualifier_filter(cand: DataFrame, parsed: DataFrame, meta: DataFrame,
     )
 
 
-def _phrase_filter(cand: DataFrame, parsed: DataFrame, positional: DataFrame,
-                   cfg: IndexConfig, flags) -> DataFrame:
-    """Filter candidate rows by the per-phrase adjacency/proximity gates:
-    a doc must satisfy EVERY positive phrase of its query and NO negated
-    one (``-"..."`` — Lucene's phrase exclusion)."""
+def _phrase_hits(positional: DataFrame, parsed: DataFrame,
+                 cfg: IndexConfig, flags) -> DataFrame:
+    """Phrase gate-hit rows (query_id, doc_id, slot_mask, is_not): one row
+    per (phrase, doc) where the phrase occurs — exact phrases by
+    adjacency, sloppy ones (``~N``) by the proximity DP within their span
+    budget.  A positive phrase's row sets its slot bit, a negated one's
+    sets ``is_not``.  Each phrase is keyed by a composite id
+    ``query_id·2·MAX_SLOTS + i`` (``+ MAX_SLOTS`` when negated), decoded
+    arithmetically — no join back to the phrase table."""
     from invertedfiles_jl_spark.functions.tokenize import tokens_sql
     from invertedfiles_jl_spark.operators.positional import (
         _chain_ends,
         phrase_matches,
     )
 
-    pq = parsed.select(
-        "query_id", F.posexplode("phrases").alias("pidx", "content"),
-        F.col("slops"), F.col("phrase_signs"),
-    ).select(
-        (F.col("query_id") * MAX_PHRASES + F.col("pidx")).alias("query_id"),
-        "content",
-        F.element_at("slops", F.col("pidx") + 1).alias("slop"),
-        F.element_at("phrase_signs", F.col("pidx") + 1).alias("sign"),
-    )
-    qp_signs = pq.select(F.col("query_id").alias("qp_id"), "sign")
-    exact = pq.filter(F.col("slop") == 0).select("query_id", "content")
-    sloppy = pq.filter(F.col("slop") > 0)
+    stride = 2 * MAX_SLOTS
+    pq = parsed.selectExpr(
+        "query_id", "posexplode(arrays_zip(phrases, slops, phrase_signs))"
+        " AS (pidx, p)",
+    ).selectExpr(
+        f"query_id * {stride} + pidx"
+        f" + IF(p.phrase_signs = '-', {MAX_SLOTS}, 0) AS query_id",
+        "p.phrases AS content", "p.slops AS slop")
     # each phrase family contributes its subtree only when present — an
     # all-sloppy batch skips the exact intersection plan and vice versa
     hits = None
     if flags["n_ph"] - flags["n_sloppy"]:
-        hits = phrase_matches(positional, exact, cfg).select(
-            "query_id", "doc_id")
+        hits = phrase_matches(positional, pq.filter("slop = 0"),
+                              cfg).select("query_id", "doc_id")
     if flags["n_sloppy"]:
+        sloppy = pq.filter("slop > 0")
         budgets = sloppy.select(
             "query_id",
             (F.size(F.expr(tokens_sql("content", cfg))) - 1
@@ -526,34 +487,13 @@ def _phrase_filter(cand: DataFrame, parsed: DataFrame, positional: DataFrame,
             .select("query_id", "doc_id")
         )
         hits = shits if hits is None else hits.unionByName(shits)
-    # hits hold one row per (phrase, doc), so plain conditional counts
-    # are the distinct phrases satisfied / excluded
-    hit = (
-        hits.select(
-            F.floor(F.col("query_id") / MAX_PHRASES).alias("query_id"),
-            F.col("query_id").alias("qp_id"), "doc_id")
-        .join(F.broadcast(qp_signs), "qp_id")
-        .groupBy("query_id", "doc_id")
-        .agg(
-            F.sum(F.when(F.col("sign") != "-", 1).otherwise(0))
-            .cast("long").alias("n_ph_hit"),
-            F.sum(F.when(F.col("sign") == "-", 1).otherwise(0))
-            .cast("long").alias("n_neg_ph_hit"),
-        )
-    )
-    need = parsed.select(
-        "query_id",
-        F.expr("size(filter(phrase_signs, s -> s != '-'))")
-        .alias("n_phrases"))
-    zero = F.lit(0).cast("long")
-    return (
-        cand.join(F.broadcast(need), "query_id", "left")
-        .join(hit, ["query_id", "doc_id"], "left")
-        .filter((F.coalesce("n_phrases", zero) ==
-                 F.coalesce("n_ph_hit", zero)) &
-                (F.coalesce("n_neg_ph_hit", zero) == zero))
-        .drop("n_phrases", "n_ph_hit", "n_neg_ph_hit")
-    )
+    return hits.selectExpr(
+        f"floor(query_id / {stride}) AS query_id", "doc_id",
+        f"CAST(pmod(query_id, {stride}) AS INT) AS slot",
+    ).selectExpr(
+        "query_id", "doc_id",
+        f"IF(slot < {MAX_SLOTS}, shiftleft(1L, slot), 0L) AS slot_mask",
+        f"CAST(slot >= {MAX_SLOTS} AS INT) AS is_not")
 
 
 def query_string_percolate(index: InvertedIndex, standing: DataFrame,
@@ -580,11 +520,13 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
     :func:`~invertedfiles_jl_spark.streaming.serve.percolate` over the
     query's scoring terms (index-OOV terms gate but score 0).
 
-    Scale shape: the standing relation broadcasts (same stream-static
-    contract as the streaming server); per-batch work is the matched
-    occurrence rows, the batch's own positional build (only when any
-    standing query carries a phrase), and candidate-keyed gate joins —
-    the index contributes vocab stats only, no posting lists."""
+    Scale shape: the standing relation's role table broadcasts (same
+    stream-static contract as the streaming server); per-batch work is
+    the doc batch's distinct tokens ⋈ role table — the same role table
+    and gate aggregate as :func:`query_string_topk`, over raw doc tokens
+    instead of posting lists — plus the batch's own positional build
+    (only when a standing query carries a phrase); the index contributes
+    vocab stats only."""
     from invertedfiles_jl_spark.functions.tokenize import exploded_terms
     from invertedfiles_jl_spark.operators.positional import (
         positional_postings,
@@ -593,84 +535,43 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
 
     _check_operator(default_operator)
     cfg = cfg or index.cfg
-    parsed = parse_query_strings(standing, "content")
+    parsed = _with_slots(parse_query_strings(standing, "content"),
+                         default_operator)
     flags = _clause_flags(parsed)
+    _check_slots(flags)
     if flags["n_quals"] and not qualifier_fields:
         raise ValueError(
             "standing query strings carry field:value qualifiers — pass "
             "qualifier_fields naming the doc metadata columns")
-    folded, req = _wildcard_setup(index, parsed,
-                                  _fold_clauses(parsed, default_operator),
-                                  flags, default_operator)
-
-    sq = folded.select(
-        "query_id",
-        F.concat_ws(" ", F.col("must"), F.col("should")).alias("content"))
+    toks = _clause_tokens(_fold_clauses(parsed, default_operator), cfg)
+    if flags["n_wild"]:
+        toks = toks.unionByName(
+            _wildcard_terms(index, parsed, default_operator))
+    roles = _role_table(toks).drop("term_id")
+    # scoring text: each scoring term qtf times (a term re-tokenizes to
+    # itself), so percolate's qtf equals the role table's
+    sq = roles.filter(F.col("qtf") > 0).groupBy("query_id").agg(
+        F.concat_ws(" ", F.flatten(F.collect_list(
+            F.array_repeat("term", F.col("qtf").cast("int"))))
+        ).alias("content"))
     pscore = percolate(index, sq, docs, require_all=False,
                        content_col=content_col)
 
-    # raw-token clause gates: doc term sets vs the broadcast clause tokens
     dt = exploded_terms(docs, "doc_id", "doc_id", content_col, cfg).distinct()
-
-    # candidate pairs come from RAW tokens (disjunctive: ≥ 1 scoring
-    # term), so a standing query whose terms are all index-OOV still
-    # fires on a doc that literally contains one — the raw-token contract
-    # the docstring promises.  The vocab-scored pairs (every one also a
-    # raw match) then attach score/n_matched, defaulting to 0.
-    st = exploded_terms(sq, "query_id", "query_id", "content",
-                        cfg).distinct()
-    cand = dt.join(F.broadcast(st), "term").select(
-        "doc_id", "query_id").distinct()
+    rows = dt.join(F.broadcast(roles), "term")
+    if flags["n_ph"]:
+        pos = positional_postings(docs, cfg, "doc_id", content_col)
+        rows = rows.unionByName(_phrase_hits(pos, parsed, cfg, flags),
+                                allowMissingColumns=True)
     zero_l = F.lit(0).cast("long")
     per = (
-        cand.join(pscore, ["doc_id", "query_id"], "left")
+        _gated(rows).join(pscore, ["doc_id", "query_id"], "left")
         .select("doc_id", "query_id",
                 F.coalesce("n_matched", zero_l).alias("n_matched"),
                 F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
     )
-
-    def clause_tokens(col):
-        # (query_id, term) — exploded_terms' doc_out slot carries the
-        # query id here
-        return exploded_terms(
-            folded.select("query_id", col), "query_id", "query_id", col, cfg
-        ).distinct()
-
-    mt = clause_tokens("must")
-    n_must = mt.groupBy("query_id").agg(
-        F.countDistinct("term").cast("long").alias("n_must"))
-    musthit = (
-        dt.join(F.broadcast(mt), "term")
-        .groupBy("doc_id", "query_id")
-        .agg(F.countDistinct("term").cast("long").alias("n_must_hit"))
-    )
-    zero = F.lit(0).cast("long")
-    per = (
-        per.join(F.broadcast(n_must), "query_id", "left")
-        .join(musthit, ["doc_id", "query_id"], "left")
-        .filter(F.coalesce("n_must", zero) == F.coalesce("n_must_hit", zero))
-        .drop("n_must", "n_must_hit")
-    )
-    nt = clause_tokens("must_not")
-    excluded = dt.join(F.broadcast(nt), "term").select(
-        "doc_id", "query_id").distinct()
-    per = per.join(excluded, ["doc_id", "query_id"], "left_anti")
-
-    if req is not None:
-        n_req, req_terms = req
-        wt = req_terms.select("query_id", "widx", "term").distinct()
-        group_hits = (
-            dt.join(F.broadcast(wt), "term")
-            .groupBy("doc_id", "query_id")
-            .agg(F.countDistinct("widx").cast("long").alias("n_wild_hit"))
-        )
-        per = _required_wildcard_filter(per, n_req, group_hits)
-
     if flags["n_quals"]:
         per = _qualifier_filter(
             per, parsed, meta if meta is not None else docs,
             qualifier_fields)
-    if flags["n_ph"]:
-        pos = positional_postings(docs, cfg, "doc_id", content_col)
-        per = _phrase_filter(per, parsed, pos, cfg, flags)
     return per.select("query_id", "doc_id", "n_matched", "score")

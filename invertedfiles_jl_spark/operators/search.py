@@ -398,9 +398,9 @@ def _distinct_term_matches(index: InvertedIndex,
                            expanded: DataFrame) -> DataFrame:
     """(query_id, doc_id, n_terms) — distinct matched terms per doc for an
     expanded (query_id, term_id) term set: the shared engine under prefix,
-    fuzzy, wildcard and regex search and the query-string required-wildcard
-    gate.  Broadcast the expansion into the postings join (fixed-width key,
-    pruned scan), explode matched lists only, partial+final distinct-count."""
+    fuzzy, wildcard and regex search.  Broadcast the expansion into the
+    postings join (fixed-width key, pruned scan), explode matched lists
+    only, partial+final distinct-count."""
     postings = index.postings.select("term_id", stored_ids_col(index.postings))
     m = read_postings(postings.join(F.broadcast(expanded), "term_id"),
                       "query_id", "term_id", weights=False)
@@ -564,53 +564,90 @@ def boolean_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
 
 def _boolean_scored(index: InvertedIndex, queries: DataFrame,
                     must_col: str = "must", should_col: str = "should",
-                    must_not_col: str = "must_not") -> DataFrame:
+                    must_not_col: str = "must_not",
+                    slot_terms: DataFrame | None = None,
+                    slot_hits: DataFrame | None = None) -> DataFrame:
     """The boolean gate + BM25 score WITHOUT the top-k: (query_id, doc_id,
     score) — shared by :func:`boolean_topk` and the query-string parser
     (operators/querystring.query_string_topk).
 
-    One read of ``queries`` builds a role table (query_id, term_id, qtf,
-    is_must, is_not): ``qtf`` counts the term's must + should occurrences
-    (0 for a must_not-only term).  One matched-postings probe and one
-    (query_id, doc_id) aggregate then yield the score, the must terms hit
-    and whether any must_not term hit; a doc is kept when it hits all
-    ``n_must`` terms and no must_not term.  ``n_must`` is a per-query
-    window over the role table, so it counts the RAW distinct must terms
-    before the vocab join drops OOV ones (an OOV must term is
-    unsatisfiable, an OOV must_not term excludes nothing) without a second
-    read of the batch."""
+    One read of the (driver-sized) batch builds the role table
+    (:func:`_role_table`); one matched-postings probe and one (query_id,
+    doc_id) aggregate (:func:`_gated`) then yield the score and apply
+    every gate.  The query-string parser adds gate SLOTS: ``queries`` may
+    carry ``n_slots`` (slots each doc must fill on top of the must terms),
+    ``slot_terms`` (query_id, n_slots, role, term, slot_mask) token rows
+    join the role table (required-wildcard expansions carry their group's
+    bit) and ``slot_hits`` (query_id, doc_id, slot_mask, is_not) rows
+    (phrase hits) join the matched postings rows ahead of the aggregate.
+    The batch is coalesced to one partition, so the role group-by and the
+    ``n_must`` window plan no exchange."""
+    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    toks = _clause_tokens(queries, index.cfg,
+                          (must_col, should_col, must_not_col))
+    if slot_terms is not None:
+        toks = toks.unionByName(slot_terms)
+    m = _matched(index, _with_idf(index, _role_table(toks.coalesce(1))))
+    if slot_hits is not None:
+        m = m.unionByName(slot_hits, allowMissingColumns=True)
+    return _gated(m, F.expr("sum(qtf * idf * weight) AS score"))
+
+
+def _clause_tokens(queries: DataFrame, cfg: IndexConfig,
+                   clause_cols=("must", "should", "must_not")) -> DataFrame:
+    """(query_id, n_slots, role, term, slot_mask) token rows of the
+    must / should / must_not clause strings (role 0 / 1 / 2; empty or NULL
+    fields contribute nothing).  ``n_slots`` is the batch's column when
+    present, else 0; clause tokens fill no slot (mask 0)."""
     from invertedfiles_jl_spark.functions.tokenize import exploded_terms
 
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    n_slots = "n_slots" if "n_slots" in queries.columns else "0"
+    texts = ", ".join(f"coalesce(`{c}`, '')" for c in clause_cols)
+    clauses = queries.selectExpr(
+        "query_id", f"CAST({n_slots} AS BIGINT) AS n_slots",
+        f"posexplode(array({texts})) AS (role, text)")
+    return exploded_terms(clauses, "query_id", "query_id", "text", cfg,
+                          keep=("n_slots", "role")).selectExpr(
+        "*", "0L AS slot_mask")
 
-    # role 0 = must, 1 = should, 2 = must_not, folded into a composite
-    # (query, role) key so the clauses tokenize like every query relation
-    clauses = queries.select("query_id", F.posexplode(F.array(*[
-        F.coalesce(F.col(c), F.lit(""))
-        for c in (must_col, should_col, must_not_col)])).alias("role", "text")
-    ).select((F.col("query_id") * 3 + F.col("role")).alias("key"), "text")
-    key = F.col("key")
-    role = F.pmod(key, F.lit(3))
-    roles = (
-        exploded_terms(clauses, "key", "key", "text", index.cfg)
-        .groupBy(F.floor(key / 3).alias("query_id"), "term")
-        .agg(F.count(F.when(role < 2, 1)).alias("qtf"),
-             F.max((role == 0).cast("int")).alias("is_must"),
-             F.max((role == 2).cast("int")).alias("is_not"))
-        .withColumn("term_id", term_id_col(F.col("term")))
-        .withColumn("n_must", F.sum("is_must").over(
-            Window.partitionBy("query_id")))
-    )
-    m = _matched(index, _with_idf(index, roles))
+
+def _role_table(toks: DataFrame) -> DataFrame:
+    """(query_id, term, term_id, qtf, is_must, is_not, slot_mask, n_must)
+    — one row per distinct (query, term) of the token rows: ``qtf``
+    counts its must + should occurrences (0 for a must_not-only term),
+    ``slot_mask`` ORs the slots it fills.  ``n_must`` = the query's RAW
+    distinct must terms + its ``n_slots``, a per-query window counted
+    before any vocab join, so an OOV must term (or a slot nothing can
+    fill) is unsatisfiable and an OOV must_not term excludes nothing."""
     return (
-        m.groupBy("query_id", "doc_id").agg(
-            F.sum(F.col("qtf") * F.col("idf") * F.col("weight")).alias("score"),
-            F.sum("is_must").alias("n_must_hit"),
-            F.max("is_not").alias("n_not"),
-            F.max("n_must").alias("n_must"))
-        .filter((F.col("n_must_hit") == F.col("n_must")) &
-                (F.col("n_not") == 0))
-        .select("query_id", "doc_id", "score")
+        toks.groupBy("query_id", "term").agg(
+            F.expr("count(IF(role < 2, 1, NULL)) AS qtf"),
+            F.expr("max(CAST(role = 0 AS INT)) AS is_must"),
+            F.expr("max(CAST(role = 2 AS INT)) AS is_not"),
+            F.expr("bit_or(slot_mask) AS slot_mask"),
+            F.expr("max(n_slots) AS n_slots"))
+        .select("query_id", "term", "qtf", "is_must", "is_not", "slot_mask",
+                term_id_col(F.col("term")).alias("term_id"),
+                F.expr("sum(is_must) OVER (PARTITION BY query_id) + n_slots"
+                       " AS n_must"))
+    )
+
+
+def _gated(rows: DataFrame, *aggs: Column) -> DataFrame:
+    """The one gate aggregate over (query_id, doc_id) evidence rows that
+    carry role-table columns (matched postings, raw doc tokens, slot hits):
+    ``aggs`` plus a doc kept iff it fills all ``n_must`` (must terms hit +
+    distinct slot bits set), hits no must_not term or negated slot, and
+    matches at least one scoring term (qtf > 0 — slot-hit rows carry no
+    qtf, so they never make a candidate on their own)."""
+    return (
+        rows.groupBy("query_id", "doc_id").agg(
+            *aggs,
+            F.expr("sum(is_must) + bit_count(bit_or(slot_mask)) AS n_hit"),
+            F.expr("max(is_not) AS n_not"), F.expr("max(n_must) AS n_must"),
+            F.expr("max(qtf) AS max_qtf"))
+        .filter("n_hit = n_must AND n_not = 0 AND max_qtf > 0")
+        .drop("n_hit", "n_not", "n_must", "max_qtf")
     )
 
 

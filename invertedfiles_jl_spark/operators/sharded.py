@@ -55,6 +55,7 @@ from __future__ import annotations
 from collections import Counter
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
@@ -373,8 +374,11 @@ def _serve(index: InvertedIndex, rows: list, gather, emit, score_col: str,
         # construction and survives the narrow broadcast join below
         sharded = shard_postings(index, n_shards)
         assume_colocated = True
-    # JVM-side semi-join prune: only matched term rows reach Arrow.
-    qterms = spark.createDataFrame([(t,) for t in qmap], "term_id long")
+    # JVM-side semi-join prune: only matched term rows reach Arrow.  An
+    # Arrow-built relation is a LocalTableScan; a list-built one would be a
+    # Python RDD, one Python-worker stage per batch in the broadcast
+    qterms = spark.createDataFrame(
+        pa.table({"term_id": pa.array(list(qmap), pa.int64())}))
     pruned = sharded.join(F.broadcast(qterms), "term_id", "left_semi")
     schema = f"query_id long, doc_id long, {score_col} double"
     if assume_colocated:

@@ -92,6 +92,40 @@ def test_delete_compressed_roundtrip(corpus, spark, delete_ids, index):
     assert got == want
 
 
+def test_delete_compressed_decodes_once(corpus):
+    """Dropping the lists a delete empties must not copy the Python decode
+    into a pushed-down filter: the optimized plan decodes ids_vb once."""
+    cidx = build_index(corpus, IndexConfig(weighting="bm25", compress=True))
+    plan = delete_documents(cidx, [0]).postings._jdf.queryExecution(
+        ).optimizedPlan().toString()
+    assert plan.count("_dec(") == 1, plan
+
+
+def test_delete_compressed_rows_equal_plain(corpus, delete_ids, index):
+    """A compressed delete keeps exactly the rows of a plain one: the same
+    lists (emptied ones dropped) with the same entries and metadata."""
+    from invertedfiles_jl_spark.operators.search import decode_ids
+
+    cidx = build_index(corpus, IndexConfig(weighting="bm25",
+                                           weight_dtype="double",
+                                           compress=True))
+    cols = ["term_id", "salt", "df_part", "doc_ids", "weights",
+            "max_weight", "block_max"]
+
+    def rows(postings):
+        return sorted(tuple(tuple(v) if isinstance(v, list) else v
+                            for v in r)
+                      for r in postings.select(*cols).collect())
+
+    ids = sorted(r.doc_id for r in corpus.select("doc_id").collect())
+    # the second delete keeps one doc, so it empties lists (the drop path)
+    for dels in (delete_ids, ids[1:]):
+        got = rows(decode_ids(delete_documents(cidx, dels).postings))
+        want = rows(delete_documents(index, dels).postings)
+        assert got == want and want
+    assert len(want) < index.postings.count()
+
+
 def test_delete_accepts_dataframe_and_list(index, corpus, delete_ids):
     df_dels = corpus.filter(F.col("doc_id") % 7 == 3).select("doc_id")
     a = sorted(tuple(r) for r in

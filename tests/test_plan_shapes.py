@@ -153,6 +153,9 @@ def test_plan_c_colocated_single_wide_exchange(spark, served):
     if rest:  # cache lineage exchanges live under the InMemoryRelation only
         assert "InMemoryRelation" in plan
     assert plan.count("WindowGroupLimit") >= 2, plan
+    # the semi-join's query-term relation is Arrow-built (a LocalTableScan):
+    # a list-built one is a Python RDD, a Python-worker stage per batch
+    assert "ExistingRDD" not in plan, plan
 
 
 def test_plan_c_results_still_correct(spark, served):
@@ -502,11 +505,12 @@ def test_query_string_gate_joins_candidate_keyed(spark, served, documents):
 
 
 def test_boolean_scoring_scans_postings_once(spark, served, documents):
-    """Must and must_not fold into the scoring aggregate: a query string
-    with terms, +must, -must_not and a phrase scans postings once; a
-    required wildcard adds exactly one scan (its group-coverage gate);
-    a boolean_topk batch scans postings once and reads its list-built
-    batch once (n_must is a window, not a second aggregate of it)."""
+    """Every gate folds into the scoring aggregate: a query string with
+    terms, +must, -must_not and a phrase scans postings once, and so does
+    one with a required wildcard (its group is a slot bit carried by the
+    expansion terms); a boolean_topk batch scans postings once and reads
+    its list-built batch once (n_must is a window, not a second aggregate
+    of it)."""
     from pyspark.sql import functions as F
 
     from invertedfiles_jl_spark.operators.positional import (
@@ -529,11 +533,90 @@ def test_boolean_scoring_scans_postings_once(spark, served, documents):
 
     mixed = 'merge +table -row "fast query"'
     assert n_scans(mixed) == 1
-    assert n_scans(mixed + " +sc*") == 2
+    assert n_scans(mixed + " +sc*") == 1
     bq = boolean_topk(idx, boolean_df(spark), k=10)
     assert len(postings_scan_schemas(formatted_plan(bq))) == 1
     executed = bq._jdf.queryExecution().executedPlan().toString()
     assert executed.count("ExistingRDD") == 1
+
+
+def _subtree(plan: str, marker: str) -> list[str]:
+    """The tree-string lines below the first node whose line holds
+    ``marker`` (deeper ``+-``/``:-`` indentation, up to its next
+    sibling)."""
+    def depth(ln):
+        m = re.search(r"[+:]- ", ln)
+        return m.start() if m else -1
+
+    lines = plan.splitlines()
+    i = next(i for i, ln in enumerate(lines) if marker in ln)
+    out = []
+    for ln in lines[i + 1:]:
+        if depth(ln) <= depth(lines[i]):
+            break
+        out.append(ln)
+    return out
+
+
+def test_query_string_gates_fold_into_one_aggregate(spark, served,
+                                                    documents):
+    """A batch carrying terms, +must, -must_not, a phrase and a required
+    wildcard: the phrase hits and the wildcard group join the one
+    (query_id, doc_id) scoring aggregate — the only other (query_id,
+    doc_id) aggregate is the phrase adjacency itself, with no separate
+    phrase-hit count and no group-coverage aggregate — and the role table
+    below the n_must window reads the one-partition batch without any
+    shuffle."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.positional import (
+        positional_postings,
+    )
+    from invertedfiles_jl_spark.operators.querystring import (
+        query_string_topk,
+    )
+
+    idx, _ = served
+    pos = positional_postings(
+        documents.select("doc_id", F.col("text").alias("content")))
+    q = spark.createDataFrame([(1, 'merge +table -row "fast query" +sc*')],
+                              "query_id long, content string")
+    plan = query_string_topk(idx, pos, q, k=10)._jdf.queryExecution(
+        ).executedPlan().toString()
+    qd_aggs = [ln for ln in plan.splitlines()
+               if re.search(r"Aggregate\(keys=\[query_id#\d+L, doc_id#", ln)]
+    assert qd_aggs, plan
+    for ln in qd_aggs:
+        assert "bit_or(" in ln or "collect_list(" in ln, ln
+    role_rows = _subtree(plan, "Window [sum(is_must")
+    assert any("LocalTableScan" in ln for ln in role_rows), plan
+    assert not [ln for ln in role_rows
+                if re.search(r"(?<!Broadcast)Exchange ", ln)], plan
+
+
+def test_phrase_match_counts_slots_without_distinct(spark, documents,
+                                                    tmp_path):
+    """Positional postings hold one row per (term_id, doc_id), so the
+    phrase aggregate counts matched slots with count(*): over a persisted
+    positional table the phrase top-k plans two shuffles (the (query,
+    doc) aggregate and the rank window), not a third for a distinct
+    count."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.positional import (
+        phrase_topk,
+        positional_postings,
+    )
+    from invertedfiles_jl_spark.sources.queries import phrases_df
+
+    positional_postings(documents.select(
+        "doc_id", F.col("text").alias("content"))).write.parquet(
+        str(tmp_path / "pos"))
+    pos = spark.read.parquet(str(tmp_path / "pos"))
+    plan = phrase_topk(pos, phrases_df(spark))._jdf.queryExecution(
+        ).executedPlan().toString()
+    assert "count(distinct" not in plan
+    assert len(re.findall(r"(?<!Broadcast)Exchange ", plan)) == 2, plan
 
 
 def test_query_string_batch_read_once(spark, served, documents):

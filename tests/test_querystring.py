@@ -568,3 +568,119 @@ class TestCompositionParity:
         assert sp  # gated subset is non-empty
         for d, s in sp.items():
             assert sb[d] == s
+
+
+def _brute(s, default_operator="or"):
+    """Brute-force query-string scorer over DOCS: BM25 (tests/oracle.py)
+    over the scoring terms, then every gate checked on token lists."""
+    from itertools import combinations
+
+    from tests import oracle
+
+    p = parse_query_string_py(s or "")
+    toks = {d: c.lower().split() for d, c in DOCS}
+    vocab = sorted({t for ts in toks.values() for t in ts})
+    must, should = p["must"].split(), p["should"].split()
+    nots = p["must_not"].split()
+    signed = list(zip(p["phrase_signs"], p["phrases"], p["slops"]))
+    pos_ph = [(ph.lower().split(), n) for sg, ph, n in signed if sg != "-"]
+    neg_ph = [(ph.lower().split(), n) for sg, ph, n in signed if sg == "-"]
+    ph_words = [w for ph, _ in pos_ph for w in ph]
+    if default_operator == "and":
+        must, should = must + should, ph_words
+    else:
+        should = should + ph_words
+    groups = []
+    for sg, pre in zip(p["wild_signs"], p["wild_prefixes"]):
+        exp = [t for t in vocab if t.startswith(pre)]
+        if sg == "-":
+            nots += exp
+            continue
+        should += exp
+        if sg == "+" or default_operator == "and":
+            groups.append(set(exp))
+
+    def has(ts, ph_slop):
+        # ordered occurrence within a span of m-1+slop tokens
+        ph, slop = ph_slop
+        return any(c[-1] - c[0] <= len(ph) - 1 + slop
+                   and [ts[i] for i in c] == ph
+                   for c in combinations(range(len(ts)), len(ph)))
+
+    scores = oracle.bm25_scores(dict(DOCS), " ".join(must + should))
+    return {d: sc for d, sc in scores.items()
+            if {w.lower() for w in must} <= set(toks[d])
+            and not {w.lower() for w in nots} & set(toks[d])
+            and all(has(toks[d], ph) for ph in pos_ph)
+            and not any(has(toks[d], ph) for ph in neg_ph)
+            and all(g & set(toks[d]) for g in groups)}
+
+
+class TestFoldedGates:
+    """Every gate folds into the one scoring aggregate (phrases and
+    required wildcard groups as slot bits); each case is checked against
+    the brute-force scorer above."""
+
+    CASES = [
+        ("fast fast", "or"),                    # repeated term: qtf 2
+        ('-"fast query" +table', "or"),          # negated phrase + must
+        ('"fast query"', "or"),                  # phrase-only query
+        ('merge "fast query"', "and"),           # AND mode with a phrase
+        ("+s* merge", "or"),                     # doc 3: scan AND slow, 1 group
+        ("+scan +s*", "or"),                     # must term is an expansion
+        ('+ta* "fast query" -row', "or"),        # group + phrase + not
+        ('"fast query" "merge table"~1 s*', "or"),  # exact + sloppy slots
+    ]
+
+    def test_cases_match_brute_force(self, spark, tiny):
+        import math
+
+        idx, pos = tiny
+        for s, op in self.CASES:
+            q = spark.createDataFrame([(1, s)],
+                                      "query_id long, content string")
+            got = {r.doc_id: r.score for r in query_string_topk(
+                idx, pos, q, k=100, rank_round=6,
+                default_operator=op).collect()}
+            want = _brute(s, op)
+            assert set(got) == set(want), (s, op)
+            for d, sc in want.items():
+                assert math.isclose(got[d], sc, rel_tol=1e-5,
+                                    abs_tol=1e-5), (s, d)
+
+    def test_null_and_empty_content(self, spark, tiny):
+        idx, pos = tiny
+        q = spark.createDataFrame([(1, None), (2, ""), (3, "table")],
+                                  "query_id long, content string")
+        rows = query_string_topk(idx, pos, q, k=10).collect()
+        assert {r.query_id for r in rows} == {3}
+        assert query_string_topk(idx, pos, q.limit(0), k=10).collect() == []
+
+    def test_slot_limit_raises(self, spark, tiny):
+        from invertedfiles_jl_spark.operators.querystring import (
+            MAX_SLOTS,
+            query_string_percolate,
+        )
+
+        idx, pos = tiny
+        s = " ".join(['"fast query"'] * MAX_SLOTS + ["ta*"])
+        q = spark.createDataFrame([(1, s)], "query_id long, content string")
+        with pytest.raises(ValueError, match="slots"):
+            query_string_topk(idx, pos, q, k=10)
+        with pytest.raises(ValueError, match="slots"):
+            query_string_percolate(idx, q, q)
+        # exactly MAX_SLOTS slots: the wildcard group takes the top bit
+        ok = " ".join(['"fast query"'] * (MAX_SLOTS - 1) + ["+fa*"])
+        assert set(_run(spark, tiny, ok)) == {1, 4, 5, 6}
+
+    def test_driver_flags_equal_sql_flags(self, spark):
+        from invertedfiles_jl_spark.operators.querystring import (
+            _clause_flags,
+            _parse_batch,
+        )
+        from invertedfiles_jl_spark.sources.queries import qstring_df
+
+        q = qstring_df(spark)
+        _, flags = _parse_batch(q, "content", "or")
+        assert flags == _clause_flags(parse_query_strings(q))
+        assert flags["n_ph"] and flags["n_sloppy"] and flags["n_wild"]
