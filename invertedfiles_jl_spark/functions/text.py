@@ -205,12 +205,8 @@ def doc_keywords(corpus, cfg=None, n: int = 5, rank_round: int | None = None,
     exchange) + one df aggregation; N joins in as a broadcast 1-row agg —
     no driver action.  ``rank_round`` ranks on round(tfidf, n) for
     oracle-stable ordering (same contract as search.topk)."""
-    from pyspark.sql import DataFrame, Window
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.config import IndexConfig
     from invertedfiles_jl_spark.operators.build import doc_term_freqs
-    from invertedfiles_jl_spark.operators.search import bm25_idf
+    from invertedfiles_jl_spark.operators.search import bm25_idf, knn_order, rank_cut
 
     cfg = cfg or IndexConfig()
     tf = doc_term_freqs(corpus, cfg, doc_col, content_col)
@@ -221,14 +217,8 @@ def doc_keywords(corpus, cfg=None, n: int = 5, rank_round: int | None = None,
         .crossJoin(F.broadcast(stats))
         .withColumn("tfidf", F.col("tf") * bm25_idf(F.col("n_docs")))
     )
-    key = (F.round(F.col("tfidf"), rank_round)
-           if rank_round is not None else F.col("tfidf"))
-    w = Window.partitionBy("doc_id").orderBy(key.desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n)
-        .select("doc_id", "rank", "term", "tfidf")
-    )
+    return rank_cut(scored, n, knn_order("tfidf", rank_round, id_col="term"),
+                    by=("doc_id",), cols=["doc_id", "rank", "term", "tfidf"])
 
 
 def lm_perplexity(df: DataFrame, cfg: IndexConfig | None = None,

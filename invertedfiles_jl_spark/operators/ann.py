@@ -15,8 +15,12 @@ Two paths, same contract:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from invertedfiles_jl_spark.operators.search import knn_order, rank_cut
+
+_COS_COLS = ["query_id", "rank", "vec_id", "cos"]
 
 
 def _dot(a: str, b: str) -> F.Column:
@@ -51,13 +55,14 @@ def brute_force_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     if exclude_self:
         j = j.filter(F.col("vec_id") != F.col("query_id"))
     scored = with_cosine(j).select("query_id", "vec_id", "cos")
-    key = F.round(F.col("cos"), rank_round) if rank_round is not None else F.col("cos")
-    w = Window.partitionBy("query_id").orderBy(key.desc(), F.col("vec_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos")
-    )
+    return _cos_topk(scored, k, rank_round)
+
+
+def _cos_topk(scored: DataFrame, k: int, rank_round: int | None) -> DataFrame:
+    """(query_id, rank, vec_id, cos) — the top ``k`` (query_id, vec_id,
+    cos) rows per query at (round(cos, rank_round) desc, vec_id asc)."""
+    return rank_cut(scored, k, knn_order("cos", rank_round, id_col="vec_id"),
+                    cols=_COS_COLS)
 
 
 def seed_centroids(emb: DataFrame, n_clusters: int = 16) -> DataFrame:
@@ -104,15 +109,9 @@ def assign_to(emb: DataFrame, cents: DataFrame) -> DataFrame:
     """(vec_id, cluster) — nearest (max-cosine) centroid, deterministic
     tie-break by (round(cos, 9) desc, cluster asc)."""
     j = emb.select("vec_id", F.col("embedding").alias("d_emb")).crossJoin(F.broadcast(cents))
-    scored = with_cosine(j, "c_emb", "d_emb")
-    w = Window.partitionBy("vec_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("cluster").asc()
-    )
-    return (
-        scored.withColumn("r", F.row_number().over(w))
-        .filter(F.col("r") == 1)
-        .select("vec_id", "cluster")
-    )
+    return rank_cut(with_cosine(j, "c_emb", "d_emb"), 1,
+                    knn_order("cos", 9, id_col="cluster"), by=("vec_id",),
+                    rank="r", cols=["vec_id", "cluster"])
 
 
 def lloyd_refine(emb: DataFrame, cents: DataFrame, iters: int = 1) -> DataFrame:
@@ -164,34 +163,47 @@ def ivf_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                "farthest": seed_centroids_farthest}[seed_mode]
     cents = lloyd_refine(emb, seed_fn(emb, n_clusters), lloyd_iters)
     assign = assign_to(emb, cents)
-    qprobe = with_cosine(
-        queries.select("query_id", "q_emb").crossJoin(F.broadcast(cents)),
-        "q_emb", "c_emb",
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("cluster").asc()
-    )
-    probed = (
-        qprobe.withColumn("r", F.row_number().over(wq))
-        .filter(F.col("r") <= nprobe)
-        .select("query_id", "cluster")
-    )
     cands = (
-        probed.join(assign, "cluster")
+        _probe(queries, cents, nprobe).join(assign, "cluster")
         .join(emb.select("vec_id", F.col("embedding").alias("d_emb")), "vec_id")
         .join(F.broadcast(queries.select("query_id", "q_emb")), "query_id")
     )
     if exclude_self:
         cands = cands.filter(F.col("vec_id") != F.col("query_id"))
-    scored = with_cosine(cands).select("query_id", "vec_id", "cos")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 6).desc(), F.col("vec_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos")
-    )
+    return _cos_topk(with_cosine(cands).select("query_id", "vec_id", "cos"),
+                     k, 6)
+
+
+def _probe(queries: DataFrame, cents: DataFrame, nprobe: int) -> DataFrame:
+    """(query_id, cluster) — the IVF probe list: each query's ``nprobe``
+    best centroids at (round(cos, 9) desc, cluster asc)."""
+    qprobe = with_cosine(
+        queries.select("query_id", "q_emb").crossJoin(F.broadcast(cents)),
+        "q_emb", "c_emb")
+    return rank_cut(qprobe, nprobe, knn_order("cos", 9, id_col="cluster"),
+                    rank="r", cols=["query_id", "cluster"])
+
+
+def _rescore_cut(emb: DataFrame, queries: DataFrame, approx: DataFrame,
+                 score: str, k: int, depth: int, exclude_self: bool,
+                 rank_round: int) -> DataFrame:
+    """The exact-rescore tail of the quantized rankers (the engine twin of
+    the oracle's ``_rescore_cut``): drop self-matches, keep each query's
+    top ``depth`` (query_id, vec_id) rows of ``approx`` by the approximate
+    ``score`` at (round(score, 6) desc, vec_id asc), re-score those
+    exactly against the float vectors and cut the top ``k``.  The Q·depth
+    candidate list broadcasts, so the re-score probes the full table
+    instead of shuffling it (the fusion-recovery discipline)."""
+    if exclude_self:
+        approx = approx.filter(F.col("vec_id") != F.col("query_id"))
+    cand = rank_cut(approx, depth, knn_order(score, 6, id_col="vec_id"),
+                    rank="r", cols=["query_id", "vec_id"])
+    rescored = with_cosine(
+        emb.select("vec_id", F.col("embedding").alias("d_emb"))
+        .join(F.broadcast(cand), "vec_id")
+        .join(F.broadcast(queries.select("query_id", "q_emb")), "query_id")
+    ).select("query_id", "vec_id", "cos")
+    return _cos_topk(rescored, k, rank_round)
 
 
 def _sign_band_sig(i: int, band_width: int) -> F.Column:
@@ -350,32 +362,9 @@ def sq8_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
                ).alias("d_emb"),
     )
     j = dehat.crossJoin(F.broadcast(queries.select("query_id", "q_emb")))
-    if exclude_self:
-        j = j.filter(F.col("vec_id") != F.col("query_id"))
     ascored = with_cosine(j).select("query_id", "vec_id", F.col("cos").alias("acos"))
-    wa = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("acos"), 6).desc(), F.col("vec_id").asc()
-    )
-    cand = (
-        ascored.withColumn("r", F.row_number().over(wa))
-        .filter(F.col("r") <= depth)
-        .select("query_id", "vec_id")
-    )
-    # cand is Q·depth rows — broadcast it so the exact re-score probes the
-    # full table instead of shuffling it (the fusion-recovery discipline)
-    rescored = with_cosine(
-        emb.select("vec_id", F.col("embedding").alias("d_emb"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries.select("query_id", "q_emb")), "query_id")
-    ).select("query_id", "vec_id", "cos")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), rank_round).desc(), F.col("vec_id").asc()
-    )
-    return (
-        rescored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "vec_id", "cos")
-    )
+    return _rescore_cut(emb, queries, ascored, "acos", k, depth, exclude_self,
+                        rank_round)
 
 
 def semantic_dedup(emb: DataFrame, threshold: float = 0.95,
@@ -454,21 +443,17 @@ def pq_train(emb: DataFrame, m: int = 8, ksub: int = 16,
     re-center by per-dimension mean).  Build cost is one n·m-row
     aggregation per step; the output is m·ksub rows — always
     broadcastable.  Deterministic ⇒ DuckDB-mirrorable."""
-    first = emb.select(F.size("embedding").alias("d")).first()
-    d = int(first["d"]) if first is not None else 0
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub_len = d // m
-    subs = _sub_rows(emb, "embedding", "vec_id", m, sub_len)
+    subs = _sub_rows(emb, "embedding", "vec_id", m, _sub_len(emb, m))
+    return _pq_train(subs, ksub, lloyd_iters)
+
+
+def _pq_train(subs: DataFrame, ksub: int, lloyd_iters: int) -> DataFrame:
+    """:func:`pq_train` over already-split (id, m, sub) rows."""
     cents = subs.filter(F.col("id") < ksub).select(
         "m", F.col("id").alias("cluster"), F.col("sub").alias("c_sub"))
     for _ in range(lloyd_iters):
         j = subs.join(F.broadcast(cents), "m")
-        scored = j.withColumn("d2", _l2("sub", "c_sub"))
-        w = Window.partitionBy("id", "m").orderBy(
-            F.round(F.col("d2"), 9).asc(), F.col("cluster").asc())
-        a = (scored.withColumn("r", F.row_number().over(w))
-             .filter(F.col("r") == 1).select("id", "m", "cluster", "sub"))
+        a = _nearest_code(j, ["id", "m", "cluster", "sub"])
         cents = (
             a.select("m", "cluster", F.posexplode("sub").alias("pos", "v"))
             .groupBy("m", "cluster", "pos").agg(F.avg("v").alias("mu"))
@@ -486,12 +471,44 @@ def pq_codes(emb: DataFrame, cents: DataFrame, m: int,
     ``m`` small ints per vector — m·log2(ksub) bits, the 32×-and-beyond
     compression regime SQ8 can't reach."""
     subs = _sub_rows(emb, "embedding", "vec_id", m, sub_len)
-    j = subs.join(F.broadcast(cents), "m").withColumn("d2", _l2("sub", "c_sub"))
-    w = Window.partitionBy("id", "m").orderBy(
-        F.round(F.col("d2"), 9).asc(), F.col("cluster").asc())
-    return (j.withColumn("r", F.row_number().over(w)).filter(F.col("r") == 1)
-            .select(F.col("id").alias("vec_id"), "m",
-                    F.col("cluster").alias("code")))
+    return _nearest_code(subs.join(F.broadcast(cents), "m"), [
+        F.col("id").alias("vec_id"), "m", F.col("cluster").alias("code")])
+
+
+def _nearest_code(j: DataFrame, cols: list) -> DataFrame:
+    """Per (id, m) subvector of the (sub ⋈ codebook) rows ``j``, the
+    squared-L2 nearest entry (round(d2, 9) asc, cluster asc); ``cols``
+    selects the output."""
+    return rank_cut(j.withColumn("d2", _l2("sub", "c_sub")), 1,
+                    knn_order("d2", 9, ascending=True, id_col="cluster"),
+                    by=("id", "m"), rank="r", cols=cols)
+
+
+def _sub_len(emb: DataFrame, m: int) -> int:
+    """The PQ subvector length ``d // m``; ``ValueError`` unless the
+    embedding dimension d splits into ``m`` equal subspaces."""
+    first = emb.select(F.size("embedding").alias("d")).first()
+    d = int(first["d"]) if first is not None else 0
+    if d % m != 0:
+        raise ValueError(f"dim {d} not divisible by m={m}")
+    return d // m
+
+
+def _pq_lut(emb: DataFrame, queries: DataFrame, m: int, ksub: int,
+            lloyd_iters: int) -> tuple[DataFrame, DataFrame]:
+    """(codes, lut) of PQ-ADC: every vector's (vec_id, m, code) rows under
+    the trained codebooks and each query's m×ksub lookup table
+    (query_id, m, code, part) of subvector dots against them."""
+    sub_len = _sub_len(emb, m)
+    cents = _pq_train(_sub_rows(emb, "embedding", "vec_id", m, sub_len),
+                      ksub, lloyd_iters)
+    lut = (_sub_rows(queries, "q_emb", "query_id", m, sub_len)
+           .join(F.broadcast(cents), "m")
+           .select(F.col("id").alias("query_id"), "m",
+                   F.col("cluster").alias("code"),
+                   F.expr("aggregate(zip_with(sub, c_sub, (x, y) -> x * y), "
+                          "0D, (acc, v) -> acc + v)").alias("part")))
+    return pq_codes(emb, cents, m, sub_len), lut
 
 
 def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10, m: int = 8,
@@ -510,39 +527,12 @@ def pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10, m: int = 8,
     float32 at m=8, ksub=16 on 64-d), the regime where a 100-TB embedding
     corpus fits a modest cluster's memory.  Recall floor pinned by pytest;
     exactness of the rescore by the DuckDB oracle (``pq_topk_sql``)."""
-    first = emb.select(F.size("embedding").alias("d")).first()
-    d = int(first["d"]) if first is not None else 0
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub_len = d // m
-    cents = pq_train(emb, m, ksub, lloyd_iters)
-    codes = pq_codes(emb, cents, m, sub_len)
-    qsubs = _sub_rows(queries, "q_emb", "query_id", m, sub_len)
-    lut = (qsubs.join(F.broadcast(cents), "m")
-           .select(F.col("id").alias("query_id"), "m",
-                   F.col("cluster").alias("code"),
-                   F.expr(
-                       "aggregate(zip_with(sub, c_sub, (x, y) -> x * y), "
-                       "0D, (acc, v) -> acc + v)").alias("part")))
+    codes, lut = _pq_lut(emb, queries, m, ksub, lloyd_iters)
     adc = (codes.join(F.broadcast(lut), ["m", "code"])
            .groupBy("query_id", "vec_id")
            .agg(F.sum("part").alias("adot")))
-    if exclude_self:
-        adc = adc.filter(F.col("vec_id") != F.col("query_id"))
-    wa = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("adot"), 6).desc(), F.col("vec_id").asc())
-    cand = (adc.withColumn("r", F.row_number().over(wa))
-            .filter(F.col("r") <= depth).select("query_id", "vec_id"))
-    rescored = with_cosine(
-        emb.select("vec_id", F.col("embedding").alias("d_emb"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries.select("query_id", "q_emb")), "query_id")
-    ).select("query_id", "vec_id", "cos")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), rank_round).desc(), F.col("vec_id").asc())
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cos"))
+    return _rescore_cut(emb, queries, adc, "adot", k, depth, exclude_self,
+                        rank_round)
 
 
 def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
@@ -562,53 +552,21 @@ def ivf_pq_topk(emb: DataFrame, queries: DataFrame, k: int = 10,
     building blocks (``assign_clusters``/``pq_train``) so the composition
     is deterministic end to end.
     """
-    first = emb.select(F.size("embedding").alias("d")).first()
-    d = int(first["d"]) if first is not None else 0
-    if d % m != 0:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    sub_len = d // m
     # coarse stage: cluster assignment + per-query probe list (same plan
     # as ivf_topk)
     cents = lloyd_refine(emb, seed_centroids(emb, n_clusters), lloyd_iters)
     assign = assign_to(emb, cents)
-    qprobe = with_cosine(
-        queries.select("query_id", "q_emb").crossJoin(F.broadcast(cents)),
-        "q_emb", "c_emb")
-    wq = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), 9).desc(), F.col("cluster").asc())
-    probed = (qprobe.withColumn("r", F.row_number().over(wq))
-              .filter(F.col("r") <= nprobe).select("query_id", "cluster"))
+    probed = _probe(queries, cents, nprobe)
     # fine stage: ADC over in-probe codes only.  Routing goes through the
     # Q·nprobe probe list broadcast on CLUSTER (bounded), never through a
     # materialized per-query candidate list (that relation is
     # corpus-proportional — broadcasting it would be the scale bug);
     # codes ⋈ assign is corpus-keyed and co-partitionable on vec_id.
-    pq_cents = pq_train(emb, m, ksub, lloyd_iters)
-    codes = pq_codes(emb, pq_cents, m, sub_len)
-    qsubs = _sub_rows(queries, "q_emb", "query_id", m, sub_len)
-    lut = (qsubs.join(F.broadcast(pq_cents), "m")
-           .select(F.col("id").alias("query_id"), "m",
-                   F.col("cluster").alias("code"),
-                   F.expr("aggregate(zip_with(sub, c_sub, (x, y) -> x * y), "
-                          "0D, (acc, v) -> acc + v)").alias("part")))
+    codes, lut = _pq_lut(emb, queries, m, ksub, lloyd_iters)
     adc = (codes.join(assign, "vec_id")
            .join(F.broadcast(probed), "cluster")
            .join(F.broadcast(lut), ["query_id", "m", "code"])
            .groupBy("query_id", "vec_id")
            .agg(F.sum("part").alias("adot")))
-    if exclude_self:
-        adc = adc.filter(F.col("vec_id") != F.col("query_id"))
-    wa = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("adot"), 6).desc(), F.col("vec_id").asc())
-    cand = (adc.withColumn("r", F.row_number().over(wa))
-            .filter(F.col("r") <= depth).select("query_id", "vec_id"))
-    rescored = with_cosine(
-        emb.select("vec_id", F.col("embedding").alias("d_emb"))
-        .join(F.broadcast(cand), "vec_id")
-        .join(F.broadcast(queries.select("query_id", "q_emb")), "query_id")
-    ).select("query_id", "vec_id", "cos")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("cos"), rank_round).desc(), F.col("vec_id").asc())
-    return (rescored.withColumn("rank", F.row_number().over(w))
-            .filter(F.col("rank") <= k)
-            .select("query_id", "rank", "vec_id", "cos"))
+    return _rescore_cut(emb, queries, adc, "adot", k, depth, exclude_self,
+                        rank_round)

@@ -21,10 +21,10 @@ sample to validate the index, exactly like the reference's tests do.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.operators.search import topk
+from invertedfiles_jl_spark.operators.search import knn_order, rank_cut, topk
 
 
 def exhaustive_cosine_topk(pairs: DataFrame, qpairs: DataFrame, k: int = 10,
@@ -111,11 +111,8 @@ def ranking_metrics(run: DataFrame, qrels: DataFrame, k: int = 10) -> DataFrame:
             F.lit(0.0)).alias("mrr"),
         F.sum(contrib).alias("dcg"),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("rel").desc(), F.col("doc_id").asc())
-    ideal = (qrels.filter(F.col("rel") > 0)
-             .withColumn("irank", F.row_number().over(w))
-             .filter(F.col("irank") <= k))
+    ideal = rank_cut(qrels.filter(F.col("rel") > 0), k, knn_order("rel"),
+                     rank="irank")
     icontrib = (F.pow(F.lit(2.0), F.col("rel")) - 1.0) / (
         F.log(F.col("irank") + F.lit(1.0)) / ln2)
     idcg = ideal.groupBy("query_id").agg(F.sum(icontrib).alias("idcg"))

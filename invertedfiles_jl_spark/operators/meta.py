@@ -18,7 +18,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex
-from invertedfiles_jl_spark.operators.search import query_terms
+from invertedfiles_jl_spark.operators.search import knn_order, query_terms, rank_cut
 
 
 def describe_index(index: InvertedIndex) -> DataFrame:
@@ -144,15 +144,12 @@ def term_cooccurrence(corpus: DataFrame, cfg=None, k: int = 20,
     """
     from invertedfiles_jl_spark.config import IndexConfig
     from invertedfiles_jl_spark.operators.build import doc_term_freqs
-    from pyspark.sql import Window
 
     cfg = cfg or IndexConfig()
     tf = doc_term_freqs(corpus, cfg, doc_col, content_col)
     if max_doc_terms is not None:
-        wd = Window.partitionBy("doc_id").orderBy(
-            F.col("tf").desc(), F.col("term").asc())
-        tf = (tf.withColumn("r", F.row_number().over(wd))
-              .filter(F.col("r") <= max_doc_terms).drop("r"))
+        tf = rank_cut(tf, max_doc_terms, knn_order("tf", id_col="term"),
+                      by=("doc_id",), rank="r").drop("r")
     terms = tf.select("doc_id", "term")
     n_docs = float(corpus.select(doc_col).distinct().count())
     dfs = terms.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
@@ -174,15 +171,12 @@ def term_cooccurrence(corpus: DataFrame, cfg=None, k: int = 20,
             F.log(F.lit(n_docs) * F.col("pair_df")
                   / (F.col("df_a") * F.col("df_b"))).alias("pmi"))
     )
-    w = Window.orderBy(
-        F.round(F.col("pmi"), pmi_round).desc(),
-        F.col("term_a").asc(), F.col("term_b").asc())
-    return (
-        scored.withColumn("pair_rank", F.row_number().over(w))
-        .filter(F.col("pair_rank") <= k)
-        .select("pair_rank", "term_a", "term_b", "pair_df",
-                F.round("pmi", pmi_round).alias("pmi"))
-    )
+    return rank_cut(
+        scored, k, [*knn_order("pmi", pmi_round, id_col="term_a"),
+                    F.col("term_b").asc()],
+        by=(), rank="pair_rank",
+        cols=["pair_rank", "term_a", "term_b", "pair_df",
+              F.round("pmi", pmi_round).alias("pmi")])
 
 
 def significant_terms(docs: DataFrame, strata_col: str, cfg=None,
@@ -208,7 +202,6 @@ def significant_terms(docs: DataFrame, strata_col: str, cfg=None,
     """
     from invertedfiles_jl_spark.config import IndexConfig
     from invertedfiles_jl_spark.functions.tokenize import exploded_terms
-    from pyspark.sql import Window
 
     cfg = cfg or IndexConfig()
     strata_sizes = docs.groupBy(strata_col).agg(
@@ -232,11 +225,7 @@ def significant_terms(docs: DataFrame, strata_col: str, cfg=None,
         .withColumn("jlh", (F.col("fg_pct") - F.col("bg_pct"))
                     * (F.col("fg_pct") / F.col("bg_pct")))
     )
-    w = Window.partitionBy(strata_col).orderBy(
-        F.round(F.col("jlh"), jlh_round).desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n)
-        .select(F.col(strata_col).alias("stratum"), "rank", "term",
-                "fg", "bg", F.round("jlh", jlh_round).alias("jlh"))
-    )
+    return rank_cut(scored, n, knn_order("jlh", jlh_round, id_col="term"),
+                    by=(strata_col,),
+                    cols=[F.col(strata_col).alias("stratum"), "rank", "term",
+                          "fg", "bg", F.round("jlh", jlh_round).alias("jlh")])

@@ -134,7 +134,8 @@ def chunk_documents(corpus: DataFrame, window: int, stride: int,
     whole-stage codegen.  No shuffle at all: the operator is a flatMap in
     relational clothing, so it scales with input bytes and parallelizes by
     file split regardless of corpus size."""
-    assert window >= 1 and 1 <= stride <= window, "need 1 <= stride <= window"
+    if not (window >= 1 and 1 <= stride <= window):
+        raise ValueError("need 1 <= stride <= window")
     cfg = cfg or IndexConfig()
     from invertedfiles_jl_spark.functions.tokenize import tokens_sql
 

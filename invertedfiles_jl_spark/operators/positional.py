@@ -51,7 +51,7 @@ from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import term_id_col
-from invertedfiles_jl_spark.operators.search import topk
+from invertedfiles_jl_spark.operators.search import knn_order, rank_cut, topk
 
 
 def _token_array_sql(content_col: str, cfg: IndexConfig) -> str:
@@ -125,14 +125,9 @@ def _rarest_slot_candidates(positional: DataFrame, pt: DataFrame,
     phrase/chain match must contain its rarest term, so a left-semi join
     against these pairs is a pure prune: the downstream shuffle carries
     ≤ m·df_min rows per query instead of Σ df."""
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("df").asc(), F.col("offset").asc())
-    rarest = (
-        pt.join(vocab.select("term_id", "df"), "term_id")
-        .withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("term_id", "query_id")
-    )
+    rarest = rank_cut(pt.join(vocab.select("term_id", "df"), "term_id"), 1,
+                      knn_order("df", ascending=True, id_col="offset"),
+                      rank="rn", cols=["term_id", "query_id"])
     return positional.join(F.broadcast(rarest), "term_id").select(
         "query_id", "doc_id")
 
@@ -336,10 +331,7 @@ def snippet_topk(positional: DataFrame, queries: DataFrame, corpus: DataFrame,
         F.col("mw.start").cast("long").alias("start"))
     if max_span is not None:
         scored = scored.filter(F.col("min_span") <= max_span)
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("min_span").asc(), F.col("doc_id").asc())
-    ranked = scored.withColumn("rank", F.row_number().over(w)) \
-        .filter(F.col("rank") <= k)
+    ranked = rank_cut(scored, k, knn_order("min_span", ascending=True))
     toks = corpus.select(
         F.col(doc_col).alias("doc_id"),
         F.expr(_token_array_sql(content_col, cfg)).alias("ts"))

@@ -33,7 +33,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.ann import brute_force_topk, with_cosine
-from invertedfiles_jl_spark.operators.wand import round_half_up
+from invertedfiles_jl_spark.operators.search import knn_order, rank_cut
+from invertedfiles_jl_spark.operators.wand import rank_order
 
 _OUT = "query_id long, rank int, doc_id long, mmr double"
 
@@ -60,9 +61,10 @@ def candidate_pair_sims(emb: DataFrame, cand: DataFrame,
 
 def _mmr_kernel(k: int, lam: float, rank_round: int):
     """Cogrouped kernel: (candidates, pair sims) of ONE query → the k-step
-    greedy.  Comparisons on round_half_up(·, rank_round) with doc_id asc
-    tie-break — the repo rank identity; arithmetic order matches the SQL
-    oracle token-for-token (λ·rel − (1−λ)·maxsim over pre-rounded inputs).
+    greedy.  Each pick is ``wand.rank_order``'s first row (HALF_UP
+    round(·, rank_round) desc, doc_id asc) — the repo rank identity;
+    arithmetic order matches the SQL oracle token-for-token
+    (λ·rel − (1−λ)·maxsim over pre-rounded inputs).
     """
     import pandas as pd
 
@@ -85,7 +87,7 @@ def _mmr_kernel(k: int, lam: float, rank_round: int):
             sv = pdf["sim"].to_numpy(np.float64)
             sim[ia, ib] = sv
             sim[ib, ia] = sv
-        first = int(np.lexsort((ids, -round_half_up(rel, rank_round)))[0])
+        first = int(rank_order(ids, rel, 1, rank_round)[0])
         picked = [first]
         scores = [float(rel[first])]
         maxsim = sim[:, first].copy()
@@ -93,10 +95,9 @@ def _mmr_kernel(k: int, lam: float, rank_round: int):
         alive[first] = False
         while len(picked) < min(k, n):
             mmr = lam * rel - one_minus * maxsim
-            key = round_half_up(mmr, rank_round)
-            key[~alive] = -np.inf
-            # argmax with doc_id asc tie-break
-            nxt = int(np.lexsort((ids, -key))[0])
+            # argmax over the unpicked docs, doc_id asc tie-break
+            nxt = int(rank_order(ids, np.where(alive, mmr, -np.inf), 1,
+                                 rank_round)[0])
             picked.append(nxt)
             scores.append(float(mmr[nxt]))
             alive[nxt] = False
@@ -177,9 +178,6 @@ def crossencoder_rerank(index, corpus, queries, k: int = 10, depth: int = 50,
     rank is a window over Q·depth rows.  The expensive model is therefore
     bounded by serving depth — the standard two-stage economics.
     """
-    from pyspark.sql import Window
-    from pyspark.sql import functions as F
-
     from invertedfiles_jl_spark.operators.search import bm25_topk
 
     # rank_round=6 pins the depth cut to the same boundary the DuckDB
@@ -207,10 +205,6 @@ def crossencoder_rerank(index, corpus, queries, k: int = 10, depth: int = 50,
 
         scored = pairs.mapInPandas(
             fn, "query_id long, doc_id long, bm25_score double, ce_score double")
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("ce_score"), rank_round).desc(), F.col("doc_id").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "doc_id", "ce_score", "bm25_score")
-    )
+    return rank_cut(scored, k, knn_order("ce_score", rank_round),
+                    cols=["query_id", "rank", "doc_id", "ce_score",
+                          "bm25_score"])

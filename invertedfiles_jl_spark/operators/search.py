@@ -10,8 +10,8 @@ Reference semantics being reproduced (SURVEY.md §3.2):
   * weighted ``onmatch!`` dot product 1−Σqᵢwᵢ (/root/reference/src/winvfilesearch.jl:3-16)
     and binary ``set_distance_evaluate`` (/root/reference/src/binvfile.jl:36-45).
   * ``knnqueue(KnnSorted, k)`` bounded sorted result (/root/reference/src/InvertedFiles.jl:57)
-    ≡ row_number over (score, doc_id) — tie-break deterministic by doc_id so
-    ranks are reproducible (rank-identity gate).
+    ≡ :func:`rank_cut` over :func:`knn_order` (score, doc_id) — tie-break
+    deterministic by doc_id so ranks are reproducible (rank-identity gate).
 
 Scale notes: the query side is always tiny → ``F.broadcast``; the join output
 is only the *matched* posting entries; per-query score cardinality is bounded
@@ -27,6 +27,13 @@ sharded, knn, fielded, maintenance, streaming, functions/text):
   * :func:`bm25_idf` — the BM25 idf column ln(1 + (N − df + 0.5)/(df + 0.5)).
   * :func:`query_weights` — (query_id, term_id, qw): qtf·idf for bm25,
     qtf/‖q‖ for normcosine; the query side of WAND, sharded and cosine.
+  * :func:`rank_cut` — THE per-group top-n cut (one ``row_number`` window
+    plus the ``rank <= n`` filter Spark pushes down as a WindowGroupLimit);
+    :func:`knn_order` spells its usual (round(key) desc|asc, id asc) order.
+    Every top-k, per-group cut and argmax/argmin of the engine calls it;
+    the numpy kernels' twin is ``wand.rank_order``.
+  * :func:`require_weighting` — the ``ValueError`` a wrong-weighting index
+    raises at every scorer's entry.
 """
 
 from __future__ import annotations
@@ -46,7 +53,9 @@ def query_terms(queries: DataFrame, cfg: IndexConfig,
     ``term_id`` (xxhash64, same derivation as the build side) is the join
     key for every downstream probe: at 10^9-term scale a fixed-width long
     key beats the string on shuffle width and hash cost; the string ``term``
-    column stays only for human-facing outputs.
+    column stays only for human-facing outputs.  With ``query_col`` a doc
+    id it is also the forward per-doc term count of the doc views
+    (:func:`doc_term_profile`, :func:`term_vectors`, PRF mining).
     """
     from invertedfiles_jl_spark.functions.tokenize import exploded_terms
 
@@ -132,6 +141,39 @@ def _accept(m: DataFrame, accept_docs: DataFrame | None) -> DataFrame:
     return m.join(accept_docs.select("doc_id"), "doc_id", "left_semi")
 
 
+def require_weighting(index: InvertedIndex, *kinds: str) -> None:
+    """Raise ``ValueError`` unless ``index`` was built with one of the
+    ``kinds`` weightings — the caller-precondition check of every scorer
+    (an explicit error, not an ``assert`` that ``python -O`` strips)."""
+    if index.cfg.weighting not in kinds:
+        raise ValueError(f"index not built with {' or '.join(kinds)} weighting")
+
+
+def knn_order(key: str | Column, rank_round: int | None = None,
+              ascending: bool = False, id_col: str = "doc_id") -> list[Column]:
+    """The ``KnnSorted`` total order: ``round(key, rank_round)`` desc (asc
+    for a distance; the raw key when ``rank_round`` is None), then
+    ``id_col`` asc — the sort spec :func:`rank_cut` takes."""
+    c = F.col(key) if isinstance(key, str) else key
+    if rank_round is not None:
+        c = F.round(c, rank_round)
+    return [c.asc() if ascending else c.desc(), F.col(id_col).asc()]
+
+
+def rank_cut(df: DataFrame, n: int, order: list[Column],
+             by: tuple[str, ...] = ("query_id",), rank: str = "rank",
+             cols: list | None = None) -> DataFrame:
+    """The first ``n`` rows of each ``by`` group under ``order`` (one global
+    order when ``by`` is empty), numbered 1.. in column ``rank``; ``cols``
+    selects the output.  One ``row_number`` window and the ``rank <= n``
+    filter that Spark's WindowGroupLimit pushdown turns into a bounded
+    per-group heap below the exchange — never a full sort.  The engine's
+    one rank cut: top-k, per-group cuts and argmax/argmin (``n = 1``)."""
+    w = Window.partitionBy(*by).orderBy(*order)
+    out = df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+    return out if cols is None else out.select(*cols)
+
+
 def topk(scored: DataFrame, k: int, score_col: str = "score",
          ascending: bool = False, rank_round: int | None = None,
          offset: int = 0) -> DataFrame:
@@ -149,11 +191,7 @@ def topk(scored: DataFrame, k: int, score_col: str = "score",
     and ranks stay globally consistent across pages (same window, same
     tie-break) rather than re-ranking per page.
     """
-    key = F.round(F.col(score_col), rank_round) if rank_round is not None else F.col(score_col)
-    order = [key.asc() if ascending else key.desc(), F.col("doc_id").asc()]
-    w = Window.partitionBy("query_id").orderBy(*order)
-    out = scored.withColumn("rank", F.row_number().over(w)).filter(
-        F.col("rank") <= offset + k)
+    out = rank_cut(scored, offset + k, knn_order(score_col, rank_round, ascending))
     if offset:
         out = out.filter(F.col("rank") > offset)
     return out.select("query_id", "rank", "doc_id", score_col)
@@ -183,7 +221,7 @@ def bm25_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     never enter the pool.
     ``offset`` — pagination: ranks (offset, offset + k] (see :func:`topk`).
     """
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     scored = _bm25_scored(index, queries, accept_docs, with_matches=(t > 1))
     return topk(_tfilter(scored, t), k, "score", ascending=False,
                 rank_round=rank_round, offset=offset)
@@ -260,7 +298,7 @@ def bm25_msm_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
 
     Plan shape = :func:`bm25_topk` plus one broadcast of the per-query
     requirement (Q rows)."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     qt = _bm25_qterms(index, queries)
     need = qt.groupBy("query_id").agg(
         F.ceil(F.lit(float(msm)) * F.count(F.lit(1))).cast("long").alias("need"))
@@ -285,7 +323,7 @@ def explain_bm25(index: InvertedIndex, queries: DataFrame, k: int = 10,
     matched-postings relation that produced it — Catalyst reuses the
     broadcast query-term join and the pruned postings scan; no second
     full-corpus pass, and the explain join touches only matched rows."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     # carry term_id through _matched (which strips the join key) so the term
     # string can be recovered for the breakdown rows
     qt = _bm25_qterms(index, queries).withColumn("qterm_id", F.col("term_id"))
@@ -314,7 +352,7 @@ def cosine_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     (distance fixed to NormCosine, /root/reference/src/winvfile.jl:30;
     dist = 1 − Σ q·w, /root/reference/src/winvfilesearch.jl:8-16).
     Ascending distance, doc_id tie-break; ``t`` as in :func:`bm25_topk`."""
-    assert index.cfg.weighting == "normcosine", "index not built with normcosine weighting"
+    require_weighting(index, "normcosine")
     m = _accept(_matched(index, query_weights(index, queries)), accept_docs)
     aggs = [(F.lit(1.0) - F.sum(F.col("qw") * F.col("weight"))).alias("dist")]
     if t > 1:  # same narrow-agg policy as _bm25_scored
@@ -349,7 +387,7 @@ def set_distance_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     (/root/reference/src/binvfilesearch.jl:9-34).  ``t`` is the xmerge
     t-threshold — docs present in < t query-term lists are dropped
     (/root/reference/src/binvfilesearch.jl:25)."""
-    assert index.cfg.weighting == "binary", "index not built with binary weighting"
+    require_weighting(index, "binary")
     qt = query_terms(queries, index.cfg).select("query_id", "term_id")  # distinct terms
     qsize = qt.groupBy("query_id").agg(F.count(F.lit(1)).alias("qsize"))
     m = _accept(_matched(index, qt.withColumn("qtf", F.lit(1))), accept_docs)
@@ -582,7 +620,7 @@ def _boolean_scored(index: InvertedIndex, queries: DataFrame,
     (phrase hits) join the matched postings rows ahead of the aggregate.
     The batch is coalesced to one partition, so the role group-by and the
     ``n_must`` window plan no exchange."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     toks = _clause_tokens(queries, index.cfg,
                           (must_col, should_col, must_not_col))
     if slot_terms is not None:
@@ -677,13 +715,9 @@ def facet_counts(index: InvertedIndex, queries: DataFrame, meta: DataFrame,
                   "doc_id")
     counts = m.groupBy("query_id", "facet").agg(
         F.count(F.lit(1)).alias("n_docs"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("n_docs").desc(), F.col("facet").asc())
-    return (
-        counts.withColumn("facet_rank", F.row_number().over(w))
-        .filter(F.col("facet_rank") <= k)
-        .select("query_id", "facet_rank", "facet", "n_docs")
-    )
+    return rank_cut(counts, k, knn_order("n_docs", id_col="facet"),
+                    rank="facet_rank",
+                    cols=["query_id", "facet_rank", "facet", "n_docs"])
 
 
 def facet_histogram(index: InvertedIndex, queries: DataFrame, meta: DataFrame,
@@ -729,24 +763,16 @@ def doc_term_profile(index: InvertedIndex, corpus: DataFrame,
     path over source docs ONLY, idf joins in from vocab on term_id, and
     the per-doc term window is bounded by the source doc's distinct-term
     count."""
-    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
-
     n = float(index.stats["n_docs"])
     src = corpus.join(F.broadcast(source_ids.select("doc_id")),
                       "doc_id", "left_semi")
-    t = exploded_terms(src, "query_id", "doc_id", content_col, index.cfg)
-    tf = t.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.withColumn("term_id", term_id_col(F.col("term")))
+    tf = query_terms(src, index.cfg, "doc_id", content_col).withColumnRenamed(
+        "qtf", "tf")
     prof = index.vocab.select("term_id", "df").join(tf, "term_id").select(
         "query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("tf") * F.col("idf"), sel_round).desc(),
-        F.col("term").asc())
-    return (
-        prof.withColumn("trank", F.row_number().over(w))
-        .filter(F.col("trank") <= n_terms)
-        .select("query_id", "term_id", "idf")
-    )
+    return rank_cut(prof, n_terms, knn_order(F.col("tf") * F.col("idf"),
+                                             sel_round, id_col="term"),
+                    rank="trank", cols=["query_id", "term_id", "idf"])
 
 
 def query_significant_terms(index: InvertedIndex, corpus: DataFrame,
@@ -772,7 +798,7 @@ def query_significant_terms(index: InvertedIndex, corpus: DataFrame,
     per-query bounded."""
     from invertedfiles_jl_spark.functions.tokenize import exploded_terms
 
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     n_docs = float(index.stats["n_docs"])
     hits = bm25_topk(index, queries, k=depth, rank_round=rank_round).select(
         "query_id", "doc_id")
@@ -795,13 +821,8 @@ def query_significant_terms(index: InvertedIndex, corpus: DataFrame,
         .withColumn("jlh", (F.col("fg_pct") - F.col("bg_pct"))
                     * (F.col("fg_pct") / F.col("bg_pct")))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("jlh"), jlh_round).desc(), F.col("term").asc())
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= n)
-        .select("query_id", "rank", "term", "fg", "bg", "jlh")
-    )
+    return rank_cut(scored, n, knn_order("jlh", jlh_round, id_col="term"),
+                    cols=["query_id", "rank", "term", "fg", "bg", "jlh"])
 
 
 def term_vectors(index: InvertedIndex, corpus: DataFrame,
@@ -816,16 +837,14 @@ def term_vectors(index: InvertedIndex, corpus: DataFrame,
     map-side pass), tokenize + tf over the requested docs ONLY, df joins
     in from vocab on term_id.  Postings are never exploded — the forward
     path is the cheap direction for per-doc views."""
-    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
-
     n = float(index.stats["n_docs"])
     src = corpus.join(F.broadcast(doc_ids.select("doc_id")), "doc_id",
                       "left_semi")
-    t = exploded_terms(src, "doc_id", "doc_id", content_col, index.cfg)
-    tf = t.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    tf = tf.withColumn("term_id", term_id_col(F.col("term")))
+    tf = query_terms(src, index.cfg, "doc_id", content_col).withColumnRenamed(
+        "qtf", "tf")
     return index.vocab.select("term_id", "df").join(tf, "term_id").select(
-        "doc_id", "term", "tf", "df", (F.col("tf") * bm25_idf(n)).alias("tfidf"))
+        F.col("query_id").alias("doc_id"), "term", "tf", "df",
+        (F.col("tf") * bm25_idf(n)).alias("tfidf"))
 
 
 def more_like_this(index: InvertedIndex, corpus: DataFrame,
@@ -840,7 +859,7 @@ def more_like_this(index: InvertedIndex, corpus: DataFrame,
     the profile extraction this is exactly the Plan A shape: broadcast the
     (query, term) profile into the postings join, partial+final sum, one
     bounded top-k window."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     prof = doc_term_profile(index, corpus, source_ids, n_terms,
                             content_col=content_col)
     m = _matched(index, prof)
@@ -866,7 +885,7 @@ def boosted_bm25_topk(index: InvertedIndex, queries: DataFrame,
     touches only candidate rows (Q × matched docs), never the postings —
     at 100 TB the boost table is a doc-keyed dimension and AQE picks
     broadcast vs shuffle from its real size."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     scored = _bm25_scored(index, queries, with_matches=False)
     b = boosts.select("doc_id",
                       F.col(boost_col).cast("double").alias("_boost"))
@@ -898,16 +917,12 @@ def collapse_topk(index: InvertedIndex, queries: DataFrame, meta: DataFrame,
     (query_id, group) — strictly less traffic than the uncollapsed plan's
     top-k window at equal candidate count, with Spark's WindowGroupLimit
     pushdown bounding both windows."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     scored = _bm25_scored(index, queries, with_matches=False)
     g = scored.join(meta.select("doc_id", F.col(group_col).alias("group_key")),
                     "doc_id")
-    key = (F.round(F.col("score"), rank_round) if rank_round is not None
-           else F.col("score"))
-    w = Window.partitionBy("query_id", "group_key").orderBy(
-        key.desc(), F.col("doc_id").asc())
-    best = (g.withColumn("rn", F.row_number().over(w))
-            .filter(F.col("rn") == 1).drop("rn"))
+    best = rank_cut(g, 1, knn_order("score", rank_round),
+                    by=("query_id", "group_key"), rank="rn").drop("rn")
     ranked = topk(best.select("query_id", "doc_id", "score"), k, "score",
                   ascending=False, rank_round=rank_round)
     # recover the group key: ranked is bounded Q·k by construction → broadcast
@@ -930,8 +945,6 @@ def expand_synonyms(queries: DataFrame, synonyms: DataFrame,
     The thesaurus is query-metadata-sized → broadcast; expansion never
     touches postings, so the extra cost over plain BM25 is only the wider
     query-term relation (≤ |q| · (1 + fanout) rows per query)."""
-    from invertedfiles_jl_spark.operators.build import term_id_col
-
     qt = query_terms(queries, cfg).drop("term_id")
     orig = qt.select("query_id", "term", F.col("qtf").cast("double").alias("qw"))
     via = qt.join(F.broadcast(synonyms), "term").select(
@@ -954,7 +967,7 @@ def synonym_bm25_topk(index: InvertedIndex, queries: DataFrame,
     serves every thesaurus (the standard trade against index-time synonym
     ingestion, which bakes one thesaurus into the postings).  Plan shape is
     exactly :func:`bm25_topk` with a wider broadcast query-term relation."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     n = float(index.stats["n_docs"])
     ex = expand_synonyms(queries, synonyms, index.cfg)
     qt = index.vocab.select("term_id", "df").join(F.broadcast(ex), "term_id").select(
@@ -990,19 +1003,15 @@ def prf_bm25_topk(index: InvertedIndex, corpus: DataFrame,
     fb_terms) rows) broadcasts into the standard matched-postings pass.
     Two corpus-scale passes total — the price of feedback, not a scale
     hazard."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
-    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
-    from invertedfiles_jl_spark.operators.build import term_id_col
-
+    require_weighting(index, "bm25")
     n = float(index.stats["n_docs"])
     fb = bm25_topk(index, queries, k=fb_docs, rank_round=rank_round)
 
     # expansion-term mining over the feedback docs' raw content
     src = corpus.select("doc_id", content_col).join(
         F.broadcast(fb.select("query_id", "doc_id")), "doc_id")
-    t = exploded_terms(src, "query_id", "query_id", content_col, index.cfg)
-    ftf = t.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("tf"))
-    ftf = ftf.withColumn("term_id", term_id_col(F.col("term")))
+    ftf = query_terms(src, index.cfg, "query_id", content_col).withColumnRenamed(
+        "qtf", "tf")
     qt_orig = query_terms(queries, index.cfg)
     cand = (
         index.vocab.select("term_id", "df").join(ftf, "term_id")
@@ -1010,13 +1019,11 @@ def prf_bm25_topk(index: InvertedIndex, corpus: DataFrame,
               ["query_id", "term_id"], "left_anti")
         .select("query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.round(F.col("tf") * F.col("idf"), sel_round).desc(),
-        F.col("term").asc())
-    expansion = (cand.withColumn("trank", F.row_number().over(w))
-                 .filter(F.col("trank") <= fb_terms)
-                 .select("query_id", "term_id",
-                         F.lit(float(beta)).alias("w"), "idf"))
+    expansion = rank_cut(
+        cand, fb_terms, knn_order(F.col("tf") * F.col("idf"), sel_round,
+                                  id_col="term"),
+        rank="trank",
+        cols=["query_id", "term_id", F.lit(float(beta)).alias("w"), "idf"])
 
     orig = _bm25_qterms(index, queries).select(
         "query_id", "term_id", F.col("qtf").cast("double").alias("w"), "idf")
@@ -1049,13 +1056,8 @@ def suggest_corrections(index: InvertedIndex, fuzzy: DataFrame, k: int = 3,
         "query_id", "term", "cf",
         F.levenshtein(F.col("term"), F.col("qterm")).cast("int")
         .alias("dist"))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("dist").asc(), F.col("cf").desc(), F.col("term").asc())
-    return (
-        m.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "term", "dist", "cf")
-    )
+    return rank_cut(m, k, [F.col("dist").asc(), *knn_order("cf", id_col="term")],
+                    cols=["query_id", "rank", "term", "dist", "cf"])
 
 
 def suggest_terms(index: InvertedIndex, prefixes: DataFrame, k: int = 10,
@@ -1068,13 +1070,8 @@ def suggest_terms(index: InvertedIndex, prefixes: DataFrame, k: int = 10,
     q = prefixes.select("query_id", F.lower(F.col(prefix_col)).alias("prefix"))
     m = index.vocab.select("term", "cf").join(
         F.broadcast(q), F.col("term").startswith(F.col("prefix")))
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cf").desc(), F.col("term").asc())
-    return (
-        m.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "rank", "term", "cf")
-    )
+    return rank_cut(m, k, knn_order("cf", id_col="term"),
+                    cols=["query_id", "rank", "term", "cf"])
 
 
 def lm_dirichlet_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
@@ -1100,7 +1097,7 @@ def lm_dirichlet_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     and one broadcast of the per-query |q| row.  The smoothed-background
     term factors through ln(1 + tf·T/(μ·cf)) so Spark and the oracle
     evaluate literally the same IEEE expression tree."""
-    assert index.cfg.weighting == "tf", "index not built with tf weighting"
+    require_weighting(index, "tf")
     total_tokens = int(index.docs.agg(F.sum("doc_len")).first()[0] or 0)
     qt = query_terms(queries, index.cfg)
     # in-vocab filter + cf attach (inner join drops OOV)
@@ -1146,7 +1143,7 @@ def tfidf_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     via the vocab inner join (idf undefined at df = 0) and are likewise
     excluded from the query norm, keeping the score a true cosine of the
     two realizable vectors."""
-    assert index.cfg.weighting == "tf", "index not built with tf weighting"
+    require_weighting(index, "tf")
     n = float(index.stats["n_docs"])
     one_plus_ln = F.lit(1.0) + F.log(F.col("weight"))
     lnc_norm = (
@@ -1189,7 +1186,7 @@ def search_after_topk(index: InvertedIndex, queries: DataFrame,
     per query (Q rows → broadcast).  Emitted ``rank`` restarts at 1 for
     the page (ranks are cursor-relative by design — absolute depth is
     unknowable without counting, which is the thing search_after avoids)."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     scored = _bm25_scored(index, queries, with_matches=False)
     key = F.round(F.col("score"), rank_round)
     ck = F.round(F.col("after_score"), rank_round)
@@ -1217,27 +1214,18 @@ def facet_top_hits(index: InvertedIndex, queries: DataFrame, meta: DataFrame,
     then a (query, facet)-partitioned WindowGroupLimit for the hits.  Per
     query the output is ≤ k_buckets · k_hits rows; nothing rescans
     postings."""
-    assert index.cfg.weighting == "bm25", "index not built with bm25 weighting"
+    require_weighting(index, "bm25")
     scored = _bm25_scored(index, queries, with_matches=False)
     m = scored.join(meta.select("doc_id", F.col(facet_col).alias("facet")),
                     "doc_id")
     counts = m.groupBy("query_id", "facet").agg(
         F.count(F.lit(1)).alias("n_docs"))
-    wb = Window.partitionBy("query_id").orderBy(
-        F.col("n_docs").desc(), F.col("facet").asc())
-    top_buckets = (counts.withColumn("facet_rank", F.row_number().over(wb))
-                   .filter(F.col("facet_rank") <= k_buckets)
-                   .select("query_id", "facet"))
-    key = (F.round(F.col("score"), rank_round)
-           if rank_round is not None else F.col("score"))
-    wh = Window.partitionBy("query_id", "facet").orderBy(
-        key.desc(), F.col("doc_id").asc())
+    top_buckets = rank_cut(counts, k_buckets, knn_order("n_docs", id_col="facet"),
+                           rank="facet_rank", cols=["query_id", "facet"])
     hits = m.join(top_buckets, ["query_id", "facet"], "left_semi")
-    return (
-        hits.withColumn("hit_rank", F.row_number().over(wh))
-        .filter(F.col("hit_rank") <= k_hits)
-        .select("query_id", "facet", "hit_rank", "doc_id", "score")
-    )
+    return rank_cut(hits, k_hits, knn_order("score", rank_round),
+                    by=("query_id", "facet"), rank="hit_rank",
+                    cols=["query_id", "facet", "hit_rank", "doc_id", "score"])
 
 
 def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
@@ -1266,9 +1254,10 @@ def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
     (query, doc) aggregation, so the plan is S broadcast-join branches →
     Union → one partial+final agg → WindowGroupLimit: per-batch shuffle
     rows stay bounded by Σ df over segments = the monolithic bound."""
-    assert segments, "need at least one segment"
-    for s in segments:
-        assert s.cfg.weighting == "tf", "federated segments must store raw tf"
+    if not segments:
+        raise ValueError("need at least one segment")
+    if any(s.cfg.weighting != "tf" for s in segments):
+        raise ValueError("federated segments must store raw tf")
     cfg = segments[0].cfg
     n_g = float(sum(s.stats["n_docs"] for s in segments))
     total_len = sum(

@@ -64,9 +64,10 @@ from invertedfiles_jl_spark.operators.search import (
     query_terms,
     query_weights,
     read_postings,
+    require_weighting,
     topk,
 )
-from invertedfiles_jl_spark.operators.wand import round_half_up as _round_half_up
+from invertedfiles_jl_spark.operators.wand import rank_order
 
 
 def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
@@ -239,8 +240,7 @@ def _emit_topk(per_q: dict, k: int, rank_round, block_size: int,
             stats["block_skipped"] += st["block_skipped"]
         if uids.size == 0:
             continue
-        key = _round_half_up(scores, rank_round) if rank_round is not None else scores
-        sel = np.lexsort((uids, -key))[:k]  # same total order as topk()
+        sel = rank_order(uids, scores, k, rank_round)  # same order as topk()
         out_q.append(np.full(len(sel), qid, dtype=np.int64))
         out_d.append(uids[sel])
         out_s.append(scores[sel])
@@ -335,8 +335,7 @@ def _emit_set_topk(per_q: dict, qsize: dict, k: int, dist: str, t: int,
         if uids.size == 0:
             continue
         d = _set_distance_np(dist, isize, float(qsize[qid]), ds)
-        key = _round_half_up(d, rank_round) if rank_round is not None else d
-        sel = np.lexsort((uids, key))[:k]  # dist asc, doc_id asc
+        sel = rank_order(uids, d, k, rank_round, ascending=True)
         out_q.append(np.full(len(sel), qid, dtype=np.int64))
         out_d.append(uids[sel])
         out_s.append(d[sel])
@@ -408,7 +407,7 @@ def sharded_set_topk(
     search (/root/reference/src/binvfilesearch.jl:9-34), rank-identical to
     ``search.set_distance_topk`` (pytest gate).  Same co-location contract
     as :func:`sharded_topk`; ``t`` is the xmerge t-threshold."""
-    assert index.cfg.weighting == "binary", "index not built with binary weighting"
+    require_weighting(index, "binary")
     # binary query terms weigh 1 (the set kernel reads only the qids)
     rows = query_terms(queries, index.cfg).select(
         "query_id", "term_id", F.lit(1.0).alias("qw")).collect()
@@ -449,7 +448,7 @@ def sharded_topk(
     shards).  Rank-identical to ``bm25_topk`` either way (pytest gate,
     including over a written-then-re-read shards table).
     """
-    assert index.cfg.weighting in ("bm25", "normcosine")
+    require_weighting(index, "bm25", "normcosine")
     # the query batch is tiny — collect once
     rows = query_weights(index, queries).collect()
     block_size = int(index.cfg.block_size)

@@ -34,8 +34,10 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from invertedfiles_jl_spark.operators.search import knn_order, rank_cut
 
 MIN_NEEDLE = 3
 
@@ -121,11 +123,8 @@ def substring_search(tindex: TrigramIndex, queries: DataFrame,
     bad = qv.filter(F.col("df").isNull()).select("query_id").distinct()
     qv = qv.join(F.broadcast(bad), "query_id", "left_anti")  # ≤ Q rows
     # rarest-first gram selection (pg_trgm trick): df asc, gram asc
-    w = Window.partitionBy("query_id").orderBy(F.col("df").asc(),
-                                               F.col("gram").asc())
-    sel = (qv.withColumn("grank", F.row_number().over(w))
-           .filter(F.col("grank") <= max_grams)
-           .select("query_id", "gram"))
+    sel = rank_cut(qv, max_grams, knn_order("df", ascending=True, id_col="gram"),
+                   rank="grank", cols=["query_id", "gram"])
     n_sel = sel.groupBy("query_id").agg(F.count(F.lit(1)).alias("n_grams"))
     # candidate docs: contain ALL selected grams
     m = tindex.postings.select("gram", "doc_ids").join(F.broadcast(sel), "gram")

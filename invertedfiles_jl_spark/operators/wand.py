@@ -22,6 +22,9 @@ join has already reduced data to the matched lists, so each group holds just
 the query's postings.  Arrow moves the arrays; numpy does the math; Python
 touches O(#lists) objects, not O(#postings).
 
+The final cut is :func:`rank_order` (HALF_UP :func:`round_half_up` key,
+doc_id tie-break), the one numpy rank order every kernel shares.
+
 Query weights come from ``search.query_weights`` (qtf·idf or qtf/‖q‖, the
 same column every dot-product plan uses).  Matched rows reach the kernel
 with ``ids_vb`` still encoded; ``codec.decode_posting`` inside the kernel is
@@ -41,20 +44,35 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex
-from invertedfiles_jl_spark.operators.search import query_weights, stored_ids_col
+from invertedfiles_jl_spark.operators.search import (
+    query_weights,
+    require_weighting,
+    stored_ids_col,
+)
 
 _OUT_SCHEMA = "query_id long, rank int, doc_id long, score double"
 
 
 def round_half_up(a: np.ndarray, ndigits: int) -> np.ndarray:
-    """HALF_UP rounding for non-negative values — matches Spark's
-    ``F.round`` (java.math.RoundingMode.HALF_UP) and DuckDB's ``round``,
-    unlike ``np.round`` (half-to-even).  Every kernel ranking key must use
-    this so all three query plans (and their oracles) agree at rounding
-    boundaries (scores here are sums of positive contributions, so the
-    non-negative form suffices)."""
+    """HALF_UP rounding (halves away from zero, −2.5 → −3) — matches
+    Spark's ``F.round`` (java.math.RoundingMode.HALF_UP) and DuckDB's
+    ``round``, unlike ``np.round`` (half-to-even).  Every kernel ranking
+    key must use this so all three query plans (and their oracles) agree
+    at rounding boundaries."""
     p = 10.0 ** ndigits
-    return np.floor(a * p + 0.5) / p
+    return np.sign(a) * np.floor(np.abs(a) * p + 0.5) / p
+
+
+def rank_order(ids: np.ndarray, key: np.ndarray, k: int, rank_round,
+               ascending: bool = False) -> np.ndarray:
+    """Indices of the first ``k`` rows under the ``KnnSorted`` order —
+    ``round_half_up(key, rank_round)`` desc (asc for a distance; the raw
+    key when ``rank_round`` is None), then id asc: the numpy twin of
+    ``search.rank_cut`` over ``search.knn_order``, and every kernel's one
+    rank cut (WAND, sharded, MMR, streaming serve)."""
+    if rank_round is not None:
+        key = round_half_up(key, rank_round)
+    return np.lexsort((ids, key if ascending else -key))[:k]
 
 
 def maxscore_pool(qws, id_arrays, w_arrays, bm_arrays, maxw,
@@ -175,8 +193,7 @@ def _maxscore_group(pdf, k: int, rank_round, block_size: int = 128,
             {"query_id": "int64", "rank": "int32", "doc_id": "int64", "score": "float64"}
         )
         return (out, stats) if return_stats else out
-    key = round_half_up(acc_scores, rank_round) if rank_round is not None else acc_scores
-    order_sel = np.lexsort((acc_ids, -key))[:k]
+    order_sel = rank_order(acc_ids, acc_scores, k, rank_round)
     out = pd.DataFrame(
         {
             "query_id": np.full(len(order_sel), qid, dtype=np.int64),
@@ -199,7 +216,7 @@ def wand_topk(
     Output: (query_id, rank, doc_id, score) — for normcosine, ``score`` is
     the dot product; use :func:`wand_cosine_topk` for the distance form.
     """
-    assert index.cfg.weighting in ("bm25", "normcosine")
+    require_weighting(index, "bm25", "normcosine")
     cols = ["query_id", "qw", "weights", "max_weight"]
     if "block_max" in index.postings.columns:
         cols.append("block_max")

@@ -39,7 +39,9 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
     ``grouped_postings``.
     """
     cfg = old.cfg
-    assert cfg.weighting == delta.cfg.weighting
+    if cfg.weighting != delta.cfg.weighting:
+        raise ValueError(f"cannot merge a {delta.cfg.weighting} delta into a "
+                         f"{cfg.weighting} index")
 
     from invertedfiles_jl_spark.operators.build import (
         doc_range,

@@ -37,18 +37,14 @@ from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex, term_id_col
 from invertedfiles_jl_spark.operators.search import bm25_idf, query_terms
-from invertedfiles_jl_spark.operators.wand import round_half_up
+from invertedfiles_jl_spark.operators.wand import rank_order
 
 
 def rank_pool(ids, sc, k: int, rank_round: int):
-    """Cut a candidate pool to the top-k under the repo-wide rank identity
-    (round_half_up(score, rank_round) desc, doc_id asc) — the ``knnqueue``
-    (KnnSorted) order, /root/reference/src/InvertedFiles.jl:57.  HALF_UP,
-    never ``np.round`` (half-to-even), so a boundary score ranks identically
-    to ``search.topk``'s ``F.round`` and the DuckDB oracle."""
-    import numpy as np
-
-    order = np.lexsort((ids, -round_half_up(sc, rank_round)))[:k]
+    """Cut a candidate pool to its top-k (ids, scores) under
+    ``wand.rank_order`` — the ``knnqueue`` (KnnSorted) order,
+    /root/reference/src/InvertedFiles.jl:57, shared with every kernel."""
+    order = rank_order(ids, sc, k, rank_round)
     return ids[order], sc[order]
 
 

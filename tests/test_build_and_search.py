@@ -356,3 +356,19 @@ def test_msm_generalizes_t_threshold(corpus, spark):
     loose_all = bm25_msm_topk(idx, q, k=100_000, msm=1e-9, rank_round=6)
     n_strict, n_loose = strict.count(), loose_all.count()
     assert 0 < n_strict < n_loose, "conjunction must prune the candidate set"
+
+
+@pytest.mark.parametrize("scorer,wrong", [
+    ("bm25_topk", "normcosine"), ("cosine_topk", "bm25"),
+    ("set_distance_topk", "bm25"), ("tfidf_topk", "bm25"),
+    ("wand_topk", "binary"),
+])
+def test_wrong_weighting_raises_value_error(corpus, spark, scorer, wrong):
+    """A scorer handed an index of the wrong weighting raises ValueError —
+    an explicit error that ``python -O`` (which strips asserts) keeps."""
+    from invertedfiles_jl_spark.operators import search, wand
+
+    fn = getattr(search, scorer, None) or getattr(wand, scorer)
+    idx = build_index(corpus, IndexConfig(weighting=wrong))
+    with pytest.raises(ValueError, match="index not built with"):
+        fn(idx, queries_df(spark), k=5)

@@ -693,3 +693,55 @@ def test_sq8_semantic_lm_plans_no_smj(spark, documents):
     # — the n·n_clusters IVF assignment scan, intended; the forbidden shape
     # is an un-broadcast corpus×corpus product
     assert "CartesianProduct" not in plan
+
+
+def test_rank_cut_plans_window_group_limit(spark, documents):
+    """``search.rank_cut`` — the engine's one rank cut — is bounded below
+    its window both partitioned (a per-doc top-n: the WindowGroupLimit
+    pushdown) and unpartitioned (``term_cooccurrence``'s one global order
+    over the surviving pairs: Spark plans a row_number cut with no
+    partition as a top-n ``TakeOrderedAndProject`` instead of a
+    WindowGroupLimit).  Neither sorts every row."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.build import doc_term_freqs
+    from invertedfiles_jl_spark.operators.meta import term_cooccurrence
+    from invertedfiles_jl_spark.operators.search import knn_order, rank_cut
+
+    corpus = documents.select("doc_id", F.col("text").alias("content"))
+    per_doc = rank_cut(doc_term_freqs(corpus, IndexConfig()), 3,
+                       knn_order("tf", id_col="term"), by=("doc_id",))
+    plan = per_doc._jdf.queryExecution().executedPlan().toString()
+    assert "WindowGroupLimit" in plan
+    plan = term_cooccurrence(corpus, k=5)._jdf.queryExecution().executedPlan(
+    ).toString()
+    assert "TakeOrderedAndProject(limit=5," in plan
+
+
+def test_rank_order_written_once():
+    """The rank order is written once per side: ``row_number()`` appears in
+    the package only in ``search.rank_cut``, the DuckDB oracles, and the
+    two windows that number rows rather than cut ranks
+    (``sampling.shuffle_order``'s position, ``sources.corpus`` doc-id
+    assignment); ``np.lexsort`` only in ``wand.rank_order``."""
+    import inspect
+    import pathlib
+
+    import invertedfiles_jl_spark
+    from invertedfiles_jl_spark.operators.search import rank_cut
+    from invertedfiles_jl_spark.operators.wand import rank_order
+
+    root = pathlib.Path(invertedfiles_jl_spark.__file__).parent
+    found: dict[str, dict[str, int]] = {"row_number()": {}, "np.lexsort": {}}
+    for f in sorted(root.rglob("*.py")):
+        rel = f.relative_to(root).as_posix()
+        text = f.read_text()
+        for needle, hits in found.items():
+            if needle in text and rel != "plans/oracles.py":
+                hits[rel] = text.count(needle)
+    assert found["row_number()"] == {"operators/sampling.py": 1,
+                                     "operators/search.py": 1,
+                                     "sources/corpus.py": 1}
+    assert "row_number()" in inspect.getsource(rank_cut)
+    assert found["np.lexsort"] == {"operators/wand.py": 1}
+    assert "np.lexsort" in inspect.getsource(rank_order)

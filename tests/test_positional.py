@@ -37,7 +37,11 @@ def corpus(spark, sf_dir):
 
 @pytest.fixture(scope="module")
 def positional(corpus):
-    return positional_postings(corpus).cache()
+    # unpersist at teardown: a cached relation left registered in the
+    # session's cache manager is substituted into later modules' plans
+    pos = positional_postings(corpus).cache()
+    yield pos
+    pos.unpersist()
 
 
 def _duck(sf_dir):

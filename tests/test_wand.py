@@ -137,16 +137,26 @@ def test_blockmax_prunes_more_and_stays_rank_identical():
         assert np.isclose(s, gs)
 
 
-def test_rank_round_half_up_matches_plan_a_rule():
+def test_rank_round_half_up_matches_plan_a_rule(spark):
     """The kernel's final ranking key must round HALF_UP like Plan A's
     ``F.round`` (and the sharded kernel / DuckDB oracles) — NOT numpy's
     half-to-even.  Scores 0.25 vs 0.26 at rank_round=1: HALF_UP keys both
     to 0.3 (tie → doc_id asc → doc 2 wins); banker's rounding keys them
-    0.2 vs 0.3 and flips the top-1 to doc 7."""
+    0.2 vs 0.3 and flips the top-1 to doc 7.  Negative keys (MMR's
+    λ·rel − (1−λ)·maxsim) round their halves away from zero, as
+    ``F.round`` does: −2.5 → −3 at 0 dp, −0.125 → −0.13 at 2 dp."""
     import numpy as np
     import pandas as pd
 
-    from invertedfiles_jl_spark.operators.wand import _maxscore_group
+    from invertedfiles_jl_spark.operators.wand import _maxscore_group, round_half_up
+
+    cases = [(-2.5, 0), (-0.125, 2), (-0.375, 2), (-0.25, 1), (-0.5, 0),
+             (-1.24, 1), (-0.0, 3), (0.25, 1), (2.5, 0), (0.125, 2), (1.26, 1)]
+    row = spark.createDataFrame([tuple(v for v, _ in cases)],
+                                [f"v{i}" for i in range(len(cases))]).select(
+        *[F.round(f"v{i}", nd) for i, (_, nd) in enumerate(cases)]).first()
+    got = [float(round_half_up(np.array([v]), nd)[0]) for v, nd in cases]
+    assert got == [float(x) for x in row], (got, list(row))
 
     pdf = pd.DataFrame(
         {
