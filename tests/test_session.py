@@ -2,11 +2,15 @@
 
 from __future__ import annotations
 
+import importlib
 import os
+import zipfile
+import zipimport
 
 import pytest
 
-from invertedfiles_jl_spark.session import _is_tmpfs, driver_memory
+from invertedfiles_jl_spark import worker_daemon
+from invertedfiles_jl_spark.session import _is_tmpfs, daemon_module, driver_memory
 
 MOUNTS = """\
 /dev/vda / ext4 rw,relatime 0 0
@@ -51,3 +55,80 @@ def test_driver_memory_default_is_half_of_ram():
     # the live host: never more than it has
     mb = int(driver_memory({})[:-1])
     assert 0 < mb * 2**20 <= os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+
+
+def test_daemon_module_only_for_local_masters():
+    for master in ("local", "local[8]", "local[*]", "local[4,2]"):
+        assert daemon_module(master, {}) == "invertedfiles_jl_spark.worker_daemon"
+    # a cluster daemon starts before --py-files reach the executor
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:6443",
+                   "local-cluster[2,1,1024]"):
+        assert daemon_module(master, {}) is None
+    # under spark-submit the JVM never saw get_spark's PYTHONPATH
+    assert daemon_module("local[8]", {"PYSPARK_GATEWAY_PORT": "4040"}) is None
+
+
+def _write_zip(path, modules):
+    with zipfile.ZipFile(path, "w") as z:
+        for name in modules:
+            z.writestr(f"{name}.py", f"NAME = {name!r}\n")
+
+
+def test_lazy_invalidate_rereads_only_a_changed_archive(tmp_path, monkeypatch):
+    archive = tmp_path / "mods.zip"
+    _write_zip(archive, ["a"])
+    importer = zipimport.zipimporter(str(archive))
+    original = zipimport.zipimporter.invalidate_caches
+    reads = []
+    read_directory = zipimport._read_directory
+    monkeypatch.setattr(zipimport, "_read_directory",
+                        lambda p: reads.append(p) or read_directory(p))
+    monkeypatch.setattr(zipimport.zipimporter, "invalidate_caches",
+                        worker_daemon.lazy_invalidate(original))
+
+    worker_daemon.stamp_importers([importer, object()])
+    importer.invalidate_caches()
+    importer.invalidate_caches()
+    assert reads == []
+    assert importer.find_spec("b") is None
+
+    _write_zip(archive, ["a", "b"])
+    importer.invalidate_caches()
+    assert reads == [str(archive)]
+    assert importer.find_spec("b") is not None
+    importer.invalidate_caches()
+    assert len(reads) == 1
+
+    # an importer never stamped reads once, then is stamped
+    fresh = zipimport.zipimporter(str(archive))
+    fresh.invalidate_caches()
+    fresh.invalidate_caches()
+    assert len(reads) == 2
+
+
+def test_importing_worker_daemon_patches_nothing():
+    before = zipimport.zipimporter.invalidate_caches
+    importlib.reload(worker_daemon)
+    assert zipimport.zipimporter.invalidate_caches is before
+    assert before.__qualname__ == "zipimporter.invalidate_caches"
+
+
+def test_python_tasks_skip_unchanged_archives(spark):
+    def zip_rereads(_):  # nested: pickled by value into the worker
+        import importlib as il
+        import zipimport as zi
+
+        calls = []
+        read_directory = zi._read_directory
+        zi._read_directory = lambda p: calls.append(p) or read_directory(p)
+        try:
+            il.invalidate_caches()
+        finally:
+            zi._read_directory = read_directory
+        yield len(calls)
+
+    assert (spark.conf.get("spark.python.daemon.module")
+            == "invertedfiles_jl_spark.worker_daemon")
+    rereads = (spark.sparkContext.parallelize(range(4), 4)
+               .mapPartitions(zip_rereads).collect())
+    assert rereads == [0, 0, 0, 0]
