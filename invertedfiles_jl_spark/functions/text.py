@@ -215,7 +215,7 @@ def doc_keywords(corpus, cfg=None, n: int = 5, rank_round: int | None = None,
     scored = (
         tf.join(dft, "term")
         .crossJoin(F.broadcast(stats))
-        .withColumn("tfidf", F.col("tf") * bm25_idf(F.col("n_docs")))
+        .withColumn("tfidf", F.expr(f"tf * {bm25_idf('n_docs')}"))
     )
     return rank_cut(scored, n, knn_order("tfidf", rank_round, id_col="term"),
                     by=("doc_id",), cols=["doc_id", "rank", "term", "tfidf"])

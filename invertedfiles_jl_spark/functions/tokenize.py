@@ -29,15 +29,15 @@ def tokens_sql(content_sql: str, cfg: IndexConfig) -> str:
     — higher-order functions are CodegenFallback in Spark and would drop the
     surrounding operator out of whole-stage codegen; identical output, since
     lowercasing preserves whitespace and the code regex's character
-    classes).  The hot build/query paths avoid even the remaining ``filter``
-    lambda via :func:`exploded_terms`.
+    classes).  The whitespace split drops its empty tokens with
+    ``array_remove`` rather than a ``filter`` lambda, for the same reason.
     """
     if cfg.lowercase:
         content_sql = f"lower({content_sql})"
     if cfg.tokenizer == "code":
         pat = IndexConfig.CODE_TOKEN_RE.replace("\\", "\\\\")
         return f"regexp_extract_all({content_sql}, '{pat}', 0)"
-    return f"filter(split({content_sql}, '\\\\s+'), t -> t != '')"
+    return f"array_remove(split({content_sql}, '\\\\s+'), '')"
 
 
 def exploded_terms(df, doc_out: str, doc_col: str, content_col: str,

@@ -32,7 +32,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.config import IndexConfig
@@ -58,17 +58,23 @@ class InvertedIndex:
         return self.stats["n_docs"]
 
 
-def term_id_col(term_col):
-    """Stable 64-bit term id: xxhash64 — computed inline, no dictionary
-    join, no global row_number (which would single-partition a 10^9-term
-    vocabulary).  Collisions merge two posting lists with probability
-    ~n²/2⁶⁵ — negligible quality impact at corpus scale, zero at test scale.
+def term_id_sql(term: str = "term") -> str:
+    """Stable 64-bit term id of the ``term`` column, as a SQL expression:
+    xxhash64 — computed inline, no dictionary join, no global row_number
+    (which would single-partition a 10^9-term vocabulary).  Collisions
+    merge two posting lists with probability ~n²/2⁶⁵ — negligible quality
+    impact at corpus scale, zero at test scale.
 
     Non-string term columns (the pre-vectorized input path hands integer
     dimension ids) are cast to string first so every derivation site —
     vocab, postings, query terms — produces the same id for the same term.
     """
-    return F.xxhash64(term_col.cast("string"))
+    return f"xxhash64(CAST({term} AS STRING))"
+
+
+def term_id_col(term: str = "term") -> Column:
+    """:func:`term_id_sql` as a Column."""
+    return F.expr(term_id_sql(term))
 
 
 def with_term_id(df: DataFrame) -> DataFrame:
@@ -80,7 +86,7 @@ def with_term_id(df: DataFrame) -> DataFrame:
     stage's scan can prune the string column entirely)."""
     if "term_id" in df.columns:
         return df.drop("term") if "term" in df.columns else df
-    return df.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
+    return df.withColumn("term_id", term_id_col("term")).drop("term")
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +118,7 @@ def doc_term_freqs(corpus: DataFrame, cfg: IndexConfig,
     # serves the postings stage with a string-free column-pruned scan
     # (doc_id, term_id, tf) — the string column is decoded only by the
     # vocab stage, the one consumer that needs it
-    return tf.withColumn("term_id", term_id_col(F.col("term")))
+    return tf.withColumn("term_id", term_id_col("term"))
 
 
 def docs_table(tf: DataFrame, corpus: DataFrame,
@@ -137,7 +143,7 @@ def vocab_table(tf: DataFrame) -> DataFrame:
     return tf.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("tf").alias("cf"),
-    ).withColumn("term_id", term_id_col(F.col("term")))
+    ).withColumn("term_id", term_id_col("term"))
 
 
 def compute_stats(corpus: DataFrame, docs: DataFrame) -> dict:

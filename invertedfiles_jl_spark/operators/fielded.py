@@ -107,7 +107,7 @@ def dismax_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         dfr = tf.groupBy("term").agg(
             F.count(F.lit(1)).cast("double").alias("df"))
         qterm = qt.join(dfr, "term").select(
-            "query_id", "term", "qtf", bm25_idf(n_docs).alias("idf"))
+            "query_id", "term", "qtf", F.expr(f"{bm25_idf(n_docs)} AS idf"))
         contrib = (
             tf.join(F.broadcast(qterm), "term")
             .join(flen, "doc_id")
@@ -178,7 +178,7 @@ def bm25f_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         F.explode(F.expr(field_tokens_sql("content", "content"))).alias("term"),
     ).groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("qtf"))
     qterm = qt.join(df_rel, "term").select(
-        "query_id", "term", "qtf", bm25_idf(n_docs).alias("idf"))
+        "query_id", "term", "qtf", F.expr(f"{bm25_idf(n_docs)} AS idf"))
 
     # tf~ then wtf: combine fields per (query, doc, term) BEFORE saturation
     norm = (

@@ -55,7 +55,7 @@ def build_vector_index(pairs: DataFrame, cfg: IndexConfig | None = None) -> Inve
     vocab = weighted.groupBy("term").agg(
         F.count(F.lit(1)).alias("df"),
         F.sum("weight").alias("cf"),
-    ).withColumn("term_id", term_id_col(F.col("term").cast("string")))
+    ).withColumn("term_id", term_id_col("term"))
     drow = docs.select(
         F.count(F.lit(1)).alias("n"),
         F.min("doc_id").alias("lo"),
@@ -73,7 +73,7 @@ def _join_matched(index: InvertedIndex, qpairs: DataFrame, broadcast_queries: bo
     (query_id, term, qw) pairs match."""
     # postings carry only the fixed-width term_id; derive it for the query
     # side with the same xxhash64(string) the build used
-    qpairs = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
+    qpairs = qpairs.withColumn("term_id", term_id_col("term")).drop("term")
     if broadcast_queries:
         return _matched(index, qpairs)
     # Shuffle-join path (query side too big to broadcast, e.g. allknn):
@@ -152,7 +152,7 @@ def allknn(index: InvertedIndex, pairs: DataFrame, k: int = 3,
         .select("query_id", "doc_id").distinct()
     # exact re-score of candidate pairs over ALL shared terms: restrict the
     # full (term_id, doc_id)-keyed posting rows to candidate pairs
-    qp = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
+    qp = qpairs.withColumn("term_id", term_id_col("term")).drop("term")
     flat = read_postings(index.postings, "term_id")
     scored = (
         cand.join(qp, "query_id")
@@ -170,7 +170,7 @@ def allknn_candidates(index: InvertedIndex, qpairs: DataFrame,
     BOTH sides.  Exposed separately so tests can assert the join-size bound
     (rows ≤ Σ_{df ≤ cap} df²  when the query side is the corpus itself)."""
     rare = index.vocab.filter(F.col("df") <= df_cap).select("term_id")
-    qp = qpairs.withColumn("term_id", term_id_col(F.col("term"))).drop("term")
+    qp = qpairs.withColumn("term_id", term_id_col("term")).drop("term")
     flat_rare = read_postings(index.postings, "term_id").join(
         rare, "term_id", "left_semi")
     qp_rare = qp.join(rare, "term_id", "left_semi")

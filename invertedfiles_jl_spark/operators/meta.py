@@ -172,8 +172,7 @@ def term_cooccurrence(corpus: DataFrame, cfg=None, k: int = 20,
                   / (F.col("df_a") * F.col("df_b"))).alias("pmi"))
     )
     return rank_cut(
-        scored, k, [*knn_order("pmi", pmi_round, id_col="term_a"),
-                    F.col("term_b").asc()],
+        scored, k, f"{knn_order('pmi', pmi_round, id_col='term_a')}, term_b ASC",
         by=(), rank="pair_rank",
         cols=["pair_rank", "term_a", "term_b", "pair_df",
               F.round("pmi", pmi_round).alias("pmi")])

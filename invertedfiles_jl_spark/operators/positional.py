@@ -99,7 +99,7 @@ def positional_postings(corpus: DataFrame, cfg: IndexConfig | None = None,
             F.sort_array(F.collect_list("pos")).alias("positions"),
             F.count(F.lit(1)).alias("tf"),
         )
-        .withColumn("term_id", term_id_col(F.col("term")))
+        .withColumn("term_id", term_id_col("term"))
     )
 
 
@@ -114,7 +114,7 @@ def phrase_terms(queries: DataFrame, cfg: IndexConfig | None = None,
         f"`{query_col}` AS query_id", f"size({arr}) AS m",
         f"posexplode({arr}) AS (offset, term)")
     return toks.select(
-        "query_id", "offset", "m", term_id_col(F.col("term")).alias("term_id")
+        "query_id", "offset", "m", term_id_col("term").alias("term_id")
     )
 
 

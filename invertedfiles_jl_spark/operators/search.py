@@ -21,10 +21,13 @@ bounded heaps, block-max pruning), which is rank-identical by test gate.
 
 Shared pieces, one home each, called by every engine path (search, wand,
 sharded, knn, fielded, maintenance, streaming, functions/text):
+  * :func:`query_terms` — (query_id, term, qtf, term_id), counted inside
+    each query row: the query side of every plan is one stage with no
+    shuffle (rows that share a query_id: see its docstring).
   * :func:`read_postings` — THE posting-list reader: :func:`decode_ids`
     (``ids_vb`` → ``doc_ids`` on a compressed index) then explode to
     (…, doc_id, weight); :func:`_matched` is its broadcast-probe form.
-  * :func:`bm25_idf` — the BM25 idf column ln(1 + (N − df + 0.5)/(df + 0.5)).
+  * :func:`bm25_idf` — the BM25 idf ln(1 + (N − df + 0.5)/(df + 0.5)).
   * :func:`query_weights` — (query_id, term_id, qw): qtf·idf for bm25,
     qtf/‖q‖ for normcosine; the query side of WAND, sharded and cosine.
   * :func:`rank_cut` — THE per-group top-n cut (one ``row_number`` window
@@ -34,34 +37,63 @@ sharded, knn, fielded, maintenance, streaming, functions/text):
     the numpy kernels' twin is ``wand.rank_order``.
   * :func:`require_weighting` — the ``ValueError`` a wrong-weighting index
     raises at every scorer's entry.
+
+The helpers are SQL expression strings (``selectExpr``, ``F.expr``): each
+``F.col``/``F.lit``, Column operator or ``Window`` builder is a py4j round
+trip (~0.2 ms), several hundred per call when plans are built from Columns.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.config import IndexConfig
-from invertedfiles_jl_spark.operators.build import InvertedIndex, term_id_col
+from invertedfiles_jl_spark.operators.build import (
+    InvertedIndex,
+    term_id_col,
+    term_id_sql,
+)
 
 
 def query_terms(queries: DataFrame, cfg: IndexConfig,
                 query_col: str = "query_id", content_col: str = "content") -> DataFrame:
-    """(query_id, term, term_id, qtf) with tol pruning like the reference's
-    search accept predicate (/root/reference/src/invfilesearch.jl:36-38).
+    """(query_id, term, qtf, term_id) — one row per distinct term of each
+    query row, with tol pruning like the reference's search accept
+    predicate (reference src/invfilesearch.jl:36-38).
+
+    The count stays inside the row: the row's token array
+    (:func:`tokens_sql`) explodes ``array_distinct(toks)`` and
+    ``qtf = size(toks) − size(array_remove(toks, term))``.  No lambda and
+    no shuffle, so the query side is one whole-stage-codegen stage.  That
+    count costs O(distinct terms × tokens) per row: right for a query of a
+    few words, wrong for a 100k-token file — per-document term counts come
+    from ``build.doc_term_freqs`` (:func:`doc_term_profile`,
+    :func:`term_vectors`, PRF mining).
+
+    Rows that share a query_id are not merged.  Every per-query sum (the
+    BM25 and dot-product scores of Plan A, WAND, sharded and the router)
+    therefore ranks them like one row holding the rows' joined text; a
+    count of the query's terms (the ``t`` and ``msm`` thresholds, the set
+    sizes of set distances, the normcosine query norm) sees a term once
+    per row that holds it.
 
     ``term_id`` (xxhash64, same derivation as the build side) is the join
     key for every downstream probe: at 10^9-term scale a fixed-width long
     key beats the string on shuffle width and hash cost; the string ``term``
-    column stays only for human-facing outputs.  With ``query_col`` a doc
-    id it is also the forward per-doc term count of the doc views
-    (:func:`doc_term_profile`, :func:`term_vectors`, PRF mining).
+    column stays only for human-facing outputs.
     """
-    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
+    from invertedfiles_jl_spark.functions.tokenize import tokens_sql
 
-    qt = exploded_terms(queries, "query_id", query_col, content_col, cfg)
-    qt = qt.groupBy("query_id", "term").agg(F.count(F.lit(1)).alias("qtf"))
-    return qt.withColumn("term_id", term_id_col(F.col("term")))
+    return queries.selectExpr(
+        f"`{query_col}` AS query_id",
+        f"{tokens_sql(f'`{content_col}`', cfg)} AS toks",
+    ).selectExpr(
+        "query_id", "toks", "explode(array_distinct(toks)) AS term",
+    ).selectExpr(
+        "query_id", "term",
+        "CAST(size(toks) - size(array_remove(toks, term)) AS BIGINT) AS qtf",
+        f"{term_id_sql()} AS term_id")
 
 
 def stored_ids_col(postings: DataFrame) -> str:
@@ -88,14 +120,11 @@ def read_postings(postings: DataFrame, *keep: str,
     engine path that flattens postings reads them here; WAND's in-kernel
     ``codec.decode_posting`` is the Python-side reader."""
     p = decode_ids(postings)
+    keep = [f"`{c}`" for c in keep]
     if not weights:
-        return p.select(*keep, F.explode("doc_ids").alias("doc_id"))
-    return p.select(
-        *keep, F.explode(F.arrays_zip("doc_ids", "weights")).alias("e"),
-    ).select(
-        *keep, F.col("e.doc_ids").alias("doc_id"),
-        F.col("e.weights").alias("weight"),
-    )
+        return p.selectExpr(*keep, "explode(doc_ids) AS doc_id")
+    return p.selectExpr(
+        *keep, "inline(arrays_zip(doc_ids, weights)) AS (doc_id, weight)")
 
 
 def postings_exploded(index: InvertedIndex) -> DataFrame:
@@ -116,9 +145,7 @@ def _matched(index: InvertedIndex, qterms: DataFrame) -> DataFrame:
     weights) — fixed-width join key, no string column off disk; a
     compressed index decodes the matched lists only."""
     qcols = [c for c in qterms.columns if c not in ("term", "term_id")]
-    postings = index.postings.select(
-        "term_id", stored_ids_col(index.postings), "weights")
-    joined = postings.join(F.broadcast(qterms.select("term_id", *qcols)), "term_id")
+    joined = index.postings.join(F.broadcast(qterms), "term_id")
     return read_postings(joined, *qcols)
 
 
@@ -149,28 +176,30 @@ def require_weighting(index: InvertedIndex, *kinds: str) -> None:
         raise ValueError(f"index not built with {' or '.join(kinds)} weighting")
 
 
-def knn_order(key: str | Column, rank_round: int | None = None,
-              ascending: bool = False, id_col: str = "doc_id") -> list[Column]:
+def knn_order(key: str, rank_round: int | None = None,
+              ascending: bool = False, id_col: str = "doc_id") -> str:
     """The ``KnnSorted`` total order: ``round(key, rank_round)`` desc (asc
     for a distance; the raw key when ``rank_round`` is None), then
-    ``id_col`` asc — the sort spec :func:`rank_cut` takes."""
-    c = F.col(key) if isinstance(key, str) else key
+    ``id_col`` asc — the SQL ``ORDER BY`` list :func:`rank_cut` takes.
+    ``key`` is a SQL expression (a column name, or e.g. ``"tf * idf"``)."""
     if rank_round is not None:
-        c = F.round(c, rank_round)
-    return [c.asc() if ascending else c.desc(), F.col(id_col).asc()]
+        key = f"round({key}, {rank_round})"
+    return f"{key} {'ASC' if ascending else 'DESC'}, `{id_col}` ASC"
 
 
-def rank_cut(df: DataFrame, n: int, order: list[Column],
+def rank_cut(df: DataFrame, n: int, order: str,
              by: tuple[str, ...] = ("query_id",), rank: str = "rank",
              cols: list | None = None) -> DataFrame:
-    """The first ``n`` rows of each ``by`` group under ``order`` (one global
-    order when ``by`` is empty), numbered 1.. in column ``rank``; ``cols``
-    selects the output.  One ``row_number`` window and the ``rank <= n``
-    filter that Spark's WindowGroupLimit pushdown turns into a bounded
-    per-group heap below the exchange — never a full sort.  The engine's
-    one rank cut: top-k, per-group cuts and argmax/argmin (``n = 1``)."""
-    w = Window.partitionBy(*by).orderBy(*order)
-    out = df.withColumn(rank, F.row_number().over(w)).filter(F.col(rank) <= n)
+    """The first ``n`` rows of each ``by`` group under the SQL ``ORDER BY``
+    list ``order`` (one global order when ``by`` is empty), numbered 1.. in
+    column ``rank``; ``cols`` selects the output.  One ``row_number``
+    window and the ``rank <= n`` filter that Spark's WindowGroupLimit
+    pushdown turns into a bounded per-group heap below the exchange —
+    never a full sort.  The engine's one rank cut: top-k, per-group cuts
+    and argmax/argmin (``n = 1``)."""
+    part = f"PARTITION BY {', '.join(f'`{c}`' for c in by)} " if by else ""
+    out = df.withColumn(rank, F.expr(
+        f"row_number() OVER ({part}ORDER BY {order})")).filter(f"`{rank}` <= {n}")
     return out if cols is None else out.select(*cols)
 
 
@@ -193,18 +222,18 @@ def topk(scored: DataFrame, k: int, score_col: str = "score",
     """
     out = rank_cut(scored, offset + k, knn_order(score_col, rank_round, ascending))
     if offset:
-        out = out.filter(F.col("rank") > offset)
-    return out.select("query_id", "rank", "doc_id", score_col)
+        out = out.filter(f"`rank` > {offset}")
+    return out.selectExpr("query_id", "`rank`", "doc_id", f"`{score_col}`")
 
 
 def _tfilter(scored: DataFrame, t: int) -> DataFrame:
     """xmerge t-threshold for weighted search: docs matched by < t query
     terms are dropped (/root/reference/src/winvfilesearch.jl:30 passes ``t``
-    through to the merge for weighted indexes too).  ``scored`` may omit
-    ``n_matched`` when the caller asked for t=1 (drop is a no-op then)."""
-    if t > 1:
-        scored = scored.filter(F.col("n_matched") >= t)
-    return scored.drop("n_matched")
+    through to the merge for weighted indexes too).  Callers aggregate
+    ``n_matched`` only when t > 1, so a t=1 ``scored`` passes through."""
+    if t <= 1:
+        return scored
+    return scored.filter(f"n_matched >= {t}").drop("n_matched")
 
 
 def bm25_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
@@ -235,22 +264,24 @@ def _bm25_qterms(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     return _with_idf(index, query_terms(queries, index.cfg))
 
 
-def bm25_idf(n) -> Column:
+def bm25_idf(n: float | str) -> str:
     """BM25 idf ``ln(1 + (N − df + 0.5)/(df + 0.5))`` over the ``df``
-    column — the one spelling every BM25 path uses.  ``n`` is the corpus
-    size N, a number or a column."""
-    df = F.col("df")
-    return F.log(F.lit(1.0) + (F.lit(n) - df + 0.5) / (df + 0.5))
+    column, as a SQL expression — the one spelling every BM25 path uses.
+    ``n`` is the corpus size N: a number, or the name of a column holding
+    it."""
+    if not isinstance(n, str):
+        n = f"{float(n)!r}D"  # a bare 1000.0 would parse as a DECIMAL
+    return f"ln(1.0D + ({n} - df + 0.5D) / (df + 0.5D))"
 
 
 def _with_idf(index: InvertedIndex, qt: DataFrame) -> DataFrame:
     """(query_id, term_id, <qt cols>, idf) — the vocab join of
     :func:`_bm25_qterms` for any (query_id, term, term_id, ...) relation;
     extra columns ride along."""
-    n = float(index.stats["n_docs"])
     cols = [c for c in qt.columns if c not in ("query_id", "term", "term_id")]
-    return index.vocab.select("term_id", "df").join(F.broadcast(qt), "term_id").select(
-        "query_id", "term_id", *cols, bm25_idf(n).alias("idf"))
+    return index.vocab.selectExpr("term_id", "df").join(
+        F.broadcast(qt), "term_id").selectExpr(
+        "query_id", "term_id", *cols, f"{bm25_idf(index.stats['n_docs'])} AS idf")
 
 
 def query_weights(index: InvertedIndex, queries: DataFrame) -> DataFrame:
@@ -260,12 +291,11 @@ def query_weights(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     (the norm spans every query term, OOV included)."""
     qt = query_terms(queries, index.cfg)
     if index.cfg.weighting == "bm25":
-        return _with_idf(index, qt).select(
-            "query_id", "term_id", (F.col("qtf") * F.col("idf")).alias("qw"))
-    qn = qt.groupBy("query_id").agg(
-        F.sqrt(F.sum(F.col("qtf") * F.col("qtf"))).alias("qn"))
-    return qt.join(qn, "query_id").select(
-        "query_id", "term_id", (F.col("qtf") / F.col("qn")).alias("qw"))
+        return _with_idf(index, qt).selectExpr(
+            "query_id", "term_id", "qtf * idf AS qw")
+    qn = qt.groupBy("query_id").agg(F.expr("sqrt(sum(qtf * qtf)) AS qn"))
+    return qt.join(qn, "query_id").selectExpr(
+        "query_id", "term_id", "qtf / qn AS qw")
 
 
 def _bm25_scored(index: InvertedIndex, queries: DataFrame,
@@ -280,9 +310,9 @@ def _bm25_scored(index: InvertedIndex, queries: DataFrame,
     barely reduces), and a t=1 caller drops the count unused — 8 B/row of
     shuffle + buffer width saved on the hottest exchange."""
     m = _accept(_matched(index, _bm25_qterms(index, queries)), accept_docs)
-    aggs = [F.sum(F.col("qtf") * F.col("idf") * F.col("weight")).alias("score")]
+    aggs = [F.expr("sum(qtf * idf * weight) AS score")]
     if with_matches:
-        aggs.append(F.count(F.lit(1)).alias("n_matched"))
+        aggs.append(F.expr("count(1) AS n_matched"))
     return m.groupBy("query_id", "doc_id").agg(*aggs)
 
 
@@ -354,9 +384,9 @@ def cosine_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
     Ascending distance, doc_id tie-break; ``t`` as in :func:`bm25_topk`."""
     require_weighting(index, "normcosine")
     m = _accept(_matched(index, query_weights(index, queries)), accept_docs)
-    aggs = [(F.lit(1.0) - F.sum(F.col("qw") * F.col("weight"))).alias("dist")]
+    aggs = [F.expr("1.0D - sum(qw * weight) AS dist")]
     if t > 1:  # same narrow-agg policy as _bm25_scored
-        aggs.append(F.count(F.lit(1)).alias("n_matched"))
+        aggs.append(F.expr("count(1) AS n_matched"))
     scored = m.groupBy("query_id", "doc_id").agg(*aggs)
     return topk(_tfilter(scored, t), k, "dist", ascending=True, rank_round=rank_round)
 
@@ -665,7 +695,7 @@ def _role_table(toks: DataFrame) -> DataFrame:
             F.expr("bit_or(slot_mask) AS slot_mask"),
             F.expr("max(n_slots) AS n_slots"))
         .select("query_id", "term", "qtf", "is_must", "is_not", "slot_mask",
-                term_id_col(F.col("term")).alias("term_id"),
+                term_id_col("term").alias("term_id"),
                 F.expr("sum(is_must) OVER (PARTITION BY query_id) + n_slots"
                        " AS n_must"))
     )
@@ -760,18 +790,20 @@ def doc_term_profile(index: InvertedIndex, corpus: DataFrame,
     broadcast-left-semi-joins the corpus (one map-side pass, no corpus
     shuffle; without the hint Catalyst sort-merge-joins because a local
     relation carries no size stats), tokenize + tf is the standard codegen
-    path over source docs ONLY, idf joins in from vocab on term_id, and
+    path over source docs ONLY (the build's own per-doc count,
+    ``build.doc_term_freqs``), idf joins in from vocab on term_id, and
     the per-doc term window is bounded by the source doc's distinct-term
     count."""
-    n = float(index.stats["n_docs"])
+    from invertedfiles_jl_spark.operators.build import doc_term_freqs
+
     src = corpus.join(F.broadcast(source_ids.select("doc_id")),
                       "doc_id", "left_semi")
-    tf = query_terms(src, index.cfg, "doc_id", content_col).withColumnRenamed(
-        "qtf", "tf")
-    prof = index.vocab.select("term_id", "df").join(tf, "term_id").select(
-        "query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
-    return rank_cut(prof, n_terms, knn_order(F.col("tf") * F.col("idf"),
-                                             sel_round, id_col="term"),
+    tf = doc_term_freqs(src, index.cfg, content_col=content_col)
+    prof = index.vocab.select("term_id", "df").join(tf, "term_id").selectExpr(
+        "doc_id AS query_id", "term_id", "term", "tf",
+        f"{bm25_idf(index.stats['n_docs'])} AS idf")
+    return rank_cut(prof, n_terms, knn_order("tf * idf", sel_round,
+                                             id_col="term"),
                     rank="trank", cols=["query_id", "term_id", "idf"])
 
 
@@ -810,7 +842,7 @@ def query_significant_terms(index: InvertedIndex, corpus: DataFrame,
     fg = (F.broadcast(hits).join(dt, "doc_id")
           .groupBy("query_id", "term")
           .agg(F.count(F.lit(1)).alias("fg")))
-    fg = fg.withColumn("term_id", term_id_col(F.col("term")))
+    fg = fg.withColumn("term_id", term_id_col("term"))
     scored = (
         fg.filter(F.col("fg") >= min_fg)
         .join(index.vocab.select("term_id", F.col("df").alias("bg")), "term_id")
@@ -834,17 +866,18 @@ def term_vectors(index: InvertedIndex, corpus: DataFrame,
 
     Plan shape mirrors :func:`doc_term_profile`: the requested id set is
     query-batch sized → broadcast left-semi against the corpus (one
-    map-side pass), tokenize + tf over the requested docs ONLY, df joins
-    in from vocab on term_id.  Postings are never exploded — the forward
-    path is the cheap direction for per-doc views."""
-    n = float(index.stats["n_docs"])
+    map-side pass), tokenize + tf (``build.doc_term_freqs``) over the
+    requested docs ONLY, df joins in from vocab on term_id.  Postings are
+    never exploded — the forward path is the cheap direction for per-doc
+    views."""
+    from invertedfiles_jl_spark.operators.build import doc_term_freqs
+
     src = corpus.join(F.broadcast(doc_ids.select("doc_id")), "doc_id",
                       "left_semi")
-    tf = query_terms(src, index.cfg, "doc_id", content_col).withColumnRenamed(
-        "qtf", "tf")
-    return index.vocab.select("term_id", "df").join(tf, "term_id").select(
-        F.col("query_id").alias("doc_id"), "term", "tf", "df",
-        (F.col("tf") * bm25_idf(n)).alias("tfidf"))
+    tf = doc_term_freqs(src, index.cfg, content_col=content_col)
+    return index.vocab.select("term_id", "df").join(tf, "term_id").selectExpr(
+        "doc_id", "term", "tf", "df",
+        f"tf * {bm25_idf(index.stats['n_docs'])} AS tfidf")
 
 
 def more_like_this(index: InvertedIndex, corpus: DataFrame,
@@ -952,7 +985,7 @@ def expand_synonyms(queries: DataFrame, synonyms: DataFrame,
         (F.col("qtf") * F.col("weight")).alias("qw"))
     ex = orig.unionByName(via).groupBy("query_id", "term").agg(
         F.round(F.sum("qw"), 9).alias("qw"))
-    return ex.withColumn("term_id", term_id_col(F.col("term")))
+    return ex.withColumn("term_id", term_id_col("term"))
 
 
 def synonym_bm25_topk(index: InvertedIndex, queries: DataFrame,
@@ -971,7 +1004,7 @@ def synonym_bm25_topk(index: InvertedIndex, queries: DataFrame,
     n = float(index.stats["n_docs"])
     ex = expand_synonyms(queries, synonyms, index.cfg)
     qt = index.vocab.select("term_id", "df").join(F.broadcast(ex), "term_id").select(
-        "query_id", "term_id", (F.col("qw") * bm25_idf(n)).alias("qwi"))
+        "query_id", "term_id", F.expr(f"qw * {bm25_idf(n)} AS qwi"))
     m = _matched(index, qt)
     scored = m.groupBy("query_id", "doc_id").agg(
         F.sum(F.col("qwi") * F.col("weight")).alias("score"))
@@ -1003,25 +1036,30 @@ def prf_bm25_topk(index: InvertedIndex, corpus: DataFrame,
     fb_terms) rows) broadcasts into the standard matched-postings pass.
     Two corpus-scale passes total — the price of feedback, not a scale
     hazard."""
-    require_weighting(index, "bm25")
-    n = float(index.stats["n_docs"])
-    fb = bm25_topk(index, queries, k=fb_docs, rank_round=rank_round)
+    from invertedfiles_jl_spark.operators.build import doc_term_freqs
 
-    # expansion-term mining over the feedback docs' raw content
-    src = corpus.select("doc_id", content_col).join(
-        F.broadcast(fb.select("query_id", "doc_id")), "doc_id")
-    ftf = query_terms(src, index.cfg, "query_id", content_col).withColumnRenamed(
-        "qtf", "tf")
+    require_weighting(index, "bm25")
+    fb = bm25_topk(index, queries, k=fb_docs, rank_round=rank_round).select(
+        "query_id", "doc_id")
+
+    # expansion-term mining: per-doc tf of the feedback docs' raw content,
+    # summed over each query's feedback set
+    src = corpus.join(F.broadcast(fb.select("doc_id").distinct()), "doc_id",
+                      "left_semi")
+    ftf = (doc_term_freqs(src, index.cfg, content_col=content_col)
+           .join(F.broadcast(fb), "doc_id")
+           .groupBy("query_id", "term_id", "term")
+           .agg(F.expr("sum(tf) AS tf")))
     qt_orig = query_terms(queries, index.cfg)
     cand = (
         index.vocab.select("term_id", "df").join(ftf, "term_id")
         .join(F.broadcast(qt_orig.select("query_id", "term_id")),
               ["query_id", "term_id"], "left_anti")
-        .select("query_id", "term_id", "term", "tf", bm25_idf(n).alias("idf"))
+        .selectExpr("query_id", "term_id", "term", "tf",
+                    f"{bm25_idf(index.stats['n_docs'])} AS idf")
     )
     expansion = rank_cut(
-        cand, fb_terms, knn_order(F.col("tf") * F.col("idf"), sel_round,
-                                  id_col="term"),
+        cand, fb_terms, knn_order("tf * idf", sel_round, id_col="term"),
         rank="trank",
         cols=["query_id", "term_id", F.lit(float(beta)).alias("w"), "idf"])
 
@@ -1056,7 +1094,7 @@ def suggest_corrections(index: InvertedIndex, fuzzy: DataFrame, k: int = 3,
         "query_id", "term", "cf",
         F.levenshtein(F.col("term"), F.col("qterm")).cast("int")
         .alias("dist"))
-    return rank_cut(m, k, [F.col("dist").asc(), *knn_order("cf", id_col="term")],
+    return rank_cut(m, k, f"dist ASC, {knn_order('cf', id_col='term')}",
                     cols=["query_id", "rank", "term", "dist", "cf"])
 
 
@@ -1274,7 +1312,7 @@ def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
 
     qt = query_terms(queries, cfg)
     qterms = gvocab.join(F.broadcast(qt), "term_id").select(
-        "query_id", "term_id", "qtf", bm25_idf(n_g).alias("idf"))
+        "query_id", "term_id", "qtf", F.expr(f"{bm25_idf(n_g)} AS idf"))
 
     matched = None
     for s in segments:

@@ -222,7 +222,8 @@ def wand_topk(
         cols.append("block_max")
     cols.append(stored_ids_col(index.postings))
     matched = index.postings.join(
-        F.broadcast(query_weights(index, queries)), "term_id").select(*cols)
+        F.broadcast(query_weights(index, queries)), "term_id"
+    ).selectExpr(*cols)
 
     block_size = int(index.cfg.block_size)
 

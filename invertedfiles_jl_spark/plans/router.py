@@ -52,12 +52,10 @@ def batch_stats(index: InvertedIndex, queries: DataFrame) -> dict:
     relation — metadata-only, posting lists untouched."""
     qt = query_terms(queries, index.cfg)
     row = (
-        index.vocab.select("term_id", "df")
+        index.vocab.selectExpr("term_id", "df")
         .join(F.broadcast(qt), "term_id")
-        .agg(
-            F.countDistinct("query_id").alias("n_queries"),
-            F.sum("df").alias("entries"),
-        )
+        .agg(F.expr("count(DISTINCT query_id) AS n_queries"),
+             F.expr("sum(df) AS entries"))
         .collect()[0]
     )
     n = int(row["n_queries"] or 0)

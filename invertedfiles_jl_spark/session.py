@@ -20,7 +20,8 @@ def get_spark(
     transfer), and shuffle partitions matched to parallelism.
 
     Local masters also run Spark's Python daemon as
-    ``invertedfiles_jl_spark.worker_daemon``.  Each Python task otherwise
+    ``invertedfiles_jl_spark.worker_daemon``, with the driver's working
+    directory kept off its ``sys.path``.  Each Python task otherwise
     spends 0.1-0.2 s re-reading the central directories of ``pyspark.zip``
     and the spark-core jar (``importlib.invalidate_caches()`` on every
     zipimporter), which was most of the ~0.3 s fixed cost of every Python
@@ -116,7 +117,12 @@ def get_spark(
         builder = builder.config("spark.local.dir", local_dir)
     daemon = daemon_module(master)
     if daemon:
-        builder = builder.config("spark.python.daemon.module", daemon)
+        # `python -m` would put the driver's cwd first on the daemon's and
+        # its workers' sys.path: a driver started inside another checkout
+        # would run that checkout's package in its Python tasks
+        builder = (builder
+                   .config("spark.python.daemon.module", daemon)
+                   .config("spark.executorEnv.PYTHONSAFEPATH", "1"))
     return builder.getOrCreate()
 
 

@@ -64,7 +64,7 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
         old.vocab.unionByName(delta.vocab)
         .groupBy("term")
         .agg(F.sum("df").alias("df"), F.sum("cf").alias("cf"))
-        .withColumn("term_id", term_id_col(F.col("term").cast("string")))
+        .withColumn("term_id", term_id_col("term"))
     )
     n = old.stats["n_docs"] + delta.stats["n_docs"]
 

@@ -36,7 +36,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from invertedfiles_jl_spark.operators.build import InvertedIndex, term_id_col
-from invertedfiles_jl_spark.operators.search import bm25_idf, query_terms
+from invertedfiles_jl_spark.operators.search import _bm25_qterms
 from invertedfiles_jl_spark.operators.wand import rank_order
 
 
@@ -52,10 +52,7 @@ def standing_queries(index: InvertedIndex, queries: DataFrame) -> DataFrame:
     """Static side of the stream-static join: (term_id, query_id, qtf, idf)
     with idf frozen from the index snapshot (same math as
     ``search.bm25_topk``)."""
-    n = float(index.stats["n_docs"])
-    qt = query_terms(queries, index.cfg)
-    return index.vocab.select("term_id", "df").join(qt, "term_id").select(
-        "query_id", "term_id", "qtf", bm25_idf(n).alias("idf"))
+    return _bm25_qterms(index, queries)
 
 
 def matched_occurrences(stream_docs: DataFrame, index: InvertedIndex,
@@ -73,7 +70,7 @@ def matched_occurrences(stream_docs: DataFrame, index: InvertedIndex,
         "doc_id",
         F.size("tokens").alias("doc_len"),
         F.explode("tokens").alias("term"),
-    ).withColumn("term_id", term_id_col(F.col("term"))).drop("term")
+    ).withColumn("term_id", term_id_col("term")).drop("term")
     return occ.join(F.broadcast(standing_queries(index, queries)), "term_id")
 
 

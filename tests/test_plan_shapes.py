@@ -19,11 +19,12 @@ CI instead of shipping a 100×-slower plan.
 from __future__ import annotations
 
 import re
+import uuid
 
 import pytest
 
 from invertedfiles_jl_spark.config import IndexConfig
-from invertedfiles_jl_spark.operators.search import bm25_topk
+from invertedfiles_jl_spark.operators.search import bm25_topk, query_weights
 from invertedfiles_jl_spark.operators.sharded import (
     load_shards,
     shard_postings,
@@ -83,6 +84,34 @@ def test_plan_a_broadcast_only_and_group_limit(spark, served):
     # the rank exchange: at most k rows per query cross the shuffle.
     assert plan.count("WindowGroupLimit") >= 2, plan
     assert "Partial" in plan and "Final" in plan
+
+
+def _job_count(spark, fn) -> int:
+    """Spark jobs ``fn()`` runs, counted under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"plan-shapes-jobs-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+@pytest.mark.parametrize("call, most", [
+    (lambda idx, q: bm25_topk(idx, q, k=10), 5),
+    (lambda idx, q: wand_topk(idx, q, k=10), 4),
+    (query_weights, 2),   # the sharded plan's query-side collect
+], ids=["bm25_topk", "wand_topk", "query_weights"])
+def test_serving_call_job_count(spark, served, call, most):
+    """The query side is one stage: query-term frequencies are counted
+    inside each query row, so no qtf aggregate adds an exchange and an
+    AQE job to the call (6 / 5 / 3 jobs while it did)."""
+    idx, _ = served
+    q = queries_df(spark)
+    assert _job_count(spark, lambda: call(idx, q).collect()) <= most
 
 
 def test_plan_a_postings_scan_pruned(spark, served):

@@ -71,3 +71,37 @@ def test_oov_batch_routes_plan_a_and_returns_empty(idx, spark):
                               "query_id long, content string")
     assert route_plan(idx, q) == "plan_a"
     assert auto_topk(idx, q, k=10).count() == 0
+
+
+def test_repeated_query_id_ranks_as_one_concatenated_query(idx, spark):
+    """Rows that share a query_id rank like one row holding their joined
+    text, on every plan that claims rank identity: a term that recurs
+    across the rows counts as a repeated term of the one query."""
+    from invertedfiles_jl_spark.operators.sharded import sharded_topk
+    from invertedfiles_jl_spark.operators.wand import wand_topk
+
+    schema = "query_id long, content string"
+    split = spark.createDataFrame(
+        [(1, "spark window"), (2, "dup"), (1, "merge window"),
+         (2, "customer dup"), (3, "hash join")], schema)
+    joined = spark.createDataFrame(
+        [(1, "spark window merge window"), (2, "dup customer dup"),
+         (3, "hash join")], schema)
+    plans = {
+        "plan_a": lambda q: bm25_topk(idx, q, k=10, rank_round=6),
+        "wand": lambda q: wand_topk(idx, q, k=10, rank_round=6),
+        "sharded": lambda q: sharded_topk(idx, q, k=10, n_shards=4,
+                                          rank_round=6),
+        "auto": lambda q: auto_topk(idx, q, k=10, rank_round=6),
+        "auto_sharded": lambda q: auto_topk(idx, q, k=10, rank_round=6,
+                                            batch_threshold=2),
+        "auto_wand": lambda q: auto_topk(idx, q, k=10, rank_round=6,
+                                         batch_threshold=99,
+                                         prune_threshold=1),
+    }
+    for name, plan in plans.items():
+        got, want = (
+            sorted((r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
+                   for r in plan(q).collect())
+            for q in (split, joined))
+        assert want and got == want, name

@@ -4,6 +4,9 @@ from __future__ import annotations
 
 import importlib
 import os
+import subprocess
+import sys
+import textwrap
 import zipfile
 import zipimport
 
@@ -132,3 +135,39 @@ def test_python_tasks_skip_unchanged_archives(spark):
     rereads = (spark.sparkContext.parallelize(range(4), 4)
                .mapPartitions(zip_rereads).collect())
     assert rereads == [0, 0, 0, 0]
+
+
+def test_python_tasks_import_this_package_from_any_cwd(tmp_path):
+    """A driver whose working directory holds a decoy
+    ``invertedfiles_jl_spark``: its Python tasks must still import this
+    package, though Spark starts the daemon with ``python -m`` in that
+    directory."""
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    decoy = tmp_path / "checkout" / "invertedfiles_jl_spark"
+    decoy.mkdir(parents=True)
+    (decoy / "__init__.py").write_text("")
+    (decoy / "worker_daemon.py").write_text(
+        "from pyspark.daemon import manager\n\nmanager()\n")
+    driver = tmp_path / "driver.py"
+    driver.write_text(textwrap.dedent(f"""
+        import sys
+        sys.path.insert(0, {repo!r})
+        from invertedfiles_jl_spark.session import get_spark
+
+        def where(_):
+            import invertedfiles_jl_spark
+            yield invertedfiles_jl_spark.__file__
+
+        spark = get_spark("daemon-cwd", master="local[1]")
+        rdd = spark.sparkContext.parallelize([0], 1)
+        print("PACKAGE", rdd.mapPartitions(where).collect()[0])
+        spark.stop()
+    """))
+    env = dict(os.environ, SPARK_DRIVER_MEMORY="1g",
+               SPARK_LOCAL_DIRS=str(tmp_path))
+    proc = subprocess.run([sys.executable, str(driver)], cwd=decoy.parent,
+                          capture_output=True, text=True, env=env,
+                          timeout=600)
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    real = os.path.join(repo, "invertedfiles_jl_spark", "__init__.py")
+    assert f"PACKAGE {real}" in proc.stdout, proc.stdout
