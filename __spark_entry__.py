@@ -271,8 +271,8 @@ gated AS (
 
 
 def _qstring_parsed():
-    """QSTRING_SET parsed with the same Python mirror the tests gate
-    against the distributed parser."""
+    """QSTRING_SET parsed with the engine's one query-string parser,
+    the one both Spark routes (top-k and percolation) run."""
     from invertedfiles_jl_spark.operators.querystring import (
         parse_query_string_py,
     )
@@ -292,8 +292,7 @@ def _qstring_gated(k1: float, b: float) -> str:
     """CTEs through ``gated``: every (query, doc) of the BM25-scored
     query-string batch that passes all of its query's gates.
 
-    The fixture strings are parsed HERE with the same Python mirror the
-    tests gate against the distributed parser
+    The fixture strings are parsed HERE with the engine's one parser
     (operators/querystring.parse_query_string_py), and the parsed clauses
     are inlined as literals.  Scoring = BM25 over must + should + positive
     phrase words (Lucene's default: phrases rank like their words) plus the

@@ -2,13 +2,14 @@
 
 Mirrors the knobs of the reference's ``InvertedFileContext``
 (/root/reference/src/InvertedFiles.jl:18-55 — minbatch / parallel_block /
-per-thread containers) re-expressed as Spark-level knobs: shuffle
-partitioning, Arrow batch size, hot-term salting, and weighting scheme.
+per-thread containers) re-expressed as index-level knobs: tokenizer,
+weighting scheme, hot-term salting and compression.  Shuffle partitions
+are a session setting (``session.get_spark``), not part of the index.
 """
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 
 @dataclass(frozen=True)
@@ -69,8 +70,6 @@ class IndexConfig:
     # doc-sorted list; the MaxScore kernel skips whole blocks whose upper
     # bound cannot reach the current top-k threshold.
     block_size: int = 128
-    shuffle_partitions: int | None = None
-    extra: dict = field(default_factory=dict)
 
     # Regex used by the "code" tokenizer: identifiers, numbers, and runs of
     # operator punctuation.  Shared verbatim with the DuckDB oracle SQL.

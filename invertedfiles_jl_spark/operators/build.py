@@ -121,6 +121,28 @@ def doc_term_freqs(corpus: DataFrame, cfg: IndexConfig,
     return tf.withColumn("term_id", term_id_col("term"))
 
 
+def doc_terms(docs: DataFrame, cfg: IndexConfig,
+              content_col: str = "content") -> DataFrame:
+    """(doc_id, term, tf, term_id, doc_len) — :func:`doc_term_freqs` plus
+    each doc's length as a window sum of its tf.  The window partitions on
+    the doc_id that ``doc_term_freqs`` already hash-partitions on, so it
+    adds no exchange.  The doc side of both percolators."""
+    return doc_term_freqs(docs, cfg, "doc_id", content_col).selectExpr(
+        "*", "sum(tf) OVER (PARTITION BY doc_id) AS doc_len")
+
+
+def bm25_sat(cfg: IndexConfig, avgdl: float, tf: str = "tf") -> str:
+    """BM25's saturated, length-normalised tf as a SQL expression:
+    ``tf·(k1+1) / (tf + k1·((1−b) + b·doc_len/avgdl))`` over the ``tf``
+    and ``doc_len`` columns, with k1/b from ``cfg`` and a frozen ``avgdl``.
+    The one JVM-side spelling: the bm25 build weight, federated scoring
+    and both percolators call it (association fixed, so stored weights
+    stay bit-identical)."""
+    k1, b = float(cfg.bm25_k1), float(cfg.bm25_b)
+    return (f"({tf} * {k1 + 1.0!r}D / ({tf} + {k1!r}D * ({1.0 - b!r}D"
+            f" + {b!r}D * doc_len / {float(avgdl)!r}D)))")
+
+
 def docs_table(tf: DataFrame, corpus: DataFrame,
                doc_col: str = "doc_id", content_col: str = "content") -> DataFrame:
     """Per-doc stats: doc_len, nnz (the reference's ``sizes``), L2 norm of
@@ -201,15 +223,9 @@ def weighted_pairs(tf: DataFrame, docs: DataFrame, stats: dict, cfg: IndexConfig
             (F.col("tf") / F.col("norm")).cast(wt).alias("weight"),
         )
     elif cfg.weighting == "bm25":
-        k1, b = float(cfg.bm25_k1), float(cfg.bm25_b)
-        avgdl = stats["avg_doc_len"] or 1.0
-        weighted = tf.join(docs.select("doc_id", "doc_len"), "doc_id").select(
-            "doc_id", key,
-            (
-                F.col("tf") * F.lit(k1 + 1.0)
-                / (F.col("tf") + F.lit(k1) * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl)))
-            ).cast(wt).alias("weight"),
-        )
+        sat = bm25_sat(cfg, stats["avg_doc_len"] or 1.0)
+        weighted = tf.join(docs.select("doc_id", "doc_len"), "doc_id").selectExpr(
+            "doc_id", key, f"CAST({sat} AS {wt}) AS weight")
     else:
         raise ValueError(f"unknown weighting {cfg.weighting!r}")
     # tol pruning at build, like /root/reference/src/invfile.jl:152

@@ -108,6 +108,8 @@ def dismax_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
             F.count(F.lit(1)).cast("double").alias("df"))
         qterm = qt.join(dfr, "term").select(
             "query_id", "term", "qtf", F.expr(f"{bm25_idf(n_docs)} AS idf"))
+        # per-field BM25 over the field's avglen COLUMN: not
+        # build.bm25_sat, which takes one frozen avgdl
         contrib = (
             tf.join(F.broadcast(qterm), "term")
             .join(flen, "doc_id")
@@ -181,6 +183,8 @@ def bm25f_topk(corpus: DataFrame, queries: DataFrame, k: int = 10,
         "query_id", "term", "qtf", F.expr(f"{bm25_idf(n_docs)} AS idf"))
 
     # tf~ then wtf: combine fields per (query, doc, term) BEFORE saturation
+    # — BM25F saturates the pooled wtf, a different formula from
+    # build.bm25_sat
     norm = (
         tf.join(F.broadcast(qterm), "term")
         .join(flen, ["doc_id", "field"])

@@ -23,13 +23,12 @@ over the must + should + phrase + wildcard-expansion terms a doc matches
 (phrases score like their words — Lucene's default — while ALSO gating
 on adjacency/proximity).
 
-Parsing: :func:`parse_query_strings` is PURE COLUMN WORK (three
-``regexp_extract_all`` / two ``regexp_replace`` passes), so a
-standing-query relation of any size parses distributed — no driver loop;
-:func:`parse_query_string_py` is its one-string Python mirror (parity is
-test-gated), used for driver-sized top-k batches and by the
-DuckDB-oracle generator (the oracle inlines the parsed clauses as
-literals, the same way the phrase fixtures do).
+Parsing: :func:`parse_query_string_py` is the one parser (Python ``re``
+over each string).  A driver-sized top-k batch is collected once and
+parsed on the driver; a standing relation of any size parses distributed
+through ``mapInArrow`` over the same function; the DuckDB-oracle
+generator inlines its parsed clauses as literals, the same way the phrase
+fixtures do.
 
 Grammar notes (kept deliberately small and regular):
   * ``+``/``-`` bind only at a token's start (after whitespace);
@@ -48,8 +47,8 @@ Grammar notes (kept deliberately small and regular):
 
 Plan shape of :func:`query_string_topk`: the batch is driver-sized by
 contract, so it is collected ONCE over Arrow, parsed in Python and
-re-planned as a one-partition local relation — the SQL parse and the
-flags action never run.  Scoring is
+re-planned as a one-partition local relation — no flags action runs.
+Scoring is
 :func:`~invertedfiles_jl_spark.operators.search._boolean_scored`: one role
 table, one postings probe and one (query_id, doc_id) aggregate that
 scores and applies EVERY gate.  On top of the must terms, each positive
@@ -64,9 +63,10 @@ candidate-keyed gate join.  Qualifiers: one linear pass — candidates ⋈
 broadcast(per-query qualifier array) ⋈ meta on doc_id, filtered by a
 ``forall`` over the array.  A query whose phrase never occurs — or
 contains an OOV term — matches nothing, the conjunctive empty-Q contract.
-:func:`query_string_percolate` keeps the SQL parse (its standing relation
-is not driver-sized) and runs the same role table, phrase-hit producer and
-gate aggregate over the doc batch's raw tokens.
+:func:`query_string_percolate` parses its standing relation with
+``mapInArrow`` and runs the same role table, phrase-hit producer and gate
+aggregate over the doc batch's (doc_id, term, tf, doc_len) relation,
+which also carries the BM25 score.
 """
 
 from __future__ import annotations
@@ -76,14 +76,20 @@ import re
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import from_arrow_schema
 
 from invertedfiles_jl_spark.config import IndexConfig
-from invertedfiles_jl_spark.operators.build import InvertedIndex
+from invertedfiles_jl_spark.operators.build import (
+    InvertedIndex,
+    bm25_sat,
+    doc_terms,
+)
 from invertedfiles_jl_spark.operators.search import (
     _boolean_scored,
     _clause_tokens,
     _gated,
     _role_table,
+    bm25_idf,
     topk,
 )
 
@@ -116,64 +122,18 @@ _BARE_STRIP_RE = r"(^|\s)[+-]\S+"
 _LONE_SIGN_RE = r"(^|\s)[+-]+(?=\s|$)"
 
 
-def parse_query_strings(queries: DataFrame,
-                        content_col: str = "content") -> DataFrame:
-    """(query_id, must, should, must_not, phrases, slops, phrase_signs,
-    qual_*, wild_*) — clause columns are space-joined strings (what
-    :func:`boolean_topk` consumes); ``phrases`` an ``array<string>`` of
-    the quoted segments in order with ``slops`` (``~N`` suffix, 0 =
-    exact) and ``phrase_signs`` ('' / '+' required ≡ bare, '-' =
-    exclusion) parallel to it; the ``qual_*`` arrays the parallel
+def parse_query_string_py(s: str) -> dict:
+    """The clause split of one query string: must / should / must_not
+    are space-joined strings (what :func:`boolean_topk` consumes);
+    ``phrases`` the quoted segments in order with ``slops`` (``~N``
+    suffix, 0 = exact) and ``phrase_signs`` ('' / '+' required ≡ bare,
+    '-' = exclusion) parallel to it; the ``qual_*`` lists the parallel
     sign/field/value split of ``field:value`` qualifiers (field names
     lowercased — values stay case-sensitive, they are data); the
-    ``wild_*`` arrays the sign/prefix split of ``prefix*`` wildcards."""
-    phrases = F.expr(
-        f"regexp_extract_all({content_col}, r'{_PHRASE_RE}', 1)")
-    phrase_signs = F.expr(
-        f"regexp_extract_all({content_col}, r'{_PHRASE_SIGN_RE}', 1)")
-    slops = F.expr(
-        f"transform(regexp_extract_all({content_col}, r'{_SLOP_RE}', 1), "
-        f"s -> CASE WHEN s = '' THEN 0 ELSE CAST(s AS INT) END)")
-    # stage 1: phrases out; stage 2: qualifiers out; stage 3: wildcards
-    # out; clause regexes see only what remains
-    nophrase = f"regexp_replace({content_col}, r'{_PHRASE_FULL_RE}', ' ')"
-    noqual = f"regexp_replace({nophrase}, r'{_QUAL_RE}', ' ')"
-    nowild = f"regexp_replace({noqual}, r'{_WILD_RE}', ' ')"
-
-    def quals(idx: int):
-        return F.expr(f"regexp_extract_all({nophrase}, r'{_QUAL_RE}', {idx})")
-
-    def wilds(idx: int):
-        return F.expr(f"regexp_extract_all({noqual}, r'{_WILD_RE}', {idx})")
-
-    must = F.array_join(
-        F.expr(f"regexp_extract_all({nowild}, r'{_MUST_RE}', 2)"), " ")
-    must_not = F.array_join(
-        F.expr(f"regexp_extract_all({nowild}, r'{_MUST_NOT_RE}', 2)"), " ")
-    bare = F.regexp_replace(
-        F.regexp_replace(F.expr(nowild), _BARE_STRIP_RE, " "),
-        _LONE_SIGN_RE, " ")
-    return queries.select(
-        "query_id",
-        must.alias("must"),
-        bare.alias("should"),
-        must_not.alias("must_not"),
-        phrases.alias("phrases"),
-        slops.alias("slops"),
-        phrase_signs.alias("phrase_signs"),
-        F.expr(f"transform(regexp_extract_all({nophrase}, r'{_QUAL_RE}', 3),"
-               f" f -> lower(f))").alias("qual_fields"),
-        quals(2).alias("qual_signs"),
-        quals(4).alias("qual_values"),
-        wilds(2).alias("wild_signs"),
-        F.expr(f"transform(regexp_extract_all({noqual}, r'{_WILD_RE}', 3), "
-               f"p -> lower(p))").alias("wild_prefixes"),
-    )
-
-
-def parse_query_string_py(s: str) -> dict:
-    """Python mirror of :func:`parse_query_strings` for one string —
-    byte-for-byte the same clause split (tests gate the parity)."""
+    ``wild_*`` lists the sign/prefix split of ``prefix*`` wildcards.
+    The engine's one query-string parser: top-k batches and standing
+    relations reach it through :func:`_parse_rows`, the DuckDB oracle
+    generator directly."""
     phrases = re.findall(_PHRASE_RE, s)
     phrase_signs = re.findall(_PHRASE_SIGN_RE, s)
     slops = [int(m or 0) for m in re.findall(_SLOP_RE, s)]
@@ -299,20 +259,25 @@ _PARSED_SCHEMA = pa.schema(
         "wild_signs", "wild_prefixes")])
 
 
+def _parse_rows(batch) -> list[dict]:
+    """Rows of :data:`_PARSED_SCHEMA` for an Arrow batch of (query_id,
+    content): each string through :func:`parse_query_string_py` (a NULL
+    string parses as empty)."""
+    return [dict(parse_query_string_py(s or ""), query_id=q)
+            for q, s in zip(batch["query_id"].to_pylist(),
+                            batch["content"].to_pylist())]
+
+
 def _parse_batch(queries: DataFrame, content_col: str,
                  default_operator: str):
     """``(parsed, flags)`` for a driver-sized batch: ONE Arrow collect of
-    (query_id, content), each string parsed by
-    :func:`parse_query_string_py` (parity with the SQL parser is
-    test-gated) and the gate flags of :func:`_clause_flags` counted in
-    Python.  ``parsed`` — the :func:`parse_query_strings` columns plus
-    ``n_slots`` — is a one-partition local relation, so no plan above it
-    reads the caller's lineage again."""
-    batch = queries.select(
-        "query_id", F.col(content_col).alias("content")).toArrow()
-    rows = [dict(parse_query_string_py(s or ""), query_id=q)
-            for q, s in zip(batch["query_id"].to_pylist(),
-                            batch["content"].to_pylist())]
+    (query_id, content), parsed by :func:`_parse_rows`, and the gate flags
+    of :func:`_clause_flags` counted in Python.  ``parsed`` — the
+    :data:`_PARSED_SCHEMA` columns plus ``n_slots`` — is a one-partition
+    local relation, so no plan above it reads the caller's lineage
+    again."""
+    rows = _parse_rows(queries.select(
+        "query_id", F.col(content_col).alias("content")).toArrow())
     flags = {
         "n_ph": sum(len(r["phrases"]) for r in rows),
         "n_sloppy": sum(s > 0 for r in rows for s in r["slops"]),
@@ -325,6 +290,22 @@ def _parse_batch(queries: DataFrame, content_col: str,
     parsed = queries.sparkSession.createDataFrame(
         pa.Table.from_pylist(rows, schema=_PARSED_SCHEMA)).coalesce(1)
     return _with_slots(parsed, default_operator), flags
+
+
+def _parse_relation(queries: DataFrame, content_col: str) -> DataFrame:
+    """The :data:`_PARSED_SCHEMA` relation of a distributed (query_id,
+    content) relation: :func:`_parse_rows` per Arrow batch
+    (``mapInArrow``), so a standing relation of any size parses where it
+    lives."""
+
+    def parse(batches):
+        for b in batches:
+            yield pa.RecordBatch.from_pylist(_parse_rows(b),
+                                             schema=_PARSED_SCHEMA)
+
+    return queries.select(
+        "query_id", F.col(content_col).alias("content")
+    ).mapInArrow(parse, from_arrow_schema(_PARSED_SCHEMA))
 
 
 def _check_slots(flags) -> None:
@@ -367,9 +348,10 @@ def _fold_clauses(parsed: DataFrame, default_operator: str) -> DataFrame:
 
 
 def _clause_flags(parsed: DataFrame):
-    """ONE driver action over a distributed parsed relation deciding which
-    gate families it needs (:func:`_parse_batch` counts the same flags in
-    Python for a driver-sized batch).  Absent families add no subtree —
+    """ONE driver action over a distributed parsed relation
+    (:func:`_parse_relation`) deciding which gate families it needs
+    (:func:`_parse_batch` counts the same flags in Python for a
+    driver-sized batch).  Absent families add no subtree —
     no positional scan, no meta join, no vocab expansion."""
     return parsed.agg(
         F.sum(F.size("phrases")).alias("n_ph"),
@@ -504,8 +486,8 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
                            default_operator: str = "or") -> DataFrame:
     """Percolate a document batch against STANDING queries written in the
     full mini-language — the Elasticsearch percolator with query-string
-    queries, and the case the distributed parser exists for: the standing
-    relation may be millions of saved searches, parsed as column work.
+    queries.  The standing relation may be millions of saved searches: it
+    is parsed where it lives (:func:`_parse_relation`), never collected.
 
     Returns every (query_id, doc_id, n_matched, score) pair where the doc
     satisfies the query.  Candidates and every gate work on RAW tokens —
@@ -516,26 +498,27 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
     (adjacency/proximity over the batch's own positional postings) and
     every qualifier (against ``meta``, default the doc batch itself —
     incoming docs carry their own metadata columns).
-    ``score``/``n_matched`` are the frozen-stats BM25 of
+    ``score`` is the frozen-stats BM25 of
     :func:`~invertedfiles_jl_spark.streaming.serve.percolate` over the
-    query's scoring terms (index-OOV terms gate but score 0).
+    query's scoring terms and ``n_matched`` counts the in-vocab scoring
+    terms the doc holds (index-OOV terms gate but score 0).
 
-    Scale shape: the standing relation's role table broadcasts (same
-    stream-static contract as the streaming server); per-batch work is
-    the doc batch's distinct tokens ⋈ role table — the same role table
-    and gate aggregate as :func:`query_string_topk`, over raw doc tokens
-    instead of posting lists — plus the batch's own positional build
-    (only when a standing query carries a phrase); the index contributes
-    vocab stats only."""
-    from invertedfiles_jl_spark.functions.tokenize import exploded_terms
+    Scale shape: the role table, left-joined to the index's vocab idf,
+    broadcasts (same stream-static contract as the streaming server);
+    per-batch work is the doc batch's (doc_id, term, tf, doc_len)
+    relation (:func:`~invertedfiles_jl_spark.operators.build.doc_terms`)
+    ⋈ role table — the same role table and gate aggregate as
+    :func:`query_string_topk`, over doc terms instead of posting lists,
+    with the score summed in that one aggregate — plus the batch's own
+    positional build (only when a standing query carries a phrase); the
+    index contributes vocab stats only."""
     from invertedfiles_jl_spark.operators.positional import (
         positional_postings,
     )
-    from invertedfiles_jl_spark.streaming.serve import percolate
 
     _check_operator(default_operator)
     cfg = cfg or index.cfg
-    parsed = _with_slots(parse_query_strings(standing, "content"),
+    parsed = _with_slots(_parse_relation(standing, "content"),
                          default_operator)
     flags = _clause_flags(parsed)
     _check_slots(flags)
@@ -547,29 +530,21 @@ def query_string_percolate(index: InvertedIndex, standing: DataFrame,
     if flags["n_wild"]:
         toks = toks.unionByName(
             _wildcard_terms(index, parsed, default_operator))
-    roles = _role_table(toks).drop("term_id")
-    # scoring text: each scoring term qtf times (a term re-tokenizes to
-    # itself), so percolate's qtf equals the role table's
-    sq = roles.filter(F.col("qtf") > 0).groupBy("query_id").agg(
-        F.concat_ws(" ", F.flatten(F.collect_list(
-            F.array_repeat("term", F.col("qtf").cast("int"))))
-        ).alias("content"))
-    pscore = percolate(index, sq, docs, require_all=False,
-                       content_col=content_col)
-
-    dt = exploded_terms(docs, "doc_id", "doc_id", content_col, cfg).distinct()
-    rows = dt.join(F.broadcast(roles), "term")
+    # every role row survives the idf lookup: an index-OOV term still
+    # gates on raw doc terms, and its NULL idf scores 0
+    idf = index.vocab.selectExpr(
+        "term_id", f"{bm25_idf(index.stats['n_docs'])} AS idf")
+    roles = idf.join(F.broadcast(_role_table(toks).drop("term")),
+                     "term_id", "right")
+    rows = doc_terms(docs, cfg, content_col).join(
+        F.broadcast(roles), "term_id")
     if flags["n_ph"]:
         pos = positional_postings(docs, cfg, "doc_id", content_col)
         rows = rows.unionByName(_phrase_hits(pos, parsed, cfg, flags),
                                 allowMissingColumns=True)
-    zero_l = F.lit(0).cast("long")
-    per = (
-        _gated(rows).join(pscore, ["doc_id", "query_id"], "left")
-        .select("doc_id", "query_id",
-                F.coalesce("n_matched", zero_l).alias("n_matched"),
-                F.coalesce(F.col("score"), F.lit(0.0)).alias("score"))
-    )
+    sat = bm25_sat(index.cfg, index.stats["avg_doc_len"] or 1.0)
+    per = _gated(rows, F.expr("count(IF(qtf > 0, idf, NULL)) AS n_matched"),
+                 F.expr(f"coalesce(sum(qtf * idf * {sat}), 0.0D) AS score"))
     if flags["n_quals"]:
         per = _qualifier_filter(
             per, parsed, meta if meta is not None else docs,

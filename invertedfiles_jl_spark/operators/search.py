@@ -51,6 +51,7 @@ from pyspark.sql import functions as F
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import (
     InvertedIndex,
+    bm25_sat,
     term_id_col,
     term_id_sql,
 )
@@ -1301,7 +1302,6 @@ def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
     total_len = sum(
         int(s.docs.agg(F.sum("doc_len")).first()[0] or 0) for s in segments)
     avgdl_g = (total_len / n_g) if n_g else 1.0
-    k1, b = float(cfg.bm25_k1), float(cfg.bm25_b)
 
     # global df: segment vocabs are disjoint doc sets → df adds
     gvocab = None
@@ -1319,12 +1319,10 @@ def federated_bm25_topk(segments: list[InvertedIndex], queries: DataFrame,
         m = _matched(s, qterms).join(
             s.docs.select("doc_id", "doc_len"), "doc_id")
         matched = m if matched is None else matched.unionByName(m)
-    sat = (F.col("weight") * F.lit(k1 + 1.0)
-           / (F.col("weight") + F.lit(k1)
-              * (F.lit(1.0 - b) + F.lit(b) * F.col("doc_len") / F.lit(avgdl_g))))
-    aggs = [F.sum(F.col("qtf") * F.col("idf") * sat).alias("score")]
+    sat = bm25_sat(cfg, avgdl_g, tf="weight")
+    aggs = [F.expr(f"sum(qtf * idf * {sat}) AS score")]
     if t > 1:  # same narrow-agg policy as _bm25_scored
-        aggs.append(F.count(F.lit(1)).alias("n_matched"))
+        aggs.append(F.expr("count(1) AS n_matched"))
     scored = matched.groupBy("query_id", "doc_id").agg(*aggs)
     return topk(_tfilter(scored, t), k, "score", ascending=False,
                 rank_round=rank_round)

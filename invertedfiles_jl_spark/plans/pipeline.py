@@ -280,7 +280,10 @@ def load_index(spark: SparkSession, path: str, catalog: str | None = None) -> In
     (parquet/Iceberg scans with pushdown), never against rebuild lineage."""
     with open(os.path.join(path, "index.json")) as f:
         meta = json.load(f)
-    cfg = IndexConfig(**{k: v for k, v in meta["config"].items() if k != "extra"})
+    # only IndexConfig's own fields: an index.json written by older code
+    # may carry keys the config no longer has
+    known = asdict(IndexConfig())
+    cfg = IndexConfig(**{k: v for k, v in meta["config"].items() if k in known})
     io = _StageIO(spark, path, catalog)
     return InvertedIndex(
         docs=io.read("docs"),

@@ -13,12 +13,8 @@ expression, reproducible in DuckDB for oracle parity, seed-free.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def corpus_from_documents(docs: DataFrame) -> DataFrame:

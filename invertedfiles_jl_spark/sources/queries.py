@@ -113,12 +113,6 @@ def fielded_df(spark: SparkSession) -> DataFrame:
     return spark.createDataFrame(FIELDED_SET, "query_id long, content string")
 
 
-def fielded_values_sql() -> str:
-    rows = ", ".join(f"(CAST({qid} AS BIGINT), '{text}')"
-                     for qid, text in FIELDED_SET)
-    return f"(VALUES {rows}) AS fq(query_id, content)"
-
-
 # Fixed regex-query set (whole-term regular-expression search).  Patterns
 # stay inside the Java-regex ∩ RE2 common subset (literals, classes,
 # quantifiers, alternation — no backrefs/lookaround) so Spark RLIKE and the

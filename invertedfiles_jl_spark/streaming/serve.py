@@ -35,7 +35,12 @@ from typing import Iterator
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.operators.build import InvertedIndex, term_id_col
+from invertedfiles_jl_spark.operators.build import (
+    InvertedIndex,
+    bm25_sat,
+    doc_terms,
+    term_id_col,
+)
 from invertedfiles_jl_spark.operators.search import _bm25_qterms
 from invertedfiles_jl_spark.operators.wand import rank_order
 
@@ -75,48 +80,43 @@ def matched_occurrences(stream_docs: DataFrame, index: InvertedIndex,
 
 
 def percolate(index: InvertedIndex, queries: DataFrame, docs: DataFrame,
-              require_all: bool = True, k1: float | None = None,
-              b: float | None = None,
+              require_all: bool = True,
               content_col: str = "content") -> DataFrame:
     """Reverse search (Elasticsearch percolator analog): which standing
     queries match each incoming document?  The BATCH twin of
-    :func:`streaming_bm25_topk` — same frozen-stats scoring model, same
-    stream-static join relation (:func:`matched_occurrences` works on any
-    DataFrame), but emitting per-DOC matches instead of per-query pools:
+    :func:`streaming_bm25_topk` — same frozen-stats scoring model over the
+    same standing-query relation (:func:`standing_queries`), but emitting
+    per-DOC matches instead of per-query pools:
 
         (doc_id, query_id, n_matched, score)
 
     ``require_all`` keeps only docs containing EVERY in-vocab term of the
-    query (a query with an out-of-vocabulary term then never fires, the
-    conjunctive reading); False is the disjunctive match-any reading.
-    Scoring is the engine's exact BM25 arithmetic with idf/avgdl/N frozen
-    from the index snapshot — alert routing, saved searches, feed fan-out.
+    query (``n_matched = n_need``; out-of-vocabulary terms are not
+    required, and a fully-OOV query never fires); False is the
+    disjunctive match-any reading.  Scoring is the engine's exact BM25
+    arithmetic (:func:`~invertedfiles_jl_spark.operators.build.bm25_sat`)
+    with idf/avgdl/N frozen from the index snapshot — alert routing, saved
+    searches, feed fan-out.
 
-    Scale shape: per-batch work is the matched occurrence rows only
-    (broadcast standing-query relation, no posting lists touched at all —
-    the index contributes only vocab stats), one partial+final aggregation
-    keyed (doc, query)."""
-    k1 = float(index.cfg.bm25_k1 if k1 is None else k1)
-    b = float(index.cfg.bm25_b if b is None else b)
-    avgdl = float(index.stats["avg_doc_len"] or 1.0)
-
-    m = matched_occurrences(docs, index, queries, content_col=content_col)
-    tf = m.groupBy("doc_id", "query_id", "term_id", "qtf", "idf",
-                   "doc_len").agg(
-        F.count(F.lit(1)).cast("double").alias("tf"))
-    sat = (F.col("tf") * (k1 + 1.0)
-           / (F.col("tf") + k1 * ((1.0 - b)
-              + b * F.col("doc_len") / F.lit(avgdl))))
-    per = tf.groupBy("doc_id", "query_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_matched"),
-        F.sum(F.col("qtf") * F.col("idf") * sat).alias("score"),
+    Scale shape: the doc batch's (doc_id, term, tf, doc_len) relation
+    (:func:`~invertedfiles_jl_spark.operators.build.doc_terms`, the one
+    doc side of both percolators) ⋈ the broadcast standing relation, which
+    carries each query's ``n_need`` as a window count; one (doc, query)
+    aggregate scores and counts.  No posting lists are touched — the index
+    contributes only vocab stats."""
+    sat = bm25_sat(index.cfg, index.stats["avg_doc_len"] or 1.0)
+    need = standing_queries(index, queries).selectExpr(
+        "*", "count(1) OVER (PARTITION BY query_id) AS n_need")
+    per = (
+        doc_terms(docs, index.cfg, content_col)
+        .join(F.broadcast(need), "term_id")
+        .groupBy("doc_id", "query_id").agg(
+            F.expr("count(1) AS n_matched"),
+            F.expr(f"sum(qtf * idf * {sat}) AS score"),
+            F.expr("max(n_need) AS n_need"))
     )
     if require_all:
-        need = standing_queries(index, queries).groupBy("query_id").agg(
-            F.countDistinct("term_id").alias("n_need"))
-        per = (per.join(F.broadcast(need), "query_id")
-               .filter(F.col("n_matched") == F.col("n_need"))
-               .drop("n_need"))
+        per = per.filter("n_matched = n_need")
     return per.select("doc_id", "query_id", "n_matched", "score")
 
 
@@ -150,6 +150,7 @@ def streaming_bm25_topk(stream_docs: DataFrame, index: InvertedIndex,
                 tf=("term_id", "size"), doc_len=("doc_len", "first"),
                 qtf=("qtf", "first"), idf=("idf", "first"))
             g = g.reset_index()
+            # pandas cannot run build.bm25_sat's SQL: the same formula
             sat = (g["tf"] * (k1 + 1.0)
                    / (g["tf"] + k1 * ((1.0 - b) + b * g["doc_len"] / avgdl)))
             g["contrib"] = g["qtf"] * g["idf"] * sat

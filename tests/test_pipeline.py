@@ -47,6 +47,24 @@ def test_build_load_query(corpus, spark, tmp_path):
     assert a == b
 
 
+def test_load_index_ignores_retired_config_keys(corpus, spark, tmp_path):
+    """An index.json written before IndexConfig dropped
+    ``shuffle_partitions`` and ``extra`` still loads and serves Plan A."""
+    p = str(tmp_path / "idx")
+    idx = build_checkpointed(corpus, p, IndexConfig(weighting="bm25"))
+    meta_path = os.path.join(p, "index.json")
+    with open(meta_path) as f:
+        meta = json.load(f)
+    meta["config"].update(shuffle_partitions=8, extra={"note": "old"})
+    with open(meta_path, "w") as f:
+        json.dump(meta, f)
+    loaded = load_index(spark, p)
+    assert loaded.cfg == idx.cfg
+    a, b = (sorted(map(tuple, bm25_topk(i, queries_df(spark), 5).collect()))
+            for i in (idx, loaded))
+    assert a and a == b
+
+
 def test_resume_skips_completed_stages(corpus, spark, tmp_path):
     p = str(tmp_path / "idx")
     build_checkpointed(corpus, p, IndexConfig())

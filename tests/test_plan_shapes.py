@@ -114,6 +114,31 @@ def test_serving_call_job_count(spark, served, call, most):
     assert _job_count(spark, lambda: call(idx, q).collect()) <= most
 
 
+def test_percolation_job_count(spark, served, documents):
+    """Both percolators read the doc batch through one (doc_id, term, tf,
+    doc_len) relation and score in their one gate aggregate: no second
+    tokenization, tf aggregate or left join back (27 / 9 jobs while the
+    query-string percolator re-scored through ``percolate`` and that
+    counted occurrence rows)."""
+    from pyspark.sql import functions as F
+
+    from invertedfiles_jl_spark.operators.querystring import (
+        query_string_percolate,
+    )
+    from invertedfiles_jl_spark.sources.queries import qstring_df
+    from invertedfiles_jl_spark.streaming.serve import percolate
+
+    idx, _ = served
+    docs = documents.select("doc_id", F.col("text").alias("content"),
+                            "lang", "source", "n_chars")
+    assert _job_count(spark, lambda: query_string_percolate(
+        idx, qstring_df(spark), docs,
+        qualifier_fields=("lang", "source", "n_chars")).collect()) <= 18
+    assert _job_count(spark, lambda: percolate(
+        idx, queries_df(spark), docs.select("doc_id", "content"),
+        require_all=True).collect()) <= 5
+
+
 def test_plan_a_postings_scan_pruned(spark, served):
     idx, _ = served
     plan = formatted_plan(bm25_topk(idx, queries_df(spark), k=10))

@@ -1,8 +1,9 @@
 """Query-string mini-language (operators/querystring.py).
 
-Three layers: (1) the distributed column-regex parser must split clauses
-byte-for-byte like the Python mirror on the fixture set plus adversarial
-strings; (2) gate semantics on an inline corpus — must/must_not/phrase
+Three layers: (1) the one parser's clause split, and the two routes
+over it — percolating the indexed corpus against the fixture set plus
+adversarial strings must return exactly the pairs and scores of top-k
+search; (2) gate semantics on an inline corpus — must/must_not/phrase
 conjunction, OOV behavior, multi-phrase AND; (3) rank parity: a
 phrase-free query string must rank exactly like ``boolean_topk`` given
 the same clauses (the composition contract).
@@ -18,7 +19,7 @@ from invertedfiles_jl_spark.operators.build import build_index
 from invertedfiles_jl_spark.operators.positional import positional_postings
 from invertedfiles_jl_spark.operators.querystring import (
     parse_query_string_py,
-    parse_query_strings,
+    query_string_percolate,
     query_string_topk,
 )
 from invertedfiles_jl_spark.operators.search import boolean_topk
@@ -48,50 +49,38 @@ ADVERSARIAL = [
 ]
 
 
-def _parse_via_spark(spark, strings):
-    df = spark.createDataFrame(
-        [(i, s) for i, s in enumerate(strings)],
-        "query_id long, content string")
-    rows = parse_query_strings(df).orderBy("query_id").collect()
-    return [
-        {"must": r.must, "should": r.should, "must_not": r.must_not,
-         "phrases": list(r.phrases), "slops": list(r.slops),
-         "phrase_signs": list(r.phrase_signs),
-         "qual_signs": list(r.qual_signs),
-         "qual_fields": list(r.qual_fields),
-         "qual_values": list(r.qual_values),
-         "wild_signs": list(r.wild_signs),
-         "wild_prefixes": list(r.wild_prefixes)}
-        for r in rows
-    ]
-
-
-def _norm(p):
-    # clause strings are compared token-wise: the tokenizer later collapses
-    # whitespace, so parser parity is defined on the token split
-    return {
-        "must": p["must"].split(),
-        "should": p["should"].split(),
-        "must_not": p["must_not"].split(),
-        "phrases": list(zip(p["phrase_signs"], p["phrases"])),
-        "slops": p["slops"],
-        "quals": list(zip(p["qual_signs"], p["qual_fields"],
-                          p["qual_values"])),
-        "wilds": list(zip(p["wild_signs"], p["wild_prefixes"])),
-    }
-
-
 class TestParserParity:
-    def test_fixture_set(self, spark):
-        strings = [s for _, s in QSTRING_SET]
-        got = _parse_via_spark(spark, strings)
-        for s, g in zip(strings, got):
-            assert _norm(g) == _norm(parse_query_string_py(s)), s
+    """Both query-string routes parse with parse_query_string_py
+    (distributed vs on the driver): percolating the indexed corpus itself
+    against a string set returns exactly the (query, doc) pairs of top-k
+    search with k >= |DOCS|, at the same scores."""
 
-    def test_adversarial(self, spark):
-        got = _parse_via_spark(spark, ADVERSARIAL)
-        for s, g in zip(ADVERSARIAL, got):
-            assert _norm(g) == _norm(parse_query_string_py(s)), repr(s)
+    def _assert_percolate_equals_topk(self, spark, tiny, meta, strings):
+        import math
+
+        idx, pos = tiny
+        q = spark.createDataFrame(list(enumerate(strings)),
+                                  "query_id long, content string")
+        corpus = spark.createDataFrame(DOCS, "doc_id long, content string")
+        fields = ("lang", "source", "stars")
+        topk = {(r.query_id, r.doc_id): r.score for r in query_string_topk(
+            idx, pos, q, k=len(DOCS), meta=meta,
+            qualifier_fields=fields).collect()}
+        perc = {(r.query_id, r.doc_id): r.score
+                for r in query_string_percolate(
+                    idx, q, corpus, meta=meta,
+                    qualifier_fields=fields).collect()}
+        assert set(perc) == set(topk) and topk
+        for key, sc in topk.items():
+            assert math.isclose(perc[key], sc, rel_tol=1e-5,
+                                abs_tol=1e-5), (strings[key[0]], key)
+
+    def test_fixture_set(self, spark, tiny, meta):
+        self._assert_percolate_equals_topk(
+            spark, tiny, meta, [s for _, s in QSTRING_SET])
+
+    def test_adversarial(self, spark, tiny, meta):
+        self._assert_percolate_equals_topk(spark, tiny, meta, ADVERSARIAL)
 
     def test_py_mirror_clauses(self):
         p = parse_query_string_py('a+b -row "fast query" +merge table')
@@ -368,10 +357,6 @@ class TestWildcards:
         assert set(docs) == {4, 5}  # fast AND any ta*-term
 
     def test_percolate_wildcards_match_topk(self, spark, tiny):
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, pos = tiny
         corpus = spark.createDataFrame(DOCS,
                                        "doc_id long, content string")
@@ -395,10 +380,6 @@ class TestPercolate:
             rows, "doc_id long, content string, lang string, stars long")
 
     def _perc(self, spark, tiny, pdocs, strings, **kw):
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, _ = tiny
         standing = spark.createDataFrame(
             list(enumerate(strings, 1)), "query_id long, content string")
@@ -441,10 +422,6 @@ class TestPercolate:
     def test_raw_token_must_matches_index_oov(self, spark, tiny):
         """A must term absent from the INDEX snapshot still gates docs
         that literally contain it (streamed docs can outrun the vocab)."""
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, _ = tiny
         newdocs = spark.createDataFrame(
             [(99, "brandnew fast term")], "doc_id long, content string")
@@ -456,10 +433,6 @@ class TestPercolate:
     def test_all_oov_standing_query_still_fires(self, spark, tiny):
         """A saved search for a term NEWER than the index snapshot must
         match a doc containing it — raw-token candidates, score 0."""
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, _ = tiny
         newdocs = spark.createDataFrame(
             [(99, "brandnew term here"), (100, "other text")],
@@ -475,10 +448,6 @@ class TestPercolate:
         assert got.get(1) == {3}
 
     def test_quals_without_fields_raise(self, spark, tiny, pdocs):
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, _ = tiny
         standing = spark.createDataFrame(
             [(1, "fast lang:en")], "query_id long, content string")
@@ -521,10 +490,6 @@ class TestDefaultOperator:
         assert a == b
 
     def test_bad_operator_rejected(self, spark, tiny):
-        from invertedfiles_jl_spark.operators.querystring import (
-            query_string_percolate,
-        )
-
         idx, pos = tiny
         q = spark.createDataFrame([(1, "x")],
                                   "query_id long, content string")
@@ -657,10 +622,7 @@ class TestFoldedGates:
         assert query_string_topk(idx, pos, q.limit(0), k=10).collect() == []
 
     def test_slot_limit_raises(self, spark, tiny):
-        from invertedfiles_jl_spark.operators.querystring import (
-            MAX_SLOTS,
-            query_string_percolate,
-        )
+        from invertedfiles_jl_spark.operators.querystring import MAX_SLOTS
 
         idx, pos = tiny
         s = " ".join(['"fast query"'] * MAX_SLOTS + ["ta*"])
@@ -677,10 +639,11 @@ class TestFoldedGates:
         from invertedfiles_jl_spark.operators.querystring import (
             _clause_flags,
             _parse_batch,
+            _parse_relation,
         )
         from invertedfiles_jl_spark.sources.queries import qstring_df
 
         q = qstring_df(spark)
         _, flags = _parse_batch(q, "content", "or")
-        assert flags == _clause_flags(parse_query_strings(q))
+        assert flags == _clause_flags(_parse_relation(q, "content"))
         assert flags["n_ph"] and flags["n_sloppy"] and flags["n_wild"]
