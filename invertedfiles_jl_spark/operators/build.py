@@ -18,7 +18,7 @@ Spark-first design, one shuffle per stage boundary:
   tf     ──groupBy(term)──▶ vocab(term, df, cf)                    shuffle 3 (post-partial: vocab-sized)
   tf ⋈ broadcast(hot_terms) ──groupBy(term, salt)
          .agg(sorted posting arrays)──▶ postings                   shuffle 4 (the one big exchange)
-  stats  = single-row aggregate (n_docs, avgdl)                    broadcast-sized
+  docs   ──compute_stats──▶ (n_docs, avgdl, doc-id range)           the one collect
 
 At 100 TB: every aggregation is partial+final (map-side combine), the only
 wide rows are hot-term posting arrays, which salting caps at
@@ -26,6 +26,13 @@ wide rows are hot-term posting arrays, which salting caps at
 over a global ordering, no collect() of anything larger than the stats row.
 Each stage is independently persistable — ``plans.pipeline`` checkpoints them
 for the resumable build the north rule requires.
+
+Every write path shares this module's two decisions: the scalar statistics
+(:func:`compute_stats` — the staged build, the vector build and the
+``append_documents`` delta call it) and the posting-list layout
+(:func:`posting_lists` / :func:`list_columns` — the build, the append
+merge, ``sharded.shard_postings`` and ``maintenance.delete_documents``
+use it).
 """
 
 from __future__ import annotations
@@ -168,10 +175,12 @@ def vocab_table(tf: DataFrame) -> DataFrame:
     ).withColumn("term_id", term_id_col("term"))
 
 
-def compute_stats(corpus: DataFrame, docs: DataFrame) -> dict:
-    """The only collect in the build — a single scalar row.  ``docs`` has
-    exactly one row per corpus document (right join on the sha scan), so the
-    count, avgdl and the doc-id range all come from ONE aggregate job."""
+def compute_stats(docs: DataFrame) -> dict:
+    """The index's scalar statistics — n_docs, avg_doc_len and the doc-id
+    range — from ONE aggregate job over the per-doc table, which has
+    exactly one row per document.  The one scalar collect every build path
+    shares: ``build_index``, ``build_checkpointed``, ``build_vector_index``
+    and the ``append_documents`` delta."""
     row = docs.select(
         F.count(F.lit(1)).alias("n"),
         F.avg("doc_len").alias("avgdl"),
@@ -282,33 +291,39 @@ def range_bucket(n_buckets: int, doc_lo: int, doc_hi: int) -> F.Column:
     )
 
 
+def list_columns(plist: str, block_size: int) -> list[str]:
+    """The posting-list columns of a doc-sorted ``array<struct<doc_id,
+    weight>>`` column, as SQL: ``doc_ids``, ``weights``, the list max and
+    the per-block ``block_max`` (max weight of each ``block_size``-entry
+    block — Ding & Suel BMW 2011 skip data)."""
+    bs = int(block_size)
+    return [
+        f"{plist}.doc_id AS doc_ids",
+        f"{plist}.weight AS weights",
+        f"array_max({plist}.weight) AS max_weight",
+        f"transform(sequence(0, int((size({plist}) - 1) / {bs})), "
+        f"b -> array_max(slice({plist}.weight, b * {bs} + 1, {bs}))) AS block_max",
+    ]
+
+
+def posting_lists(rows: DataFrame, keys: list[str], block_size: int,
+                  *aggs: Column) -> DataFrame:
+    """(keys…, doc_id, weight) rows → one doc-sorted posting list per key:
+    ``(keys…, aggs…, doc_ids, weights, max_weight, block_max)``.  The one
+    posting-list layout — the build, the merge and the shard re-layout
+    group through it."""
+    grouped = rows.groupBy(*keys).agg(
+        *aggs, F.sort_array(F.collect_list(F.struct("doc_id", "weight"))).alias("plist"))
+    return grouped.selectExpr(*grouped.columns[:-1], *list_columns("plist", block_size))
+
+
 def grouped_postings(salted: DataFrame, cfg: IndexConfig) -> DataFrame:
     """(term_id, salt, doc_id, weight) rows → doc-sorted posting-list rows
-    with list-max and block-max metadata (Ding & Suel BMW 2011 skip data),
+    with ``df_part`` and the list/block bounds of :func:`posting_lists`,
     plus delta-gap varbyte compression when configured.  The posting table
     carries NO term string — join ``vocab`` on ``term_id`` to recover it."""
-    bs = int(cfg.block_size)
-    postings = (
-        salted.groupBy("term_id", "salt")
-        .agg(
-            F.count(F.lit(1)).alias("df_part"),
-            F.sort_array(F.collect_list(F.struct("doc_id", "weight"))).alias("plist"),
-        )
-        .select(
-            "term_id",
-            "salt",
-            "df_part",
-            F.col("plist.doc_id").alias("doc_ids"),
-            F.col("plist.weight").alias("weights"),
-            F.array_max(F.col("plist.weight")).alias("max_weight"),
-            # block-max metadata: max weight of each block_size-entry block
-            # of the doc-sorted list
-            F.expr(
-                f"transform(sequence(0, int((size(plist) - 1) / {bs})), "
-                f"b -> array_max(slice(plist.weight, b * {bs} + 1, {bs})))"
-            ).alias("block_max"),
-        )
-    )
+    postings = posting_lists(salted, ["term_id", "salt"], cfg.block_size,
+                             F.count(F.lit(1)).alias("df_part"))
     if cfg.compress:
         from invertedfiles_jl_spark.operators.codec import compress_postings
 
@@ -340,7 +355,7 @@ def build_index(
     tf = doc_term_freqs(corpus, cfg, doc_col, content_col)
     docs = docs_table(tf, corpus, doc_col, content_col)
     vocab = vocab_table(tf)
-    stats = compute_stats(corpus, docs)
+    stats = compute_stats(docs)
     weighted = weighted_pairs(tf, docs, stats, cfg)
     postings = postings_table(weighted, vocab, stats, cfg)
     return InvertedIndex(docs=docs, vocab=vocab, postings=postings, stats=stats, cfg=cfg)

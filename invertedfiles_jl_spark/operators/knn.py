@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import (
     InvertedIndex,
+    compute_stats,
     postings_table,
     term_id_col,
 )
@@ -56,14 +57,8 @@ def build_vector_index(pairs: DataFrame, cfg: IndexConfig | None = None) -> Inve
         F.count(F.lit(1)).alias("df"),
         F.sum("weight").alias("cf"),
     ).withColumn("term_id", term_id_col("term"))
-    drow = docs.select(
-        F.count(F.lit(1)).alias("n"),
-        F.min("doc_id").alias("lo"),
-        F.max("doc_id").alias("hi"),
-    ).collect()[0]
-    stats = {"n_docs": int(drow["n"]), "avg_doc_len": None,
-             "min_doc_id": int(drow["lo"]) if drow["lo"] is not None else 0,
-             "max_doc_id": int(drow["hi"]) if drow["hi"] is not None else 0}
+    # weights arrive pre-normalized: no avgdl enters any weight
+    stats = dict(compute_stats(docs), avg_doc_len=None)
     postings = postings_table(weighted, vocab, stats, cfg)
     return InvertedIndex(docs=docs, vocab=vocab, postings=postings, stats=stats, cfg=cfg)
 

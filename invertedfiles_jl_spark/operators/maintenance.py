@@ -33,20 +33,10 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.operators.build import InvertedIndex
+from invertedfiles_jl_spark.operators.build import InvertedIndex, list_columns
 from invertedfiles_jl_spark.operators.search import decode_ids, stored_ids_col
 
 MAX_DELETE_BATCH = 100_000
-
-
-def _block_max_expr(block_size: int) -> F.Column:
-    """Per-block max over a ``weights`` column — same metadata shape as
-    ``build.grouped_postings`` emits (Ding & Suel BMW skip data)."""
-    bs = int(block_size)
-    return F.expr(
-        f"transform(sequence(0, int((size(weights) - 1) / {bs})), "
-        f"b -> array_max(slice(weights, b * {bs} + 1, {bs})))"
-    )
 
 
 def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
@@ -80,10 +70,13 @@ def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
     compressed = stored_ids_col(index.postings) == "ids_vb"
     p = decode_ids(index.postings)
 
-    zipped = F.arrays_zip("doc_ids", "weights")
+    # entries as struct(doc_id, weight): the element shape of the build's
+    # posting lists, so the bounds come from the same build.list_columns
+    zipped = F.arrays_zip(F.col("doc_ids").alias("doc_id"),
+                          F.col("weights").alias("weight"))
     touched = F.arrays_overlap(F.col("doc_ids"), dels)
     kept = F.when(touched, F.filter(
-        zipped, lambda e: ~F.array_contains(dels, e["doc_ids"]))
+        zipped, lambda e: ~F.array_contains(dels, e["doc_id"]))
     ).otherwise(zipped)
     # lists that empty out drop by exploding a zero-or-one-element array,
     # not by a Filter: Catalyst would copy `kept` (and the Python decode
@@ -91,15 +84,8 @@ def delete_documents(index: InvertedIndex, delete_ids: DataFrame | list,
     p = (
         p.select("term_id", "salt", F.explode(
             F.when(F.size(kept) > 0, F.array(kept))).alias("kept"))
-        .select(
-            "term_id",
-            "salt",
-            F.size("kept").alias("df_part"),
-            F.col("kept.doc_ids").alias("doc_ids"),
-            F.col("kept.weights").alias("weights"),
-            F.array_max(F.col("kept.weights")).alias("max_weight"),
-        )
-        .withColumn("block_max", _block_max_expr(index.cfg.block_size))
+        .selectExpr("term_id", "salt", "size(kept) AS df_part",
+                    *list_columns("kept", index.cfg.block_size))
     )
     if compressed:
         from invertedfiles_jl_spark.operators.codec import compress_postings
@@ -134,25 +120,3 @@ def prune_postings(index: InvertedIndex, min_df: int | None = None,
     postings = index.postings.join(keep_terms, "term_id", "left_semi")
     return InvertedIndex(docs=index.docs, vocab=index.vocab, postings=postings,
                          stats=index.stats, cfg=index.cfg)
-
-
-def delete_positional(positional: DataFrame, delete_ids: DataFrame | list,
-                      max_batch: int = MAX_DELETE_BATCH) -> DataFrame:
-    """Positional-table analogue of :func:`delete_documents`.  Positional
-    postings are doc-keyed flat rows (term_id, doc_id, positions), so
-    deletion is a pure map-only FILTER — no list surgery, no metadata
-    recompute (unlike the doc-array postings).  Same driver-bounded batch
-    contract; phrase/proximity/snippet over the result are identical to
-    querying a rebuilt table (pytest-gated)."""
-    if isinstance(delete_ids, DataFrame):
-        ids = sorted({r[0] for r in
-                      delete_ids.select("doc_id").distinct().collect()})
-    else:
-        ids = sorted(set(int(i) for i in delete_ids))
-    if not ids:
-        return positional
-    if len(ids) > max_batch:
-        raise ValueError(
-            f"delete batch of {len(ids)} exceeds max_batch={max_batch}; "
-            "chunk the delete or rebuild")
-    return positional.filter(~F.col("doc_id").isin(ids))

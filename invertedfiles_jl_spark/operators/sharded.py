@@ -37,7 +37,8 @@ merged into one result, /root/reference/src/InvertedFiles.jl:57) — the shard
 is the thread, the final window is the merge.
 
 Shared pieces: ``shard_postings`` reads through ``search.read_postings``
-(so a compressed index decodes once, at layout time); query weights come
+(so a compressed index decodes once, at layout time) and regroups through
+``build.posting_lists``, the build's own list layout; query weights come
 from ``search.query_weights``; the BM25/dot-product and set-distance
 scorers share one serve path (``_serve``: collect → broadcast qmap →
 semi-join prune → kernel → top-k) and one kernel-factory pair
@@ -59,7 +60,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.operators.build import InvertedIndex, doc_range, range_bucket
+from invertedfiles_jl_spark.operators.build import (
+    InvertedIndex,
+    doc_range,
+    posting_lists,
+    range_bucket,
+)
 from invertedfiles_jl_spark.operators.search import (
     query_terms,
     query_weights,
@@ -83,7 +89,6 @@ def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
     Returns postings(shard, term_id, doc_ids, weights, max_weight, block_max).
     """
     doc_lo, doc_hi = doc_range(index.stats)
-    bs = int(index.cfg.block_size)
     flat = read_postings(index.postings, "term_id")
     if index.cfg.weighting == "binary":
         # Set-distance serving needs each candidate's |doc| (distinct-term
@@ -97,22 +102,8 @@ def shard_postings(index: InvertedIndex, n_shards: int = 32) -> DataFrame:
     # bucket over the stats-recorded id range; ids outside it (stats drift)
     # raise instead of silently mis-bucketing (see build.range_bucket)
     shard = range_bucket(n_shards, doc_lo, doc_hi)
-    return (
-        flat.withColumn("shard", shard)
-        .groupBy("shard", "term_id")
-        .agg(F.sort_array(F.collect_list(F.struct("doc_id", "weight"))).alias("plist"))
-        .select(
-            "shard", "term_id",
-            F.col("plist.doc_id").alias("doc_ids"),
-            F.col("plist.weight").alias("weights"),
-            F.array_max(F.col("plist.weight")).alias("max_weight"),
-            F.expr(
-                f"transform(sequence(0, int((size(plist) - 1) / {bs})), "
-                f"b -> array_max(slice(plist.weight, b * {bs} + 1, {bs})))"
-            ).alias("block_max"),
-        )
-        .repartition(n_shards, "shard")
-    )
+    return posting_lists(flat.withColumn("shard", shard), ["shard", "term_id"],
+                         index.cfg.block_size).repartition(n_shards, "shard")
 
 
 _NO_MATCH = (np.empty(0, dtype=np.int64), np.empty(0, dtype=np.float64))

@@ -73,36 +73,6 @@ def build_trigram_index(corpus: DataFrame, content_col: str = "content",
                                              F.col(content_col).alias("content")))
 
 
-def append_trigram_index(tindex: TrigramIndex, new_docs: DataFrame,
-                         content_col: str = "content",
-                         doc_col: str = "doc_id") -> TrigramIndex:
-    """Micro-batch append (``push_item!`` discipline, same objID contract as
-    ``streaming.incremental.merge_indexes``): build the delta's postings,
-    outer-merge on the gram with list concatenation + re-sort.  Equal to a
-    from-scratch rebuild over the union corpus (pytest gate) because doc ids
-    are append-ordered and lists are re-sorted after the concat."""
-    delta = build_trigram_index(new_docs, content_col=content_col,
-                                doc_col=doc_col)
-    a = tindex.postings.select("gram", F.col("doc_ids").alias("a_ids"))
-    b = delta.postings.select("gram", F.col("doc_ids").alias("b_ids"))
-    merged = (
-        a.join(b, "gram", "full_outer")
-        .select(
-            "gram",
-            F.sort_array(
-                F.concat(
-                    F.coalesce(F.col("a_ids"), F.array().cast("array<long>")),
-                    F.coalesce(F.col("b_ids"), F.array().cast("array<long>")),
-                )
-            ).alias("doc_ids"),
-        )
-        .select("gram", "doc_ids",
-                F.size("doc_ids").cast("long").alias("df"))
-    )
-    return TrigramIndex(postings=merged,
-                        corpus=tindex.corpus.unionByName(delta.corpus))
-
-
 def substring_search(tindex: TrigramIndex, queries: DataFrame,
                      needle_col: str = "needle",
                      max_grams: int = 8) -> DataFrame:

@@ -23,6 +23,12 @@ stage is written with ``df.writeTo(f"{catalog}.{stage}").createOrReplace()``
 — an Iceberg table per stage with snapshot lineage.  Without a catalog
 (this sandbox ships no Iceberg jar) stages are parquet directories with the
 same one-table-per-stage layout.
+
+One write path: every stage table goes through ``_StageIO.write`` and every
+``index.json`` through ``_write_index_json``.  ``build_checkpointed`` writes
+a fresh build; ``save_index`` is the one writer for every other index state
+(maintenance results, ``append_documents`` merges, each ``stream_append``
+micro-batch).
 """
 
 from __future__ import annotations
@@ -37,6 +43,7 @@ from pyspark.sql import DataFrame, SparkSession
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import (
     InvertedIndex,
+    compute_stats,
     doc_term_freqs,
     docs_table,
     postings_table,
@@ -129,6 +136,15 @@ def _partition_lineage(stage_dir: str) -> dict:
             "detail_truncated": len(files) > _PARTITION_DETAIL_CAP}
 
 
+def _write_index_json(root: str, cfg: IndexConfig, stats: dict) -> None:
+    """The root's ``index.json`` — config, its hash and the scalar stats:
+    what ``load_index`` opens a root by, written last as the root's
+    commit marker."""
+    with open(os.path.join(root, "index.json"), "w") as f:
+        json.dump({"config": asdict(cfg), "config_hash": config_hash(cfg),
+                   "stats": stats}, f, indent=1, sort_keys=True, default=str)
+
+
 class _StageIO:
     """Stage reader/writer — Iceberg ``writeTo`` when a catalog is
     configured, parquet directories otherwise.  The manifest file is the
@@ -187,7 +203,6 @@ def build_checkpointed(
     spark = corpus.sparkSession
     os.makedirs(path, exist_ok=True)
     io = _StageIO(spark, path, catalog)
-    chash = config_hash(cfg)
     # Lineage fingerprint: a columnless count (parquet answers this from
     # row-group metadata — no data read).  Each stage's manifest is keyed on
     # the config SLICE it depends on (STAGE_CONFIG_FIELDS), so e.g. a
@@ -226,15 +241,7 @@ def build_checkpointed(
                      ("n_docs", "avg_doc_len", "min_doc_id", "max_doc_id")
                      if k in saved}
     if stats is None:
-        from pyspark.sql import functions as F
-
-        row = docs.agg(
-            F.count(F.lit(1)).alias("n"), F.avg("doc_len").alias("avgdl"),
-            F.min("doc_id").alias("lo"), F.max("doc_id").alias("hi"),
-        ).collect()[0]
-        stats = {"n_docs": int(row["n"]), "avg_doc_len": float(row["avgdl"] or 0.0),
-                 "min_doc_id": int(row["lo"]) if row["lo"] is not None else 0,
-                 "max_doc_id": int(row["hi"]) if row["hi"] is not None else 0}
+        stats = compute_stats(docs)
         with open(stats_path, "w") as f:
             json.dump(dict(stats, **_lineage("docs")), f, indent=1, sort_keys=True)
 
@@ -245,10 +252,7 @@ def build_checkpointed(
         io.write(postings_table(weighted, vocab, stats, cfg), "postings", _lineage("postings"))
     postings = io.read("postings")
 
-    with open(os.path.join(path, "index.json"), "w") as f:
-        json.dump({"config": asdict(cfg), "config_hash": chash, "stats": stats},
-                  f, indent=1, sort_keys=True, default=str)
-
+    _write_index_json(path, cfg, stats)
     return InvertedIndex(docs=docs, vocab=vocab, postings=postings, stats=stats, cfg=cfg)
 
 
@@ -269,10 +273,7 @@ def save_index(index: InvertedIndex, path: str, catalog: str | None = None) -> N
                       ("postings", index.postings)):
         io.write(df, stage, {"config_hash": config_hash(index.cfg, stage),
                              "input_rows": n})
-    with open(os.path.join(path, "index.json"), "w") as f:
-        json.dump({"config": asdict(index.cfg),
-                   "config_hash": config_hash(index.cfg),
-                   "stats": index.stats}, f, indent=1, sort_keys=True, default=str)
+    _write_index_json(path, index.cfg, index.stats)
 
 
 def load_index(spark: SparkSession, path: str, catalog: str | None = None) -> InvertedIndex:

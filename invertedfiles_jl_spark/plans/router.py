@@ -67,16 +67,22 @@ def batch_stats(index: InvertedIndex, queries: DataFrame) -> dict:
     }
 
 
-def route_plan(index: InvertedIndex, queries: DataFrame,
-               batch_threshold: int = DEFAULT_BATCH_THRESHOLD,
-               prune_threshold: int = DEFAULT_PRUNE_THRESHOLD) -> str:
-    """'sharded' | 'wand' | 'plan_a' per the module rules."""
-    s = batch_stats(index, queries)
+def choose_plan(s: dict, batch_threshold: int = DEFAULT_BATCH_THRESHOLD,
+                prune_threshold: int = DEFAULT_PRUNE_THRESHOLD) -> str:
+    """'sharded' | 'wand' | 'plan_a' for a :func:`batch_stats` dict, per
+    the module rules — pure, no Spark job."""
     if s["n_queries"] >= batch_threshold:
         return "sharded"
     if s["entries_per_query"] >= prune_threshold:
         return "wand"
     return "plan_a"
+
+
+def route_plan(index: InvertedIndex, queries: DataFrame,
+               batch_threshold: int = DEFAULT_BATCH_THRESHOLD,
+               prune_threshold: int = DEFAULT_PRUNE_THRESHOLD) -> str:
+    """'sharded' | 'wand' | 'plan_a' per the module rules."""
+    return choose_plan(batch_stats(index, queries), batch_threshold, prune_threshold)
 
 
 def auto_topk(index: InvertedIndex, queries: DataFrame, k: int = 10,
@@ -114,7 +120,7 @@ def route_explain(index: InvertedIndex, queries: DataFrame,
     (n_queries, entries, entries_per_query, plan) — so deployments can log
     why a batch went where (the EXPLAIN of the router)."""
     s = batch_stats(index, queries)
-    plan = route_plan(index, queries, batch_threshold, prune_threshold)
+    plan = choose_plan(s, batch_threshold, prune_threshold)
     spark = queries.sparkSession
     return spark.createDataFrame(
         [(s["n_queries"], s["entries"], float(s["entries_per_query"]), plan)],

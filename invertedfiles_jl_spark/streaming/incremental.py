@@ -7,22 +7,33 @@ analog builds a delta index from the new documents and merges posting lists
 with the persisted index:  old ∪ delta exploded → regroup → re-sorted lists.
 Only TOUCHED terms regroup (untouched posting rows pass through unchanged),
 so the merge cost scales with the delta's term footprint, not the index size.
-A Structured-Streaming source can drive this via foreachBatch.
+
+``stream_append`` drives the same append from a Structured-Streaming source
+via foreachBatch: the config comes from the root's ``index.json``, bm25
+keeps the frozen avgdl exactly as ``append_documents`` does, and
+``pipeline.save_index`` writes every batch — there is no second writer.
 """
 
 from __future__ import annotations
 
-import json
 import os
+import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.build import (
     InvertedIndex,
-    build_index,
+    compute_stats,
+    doc_range,
+    doc_term_freqs,
+    docs_table,
+    postings_table,
+    term_id_col,
+    vocab_table,
+    weighted_pairs,
 )
+from invertedfiles_jl_spark.operators.search import read_postings
 
 
 def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
@@ -35,21 +46,13 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
     break the doc-range-disjoint sub-list invariant that delta-gap encoding
     and bucket-order concatenation rely on.  Untouched rows keep their old
     salts (their sub-lists are unchanged, hence still range-disjoint).
-    Block-max metadata is recomputed for remerged lists by
-    ``grouped_postings``.
+    Remerged lists are regrouped, with their block-max metadata, by the
+    build's own ``postings_table``.
     """
     cfg = old.cfg
     if cfg.weighting != delta.cfg.weighting:
         raise ValueError(f"cannot merge a {delta.cfg.weighting} delta into a "
                          f"{cfg.weighting} index")
-
-    from invertedfiles_jl_spark.operators.build import (
-        doc_range,
-        grouped_postings,
-        salted_pairs,
-        term_id_col,
-    )
-    from invertedfiles_jl_spark.operators.search import read_postings
 
     touched = delta.postings.select("term_id").distinct()
 
@@ -67,20 +70,16 @@ def merge_indexes(old: InvertedIndex, delta: InvertedIndex) -> InvertedIndex:
         .withColumn("term_id", term_id_col("term"))
     )
     n = old.stats["n_docs"] + delta.stats["n_docs"]
-
     # merged id range = envelope of both sides — touched terms re-salt
     # against it so their sub-lists stay doc-range-disjoint
     olo, ohi = doc_range(old.stats)
     dlo, dhi = doc_range(delta.stats)
-    lo, hi = min(olo, dlo), max(ohi, dhi)
-    hot = vocab.filter(F.col("df") > cfg.salt_df_threshold)
-    remerged = grouped_postings(salted_pairs(exploded, hot, lo, hi, cfg), cfg)
-    postings = untouched.unionByName(remerged, allowMissingColumns=True)
-
     old_len = (old.stats["avg_doc_len"] or 0.0) * old.stats["n_docs"]
     new_len = (delta.stats["avg_doc_len"] or 0.0) * delta.stats["n_docs"]
     stats = {"n_docs": n, "avg_doc_len": (old_len + new_len) / max(n, 1),
-             "min_doc_id": lo, "max_doc_id": hi}
+             "min_doc_id": min(olo, dlo), "max_doc_id": max(ohi, dhi)}
+    postings = untouched.unionByName(postings_table(exploded, vocab, stats, cfg),
+                                     allowMissingColumns=True)
     return InvertedIndex(docs=docs, vocab=vocab, postings=postings, stats=stats, cfg=cfg)
 
 
@@ -89,62 +88,50 @@ def append_documents(old: InvertedIndex, new_corpus: DataFrame,
     """append_items! over an existing index: build the delta with the SAME
     config, then merge.
 
-    NOTE (bm25): the stored saturated tf depends on the avgdl at build time;
-    after appending, stored weights keep their original avgdl (exactly like
-    any real incremental BM25 index — full rebuilds re-center the statistics;
-    pytest covers the normcosine/binary paths where weights are
+    The delta's stage tables and stats (its own ``compute_stats``: n_docs
+    and doc-id range) are planned once; its weights are computed against
+    the OLD index's avgdl.  Only bm25 reads avgdl, so for bm25 the stored
+    saturated tf of every doc keeps the avgdl the index was built with
+    (exactly like any real incremental BM25 index — full rebuilds
+    re-center the statistics; normcosine/binary weights are
     append-invariant).
     """
-    delta = build_index(new_corpus, old.cfg, doc_col, content_col)
-    if old.cfg.weighting == "bm25":
-        # recompute delta weights under the OLD avgdl for consistency
-        from invertedfiles_jl_spark.operators.build import (
-            doc_term_freqs,
-            docs_table,
-            postings_table,
-            vocab_table,
-            weighted_pairs,
-        )
-
-        tf = doc_term_freqs(new_corpus, old.cfg, doc_col, content_col)
-        docs = docs_table(tf, new_corpus, doc_col, content_col)
-        vocab = vocab_table(tf)
-        stats = dict(delta.stats, avg_doc_len=old.stats["avg_doc_len"])
-        weighted = weighted_pairs(tf, docs, stats, old.cfg)
-        delta = InvertedIndex(
-            docs=docs, vocab=vocab,
-            postings=postings_table(weighted, vocab, stats, old.cfg),
-            stats=delta.stats, cfg=old.cfg,
-        )
+    cfg = old.cfg
+    tf = doc_term_freqs(new_corpus, cfg, doc_col, content_col)
+    docs = docs_table(tf, new_corpus, doc_col, content_col)
+    vocab = vocab_table(tf)
+    stats = compute_stats(docs)
+    weighted = weighted_pairs(
+        tf, docs, dict(stats, avg_doc_len=old.stats["avg_doc_len"]), cfg)
+    delta = InvertedIndex(docs=docs, vocab=vocab,
+                          postings=postings_table(weighted, vocab, stats, cfg),
+                          stats=stats, cfg=cfg)
     return merge_indexes(old, delta)
 
 
 def stream_append(spark: SparkSession, stream_df: DataFrame, index_path: str,
-                  cfg: IndexConfig, checkpoint: str):
+                  checkpoint: str):
     """Structured-Streaming driver: micro-batches of new documents merged
-    into the persisted index via foreachBatch (each batch = one
-    ``append_documents`` + checkpointed rewrite).  The reference has no
+    into the persisted index root via foreachBatch.  The reference has no
     streaming; this is the engine's micro-batch analog of repeated
-    ``push_item!``."""
-    from invertedfiles_jl_spark.plans.pipeline import load_index
+    ``push_item!``.
+
+    The root's ``index.json`` is the config: each non-empty batch is
+    ``append_documents(load_index(root), batch)`` (so bm25 keeps the
+    frozen avgdl exactly as ``append_documents`` does), written by
+    ``save_index`` to a sibling temp root that then replaces the root.
+    """
+    from invertedfiles_jl_spark.plans.pipeline import load_index, save_index
 
     def handle(batch_df: DataFrame, batch_id: int):
         if not batch_df.take(1):
             return
-        old = load_index(spark, index_path)
-        merged = merge_indexes(old, build_index(batch_df, cfg))
-        tmp = index_path + f".batch{batch_id}"
-        merged.postings.write.mode("overwrite").parquet(os.path.join(tmp, "postings"))
-        merged.docs.write.mode("overwrite").parquet(os.path.join(tmp, "docs"))
-        merged.vocab.write.mode("overwrite").parquet(os.path.join(tmp, "vocab"))
-        for name in ("postings", "docs", "vocab"):
-            final = os.path.join(index_path, name)
-            spark.read.parquet(os.path.join(tmp, name)).write.mode("overwrite").parquet(final)
-        with open(os.path.join(index_path, "index.json")) as f:
-            meta = json.load(f)
-        meta["stats"] = merged.stats
-        with open(os.path.join(index_path, "index.json"), "w") as f:
-            json.dump(meta, f, indent=1, sort_keys=True, default=str)
+        tmp, stale = f"{index_path}.batch{batch_id}", f"{index_path}.old"
+        # the merged handle reads the old root, so write beside it and swap
+        save_index(append_documents(load_index(spark, index_path), batch_df), tmp)
+        os.rename(index_path, stale)
+        os.rename(tmp, index_path)
+        shutil.rmtree(stale)
 
     return (
         stream_df.writeStream.foreachBatch(handle)
@@ -152,20 +139,6 @@ def stream_append(spark: SparkSession, stream_df: DataFrame, index_path: str,
         .trigger(availableNow=True)
         .start()
     )
-
-
-def append_positional(positional, new_corpus, cfg=None,
-                      doc_col: str = "doc_id", content_col: str = "content"):
-    """``push_item!`` for the positional table: positional rows are
-    doc-keyed (each (term, doc) row is fully determined by its own
-    document), so appending documents is a pure UNION of the new docs'
-    rows — no merge, no stats re-centering, byte-equal to a rebuild over
-    the combined corpus (pytest-gated).  Same objID discipline as
-    :func:`append_documents`: each doc arrives whole, once."""
-    from invertedfiles_jl_spark.operators.positional import positional_postings
-
-    delta = positional_postings(new_corpus, cfg, doc_col, content_col)
-    return positional.select(*delta.columns).unionByName(delta)
 
 
 def streaming_exact_dedup(stream_docs: DataFrame, content_col: str = "content",

@@ -41,15 +41,33 @@ def test_append_equals_full_build(halves, weighting):
 
 
 def test_append_bm25_queryable(halves, spark):
-    """BM25 stored weights keep the original avgdl (documented); results
-    must still be sane and cover appended docs."""
+    """BM25 stored weights of appended docs are the saturated tf under the
+    OLD index's avgdl (documented, and what ``stream_append`` stores too);
+    results must still be sane and cover appended docs."""
+    from invertedfiles_jl_spark.operators.build import doc_term_freqs
+    from invertedfiles_jl_spark.operators.search import read_postings
+
     h1, h2, full = halves
     cfg = IndexConfig(weighting="bm25")
-    idx = append_documents(build_index(h1, cfg), h2)
+    old = build_index(h1, cfg)
+    idx = append_documents(old, h2)
     res = bm25_topk(idx, queries_df(spark), k=10).collect()
     assert res
     docs_hit = {r["doc_id"] for r in res}
     assert any(d >= 250 for d in docs_hit), "appended docs never retrieved"
+
+    avgdl = old.stats["avg_doc_len"]
+    assert idx.stats["avg_doc_len"] != pytest.approx(avgdl)  # stats re-center
+    dl = {r["doc_id"]: r["doc_len"] for r in idx.docs.filter("doc_id >= 250").collect()}
+    k1, b = cfg.bm25_k1, cfg.bm25_b
+    want = {(r["term_id"], r["doc_id"]):
+            r["tf"] * (k1 + 1) / (r["tf"] + k1 * (1 - b + b * dl[r["doc_id"]] / avgdl))
+            for r in doc_term_freqs(h2, cfg).collect()}
+    got = {(r["term_id"], r["doc_id"]): r["weight"] for r in
+           read_postings(idx.postings, "term_id").filter("doc_id >= 250").collect()}
+    assert got.keys() == want.keys()
+    for key, w in want.items():
+        assert got[key] == pytest.approx(w, rel=1e-6), key
 
 
 def test_binary_append_rank_identical(halves, spark):
@@ -95,22 +113,3 @@ def test_append_compressed_resalts_correctly(halves, spark):
         parts.sort()
         for (s0, _, hi0), (s1, lo1, _) in zip(parts, parts[1:]):
             assert hi0 < lo1, f"term {t}: salt {s0} range overlaps salt {s1}"
-
-
-def test_append_positional_equals_rebuild(spark, documents):
-    """Appending docs to the positional table == rebuilding it over the
-    combined corpus (rows are doc-keyed; union is exact)."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.positional import positional_postings
-    from invertedfiles_jl_spark.streaming.incremental import append_positional
-
-    corpus = documents.select("doc_id", F.col("text").alias("content"))
-    old_c = corpus.filter("doc_id % 5 != 0")
-    new_c = corpus.filter("doc_id % 5 = 0")
-    appended = append_positional(positional_postings(old_c), new_c)
-    rebuilt = positional_postings(corpus)
-    cols = ["term_id", "doc_id", "positions", "tf"]
-    a = sorted(map(tuple, appended.select(*cols).collect()))
-    b = sorted(map(tuple, rebuilt.select(*cols).collect()))
-    assert a == b and len(a) > 0

@@ -175,33 +175,3 @@ def test_prune_ratio_matches_absolute(index):
     a = prune_postings(index, max_df_ratio=ratio).postings.count()
     b = prune_postings(index, max_df=int(ratio * n)).postings.count()
     assert a == b
-
-
-def test_delete_positional_equals_rebuild(spark, documents):
-    """Filtering the positional table == rebuilding it on the surviving
-    corpus; phrase results over both are identical and exclude deletions."""
-    from pyspark.sql import functions as F
-
-    from invertedfiles_jl_spark.operators.maintenance import delete_positional
-    from invertedfiles_jl_spark.operators.positional import (
-        phrase_topk,
-        positional_postings,
-    )
-    from invertedfiles_jl_spark.sources.queries import phrases_df
-
-    corpus = documents.select("doc_id", F.col("text").alias("content"))
-    dels = [r.doc_id for r in corpus.filter("doc_id % 7 = 3").collect()]
-    pos = positional_postings(corpus)
-    filtered = delete_positional(pos, dels)
-    rebuilt = positional_postings(corpus.filter("doc_id % 7 != 3"))
-    a = sorted(map(tuple, phrase_topk(filtered, phrases_df(spark),
-                                      k=10 ** 6).collect()))
-    b = sorted(map(tuple, phrase_topk(rebuilt, phrases_df(spark),
-                                      k=10 ** 6).collect()))
-    assert a == b and a
-    assert not {r[2] for r in a} & set(dels)
-    # no-op and over-batch guards
-    assert delete_positional(pos, []) is pos
-    import pytest as _pt
-    with _pt.raises(ValueError):
-        delete_positional(pos, list(range(10 ** 6)))

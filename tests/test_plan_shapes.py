@@ -114,6 +114,18 @@ def test_serving_call_job_count(spark, served, call, most):
     assert _job_count(spark, lambda: call(idx, q).collect()) <= most
 
 
+def test_route_explain_job_count(spark, served):
+    """``route_explain`` runs the router's metadata pass once and applies
+    the rule to its stats dict (9 jobs while it ran ``batch_stats`` a
+    second time through ``route_plan``)."""
+    from invertedfiles_jl_spark.plans.router import batch_stats, route_explain
+
+    idx, _ = served
+    q = queries_df(spark)
+    stats_jobs = _job_count(spark, lambda: batch_stats(idx, q))
+    assert _job_count(spark, lambda: route_explain(idx, q).collect()) <= stats_jobs + 1
+
+
 def test_percolation_job_count(spark, served, documents):
     """Both percolators read the doc batch through one (doc_id, term, tf,
     doc_len) relation and score in their one gate aggregate: no second

@@ -3,6 +3,7 @@ persisted index via foreachBatch; index must equal a batch rebuild."""
 
 from __future__ import annotations
 
+import json
 import os
 
 import pytest
@@ -11,17 +12,36 @@ from pyspark.sql import functions as F
 from invertedfiles_jl_spark.config import IndexConfig
 from invertedfiles_jl_spark.operators.search import set_distance_topk
 from invertedfiles_jl_spark.operators.build import build_index
-from invertedfiles_jl_spark.plans.pipeline import build_checkpointed, load_index
+from invertedfiles_jl_spark.plans.pipeline import (
+    build_checkpointed,
+    load_index,
+    save_index,
+)
 from invertedfiles_jl_spark.sources.queries import queries_df
-from invertedfiles_jl_spark.streaming.incremental import stream_append
+from invertedfiles_jl_spark.streaming.incremental import (
+    append_documents,
+    stream_append,
+)
 
 
-def test_stream_append_equals_rebuild(spark, documents, tmp_path):
+def _stored_weights(idx) -> dict:
+    from invertedfiles_jl_spark.operators.search import read_postings
+
+    return {(r["term_id"], r["doc_id"]): r["weight"]
+            for r in read_postings(idx.postings, "term_id").collect()}
+
+
+@pytest.mark.parametrize("weighting", ["binary", "bm25"])
+def test_stream_append_equals_rebuild(spark, documents, tmp_path, weighting):
+    """Streamed micro-batches land through the one writer: the root then
+    holds what ``append_documents`` + ``save_index`` write for the same
+    halves (bm25: weights under the root's frozen avgdl), with no temp root
+    beside it and no manifest left from the pre-append build."""
     base = documents.select("doc_id", F.col("text").alias("content"))
     h1 = base.filter(F.col("doc_id") < 400)
     h2 = base.filter(F.col("doc_id") >= 400)
 
-    cfg = IndexConfig(weighting="binary")
+    cfg = IndexConfig(weighting=weighting)
     idx_path = str(tmp_path / "idx")
     build_checkpointed(h1, idx_path, cfg)
 
@@ -32,12 +52,25 @@ def test_stream_append_equals_rebuild(spark, documents, tmp_path):
     stream = (
         spark.readStream.schema("doc_id long, content string").parquet(src)
     )
-    q = stream_append(spark, stream, idx_path, cfg, str(tmp_path / "ckpt"))
+    q = stream_append(spark, stream, idx_path, str(tmp_path / "ckpt"))
     q.awaitTermination(120)
 
     merged = load_index(spark, idx_path)
+    assert merged.stats["n_docs"] == 500
+    assert sorted(os.listdir(tmp_path)) == ["ckpt", "idx", "incoming"]
+    for name in os.listdir(idx_path):
+        if name.endswith("_lineage.json"):
+            with open(os.path.join(idx_path, name)) as f:
+                assert json.load(f)["input_rows"] == 500, name
+
+    if weighting == "bm25":
+        ref_path = str(tmp_path / "ref")
+        save_index(append_documents(
+            build_checkpointed(h1, str(tmp_path / "ref_base"), cfg), h2), ref_path)
+        want = _stored_weights(load_index(spark, ref_path))
+        assert _stored_weights(merged) == want and want
+        return
     ref = build_index(base, cfg)
-    assert merged.stats["n_docs"] == ref.stats["n_docs"] == 500
     a = {(r["query_id"], r["rank"]): r["doc_id"]
          for r in set_distance_topk(merged, queries_df(spark), 10, "jaccard").collect()}
     b = {(r["query_id"], r["rank"]): r["doc_id"]

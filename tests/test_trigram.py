@@ -78,30 +78,3 @@ def test_case_insensitive(tindex, spark):
     ga = {(r["doc_id"], r["n_occ"]) for r in substring_search(tindex, a).collect()}
     gb = {(r["doc_id"], r["n_occ"]) for r in substring_search(tindex, b).collect()}
     assert ga == gb and ga
-
-
-def test_append_equals_rebuild(corpus, spark):
-    from invertedfiles_jl_spark.operators.trigram import append_trigram_index
-
-    old = corpus.filter("doc_id < 400")
-    new = corpus.filter("doc_id >= 400")
-    appended = append_trigram_index(build_trigram_index(old), new)
-    rebuilt = build_trigram_index(corpus)
-    a = {r["gram"]: (tuple(r["doc_ids"]), r["df"])
-         for r in appended.postings.collect()}
-    b = {r["gram"]: (tuple(r["doc_ids"]), r["df"])
-         for r in rebuilt.postings.collect()}
-    assert a == b
-
-
-def test_append_then_search_sees_new_docs(corpus, docs_pandas, spark):
-    from invertedfiles_jl_spark.operators.trigram import append_trigram_index
-
-    old = corpus.filter("doc_id < 400")
-    new = corpus.filter("doc_id >= 400")
-    ti = append_trigram_index(build_trigram_index(old), new)
-    texts = dict(zip(docs_pandas["doc_id"], docs_pandas["text"]))
-    got = {(r["query_id"], r["doc_id"]): r["n_occ"]
-           for r in substring_search(ti, substrings_df(spark)).collect()}
-    assert got == _python_matches(texts, SUBSTRING_SET)
-    assert any(d >= 400 for _, d in got), "appended docs must be searchable"
